@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Cast, Expression, ExpressionInfo, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
 
+import graft.crack.CrackQuery
 import graft.keyspace.{NumToPass, PassToNum, Sha1MultiOrdinalMatch, Sha1OrdinalMatch}
 import graft.lsp.{LspDecode, LspEncode, ProtoDecode, ProtoEncode}
 import graft.similarity.{FloatVectorDot, HyperplaneBucket}
@@ -262,14 +263,10 @@ object GraftExtensions {
 
   /** SQL TABLE functions (`SELECT * FROM crack(...)`) — the pure-SQL form
     * of the reference's entry point (`request.c:40-75`: submit a hash +
-    * length, get back the preimage or nothing). The builders construct
-    * the catalyst tree DIRECTLY — the same Range→Filter→Project(→Sort→
-    * Limit) plan [[graft.crack.CrackQuery.crackDF]] builds through the
-    * DataFrame API — with no SparkSession dependency at all: analysis may
-    * run on a micro-batch or foreign-session thread where
-    * `SparkSession.active` is NOT the session that owns the query, and a
-    * builder that consulted it would graft the plan onto the wrong
-    * session. A session-free builder cannot. */
+    * length, get back the preimage or nothing). The crack builders only
+    * parse their arguments: each returns the session-free plan
+    * [[graft.crack.CrackQuery]] defines once for its DataFrame twin
+    * (`crackPlan`, `crackMultiPlan`, `candidatesPlan`). */
   val tableBuilders: Seq[(String, Seq[Expression] => logical.LogicalPlan)] = Seq(
     "crack" -> { args: Seq[Expression] =>
       if (args.length != 2 && args.length != 3)
@@ -277,22 +274,12 @@ object GraftExtensions {
           s"crack expects (sha1_hex, len[, parallelism]), got ${args.length} argument(s)")
       val hash = stringArg("crack", args(0))
       val len = posIntArg("crack", args(1))
-      val par =
-        if (args.length == 3) posIntArg("crack", args(2)) else 32
-      val (range, id) = keyspaceRange(len, par)
-      val pass = Alias(NumToPass(id, Literal(len)), "pass")()
-      val projected = logical.Project(Seq(pass),
-        logical.Filter(Sha1OrdinalMatch(id, len, hash.toLowerCase), range))
-      // deterministic first-found-wins: min preimage, like crackDF
-      logical.Limit(Literal(1),
-        logical.Sort(Seq(SortOrder(pass.toAttribute, Ascending)),
-          global = true, projected))
+      val par = if (args.length == 3) posIntArg("crack", args(2)) else 32
+      CrackQuery.crackPlan(hash, len, par)
     },
     "crack_multi" -> { args: Seq[Expression] =>
       // crack_multi(array(hex, ...), len[, parallelism]) — the BATCH
-      // crack as a SQL relation: one keyspace scan, the fused
-      // multi-target kernel binary-searching the sorted digest batch
-      // per candidate (CrackQuery.crackMany's plan, built session-free)
+      // crack as a SQL relation (CrackQuery.crackMany's plan)
       if (args.length != 2 && args.length != 3)
         throw new IllegalArgumentException(
           s"crack_multi expects (hash_array, len[, parallelism]), got ${args.length} argument(s)")
@@ -311,29 +298,7 @@ object GraftExtensions {
       }
       val len = posIntArg("crack_multi", args(1))
       val par = if (args.length == 3) posIntArg("crack_multi", args(2)) else 32
-      val (range, id) = keyspaceRange(len, par)
-      val matcher = Sha1MultiOrdinalMatch(id, len, hexes)
-      val slot = Alias(matcher, "slot")()
-      val scanned = logical.Project(Seq(id, slot), range)
-      val hit = logical.Filter(
-        org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(
-          slot.toAttribute, Literal(0)), scanned)
-      // slot index → the sorted hex it matched (a CaseWhen over the
-      // bounded batch — no versioned ElementAt constructor to chase)
-      val hashExpr = org.apache.spark.sql.catalyst.expressions.CaseWhen(
-        matcher.sortedHex.zipWithIndex.map { case (h, i) =>
-          (org.apache.spark.sql.catalyst.expressions.EqualTo(
-            slot.toAttribute, Literal(i)), Literal(h): Expression)
-        })
-      val hash = Alias(hashExpr, "hash")()
-      val pass = Alias(NumToPass(id, Literal(len)), "pass")()
-      val projected = logical.Project(Seq(hash, pass), hit)
-      // first-found-wins per target: min preimage, like crackMany
-      logical.Aggregate(Seq(hash.toAttribute),
-        Seq(hash.toAttribute,
-          Alias(org.apache.spark.sql.catalyst.expressions.aggregate
-            .Min(pass.toAttribute).toAggregateExpression(), "pass")()),
-        projected)
+      CrackQuery.crackMultiPlan(hexes, len, par)
     },
     "crack_candidates" -> { args: Seq[Expression] =>
       // the reference's keyspace scan itself (S1/S2) as a SQL relation:
@@ -344,8 +309,8 @@ object GraftExtensions {
       val len = posIntArg("crack_candidates", args(0))
       val par =
         if (args.length == 2) posIntArg("crack_candidates", args(1)) else 32
-      val (range, id) = keyspaceRange(len, par)
-      logical.Project(Seq(Alias(NumToPass(id, Literal(len)), "pass")()), range)
+      val (lo, hi) = graft.keyspace.Keyspace.fullRange(len)
+      CrackQuery.candidatesPlan(len, lo, hi, par)
     },
     // -- pipeline-library table functions: the SQL front door to the
     // dedup / ANN / text operators (a user with only a SQL client gets
@@ -353,10 +318,11 @@ object GraftExtensions {
     // SQL template over a caller-supplied table identifier and parses it
     // with the session-FREE CatalystSqlParser — the resulting unresolved
     // subtree resolves inside the host query's own analyzer run, so the
-    // builders carry no SparkSession dependency (the crack() contract
-    // above). Templates use nested subqueries, never CTEs: analyzer
-    // CTE substitution runs BEFORE table-function resolution, so a WITH
-    // clause inside a substituted subtree would never be rewritten. --
+    // builders carry no SparkSession dependency (the contract the crack
+    // plans in CrackQuery keep). Templates use nested subqueries, never
+    // CTEs: analyzer CTE substitution runs BEFORE table-function
+    // resolution, so a WITH clause inside a substituted subtree would
+    // never be rewritten. --
     "dedup_exact" -> { args: Seq[Expression] =>
       arity("dedup_exact", 1, args)
       val tbl = tableIdent("dedup_exact", args(0))
@@ -715,14 +681,5 @@ object GraftExtensions {
     require(s.matches("[A-Za-z_][A-Za-z0-9_]*(\\.[A-Za-z_][A-Za-z0-9_]*)*"),
       s"$name requires a plain table identifier, got '$s'")
     s
-  }
-
-  /** Full-domain ordinal Range leaf for `[a-z]^len` plus its `id`
-    * attribute — the logical-plan form of `CrackQuery.candidates`. */
-  private def keyspaceRange(
-      len: Int, par: Int): (logical.Range, Attribute) = {
-    val (lo, hi) = graft.keyspace.Keyspace.fullRange(len)
-    val range = logical.Range(lo, hi + 1, 1, Some(par))
-    (range, range.output.head)
   }
 }

@@ -49,9 +49,10 @@ object CrackQueries {
       "da23614e02469a0d7c7bd1bdab5c9c474b1904dc", Seq(1, 2, 3, 4))
 
   /** The reference's entry point as PURE SQL (SURVEY §4.2 stretch;
-    * `request.c:40-75`): the registered `crack` TABLE function builds the
-    * identical logical plan to [[CrackQuery.crackDF]], so this is the
-    * found-path known answer through the SQL front door. Registration is
+    * `request.c:40-75`): the registered `crack` TABLE function returns
+    * [[CrackQuery.crackPlan]], the one plan [[CrackQuery.crackDF]] also
+    * wraps, so this is the found-path known answer through the SQL front
+    * door. Registration is
     * idempotent (createOrReplaceTempFunction), so calling it here keeps
     * the query self-contained on any session. */
   def qCrackSql(spark: SparkSession, dir: String): DataFrame = {

@@ -1,10 +1,14 @@
 package graft.crack
 
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CaseWhen, EqualTo, Expression, GreaterThanOrEqual, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Min
+import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 
-import graft.functions.num_to_pass
-import graft.keyspace.Keyspace
+import graft.keyspace.{Keyspace, NumToPass, Sha1MultiOrdinalMatch, Sha1OrdinalMatch}
+import graft.streaming.CrackPipeline
 
 /** Batch re-expression of the reference's one parameterized query
   * (SURVEY.md §0):
@@ -24,20 +28,91 @@ import graft.keyspace.Keyspace
   */
 object CrackQuery {
 
-  /** Generated keyspace scan over ordinals `[lo, hi]` inclusive
-    * (S1/S2: `worker.c:77-101`, `request.c:40-47`). Splittable, ordered,
-    * codegen'd via `RangeExec`. */
+  // -- the crack plans, built session-free: each plan below is the ONE
+  // definition of its query, wrapped into a DataFrame by the builders
+  // further down and returned as-is by the SQL table functions
+  // ([[graft.GraftExtensions.tableBuilders]]). Analysis may run on a
+  // micro-batch or foreign-session thread where `SparkSession.active` is
+  // not the session that owns the query, so a plan that consulted it
+  // would graft itself onto the wrong session; these cannot. --
+
+  /** Ordinal `Range` leaf over `[lo, hi]` inclusive, plus its `id`
+    * attribute. */
+  private def keyspaceRange(
+      len: Int, lo: Long, hi: Long, parallelism: Int): (logical.Range, Attribute) = {
+    require(lo >= 0 && hi < Keyspace.size(len) && lo <= hi,
+      s"bounds [$lo, $hi] invalid for len=$len")
+    val range = logical.Range(lo, hi + 1, 1, Some(parallelism))
+    (range, range.output.head)
+  }
+
+  private def passOf(id: Attribute, len: Int): Alias =
+    Alias(NumToPass(id, Literal(len)), "pass")()
+
+  /** `Range → Project(pass)`: the generated keyspace scan over ordinals
+    * `[lo, hi]` (S1/S2: `worker.c:77-101`, `request.c:40-47`). */
+  private[graft] def candidatesPlan(
+      len: Int, lo: Long, hi: Long, parallelism: Int): LogicalPlan = {
+    val (range, id) = keyspaceRange(len, lo, hi, parallelism)
+    logical.Project(Seq(passOf(id, len)), range)
+  }
+
+  /** `Range → Filter(Sha1OrdinalMatch) → Project(pass)`: the crack hot
+    * scan. The fused [[graft.keyspace.Sha1OrdinalMatch]] kernel allocates
+    * no candidate string, hex or digest per row (measured ~2x the
+    * `sha1(num_to_pass(..)) = hex` pipeline); `pass` is materialized for
+    * the (0 or 1) hits only. */
+  private def matchesPlan(
+      hashHex: String, len: Int, lo: Long, hi: Long, parallelism: Int): LogicalPlan = {
+    val (range, id) = keyspaceRange(len, lo, hi, parallelism)
+    logical.Project(Seq(passOf(id, len)),
+      logical.Filter(Sha1OrdinalMatch(id, len, hashHex.toLowerCase), range))
+  }
+
+  /** The reference's query over the full `[a-z]^len` domain, then
+    * `Sort(pass) → Limit 1`: deterministic first-found-wins (the minimum
+    * preimage). */
+  private[graft] def crackPlan(hashHex: String, len: Int, parallelism: Int): LogicalPlan = {
+    val (lo, hi) = Keyspace.fullRange(len)
+    val hits = matchesPlan(hashHex, len, lo, hi, parallelism)
+    logical.Limit(Literal(1),
+      logical.Sort(Seq(SortOrder(hits.output.head, Ascending)), global = true, hits))
+  }
+
+  /** A batch of targets in ONE full-domain scan: the fused
+    * [[graft.keyspace.Sha1MultiOrdinalMatch]] kernel binary-searches the
+    * sorted digest batch per candidate (one SHA-1 + log2(B) 20-byte
+    * compares), so the scan cost is independent of batch size. Output
+    * `(hash, pass)`, the minimum preimage per found target; a target with
+    * no preimage is absent. Malformed hex fails here, at plan time. */
+  private[graft] def crackMultiPlan(
+      hashes: Seq[String], len: Int, parallelism: Int): LogicalPlan = {
+    val (lo, hi) = Keyspace.fullRange(len)
+    val (range, id) = keyspaceRange(len, lo, hi, parallelism)
+    val matcher = Sha1MultiOrdinalMatch(id, len, hashes)
+    val slot = Alias(matcher, "slot")()
+    val hit = logical.Filter(GreaterThanOrEqual(slot.toAttribute, Literal(0)),
+      logical.Project(Seq(id, slot), range))
+    // slot index → the sorted hex it matched (a CaseWhen over the bounded
+    // batch — no versioned ElementAt constructor to chase)
+    val hash = Alias(CaseWhen(matcher.sortedHex.zipWithIndex.map { case (h, i) =>
+      (EqualTo(slot.toAttribute, Literal(i)), Literal(h): Expression)
+    }), "hash")()
+    val pass = passOf(id, len)
+    logical.Aggregate(Seq(hash.toAttribute),
+      Seq(hash.toAttribute, Alias(Min(pass.toAttribute).toAggregateExpression(), "pass")()),
+      logical.Project(Seq(hash, pass), hit))
+  }
+
+  /** Generated keyspace scan over ordinals `[lo, hi]` inclusive.
+    * Splittable, ordered, codegen'd via `RangeExec`. */
   def candidates(
       spark: SparkSession,
       len: Int,
       lo: Long,
       hi: Long,
-      parallelism: Int): DataFrame = {
-    require(lo >= 0 && hi < Keyspace.size(len) && lo <= hi,
-      s"bounds [$lo, $hi] invalid for len=$len")
-    spark.range(lo, hi + 1, 1, parallelism)
-      .select(num_to_pass(col("id"), len).as("pass"))
-  }
+      parallelism: Int): DataFrame =
+    GraftShim.ofRows(spark, candidatesPlan(len, lo, hi, parallelism))
 
   /** Full-domain candidate scan (`lower="a"*len`, `upper="z"*len`). */
   def candidates(spark: SparkSession, len: Int, parallelism: Int = 32): DataFrame = {
@@ -46,7 +121,7 @@ object CrackQuery {
   }
 
   /** All matches in `[a-z]^len` for `target` (usually 0 or 1 rows for
-    * SHA-1). Deterministic: ordered by candidate. */
+    * SHA-1). */
   def matches(
       spark: SparkSession,
       hashHex: String,
@@ -56,11 +131,7 @@ object CrackQuery {
     matchesOrdinals(spark, hashHex, len, lo, hi, parallelism)
   }
 
-  /** The crack hot scan: filter ordinals through the fused
-    * [[graft.keyspace.Sha1OrdinalMatch]] kernel (no candidate string /
-    * hex / digest allocation per row — measured ~2x the
-    * `sha1(num_to_pass(..)) = hex` pipeline), then materialize `pass`
-    * for the (0 or 1) hits only. */
+  /** All matches among ordinals `[lo, hi]` ([[matchesPlan]]). */
   def matchesOrdinals(
       spark: SparkSession,
       hashHex: String,
@@ -68,9 +139,7 @@ object CrackQuery {
       lo: Long,
       hi: Long,
       parallelism: Int): DataFrame =
-    spark.range(lo, hi + 1, 1, parallelism)
-      .filter(graft.functions.sha1_ordinal_match(col("id"), len, hashHex))
-      .select(num_to_pass(col("id"), len).as("pass"))
+    GraftShim.ofRows(spark, matchesPlan(hashHex, len, lo, hi, parallelism))
 
   /** First-found-wins crack (A1/L3). Unlike the reference — racy: whichever
     * worker replies first wins, `server.c:275-306` — this is deterministic:
@@ -80,7 +149,7 @@ object CrackQuery {
       hashHex: String,
       len: Int,
       parallelism: Int = 32): DataFrame =
-    matches(spark, hashHex, len, parallelism).orderBy("pass").limit(1)
+    GraftShim.ofRows(spark, crackPlan(hashHex, len, parallelism))
 
   /** `./request host:port <hash> <len>` ≅ `crack(hash, len)`:
     * `Some(pass)` ≅ "f <pass>", `None` ≅ "x". */
@@ -93,10 +162,7 @@ object CrackQuery {
       .collect().headOption.map(_.getString(0))
 
   /** Generalization the reference lacks: crack a whole batch of target
-    * hashes in ONE keyspace scan. Fused form: the
-    * [[graft.keyspace.Sha1MultiOrdinalMatch]] kernel binary-searches the
-    * sorted digest batch per candidate (one SHA-1 + log2(B) 20-byte
-    * compares), so the scan cost is independent of batch size;
+    * hashes in ONE keyspace scan ([[crackMultiPlan]]);
     * [[crackManyJoin]] keeps the equivalent broadcast-join formulation
     * (the `msgs ⋈ broadcast(workers)` pattern, SURVEY.md §2.4). */
   def crackMany(
@@ -111,17 +177,7 @@ object CrackQuery {
       import spark.implicits._
       return Seq.empty[(String, String)].toDF("hash", "pass")
     }
-    val expr = graft.keyspace.Sha1MultiOrdinalMatch(
-      org.apache.spark.sql.GraftShim.expression(col("id")), len, hashes)
-    val hexBySlot = expr.sortedHex.toArray
-    val (lo, hi) = Keyspace.fullRange(len)
-    spark.range(lo, hi + 1, 1, parallelism)
-      .withColumn("slot", org.apache.spark.sql.GraftShim.column(expr))
-      .filter(col("slot") >= 0)
-      .select(element_at(lit(hexBySlot), col("slot") + 1).as("hash"),
-        num_to_pass(col("id"), len).as("pass"))
-      .groupBy("hash")
-      .agg(min("pass").as("pass"))
+    GraftShim.ofRows(spark, crackMultiPlan(hashes, len, parallelism))
   }
 
   /** Broadcast-join formulation of [[crackMany]] (J1 parity pattern). */
@@ -197,9 +253,9 @@ object CrackQuery {
     * are never launched — measured in CrackSpec as tasks-started <
     * tiles for an early hit.
     *
-    * The per-candidate kernel is the same [[graft.keyspace.CrackKernels
-    * .sha1MatchesOrdinal]] the codegen'd scan calls, so cancellability
-    * costs no throughput. Result is the minimum over reported hits —
+    * Each tile runs [[graft.streaming.CrackPipeline.scanTile]], the one
+    * worker tile loop (the streaming fan-out and the straggler rescan run
+    * it too). Result is the minimum over reported hits —
     * identical to the ordered scan whenever the digest has at most one
     * preimage in the range (any cryptographic hash in practice; with
     * multiple preimages a cancelled scan may legitimately return
@@ -233,7 +289,7 @@ object CrackQuery {
       val collected =
         try {
           sc.parallelize(tiles, tiles.size).flatMap { case (s, e) =>
-            scanTileCancellable(hashHex, len, s, e) match {
+            CrackPipeline.scanTile(hashHex, len, s, e) match {
               case Some(p) => hits.add(p); Iterator.single(p)
               case None => Iterator.empty
             }
@@ -252,22 +308,5 @@ object CrackQuery {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-  }
-
-  /** Worker tile loop with a cooperative cancellation point every 64k
-    * candidates — `interruptOnCancel` kills via `Thread.interrupt`, which
-    * a pure compute loop would otherwise never observe. */
-  private def scanTileCancellable(
-      hashHex: String, len: Int, lo: Long, hi: Long): Option[String] = {
-    val target = graft.keyspace.CrackKernels.hexToBytes(hashHex.toLowerCase)
-    var ord = lo
-    while (ord <= hi) {
-      if (graft.keyspace.CrackKernels.sha1MatchesOrdinal(ord, len, target))
-        return Some(Keyspace.numToPass(ord, len))
-      ord += 1
-      if ((ord & 0xffffL) == 0L && Thread.currentThread().isInterrupted)
-        throw new InterruptedException(s"crack tile [$lo,$hi] cancelled")
-    }
-    None
   }
 }

@@ -4,8 +4,8 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{Dataset, Encoders}
 
-import graft.keyspace.Keyspace
-import graft.streaming.CrackService.{CrackReply, PartitionVerdict}
+import graft.keyspace.{CrackKernels, Keyspace}
+import graft.streaming.CrackService.{CrackReply, JobVerdict}
 
 /** The complete reference dataflow as ONE streaming job (SURVEY.md §3):
   * crack-request stream → range-partitioned worker scans → first-found /
@@ -13,11 +13,11 @@ import graft.streaming.CrackService.{CrackReply, PartitionVerdict}
   *
   * - request intake ≅ `handle_crack_req` (`server.c:229-241`)
   * - tiling ≅ `assign_one_req` (`server.c:333-438`; exact, no overshoot)
-  * - [[scanTile]] ≅ the worker loop (`worker.c:58-108`) — with in-place
-  *   successor (no per-candidate malloc, `worker.c:27,98-100`) and
-  *   early exit on first hit (L3)
+  * - [[scanTile]] ≅ the worker loop (`worker.c:58-108`) — the one tile
+  *   loop, also run by the straggler rescan and
+  *   [[graft.crack.CrackQuery.cancellingScan]]
   * - verdict fold ≅ `check_req_status` (`server.c:243-331`) via
-  *   [[CrackService.replyStream]]
+  *   [[CrackService.step]], the one per-batch verdict step
   */
 object CrackPipeline {
 
@@ -33,37 +33,34 @@ object CrackPipeline {
 
   /** Sequential scan of ordinals `[lo, hi]` for the first sha1 preimage —
     * the worker inner loop, re-expressed without the reference's
-    * per-candidate allocation (bytes buffer mutated in place via base-26
-    * successor; target hex decoded ONCE to raw digest bytes, so the loop
-    * compares 20 bytes fail-fast instead of hex-encoding every candidate)
-    * and without its all-`z` UB (bounds are ordinals). */
+    * per-candidate allocation: the candidate buffer is mutated in place
+    * via base-26 successor and hashed into one reused 20-byte digest
+    * buffer, and the target hex is decoded ONCE to raw bytes, so the loop
+    * compares 20 bytes fail-fast instead of hex-encoding every candidate.
+    * Bounds are ordinals, so the reference's all-`z` UB cannot arise.
+    * Every 64k candidates the loop checks for `Thread.interrupt` — the
+    * way `interruptOnCancel` kills a task, which a pure compute loop
+    * would otherwise never observe. */
   def scanTile(hashHex: String, len: Int, lo: Long, hi: Long): Option[String] = {
-    val target = hexToBytes(hashHex.toLowerCase)
+    val target = CrackKernels.hexToBytes(hashHex.toLowerCase)
     val md = MessageDigest.getInstance("SHA-1")
     val buf = Keyspace.numToPassBytes(lo, len, wrap = false)
+    val out = new Array[Byte](20)
     var ord = lo
     while (ord <= hi) {
-      if (java.util.Arrays.equals(md.digest(buf), target))
+      md.update(buf, 0, len)
+      md.digest(out, 0, 20)
+      if (java.util.Arrays.equals(out, target))
         return Some(new String(buf, java.nio.charset.StandardCharsets.US_ASCII))
       // in-place lexicographic successor with carry (z→a), worker.c:21-39
       var p = len - 1
       while (p >= 0 && buf(p) == 'z') { buf(p) = 'a'; p -= 1 }
       if (p >= 0) buf(p) = (buf(p) + 1).toByte
       ord += 1
+      if ((ord & 0xffffL) == 0L && Thread.currentThread().isInterrupted)
+        throw new InterruptedException(s"crack tile [$lo,$hi] cancelled")
     }
     None
-  }
-
-  private def hexToBytes(hex: String): Array[Byte] = {
-    require(hex.length == 40, s"expected 40-hex sha1, got ${hex.length} chars")
-    val out = new Array[Byte](20)
-    var i = 0
-    while (i < 20) {
-      out(i) = ((Character.digit(hex.charAt(2 * i), 16) << 4) |
-        Character.digit(hex.charAt(2 * i + 1), 16)).toByte
-      i += 1
-    }
-    out
   }
 
   /** Request stream → tile-task stream (the fan-out of
@@ -78,13 +75,13 @@ object CrackPipeline {
         // UNKNOWN → ignored) — a poison request must never fail the
         // long-lived stream for everyone else
         if (job.len < 1 || job.len > Keyspace.MaxLen || job.nParts < 1 ||
-          job.hashHex == null || job.hashHex.length != 40) {
+          job.hashHex == null || !job.hashHex.matches("[0-9a-fA-F]{40}")) {
           Seq.empty[TileTask]
         } else {
           val (lo, hi) = Keyspace.fullRange(job.len)
           val tiles = Keyspace.tile(lo, hi, job.nParts)
-          // nParts = tiles.size, the ACTUAL verdict count foldVerdicts
-          // will see — never re-derive the tiler's clamp formula
+          // nParts = tiles.size, the ACTUAL verdict count the fold will
+          // see — never re-derive the tiler's clamp formula
           tiles.zipWithIndex.map { case ((s, e), i) =>
             TileTask(job.reqId, job.hashHex, job.len, i, tiles.size, s, e)
           }
@@ -94,37 +91,28 @@ object CrackPipeline {
         org.apache.spark.sql.functions.col("partId"))
   }
 
-  /** Request stream → per-partition verdict stream (the fan-out/scan/fan-in
-    * of `server.c:333-438` + `worker.c`). */
-  def verdictStream(jobs: Dataset[CrackJob]): Dataset[PartitionVerdict] = {
-    implicit val verdictEnc = Encoders.product[PartitionVerdict]
+  /** Request stream → per-tile verdict stream (the fan-out/scan of
+    * `server.c:333-438` + `worker.c`). Each verdict carries the job spec,
+    * so the fold can rescan an overdue tile from its state alone. */
+  def jobVerdictStream(jobs: Dataset[CrackJob]): Dataset[JobVerdict] = {
+    implicit val verdictEnc = Encoders.product[JobVerdict]
     tileStream(jobs).map { t =>
       val hit = scanTile(t.hashHex, t.len, t.lo, t.hi)
-      PartitionVerdict(t.reqId, t.partId, t.nParts,
+      JobVerdict(t.reqId, t.partId, t.nParts, t.hashHex, t.len,
         found = hit.isDefined, hit.orNull)
     }
   }
 
-  /** Verdicts carrying the job spec — the recovery-capable fan-in input
-    * ([[CrackService.replyStreamRecovering]] rescans overdue tiles from
-    * these fields). */
-  def jobVerdictStream(jobs: Dataset[CrackJob]): Dataset[CrackService.JobVerdict] = {
-    implicit val verdictEnc = Encoders.product[CrackService.JobVerdict]
-    tileStream(jobs).map { t =>
-      val hit = scanTile(t.hashHex, t.len, t.lo, t.hi)
-      CrackService.JobVerdict(t.reqId, t.partId, t.nParts, t.hashHex, t.len,
-        found = hit.isDefined, hit.orNull)
-    }
-  }
-
-  /** Full pipeline: requests in, replies out. */
+  /** Full pipeline: requests in, replies out — [[replyStreamRecovering]]
+    * with timers off. */
   def replyStream(jobs: Dataset[CrackJob]): Dataset[CrackReply] =
-    CrackService.replyStream(verdictStream(jobs))
+    replyStreamRecovering(jobs, timeoutMs = 0L)
 
   /** Full pipeline with straggler recovery: a request whose worker
     * verdicts stall for `timeoutMs` of processing time has its unheard
     * tiles rescanned in the fan-in, completing the reply the reference's
-    * stub rescheduler (`server.c:440-447`) never could. */
+    * stub rescheduler (`server.c:440-447`) never could. `timeoutMs = 0`
+    * turns timers off. */
   def replyStreamRecovering(
       jobs: Dataset[CrackJob], timeoutMs: Long): Dataset[CrackReply] =
     CrackService.replyStreamRecovering(jobVerdictStream(jobs), timeoutMs)

@@ -5,104 +5,89 @@ import org.apache.spark.sql.{Dataset, Encoders}
 
 /** Streaming re-expression of the coordinator's crack-job state machine
   * (T8, SURVEY.md §2.10): request status 0→1→2 (`server.c:37`), first-found
-  * and all-exhausted verdict aggregation (A1/A2, `server.c:243-331`).
+  * and all-exhausted verdict aggregation (A1/A2, `server.c:243-331`), plus
+  * the straggler rescheduler the reference left as a stub
+  * (`server.c:440-447`).
   *
-  * Input: a stream of per-partition verdicts (each worker's `"f <pass>"` /
+  * Input: a stream of per-tile verdicts (each worker's `"f <pass>"` /
   * `"x"` reply, `worker.c:85-107`). Output: at most ONE reply per request:
-  *   - `f <pass>` as soon as any partition reports found — the reference's
+  *   - `f <pass>` as soon as any tile reports found — the reference's
   *     eager reply without waiting for stragglers (`server.c:251-256`);
-  *   - `x` only after ALL partitions report not-found (`server.c:257-263`).
+  *   - `x` only after ALL tiles report not-found (`server.c:257-263`).
+  *
+  * [[step]] is the one definition of that logic; the fMGWS fold here and
+  * [[CrackServiceTws]] are thin adapters over it (both state APIs, one
+  * copy of the semantics).
   *
   * Deliberate deltas from the reference: a duplicate `found` does NOT
   * overwrite the stored pass (the reference overwrites unconditionally,
-  * `server.c:291` — benign there, idempotent here), and request state is
-  * freed exactly when the outstanding-partition count hits zero
+  * `server.c:291` — benign there, idempotent here), tiles are tracked as
+  * a SET so a repeated verdict cannot complete a request early, and
+  * request state is freed exactly when every tile has reported
   * (`server.c:264-272`).
   */
 object CrackService {
 
-  /** One worker partition's verdict for a request (X3 fan-in). */
-  final case class PartitionVerdict(
-      reqId: Long, partId: Int, nParts: Int, found: Boolean, pass: String)
-
-  /** Coordinator-side per-request state (`struct request_s`,
-    * `server.c:31-40`): outstanding partitions ≅ `req_worker_list`
-    * membership (A3), found flag + result buffer (A1). */
-  final case class CrackState(
-      remaining: Int, found: Boolean, pass: String, replied: Boolean)
-
   /** The reply the requester sees (`request.c:78-80`): status `f` or `x`. */
   final case class CrackReply(reqId: Long, status: String, pass: String)
 
-  def foldVerdicts(
-      reqId: Long,
-      verdicts: Iterator[PartitionVerdict],
-      state: GroupState[CrackState]): Iterator[CrackReply] = {
-    var st = state.getOption.getOrElse(CrackState(-1, found = false, null, replied = false))
-    val replies = Seq.newBuilder[CrackReply]
-    verdicts.foreach { v =>
-      if (st.remaining < 0) st = st.copy(remaining = v.nParts)
-      st = st.copy(remaining = st.remaining - 1)
-      if (v.found && !st.found)
-        st = st.copy(found = true, pass = v.pass)
-      // eager reply on first found (server.c:251-256); exhausted reply only
-      // when the last partition reports (server.c:257-263)
-      if (st.found && !st.replied) {
-        replies += CrackReply(reqId, "f", st.pass)
-        st = st.copy(replied = true)
-      } else if (st.remaining == 0 && !st.found && !st.replied) {
-        replies += CrackReply(reqId, "x", null)
-        st = st.copy(replied = true)
-      }
-    }
-    if (st.remaining == 0) state.remove() // free request (server.c:264-272)
-    else state.update(st)
-    replies.result().iterator
-  }
-
-  /** Verdict stream → reply stream (append mode, unbounded state keyed by
-    * request id, freed on completion). */
-  def replyStream(verdicts: Dataset[PartitionVerdict]): Dataset[CrackReply] = {
-    implicit val stateEnc = Encoders.product[CrackState]
-    implicit val outEnc = Encoders.product[CrackReply]
-    implicit val keyEnc = Encoders.scalaLong
-    verdicts
-      .groupByKey(_.reqId)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        foldVerdicts _)
-  }
-
-  // ---------------------------------------------------------------------
-  // Straggler recovery (T8 completion). The reference's rescheduler is an
-  // unimplemented stub (`server.c:440-447` — a lost worker stalls its
-  // request forever); here a processing-time timeout re-runs the overdue
-  // tiles in place, so a dropped verdict delays the reply instead of
-  // losing it.
-  // ---------------------------------------------------------------------
-
-  /** Verdict enriched with the job spec, so a timed-out request can be
-    * re-scanned from state alone — no side lookup, no second input
-    * stream. The tile bounds are NOT carried: they re-derive
+  /** One worker tile's verdict, carrying the job spec so a timed-out
+    * request can be re-scanned from state alone — no side lookup, no
+    * second input stream. The tile bounds are NOT carried: they re-derive
     * deterministically from `Keyspace.tile(fullRange(len), nParts)`,
     * which is the same splitter the fan-out used. */
   final case class JobVerdict(
       reqId: Long, partId: Int, nParts: Int, hashHex: String, len: Int,
       found: Boolean, pass: String)
 
-  /** Recovery-capable per-request state: [[CrackState]] plus the job spec
-    * and the set of partitions actually heard from (a count can't say
-    * WHICH tile went missing). */
+  /** Coordinator-side per-request state (`struct request_s`,
+    * `server.c:31-40`): the job spec, the set of tiles heard from
+    * (≅ `req_worker_list` membership, A3 — a count can't say WHICH tile
+    * went missing), and the found flag + result buffer (A1). */
   final case class RecoveryState(
       hashHex: String, len: Int, nParts: Int, seen: Seq[Int],
       found: Boolean, pass: String, replied: Boolean)
 
-  /** [[foldVerdicts]] with straggler recovery: on a processing-time
-    * timeout the unheard tiles are rescanned by `rescan` (the same worker
-    * kernel the fan-out runs) and the request completes with the correct
-    * verdict. Curried so the stream wiring can bind `timeoutMs` (0 =
-    * timers disabled — `setTimeoutDuration` is illegal under
-    * `NoTimeout`, which tests use to keep `processAllAvailable`
-    * terminating; the timeout BRANCH is unit-tested via TestGroupState). */
+  /** One batch of a request's verdicts folded into its state: eager `f`
+    * on the first found, `x` once every tile has reported not-found, at
+    * most one reply overall. Pure — returns the new state, the replies,
+    * and whether every tile has now reported (the caller frees the
+    * state). */
+  def step(
+      reqId: Long,
+      state: Option[RecoveryState],
+      verdicts: Iterator[JobVerdict]): (RecoveryState, Seq[CrackReply], Boolean) = {
+    var st = state.getOrElse(
+      RecoveryState(null, 0, -1, Nil, found = false, null, replied = false))
+    // Set for the batch's membership checks; the state keeps a Seq
+    // (encoder-friendly) — converting once per batch keeps the fold
+    // linear where per-verdict Seq.contains would be O(nParts²)
+    var seen = st.seen.toSet
+    val replies = Seq.newBuilder[CrackReply]
+    verdicts.foreach { v =>
+      if (st.nParts < 0)
+        st = st.copy(hashHex = v.hashHex, len = v.len, nParts = v.nParts)
+      seen += v.partId
+      if (v.found && !st.found) st = st.copy(found = true, pass = v.pass)
+      if (st.found && !st.replied) {
+        replies += CrackReply(reqId, "f", st.pass)
+        st = st.copy(replied = true)
+      } else if (seen.size == st.nParts && !st.found && !st.replied) {
+        replies += CrackReply(reqId, "x", null)
+        st = st.copy(replied = true)
+      }
+    }
+    (st.copy(seen = seen.toSeq.sorted), replies.result(), seen.size == st.nParts)
+  }
+
+  /** The fMGWS adapter over [[step]], with straggler recovery: on a
+    * processing-time timeout the unheard tiles are rescanned by `rescan`
+    * (the same worker tile loop the fan-out runs) and the request
+    * completes with the correct verdict. Curried so the stream wiring can
+    * bind `timeoutMs` (0 = timers disabled — `setTimeoutDuration` is
+    * illegal under `NoTimeout`, which tests use to keep
+    * `processAllAvailable` terminating; the timeout BRANCH is unit-tested
+    * via TestGroupState). */
   def foldVerdictsRecovering(
       timeoutMs: Long,
       rescan: (String, Int, Long, Long) => Option[String])(
@@ -114,35 +99,15 @@ object CrackService {
       state.remove()
       completeByRescan(reqId, st, rescan)
     } else {
-      var st = state.getOption.getOrElse(
-        RecoveryState(null, 0, -1, Nil, found = false, null, replied = false))
-      // Set for the batch's membership checks; the state keeps a Seq
-      // (encoder-friendly) — converting once per batch keeps the fold
-      // linear where per-verdict Seq.contains would be O(nParts²)
-      var seen = st.seen.toSet
-      val replies = Seq.newBuilder[CrackReply]
-      verdicts.foreach { v =>
-        if (st.nParts < 0)
-          st = st.copy(hashHex = v.hashHex, len = v.len, nParts = v.nParts)
-        seen += v.partId
-        if (v.found && !st.found) st = st.copy(found = true, pass = v.pass)
-        if (st.found && !st.replied) {
-          replies += CrackReply(reqId, "f", st.pass)
-          st = st.copy(replied = true)
-        } else if (seen.size == st.nParts && !st.found && !st.replied) {
-          replies += CrackReply(reqId, "x", null)
-          st = st.copy(replied = true)
-        }
-      }
-      st = st.copy(seen = seen.toSeq.sorted)
-      if (seen.size == st.nParts) state.remove()
+      val (st, replies, done) = step(reqId, state.getOption, verdicts)
+      if (done) state.remove()
       else {
         state.update(st)
         // re-arm per batch: the clock restarts whenever the request makes
         // progress, so only a genuinely silent straggler trips recovery
         if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
       }
-      replies.result().iterator
+      replies.iterator
     }
   }
 
@@ -176,9 +141,9 @@ object CrackService {
         else CrackReply(reqId, "x", null))
     }
 
-  /** Recovery-capable reply stream: `timeoutMs > 0` arms processing-time
-    * straggler recovery; `timeoutMs = 0` degrades to the plain fold
-    * (timers off — the test-friendly mode). */
+  /** Verdict stream → reply stream (append mode, state keyed by request
+    * id, freed on completion). `timeoutMs > 0` arms processing-time
+    * straggler recovery; `timeoutMs = 0` turns timers off. */
   def replyStreamRecovering(
       verdicts: Dataset[JobVerdict],
       timeoutMs: Long,

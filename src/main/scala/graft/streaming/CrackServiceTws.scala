@@ -10,7 +10,8 @@ import graft.streaming.CrackService.{CrackReply, JobVerdict, RecoveryState}
   * [[SessionTrackerTws]]: the reference's crack-job state machine (T8,
   * `server.c:229-331`) plus the timeout rescheduler its author left as a
   * stub (`server.c:440-447`) must behave identically on both state APIs,
-  * and the dual implementation pins that. Timers here are explicit
+  * so both adapters call the one [[CrackService.step]] and
+  * [[CrackService.completeByRescan]]. Timers here are explicit
   * per-key registrations (`registerTimer`/`handleExpiredTimer`) instead
   * of fMGWS's single implicit timeout — re-armed on every batch that
   * makes progress, so only a genuinely silent straggler trips recovery.
@@ -50,29 +51,14 @@ object CrackServiceTws {
         reqId: Long,
         verdicts: Iterator[JobVerdict],
         timers: TimerValues): Iterator[CrackReply] = {
-      var st = if (req.exists()) req.get()
-        else RecoveryState(null, 0, -1, Nil, found = false, null, replied = false)
-      var seen = st.seen.toSet
-      val replies = Seq.newBuilder[CrackReply]
-      verdicts.foreach { v =>
-        if (st.nParts < 0)
-          st = st.copy(hashHex = v.hashHex, len = v.len, nParts = v.nParts)
-        seen += v.partId
-        if (v.found && !st.found) st = st.copy(found = true, pass = v.pass)
-        if (st.found && !st.replied) {
-          replies += CrackReply(reqId, "f", st.pass)
-          st = st.copy(replied = true)
-        } else if (seen.size == st.nParts && !st.found && !st.replied) {
-          replies += CrackReply(reqId, "x", null)
-          st = st.copy(replied = true)
-        }
-      }
-      if (seen.size == st.nParts) { req.clear(); disarm() }
+      val (st, replies, done) = CrackService.step(
+        reqId, if (req.exists()) Some(req.get()) else None, verdicts)
+      if (done) { req.clear(); disarm() }
       else {
-        req.update(st.copy(seen = seen.toSeq.sorted))
+        req.update(st)
         rearm(timers)
       }
-      replies.result().iterator
+      replies.iterator
     }
 
     override def handleExpiredTimer(
@@ -83,8 +69,6 @@ object CrackServiceTws {
       val st = req.get()
       req.clear()
       armed.clear()
-      // ONE copy of the rescan semantics — shared with the fMGWS fold,
-      // which is the whole point of the API-parity pairing
       CrackService.completeByRescan(reqId, st, rescan)
     }
   }

@@ -54,23 +54,32 @@ object SessionTracker {
       return Iterator.single(
         ConnEvent(connid, KeepAliveAck, st.expectedNext - 1))
     }
-    var st = state.getOption.getOrElse(ConnState(1L))
-    val out = Seq.newBuilder[ConnEvent]
-    // within a batch, process in seqnum order (the network may reorder;
-    // the reference's single-threaded read loop serializes arrival)
-    packets.toSeq.sortBy(_.seqnum).foreach { p =>
-      if (p.seqnum == st.expectedNext) {
-        out += ConnEvent(connid, Delivered, p.seqnum)
-        st = st.copy(expectedNext = st.expectedNext + 1)
-      } else if (p.seqnum < st.expectedNext) {
-        out += ConnEvent(connid, DupDropped, p.seqnum)
-      } else {
-        out += ConnEvent(connid, OutOfOrderDropped, p.seqnum)
-      }
-    }
+    val (st, out) = gate(state.getOption.getOrElse(ConnState(1L)), packets)
     state.update(st.copy(silentEpochs = 0)) // traffic resets liveness
     if (epochLenMs > 0 && epochCnt > 0) state.setTimeoutDuration(epochLenMs)
-    out.result().iterator
+    out.iterator
+  }
+
+  /** The F5/T5 in-order gate over one batch of a connection's packets:
+    * deliver `expectedNext`, drop a retransmit of a delivered seqnum, drop
+    * a future seqnum. Within a batch packets go in seqnum order (the
+    * network may reorder; the reference's single-threaded read loop
+    * serializes arrival). Pure, and the one definition of the gate — the
+    * fMGWS fold here and [[SessionTrackerTws]] both call it. */
+  def gate(state: ConnState, packets: Iterator[LspPacket]): (ConnState, Seq[ConnEvent]) = {
+    var st = state
+    val out = Seq.newBuilder[ConnEvent]
+    packets.toSeq.sortBy(_.seqnum).foreach { p =>
+      if (p.seqnum == st.expectedNext) {
+        out += ConnEvent(p.connid, Delivered, p.seqnum)
+        st = st.copy(expectedNext = st.expectedNext + 1)
+      } else if (p.seqnum < st.expectedNext) {
+        out += ConnEvent(p.connid, DupDropped, p.seqnum)
+      } else {
+        out += ConnEvent(p.connid, OutOfOrderDropped, p.seqnum)
+      }
+    }
+    (st, out.result())
   }
 
   /** Packet stream → delivery/drop/keep-alive/timeout event stream.

@@ -12,10 +12,10 @@ import graft.streaming.SessionTracker._
   * `spark.sql.streaming.stateStore.providerClass =
   * ...state.RocksDBStateStoreProvider`.
   *
-  * Kept alongside the fMGWS implementation deliberately: both express the
-  * reference's in-order-delivery gate (`lsp_server.c:241-249`), and the
-  * pair pins that the engine's semantics don't depend on which state API
-  * carries them. */
+  * Kept alongside the fMGWS implementation deliberately: both run the one
+  * in-order-delivery gate [[SessionTracker.gate]] (`lsp_server.c:241-249`),
+  * and the pair pins that the engine's semantics don't depend on which
+  * state API carries them. */
 object SessionTrackerTws {
 
   class ConnProcessor extends StatefulProcessor[Long, LspPacket, ConnEvent] {
@@ -30,20 +30,9 @@ object SessionTrackerTws {
         connid: Long,
         rows: Iterator[LspPacket],
         timers: TimerValues): Iterator[ConnEvent] = {
-      var st = if (conn.exists()) conn.get() else ConnState(1L)
-      val out = Seq.newBuilder[ConnEvent]
-      rows.toSeq.sortBy(_.seqnum).foreach { p =>
-        if (p.seqnum == st.expectedNext) {
-          out += ConnEvent(connid, Delivered, p.seqnum)
-          st = ConnState(st.expectedNext + 1)
-        } else if (p.seqnum < st.expectedNext) {
-          out += ConnEvent(connid, DupDropped, p.seqnum)
-        } else {
-          out += ConnEvent(connid, OutOfOrderDropped, p.seqnum)
-        }
-      }
+      val (st, out) = gate(if (conn.exists()) conn.get() else ConnState(1L), rows)
       conn.update(st)
-      out.result().iterator
+      out.iterator
     }
   }
 

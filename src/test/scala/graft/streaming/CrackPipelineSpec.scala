@@ -59,4 +59,22 @@ class CrackPipelineSpec extends SparkSpec {
         Seq(CrackReply(9L, "f", "a")))
     } finally q.stop()
   }
+
+  test("a non-hex request is dropped; the valid one is answered, the query lives") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[CrackJob]
+    val name = s"nonhex_${System.nanoTime()}"
+    val q = CrackPipeline.replyStream(input.toDS())
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      input.addData(Seq(
+        CrackJob(1L, "g" * 40, 2, 4), // 40 chars, not hex: no digest at all
+        CrackJob(2L, "da23614e02469a0d7c7bd1bdab5c9c474b1904dc", 2, 4))) // "ab"
+      q.processAllAvailable()
+      assert(spark.table(name).as[CrackReply].collect().toSeq ===
+        Seq(CrackReply(2L, "f", "ab")))
+      assert(q.isActive && q.exception.isEmpty)
+    } finally q.stop()
+  }
 }

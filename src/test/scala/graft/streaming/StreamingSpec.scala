@@ -12,12 +12,24 @@ import graft.streaming.SessionTracker._
   * Assertions pin state-machine outputs, not wall-clock behavior. */
 class StreamingSpec extends SparkSpec {
 
-  private def runVerdicts(batches: Seq[Seq[PartitionVerdict]]): Seq[CrackReply] = {
+  /** A verdict whose job spec is irrelevant: with timers off the fold
+    * never rescans, so only (reqId, partId, nParts, found, pass) matter. */
+  private def verdict(
+      reqId: Long, partId: Int, nParts: Int, found: Boolean, pass: String) =
+    JobVerdict(reqId, partId, nParts, "0" * 40, 4, found, pass)
+
+  /** Verdict batches through the fMGWS fold (timers off), or through the
+    * transformWithState processor when `tws`. */
+  private def runVerdicts(
+      batches: Seq[Seq[JobVerdict]], tws: Boolean = false): Seq[CrackReply] = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val input = MemoryStream[PartitionVerdict]
+    val input = MemoryStream[JobVerdict]
     val name = s"replies_${System.nanoTime()}"
-    val q = CrackService.replyStream(input.toDS())
+    val replies =
+      if (tws) CrackServiceTws.replyStreamRecovering(input.toDS(), timeoutMs = 0L)
+      else CrackService.replyStreamRecovering(input.toDS(), timeoutMs = 0L)
+    val q = replies
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
       batches.foreach { b => input.addData(b); q.processAllAvailable() }
@@ -272,28 +284,98 @@ class StreamingSpec extends SparkSpec {
 
   test("A1: eager reply on first found; stragglers don't re-emit") {
     val replies = runVerdicts(Seq(
-      Seq(PartitionVerdict(7L, 0, 3, found = false, null)),
-      Seq(PartitionVerdict(7L, 1, 3, found = true, "abcd")),
-      Seq(PartitionVerdict(7L, 2, 3, found = false, null)) // straggler
+      Seq(verdict(7L, 0, 3, found = false, null)),
+      Seq(verdict(7L, 1, 3, found = true, "abcd")),
+      Seq(verdict(7L, 2, 3, found = false, null)) // straggler
     ))
     assert(replies === Seq(CrackReply(7L, "f", "abcd")))
   }
 
   test("A2: 'x' only after ALL partitions report not-found") {
     val replies = runVerdicts(Seq(
-      Seq(PartitionVerdict(1L, 0, 3, found = false, null),
-        PartitionVerdict(1L, 1, 3, found = false, null)),
-      Seq(PartitionVerdict(1L, 2, 3, found = false, null))
+      Seq(verdict(1L, 0, 3, found = false, null),
+        verdict(1L, 1, 3, found = false, null)),
+      Seq(verdict(1L, 2, 3, found = false, null))
     ))
     assert(replies === Seq(CrackReply(1L, "x", null)))
   }
 
   test("A1 duplicate-found is idempotent (reference overwrites, server.c:291)") {
     val replies = runVerdicts(Seq(
-      Seq(PartitionVerdict(2L, 0, 2, found = true, "mzzz")),
-      Seq(PartitionVerdict(2L, 1, 2, found = true, "zzzz")) // late dup found
+      Seq(verdict(2L, 0, 2, found = true, "mzzz")),
+      Seq(verdict(2L, 1, 2, found = true, "zzzz")) // late dup found
     ))
     assert(replies === Seq(CrackReply(2L, "f", "mzzz")))
+  }
+
+  test("verdict step: eager f with a straggler; the straggler only frees state") {
+    val (s1, r1, d1) = CrackService.step(7L, None,
+      Iterator(verdict(7L, 0, 3, found = false, null)))
+    assert(r1.isEmpty && !d1)
+    val (s2, r2, d2) = CrackService.step(7L, Some(s1),
+      Iterator(verdict(7L, 1, 3, found = true, "abcd")))
+    assert(r2 === Seq(CrackReply(7L, "f", "abcd")) && !d2 && s2.replied)
+    val (_, r3, d3) = CrackService.step(7L, Some(s2),
+      Iterator(verdict(7L, 2, 3, found = false, null)))
+    assert(r3.isEmpty && d3)
+  }
+
+  test("verdict step: x only after every tile; a duplicate found keeps the first") {
+    val (s1, r1, d1) = CrackService.step(1L, None, Iterator(
+      verdict(1L, 0, 3, found = false, null), verdict(1L, 1, 3, found = false, null)))
+    assert(r1.isEmpty && !d1 && s1.seen === Seq(0, 1))
+    val (_, r2, d2) = CrackService.step(1L, Some(s1),
+      Iterator(verdict(1L, 2, 3, found = false, null)))
+    assert(r2 === Seq(CrackReply(1L, "x", null)) && d2)
+    val (s3, r3, d3) = CrackService.step(2L, None, Iterator(
+      verdict(2L, 0, 2, found = true, "mzzz"), verdict(2L, 1, 2, found = true, "zzzz")))
+    assert(r3 === Seq(CrackReply(2L, "f", "mzzz")) && d3 && s3.pass === "mzzz")
+  }
+
+  test("verdict step: a repeated partId never completes a request early") {
+    // a count-based fold would see 3 verdicts of 3 here and reply x
+    val (s1, r1, d1) = CrackService.step(3L, None, Iterator(
+      verdict(3L, 0, 3, found = false, null), verdict(3L, 0, 3, found = false, null),
+      verdict(3L, 1, 3, found = false, null)))
+    assert(r1.isEmpty && !d1 && s1.seen === Seq(0, 1))
+    val (s2, r2, d2) = CrackService.step(3L, Some(s1),
+      Iterator(verdict(3L, 1, 3, found = false, null)))
+    assert(r2.isEmpty && !d2)
+    val (_, r3, d3) = CrackService.step(3L, Some(s2),
+      Iterator(verdict(3L, 2, 3, found = false, null)))
+    assert(r3 === Seq(CrackReply(3L, "x", null)) && d3)
+  }
+
+  test("verdict step: interleaved requests fold independently") {
+    val (a1, ra1, _) = CrackService.step(10L, None,
+      Iterator(verdict(10L, 0, 2, found = false, null)))
+    val (b1, rb1, db1) = CrackService.step(11L, None,
+      Iterator(verdict(11L, 0, 2, found = true, "test")))
+    assert(ra1.isEmpty && rb1 === Seq(CrackReply(11L, "f", "test")) && !db1)
+    val (_, ra2, da2) = CrackService.step(10L, Some(a1),
+      Iterator(verdict(10L, 1, 2, found = false, null)))
+    assert(ra2 === Seq(CrackReply(10L, "x", null)) && da2)
+    val (_, rb2, db2) = CrackService.step(11L, Some(b1),
+      Iterator(verdict(11L, 1, 2, found = false, null)))
+    assert(rb2.isEmpty && db2)
+  }
+
+  test("verdict step parity: fMGWS and transformWithState reply identically") {
+    val batches = Seq(
+      Seq(verdict(1L, 0, 3, found = false, null),
+        verdict(2L, 0, 2, found = true, "mzzz"),
+        verdict(3L, 0, 2, found = false, null)),
+      Seq(verdict(1L, 0, 3, found = false, null), // repeated tile
+        verdict(1L, 1, 3, found = false, null),
+        verdict(2L, 1, 2, found = true, "zzzz"), // late duplicate found
+        verdict(4L, 0, 1, found = true, "test")),
+      Seq(verdict(1L, 2, 3, found = false, null),
+        verdict(3L, 1, 2, found = true, "abcd")))
+    val fmgws = runVerdicts(batches).sortBy(_.reqId)
+    val tws = withRocksDbProvider(runVerdicts(batches, tws = true)).sortBy(_.reqId)
+    assert(fmgws === Seq(CrackReply(1L, "x", null), CrackReply(2L, "f", "mzzz"),
+      CrackReply(3L, "f", "abcd"), CrackReply(4L, "f", "test")))
+    assert(tws === fmgws)
   }
 
   test("T8 straggler recovery: dropped verdict's tile is rescanned on timeout") {
@@ -395,8 +477,8 @@ class StreamingSpec extends SparkSpec {
 
   test("independent requests keep independent state") {
     val replies = runVerdicts(Seq(
-      Seq(PartitionVerdict(10L, 0, 1, found = false, null),
-        PartitionVerdict(11L, 0, 1, found = true, "test"))
+      Seq(verdict(10L, 0, 1, found = false, null),
+        verdict(11L, 0, 1, found = true, "test"))
     )).toSet
     assert(replies === Set(
       CrackReply(10L, "x", null), CrackReply(11L, "f", "test")))
@@ -425,6 +507,16 @@ class StreamingSpec extends SparkSpec {
       assert(events.filter(_.event == DupDropped).map(_.seqnum) === Seq(2L))
       assert(events.filter(_.event == OutOfOrderDropped).map(_.seqnum) === Seq(5L))
     } finally q.stop()
+  }
+
+  test("F5/T5 gate: delivers in seqnum order, drops dups and future seqnums") {
+    val (st, out) = SessionTracker.gate(ConnState(3L, silentEpochs = 2), Iterator(
+      LspPacket(4L, 7L, 1), LspPacket(4L, 3L, 1), LspPacket(4L, 2L, 1),
+      LspPacket(4L, 4L, 1)))
+    assert(out === Seq(ConnEvent(4L, DupDropped, 2L), ConnEvent(4L, Delivered, 3L),
+      ConnEvent(4L, Delivered, 4L), ConnEvent(4L, OutOfOrderDropped, 7L)))
+    // liveness is the adapter's business, not the gate's
+    assert(st === ConnState(5L, silentEpochs = 2))
   }
 
   test("T4 epoch branch: quiet epochs re-ACK last delivered, then T2 evicts") {
