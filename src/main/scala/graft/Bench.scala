@@ -519,21 +519,9 @@ object Bench {
         dying || elapsedAll + estOf(name) > totalBudget - stopMargin - reserve
       }
     def runOnce(name: String, warm: Boolean): Unit = {
-      // full-RESULT caches would make later runs time a map lookup,
-      // not the operator (the cluster table and the pagerank rank
-      // frames are cached per session by design — a bench must
-      // measure the compute, so every run starts cold). Cross-query
-      // INTERMEDIATE caches stay (dedup shingle arrays, trained
-      // IVF/PQ model artifacts, the corpus-to-cell assignment): they
-      // are the library's documented compute-once-per-corpus shape,
-      // and BENCH_LOCAL.json keeps the raw per-run values for audit.
-      // (Invalidation at each query's OWN start keeps that honesty
-      // under the concurrent warmup too: a sibling's result cache is
-      // dropped before this query's clock starts. SessionCache is
-      // putIfAbsent-racing by design, so concurrent invalidate/build
-      // costs duplicate compute, never correctness.)
-      graft.pipeline.TrainingData.invalidateCaches(spark)
-      graft.graph.GraphOps.invalidateCaches(spark)
+      // at each query's own start, so under the concurrent warmup too a
+      // sibling's cached Result is dropped before this clock starts
+      SessionCache.invalidate(spark, SessionCache.Result)
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       // a failure must be LOUD: a silently-dropped query shrinks the

@@ -71,26 +71,12 @@ object Dedup {
     *
     * ONE persisted frame per (session, dir): repeated query invocations
     * (a benchmark loop, a notebook) must reuse the cache entry, not stack
-    * a new one per call. Keyed by `sessionUUID` string, NOT the session
-    * object — a cached DataFrame strongly references its session, so a
-    * weak-keyed map would never actually collect. Entries live for the
-    * JVM (bounded by sessions × dirs); a caller that rewrites the data
-    * under `dir` mid-session must [[invalidateCaches]]. */
-  private val shingleCache = graft.SessionCache.frames[(String, String)]
-
-  /** Drop this session's cached shingle frames (e.g. after rewriting the
-    * parquet under a cached dir) — the derived hot-shingle lists go with
-    * them (stale hot lists would cap against the OLD corpus). */
-  def invalidateCaches(spark: SparkSession): Unit = {
-    val sid = org.apache.spark.sql.GraftShim.sessionId(spark)
-    shingleCache.invalidate(_._1 == sid)
-    hotShingleCache.invalidate(_._1 == sid)
-    cappedArrCache.invalidate(_._1 == sid)
-    tfCache.invalidate(_._1 == sid)
-  }
+    * a new one per call. */
+  private val shingleCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private[graft] def shingleArrays(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.get((org.apache.spark.sql.GraftShim.sessionId(spark), dir))(
+    shingleCache.get(spark, dir)(
       docs(spark, dir)
         .select(col("doc_id"), shingles(col("text")).as("sh_arr"))
         .persist())
@@ -102,12 +88,11 @@ object Dedup {
     * consumer (Jaccard, containment, repeated bench runs) must probe the
     * SAME tiny persisted list instead of re-aggregating the corpus. */
   private val hotShingleCache =
-    graft.SessionCache.frames[(String, String, Int)]
+    graft.SessionCache.frames[(String, Int)](graft.SessionCache.Artifact)
 
   private def hotShingles(
       spark: SparkSession, dir: String, maxDf: Int): DataFrame =
-    hotShingleCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir, maxDf)) {
+    hotShingleCache.get(spark, (dir, maxDf)) {
       val sh = shingleArrays(spark, dir)
         .select(col("doc_id"), explode(col("sh_arr")).as("sh"))
       val hot = sh.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -129,15 +114,14 @@ object Dedup {
     * arrays are returned as-is: zero cost until a boilerplate key
     * actually appears. */
   private val cappedArrCache =
-    graft.SessionCache.frames[(String, String, Int)]
+    graft.SessionCache.frames[(String, Int)](graft.SessionCache.Artifact)
 
   private def cappedShingleArrays(
       spark: SparkSession, dir: String, maxDf: Int): DataFrame = {
     if (maxDf == Int.MaxValue) return shingleArrays(spark, dir)
     val hot = hotShingles(spark, dir, maxDf)
     if (hot.isEmpty) shingleArrays(spark, dir)
-    else cappedArrCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir, maxDf))(
+    else cappedArrCache.get(spark, (dir, maxDf))(
       shingleArrays(spark, dir)
         .crossJoin(broadcast(hot.agg(collect_list("sh").as("hot_arr"))))
         .select(col("doc_id"),
@@ -693,8 +677,7 @@ object Dedup {
     // capped tf table persisted per (session, dir, maxDf) — THREE plan
     // references (both self-join sides + totals) and repeated bench
     // runs reuse one materialization, the shingleCache contract
-    val ctf = tfCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir, maxDf)) {
+    val ctf = tfCache.get(spark, (dir, maxDf)) {
       val tf = docs(spark, dir)
         .select(col("doc_id"),
           explode(graft.functions.shingle_list(col("text"), 4)).as("sh"))
@@ -723,7 +706,8 @@ object Dedup {
   /** Capped per-doc shingle tf table per (session, dir, maxDf) — the
     * [[shingleArrays]] intermediate-cache contract for the WEIGHTED
     * (non-distinct) shingle universe. */
-  private val tfCache = graft.SessionCache.frames[(String, String, Int)]
+  private val tfCache =
+    graft.SessionCache.frames[(String, Int)](graft.SessionCache.Artifact)
 
   /** Permutation `s` of the md5-twin MinHash: first 15 hex chars (60
     * bits, sign-safe in a BIGINT) of md5("mh<s>:"||shingle). */

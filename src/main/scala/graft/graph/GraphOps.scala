@@ -104,9 +104,7 @@ object GraphOps {
     * persisted, one rank shuffle + one aggregation per round. */
   def qPageRankWeighted(
       spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      dir + "#weighted", iters)
-    val ranks = rankCache.get(key) {
+    val ranks = rankCache.get(spark, (dir + "#weighted", iters)) {
       val pairs = load(spark, dir, "lineitem")
         .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
         .groupBy("s", "p").agg(count(lit(1)).as("w"))
@@ -143,23 +141,13 @@ object GraphOps {
 
   /** One persisted rank frame per (session, dir): bench loops re-invoke
     * the query; without the cache each call would stack another
-    * persisted copy (same contract as Dedup.shingleArrays). */
-  private val rankCache = graft.SessionCache.frames[(String, String, Int)]
+    * persisted copy. */
+  private val rankCache =
+    graft.SessionCache.frames[(String, Int)](graft.SessionCache.Result)
 
-  /** Drop this session's cached rank frames. */
-  def invalidateCaches(spark: SparkSession): Unit = {
-    rankCache.invalidate(
-      _._1 == org.apache.spark.sql.GraftShim.sessionId(spark))
-    // MST and betweenness results are query RESULTS too — the bench
-    // must re-measure the contraction/BFS loops per run
-    mstCache.invalidate(
-      _._1 == org.apache.spark.sql.GraftShim.sessionId(spark))
-    betwCache.invalidate(
-      _._1 == org.apache.spark.sql.GraftShim.sessionId(spark))
-    // the trained embedding table is a query RESULT (the bench must
-    // re-measure training per run), same contract as the rank frames
-    NodeEmbed.invalidateCaches(spark)
-  }
+  /** Drop this session's cached query results, in every family. */
+  def invalidateCaches(spark: SparkSession): Unit =
+    graft.SessionCache.invalidate(spark, graft.SessionCache.Result)
 
   /** Personalized PageRank: teleport mass returns ONLY to the seed set,
     * so rank measures proximity to the seeds (the seed-biased crawl /
@@ -329,17 +317,14 @@ object GraphOps {
   /** The degree-annotated, src-hash-partitioned, PERSISTED undirected
     * trade-graph edge table — the compute-once-per-corpus graph
     * artifact every algorithm on this graph shares (full and
-    * personalized PageRank, label propagation). Cached per (session,
-    * dir) under the INTERMEDIATE-cache contract of the shingle and
-    * inverted-index caches, NOT the rank result caches
-    * ([[invalidateCaches]] leaves it alone): at 100 TB the graph table
-    * is built once and served to every algorithm, and rebuilding it per
-    * query would benchmark the build, not the algorithm. */
-  private val edgeDegCache = graft.SessionCache.frames[(String, String)]
+    * personalized PageRank, label propagation): at 100 TB the graph
+    * table is built once and served to every algorithm, and rebuilding
+    * it per query would benchmark the build, not the algorithm. */
+  private val edgeDegCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private[graph] def tradeEdgesDeg(spark: SparkSession, dir: String): DataFrame =
-    edgeDegCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    edgeDegCache.get(spark, dir) {
       withTradePairs(spark, dir) { pairs =>
         val edges = tradeEdges(pairs)
         val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
@@ -352,8 +337,7 @@ object GraphOps {
     }
 
   def qPageRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark), dir, iters)
-    val ranks = rankCache.get(key)(
+    val ranks = rankCache.get(spark, (dir, iters))(
       pageRankRounds(tradeEdgesDeg(spark, dir), iters))
     ranks
       .select(
@@ -572,9 +556,7 @@ object GraphOps {
   def qRandomWalks(
       spark: SparkSession, dir: String, steps: Int = 10,
       walksPerNode: Int = 2): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#walks$walksPerNode", steps)
-    rankCache.get(key) {
+    rankCache.get(spark, (s"$dir#walks$walksPerNode", steps)) {
       // starts = the supplier side (even node ids) of the shared edge
       // artifact; the extra outdeg column is dropped before the walk
       val ed = tradeEdgesDeg(spark, dir)
@@ -585,17 +567,15 @@ object GraphOps {
     }
   }
 
-  /** Cached walk index over the trade graph — an INTERMEDIATE corpus
-    * artifact (built once per (session, dir), shared by every walk
-    * invocation, survives result-cache invalidation) under the same
-    * contract as [[tradeEdgesDeg]]: DeepWalk samples the index many
+  /** Cached walk index over the trade graph, shared by every walk
+    * invocation like [[tradeEdgesDeg]]: DeepWalk samples the index many
     * times, so benching the index build per walk would measure the
     * build, not the sampling. */
-  private val walkIndexCache = graft.SessionCache.frames[(String, String)]
+  private val walkIndexCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private def tradeWalkIndex(spark: SparkSession, dir: String): DataFrame =
-    walkIndexCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    walkIndexCache.get(spark, dir) {
       val ix = walkIndex(spark, tradeEdgesDeg(spark, dir).select("src", "dst"))
       ix.count() // materialize under the cache's ownership
       ix
@@ -617,9 +597,7 @@ object GraphOps {
     * dangling-mass term load-bearing (without it, 100% of part rank
     * would leak every round). */
   def qPageRankDangling(spark: SparkSession, dir: String): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#dangling", DanglingMaxIters)
-    val ranks = rankCache.get(key)(
+    val ranks = rankCache.get(spark, (s"$dir#dangling", DanglingMaxIters))(
       withTradePairs(spark, dir) { pairs =>
         val directed = pairs.select(
           (col("s") * 2).as("src"), (col("p") * 2 + 1).as("dst"))
@@ -641,9 +619,7 @@ object GraphOps {
   def qPageRankSeeded(
       spark: SparkSession, dir: String, iters: Int = 5,
       nation: Int = 3): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#ppr$nation", iters)
-    val ranks = rankCache.get(key) {
+    val ranks = rankCache.get(spark, (s"$dir#ppr$nation", iters)) {
       val seeds = load(spark, dir, "supplier")
         .filter(col("s_nationkey") === nation)
         .select((col("s_suppkey") * 2).as("node"))
@@ -685,9 +661,8 @@ object GraphOps {
       spark: SparkSession, dir: String,
       baseIters: Int = 5, deltaIters: Int = 2,
       cutoff: String = DeltaCutoff): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#delta$baseIters#$cutoff", deltaIters)
-    val ranks = rankCache.get(key) {
+    val key = (s"$dir#delta$baseIters#$cutoff", deltaIters)
+    val ranks = rankCache.get(spark, key) {
       // base subgraph: its OWN degree annotation (degrees differ from
       // the full graph's), built and dropped inside this block
       val basePairs = load(spark, dir, "lineitem")
@@ -839,9 +814,7 @@ object GraphOps {
     * its community label (a node id — the community's deterministic
     * representative). */
   def qLabelProp(spark: SparkSession, dir: String): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#lpa", LabelPropIters)
-    val labels = rankCache.get(key)(
+    val labels = rankCache.get(spark, (s"$dir#lpa", LabelPropIters))(
       lpaRounds(tradeEdgesDeg(spark, dir), LabelPropIters))
     labels
       .select(
@@ -853,14 +826,13 @@ object GraphOps {
 
   /** The co-purchase graph as directed arcs (both directions),
     * src-partitioned and persisted — the unipartite edge artifact the
-    * community census runs on. Cached per (session, dir) under the
-    * [[tradeEdgesDeg]] compute-once contract. */
-  private val cpArcCache = graft.SessionCache.frames[(String, String)]
+    * community census runs on. */
+  private val cpArcCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private[graph] def copurchaseArcs(
       spark: SparkSession, dir: String): DataFrame =
-    cpArcCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    cpArcCache.get(spark, dir) {
       val und = copurchaseEdges(spark, dir)
       val arcs = und.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
@@ -889,10 +861,9 @@ object GraphOps {
     * L∞ pattern); everything else is one arc-table aggregation over the
     * shared labeled arc artifact. */
   def qModularity(spark: SparkSession, dir: String): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#lpa-cp", LabelPropIters)
+    val key = (s"$dir#lpa-cp", LabelPropIters)
     val edges = copurchaseArcs(spark, dir)
-    val labels = rankCache.get(key)(lpaRounds(edges, LabelPropIters))
+    val labels = rankCache.get(spark, key)(lpaRounds(edges, LabelPropIters))
     modularityCensus(edges, labels)
   }
 
@@ -1046,9 +1017,7 @@ object GraphOps {
     val k = arcs.groupBy(col("src").as("node"))
       .agg(sum("w").as("kw"))
     val m2 = arcs.agg(sum("w").as("w2"))
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#louvain", LouvainRounds)
-    val finalLabels = rankCache.get(key) {
+    val finalLabels = rankCache.get(spark, (s"$dir#louvain", LouvainRounds)) {
       var labels = arcs.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("lbl"))
       for (_ <- 1 to LouvainRounds) {
@@ -1110,12 +1079,12 @@ object GraphOps {
 
   /** Support-weighted co-purchase arcs (both directions), persisted per
     * (session, dir) — the weighted sibling of [[copurchaseArcs]]. */
-  private val cpWArcCache = graft.SessionCache.frames[(String, String)]
+  private val cpWArcCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private[graph] def copurchaseWeightedArcs(
       spark: SparkSession, dir: String): DataFrame =
-    cpWArcCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    cpWArcCache.get(spark, dir) {
       val und = copurchaseEdges(spark, dir)
       val arcs = und.select(col("u").as("src"), col("v").as("dst"),
           col("support").as("w"))
@@ -1317,9 +1286,7 @@ object GraphOps {
   def qHits(spark: SparkSession, dir: String,
       iters: Int = HitsIters): DataFrame = {
     require(iters >= 1, s"HITS needs at least one round, got $iters")
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#hits", iters)
-    val scored = rankCache.get(key) {
+    val scored = rankCache.get(spark, (s"$dir#hits", iters)) {
       withTradePairs(spark, dir) { pairs =>
         val arcs = pairs.repartition(
           spark.sparkContext.defaultParallelism, col("s"))
@@ -1391,9 +1358,7 @@ object GraphOps {
     * nodes are absent (mirrored by the oracle's recursive CTE). */
   def qBfsDistances(spark: SparkSession, dir: String,
       nation: String = "NATION_3", maxDepth: Int = BfsMaxDepth): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#bfs#$nation", maxDepth)
-    val dist = rankCache.get(key) {
+    val dist = rankCache.get(spark, (s"$dir#bfs#$nation", maxDepth)) {
       val sources = load(spark, dir, "supplier")
         .join(broadcast(load(spark, dir, "nation")
             .filter(col("n_name") === nation)),
@@ -1452,16 +1417,16 @@ object GraphOps {
   /** The weight-annotated undirected trade edge table — arc weight is
     * `min(l_quantity)` over the (supplier, part) lineitems (the
     * cheapest observed shipment; any positive deterministic integer
-    * works). Cached per (session, dir) under the same
-    * compute-once-per-corpus contract as [[tradeEdgesDeg]]; the cast to
-    * long is exact because quantities are integral in the fixture (and
-    * DuckDB's round-on-cast therefore agrees with Spark's truncate). */
-  private val wEdgeCache = graft.SessionCache.frames[(String, String)]
+    * works). Cached per (session, dir) like [[tradeEdgesDeg]]; the cast
+    * to long is exact because quantities are integral in the fixture
+    * (and DuckDB's round-on-cast therefore agrees with Spark's
+    * truncate). */
+  private val wEdgeCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private[graph] def tradeEdgesWeighted(
       spark: SparkSession, dir: String): DataFrame =
-    wEdgeCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    wEdgeCache.get(spark, dir) {
       val pairs = load(spark, dir, "lineitem")
         .groupBy(col("l_suppkey").as("s"), col("l_partkey").as("p"))
         .agg(min(col("l_quantity")).cast("long").as("w"))
@@ -1498,9 +1463,7 @@ object GraphOps {
   def qSsspWeighted(spark: SparkSession, dir: String,
       nation: String = "NATION_3",
       maxRounds: Int = SsspMaxRounds): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      s"$dir#sssp#$nation", maxRounds)
-    val dist = rankCache.get(key) {
+    val dist = rankCache.get(spark, (s"$dir#sssp#$nation", maxRounds)) {
       val sources = load(spark, dir, "supplier")
         .join(broadcast(load(spark, dir, "nation")
             .filter(col("n_name") === nation)),
@@ -1729,7 +1692,8 @@ object GraphOps {
     (forest, Some(fRdd))
   }
 
-  private val misCache = graft.SessionCache.frames[(String, String)]
+  private val misCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Result)
 
   /** Luby's maximal independent set over the co-purchase graph — the
     * classic symmetry-breaking primitive (a MIS is a conflict-free
@@ -1756,8 +1720,7 @@ object GraphOps {
     * the forcing count doubles as the convergence probe. */
   def qLubyMis(spark: SparkSession, dir: String, maxRounds: Int = 64)
       : DataFrame =
-    misCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    misCache.get(spark, dir) {
       val (edges, _, eRdd) = matLeaf(
         copurchaseEdges(spark, dir).select("u", "v"))
       var (und, nU, undRdd) = matLeaf(
@@ -1812,14 +1775,13 @@ object GraphOps {
     * graph, association distance `1e6 div support` (strong co-purchase
     * = short edge) — the single-linkage backbone of the product graph.
     * Output: the forest edges with their distance and support. */
-  private val mstCache = graft.SessionCache.frames[(String, String)]
+  private val mstCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Result)
 
   def qMst(spark: SparkSession, dir: String): DataFrame =
-    // session-cached like rankCache: repeated calls (bench rounds!)
-    // reuse ONE persisted artifact instead of accreting orphaned leaf
-    // blocks per call; SessionCache owns the result's unpersist
-    mstCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    // session-cached like rankCache: repeated calls reuse ONE persisted
+    // result instead of accreting orphaned leaf blocks per call
+    mstCache.get(spark, dir) {
       // materialize the (expensive) co-purchase aggregation ONCE — it
       // is referenced both as the forest input and the final support
       // join
@@ -1927,12 +1889,10 @@ object GraphOps {
     * standing per-corpus relation all three HyperBall consumers
     * (neighborhood function, harmonic centrality, effective diameter)
     * read — computing them per query paid the register rounds three
-    * times over (~3×3 s at sf0.1). Cross-query INTERMEDIATE cache, the
-    * tradeEdgesDeg/shingle-array posture: the bench's invalidate pass
-    * deliberately keeps these, measuring each query's own finish. */
+    * times over (~3×3 s at sf0.1). */
   private val hyperBallCache =
-    new graft.SessionCache[(String, String), Seq[DataFrame]](
-      _.foreach(_.unpersist(blocking = false)))
+    new graft.SessionCache[String, Seq[DataFrame]](
+      graft.SessionCache.Artifact, _.foreach(_.unpersist(blocking = false)))
 
   /** Deepest radius any consumer asks for — the cached rounds are built
     * once at this depth and prefixes serve shallower queries. */
@@ -1942,8 +1902,7 @@ object GraphOps {
       spark: SparkSession, dir: String, radius: Int): Seq[DataFrame] = {
     require(radius <= HyperBallMaxRadius,
       s"raise HyperBallMaxRadius past $HyperBallMaxRadius")
-    hyperBallCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    hyperBallCache.get(spark, dir) {
       import graft.relational.Sketches
       val (bucket, rho) = Sketches.hllRegister(col("node"), "hb")
       val edges = tradeEdgesDeg(spark, dir).select("src", "dst")
@@ -2053,7 +2012,7 @@ object GraphOps {
     * on the driver with the SAME integer arithmetic (GraphSpec pins
     * local == forced-distributed). */
   private val betwCache =
-    graft.SessionCache.frames[(String, String, Int, Int)]
+    graft.SessionCache.frames[(String, Int, Int)](graft.SessionCache.Result)
 
   def qBetweenness(
       spark: SparkSession, dir: String, nSources: Int = 8, k: Int = 20,
@@ -2061,8 +2020,7 @@ object GraphOps {
       localSolveMax: Long = MstLocalSolveMaxEdges): DataFrame =
     // session-cached (the qMst posture): one persisted result per
     // (session, dir, params), owned by the cache
-    betwCache.get((org.apache.spark.sql.GraftShim.sessionId(spark),
-      dir, nSources, k)) {
+    betwCache.get(spark, (dir, nSources, k)) {
       val (edges, nEdges, edgesRdd) = matLeaf(
         copurchaseEdges(spark, dir).select("u", "v"))
       val out = betweennessOver(spark, edges, nEdges, nSources, k,

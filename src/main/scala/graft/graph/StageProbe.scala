@@ -49,7 +49,7 @@ object StageProbe {
     val eval = t("eval") { NodeEmbed.qEmbedEval(spark, dir).collect() }
     eval.foreach(println)
     val full = t("full_cold") {
-      GraphOps.invalidateCaches(spark)
+      graft.SessionCache.invalidate(spark, graft.SessionCache.Result)
       NodeEmbed.qEmbedEval(spark, dir).count()
     }
     spark.stop()

@@ -67,11 +67,12 @@ object ImageDedup {
   /** Band signatures for the documents media table, cached per
     * (session, dir) like Dedup's shingle arrays — the decode is the
     * expensive step and the signature table is the reusable artifact. */
-  private val hashCache = graft.SessionCache.frames[(String, String)]
+  private val hashCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private[multimodal] def cachedHashes(
       spark: SparkSession, dir: String): DataFrame =
-    hashCache.get((org.apache.spark.sql.GraftShim.sessionId(spark), dir))(
+    hashCache.get(spark, dir)(
       imageHashes(mediaTable(spark, dir))
         .persist(StorageLevel.MEMORY_AND_DISK))
 

@@ -142,23 +142,16 @@ object QualityClassifier {
     * SPEC proves learning on a separable fixture; the oracle proves the
     * training arithmetic bit-exactly either way. */
   /** One scored frame per (session, dir, dims, epochs): the trained
-    * scores are the session's published classifier artifact, shared by
-    * the corpus-build capstone and the calibration census. The bench
-    * invalidates it per run (result-cache contract — training is the
-    * operator being measured). */
+    * scores are the session's published classifier, shared by the
+    * corpus-build capstone and the calibration census; training is the
+    * operator being measured. */
   private val scoreCache =
-    graft.SessionCache.frames[(String, String, Int, Int)]
-
-  def invalidateCaches(spark: SparkSession): Unit =
-    scoreCache.invalidate(
-      _._1 == org.apache.spark.sql.GraftShim.sessionId(spark))
+    graft.SessionCache.frames[(String, Int, Int)](graft.SessionCache.Result)
 
   def qQualityClassifier(
       spark: SparkSession, dir: String, dims: Int = 64,
       epochs: Int = 4): DataFrame = {
-    val key = (org.apache.spark.sql.GraftShim.sessionId(spark),
-      dir, dims, epochs)
-    scoreCache.get(key) {
+    scoreCache.get(spark, (dir, dims, epochs)) {
       val docs = load(spark, dir, "documents")
         .select(col("doc_id"), col("text"),
           when(substring(col("source"), 4, 10).cast("int") < 5, 1L)

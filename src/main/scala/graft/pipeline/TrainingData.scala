@@ -23,31 +23,23 @@ object TrainingData {
     * propagation is this module's only multi-job operator, and both its
     * direct query and the corpus-build composition consume the SAME
     * small materialized result — recomputing it per caller would re-run
-    * the whole loop. Keyed by `sessionUUID` string (a cached DataFrame
-    * strongly references its session, so weak keys would never collect);
-    * entries live for the JVM, bounded by sessions × dirs. The backing
-    * RDD is kept alongside so [[invalidateCaches]] can free its storage
-    * blocks deterministically (an invalidated-but-persisted block would
-    * otherwise linger until GC + ContextCleaner). */
+    * the whole loop. The backing RDD is kept alongside so invalidation
+    * can free its storage blocks deterministically (an
+    * invalidated-but-persisted block would otherwise linger until GC +
+    * ContextCleaner). */
   private val clusterCache = new graft.SessionCache[
-    (String, String), (DataFrame, org.apache.spark.rdd.RDD[_])](
-    _._2.unpersist(blocking = false))
+    String, (DataFrame, org.apache.spark.rdd.RDD[_])](
+    graft.SessionCache.Result, _._2.unpersist(blocking = false))
 
   /** Same contract for the incremental two-batch fixture: one computed
     * (existing ⊕ delta) keep-list per (session, dir). */
   private val incrementalCache = new graft.SessionCache[
-    (String, String), (DataFrame, org.apache.spark.rdd.RDD[_])](
-    _._2.unpersist(blocking = false))
+    String, (DataFrame, org.apache.spark.rdd.RDD[_])](
+    graft.SessionCache.Result, _._2.unpersist(blocking = false))
 
-  /** Drop this session's cached cluster tables — REQUIRED after
-    * rewriting the data under a cached dir mid-session, or the stale
-    * keep-list keeps being served. Unpersists the backing blocks. */
-  def invalidateCaches(spark: SparkSession): Unit = {
-    val sid = org.apache.spark.sql.GraftShim.sessionId(spark)
-    clusterCache.invalidate(_._1 == sid)
-    incrementalCache.invalidate(_._1 == sid)
-    QualityClassifier.invalidateCaches(spark)
-  }
+  /** Drop this session's cached query results, in every family. */
+  def invalidateCaches(spark: SparkSession): Unit =
+    graft.SessionCache.invalidate(spark, graft.SessionCache.Result)
 
   /** Near-dup CLUSTERS from the exact-verified pair relation: connected
     * components, labeled by the minimum doc_id in each component, with
@@ -75,10 +67,10 @@ object TrainingData {
     *
     * The result is cached per (session, dir) — the same checkpointed
     * frame is returned to every caller, so do NOT unpersist it; use
-    * [[invalidateCaches]] when the underlying data changes. */
+    * [[graft.SessionCache.invalidate]] when the underlying data
+    * changes. */
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame =
-    clusterCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    clusterCache.get(spark, dir) {
         val (df, rounds @ _, rdd) = connectedComponentsImpl(
           graft.dedup.Dedup.qMinhashLshPairs(spark, dir)
             .select(col("d1"), col("d2")), spark)
@@ -411,8 +403,7 @@ object TrainingData {
     * [[qDedupClusters]] from scratch; the oracle is literally the
     * from-scratch recursive CTE. */
   def qDedupIncremental(spark: SparkSession, dir: String): DataFrame =
-    incrementalCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    incrementalCache.get(spark, dir) {
         val oldPairs = graft.dedup.Dedup.qMinhashLshPairs(spark, dir)
           .filter(col("d1") % 2 === 0 && col("d2") % 2 === 0)
           .select("d1", "d2")

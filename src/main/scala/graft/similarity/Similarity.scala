@@ -35,27 +35,14 @@ object Similarity {
     * re-pay the training scan each time. Values are the COLLECTED
     * kilobyte-scale codebooks (cells × dims doubles), never persisted
     * distributed frames, so entries cost memory proportional to the
-    * model, not the corpus. Same lifetime contract as
-    * [[graft.dedup.Dedup.shingleArrays]]: per (session, dir), for the
-    * JVM; [[invalidateCaches]] after rewriting data under a dir. */
+    * model, not the corpus. */
   private val modelCache =
-    new graft.SessionCache[(String, String), AnyRef](_ => ())
+    new graft.SessionCache[String, AnyRef](graft.SessionCache.Artifact, _ => ())
 
   private def publishedModel[T <: AnyRef](
       spark: SparkSession, dir: String, tag: String)(train: => T): T =
-    modelCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), s"$dir#$tag"))(
+    modelCache.get(spark, s"$dir#$tag")(
       train).asInstanceOf[T]
-
-  /** Drop this session's published models and cached assignments (e.g.
-    * after rewriting the parquet under a cached dir). */
-  def invalidateCaches(spark: SparkSession): Unit = {
-    val sid = org.apache.spark.sql.GraftShim.sessionId(spark)
-    modelCache.invalidate(_._1 == sid)
-    assignCache.invalidate(_._1 == sid)
-    mutualKnnCache.invalidate(_._1 == sid)
-    lshKnnCache.invalidate(_._1 == sid)
-  }
 
   /** Mean within-cell occupancy the adaptive cell count targets:
     * within-cell pair work is quadratic in occupancy, so bounding the
@@ -1457,8 +1444,7 @@ object Similarity {
     * N·k rows. */
   def qMutualKnn(
       spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val knn = mutualKnnCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir, k)) {
+    val knn = mutualKnnCache.get(spark, (dir, k)) {
       val emb = corpus(spark, dir)
       val l = emb.select(col("vec_id").as("a"), col("embedding").as("va"),
         col("norm").as("na"))
@@ -1650,7 +1636,7 @@ object Similarity {
     * three plan references (both mutual sides + neighborhood sums) and
     * repeat bench runs share one N² scan. */
   private val mutualKnnCache =
-    graft.SessionCache.frames[(String, String, Int)]
+    graft.SessionCache.frames[(String, Int)](graft.SessionCache.Artifact)
 
   /** The mutual-kNN miner in its 100 TB form — [[lshKnnLists]]'s
     * banded-LSH shortlist feeding [[mutualKnnFromLists]]'s N·k algebra.
@@ -1694,9 +1680,7 @@ object Similarity {
       k: Int = 10, bandBits: Int = 2): DataFrame = {
     val quota = spark.conf.getOption("spark.graft.lsh.bucketQuota")
       .map(_.toInt).getOrElse(1024)
-    val knn = lshKnnCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir, k, bandBits,
-        quota)) {
+    val knn = lshKnnCache.get(spark, (dir, k, bandBits, quota)) {
       val lists = lshKnnLists(spark, dir, k, bandBits, quota).persist()
       lists.count() // populate before the algebra's three readers race
       lists
@@ -1707,8 +1691,8 @@ object Similarity {
   /** Per-(session, dir, k, bandBits, quota) persisted banded-LSH kNN
     * lists for [[qMutualKnnLsh]] — same sharing contract as
     * [[mutualKnnCache]]. */
-  private val lshKnnCache =
-    graft.SessionCache.frames[(String, String, Int, Int, Int)]
+  private val lshKnnCache = graft.SessionCache
+    .frames[(String, Int, Int, Int)](graft.SessionCache.Artifact)
 
   /** Semantic dedup (Abbas et al., "SemDeDup") — near-duplicate MEANING,
     * not near-duplicate text: cluster the corpus embeddings (Forgy + one
@@ -1731,15 +1715,13 @@ object Similarity {
     * its embedding and norm — what a pipeline persists NEXT TO the
     * index so every index consumer (dedup, outliers, drift) reads one
     * materialization instead of re-running the crossJoin + argmin scan.
-    * One persisted frame per (session, dir, cells), for the JVM;
-    * [[invalidateCaches]] drops and unpersists it. */
+    * One persisted frame per (session, dir, cells). */
   private val assignCache =
-    graft.SessionCache.frames[(String, String, Int)]
+    graft.SessionCache.frames[(String, Int)](graft.SessionCache.Artifact)
 
   private def cachedAssignment(
       spark: SparkSession, dir: String, cells: Int): DataFrame =
-    assignCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir, cells)) {
+    assignCache.get(spark, (dir, cells)) {
         val embN = corpus(spark, dir)
         val emb = embN.select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("xs"))

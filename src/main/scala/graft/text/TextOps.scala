@@ -913,22 +913,14 @@ object TextOps {
   /** BM25 retrieval over the documents corpus: queries are docs with
     * `doc_id < 20`, k = 10. */
   /** The corpus inverted index (doc_id, tok, tf) — the artifact a real
-    * retrieval system builds ONCE and serves every query from; cached
-    * per (session, dir) with the same contract as
-    * [[graft.dedup.Dedup]]'s shingle arrays (compute-once-per-corpus
-    * intermediate, not a result cache). Hash-partitioned on `tok` so
-    * the per-query posting probes land without a shuffle of the
-    * index. */
-  private val tfCache = graft.SessionCache.frames[(String, String)]
-
-  /** Drop this session's cached inverted indexes. */
-  def invalidateCaches(spark: SparkSession): Unit =
-    tfCache.invalidate(
-      _._1 == org.apache.spark.sql.GraftShim.sessionId(spark))
+    * retrieval system builds ONCE and serves every query from, cached
+    * per (session, dir). Hash-partitioned on `tok` so the per-query
+    * posting probes land without a shuffle of the index. */
+  private val tfCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private def cachedTf(spark: SparkSession, dir: String): DataFrame =
-    tfCache.get(
-      (org.apache.spark.sql.GraftShim.sessionId(spark), dir)) {
+    tfCache.get(spark, dir) {
       val tf = load(spark, dir, "documents")
         .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
         .groupBy("doc_id", "tok")

@@ -65,8 +65,7 @@ object ProfileOne {
     }
     def freshRun(label: String, action: org.apache.spark.sql.DataFrame => Unit)
         : Double = {
-      graft.pipeline.TrainingData.invalidateCaches(spark)
-      graft.graph.GraphOps.invalidateCaches(spark)
+      graft.SessionCache.invalidate(spark, graft.SessionCache.Result)
       stages.clear(); jobs.set(0)
       spark.sparkContext.setJobDescription(s"profile:$name:$label")
       val dt = timed(action(fn(spark, sfDir)))

@@ -808,6 +808,35 @@ class GraphSpec extends SparkSpec {
     assert(row.getDouble(5) < 0.0)
   }
 
+  test("Luby MIS is a Result: invalidateCaches makes the rerun recompute") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = "/root/testdata/sf0.001"
+    val before = GraphOps.qLubyMis(spark, dir)
+    before.collect()
+    GraphOps.invalidateCaches(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    val after = try {
+      val df = GraphOps.qLubyMis(spark, dir)
+      df.collect()
+      // listener bus is async — wait for the count to settle
+      val deadline = System.nanoTime() + 5_000_000_000L
+      var last = -1
+      while (System.nanoTime() < deadline && jobs.get() != last) {
+        last = jobs.get()
+        Thread.sleep(100)
+      }
+      df
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(!(after eq before), "the cached result survived the drop")
+    // a cache hit is one collect job; the Luby rounds run many
+    assert(jobs.get() > 1, s"jobs=${jobs.get()}")
+  }
+
   test("Luby MIS: independent, maximal, every node decided once") {
     val dir = "/root/testdata/sf0.001"
     val mis = GraphOps.qLubyMis(spark, dir).collect()
