@@ -14,130 +14,138 @@ import java.net.{DatagramPacket, DatagramSocket, InetAddress, InetSocketAddress,
   *   - DATA_SEND (connid, s>0, pld)  — sequenced payload
   *   - DATA_ACK  (connid, s>0, empty)
   *
-  * Reliability contract (mirrors `lsp_client.c`):
-  *   - [[write]] is STOP-AND-WAIT: one outstanding message; it
-  *     retransmits every epoch until the matching DATA_ACK arrives
-  *     (`client_sig_timer` → `lsp_client_resend_lastmsgbuf`).
-  *   - Each epoch also re-ACKs the last received server seqnum (or 0
-  *     before any data) — the keep-alive that feeds the server's
-  *     liveness scan (`lsp_client.c:41-43`).
-  *   - [[read]] delivers only in-order data (`seqnum == serverSeq + 1`,
-  *     `lsp_client.c:234-242`), acks it, and silently drops duplicates
-  *     and strays.
-  *   - `epochCnt` receive-less epochs kill the connection
-  *     (`client_sig_timer:27-31`) — calls then throw
-  *     [[LspClient.ConnectionLost]].
+  * [[LspClient.connect]], [[write]] and [[read]] are short calls into one
+  * receive loop (`await`), which handles every packet the same way
+  * whichever call is waiting: the awaited ACK (or CONN_ACK) completes a
+  * wait; in-order data (`seqnum == serverSeq + 1`, `lsp_client.c:234-242`)
+  * is acked and queued for [[read]]; duplicate data is re-acked; anything
+  * else is dropped. At each epoch the waiting call's retransmit runs:
+  *   - the handshake resends CONN_REQ;
+  *   - [[write]] is STOP-AND-WAIT: it resends its one outstanding message
+  *     (`client_sig_timer` → `lsp_client_resend_lastmsgbuf`), then
+  *     re-ACKs the last received server seqnum (0 before any data), the
+  *     keep-alive that feeds the server's liveness scan
+  *     (`lsp_client.c:41-43`);
+  *   - [[read]] sends that keep-alive.
   *
-  * Epochs are realized as socket receive timeouts instead of SIGALRM —
-  * same cadence, no global mutable client. The reference's 2 s epoch ×
-  * 5 is the default; tests dial it down. */
+  * Liveness: after `epochCnt` consecutive epochs WITHOUT PROGRESS the
+  * connection is lost and every call throws [[LspClient.ConnectionLost]].
+  * Progress is the awaited ACK / CONN_ACK or in-order data. This departs
+  * from `client_sig_timer` (`lsp_client.c:27-31`), which resets its count
+  * on ANY packet: there, a peer that keeps sending duplicates or
+  * out-of-order data holds a blocked call open forever, because the
+  * traffic keeps the connection "alive" while nothing it carries can
+  * ever complete the call.
+  *
+  * Epochs are consecutive wall-clock slices of `epochMs`, the first
+  * starting with the call (receive timeouts bounded by the slice's end),
+  * not SIGALRM and not "epochMs of silence" — same cadence, no global
+  * mutable client, and traffic cannot postpone an epoch. The reference's
+  * 2 s epoch × 5 is the default; tests dial it down. */
 final class LspClient private (
     socket: DatagramSocket,
     server: InetSocketAddress,
-    val connid: Long,
     epochMs: Int,
     epochCnt: Int) {
 
-  private var clientSeq = 0L
-  private var serverSeq = 0L
+  private var conn = 0L       // 0 until CONN_ACK assigns it
+  private var clientSeq = 0L  // seqnum of our last DATA_SEND
+  private var inFlight: Array[Byte] = null // its payload until acked
+  private var serverSeq = 0L  // highest in-order server seqnum delivered
+  private var pending = Vector.empty[Array[Byte]] // delivered, not yet read
   private var lost = false
+  private val buf = new Array[Byte](4096)
 
   private def send(connid: Long, seqnum: Long, payload: Array[Byte]): Unit = {
     val bytes = LspWire.encode(connid, seqnum, payload)
     socket.send(new DatagramPacket(bytes, bytes.length, server))
   }
 
-  private def recv(): Option[(Long, Long, Array[Byte])] = {
-    val buf = new Array[Byte](4096)
-    val pkt = new DatagramPacket(buf, buf.length)
-    try {
-      socket.receive(pkt)
-      val row = LspWire.decode(
-        java.util.Arrays.copyOf(pkt.getData, pkt.getLength))
-      if (row == null) None // malformed frame: ignored, like unpack failure
-      else Some((row.getLong(0), row.getLong(1), row.getBinary(2)))
-    } catch { case _: SocketTimeoutException => None }
+  /** Keep-alive: ack the most recent server data (seqnum 0 before any). */
+  private def ackLastReceived(): Unit = send(conn, serverSeq, null)
+
+  /** Apply one packet to the connection state; true if it made progress. */
+  private def handle(c: Long, s: Long, p: Array[Byte]): Boolean =
+    if (conn == 0L) { // handshake: CONN_ACK assigns the connid
+      if (c != 0L && s == 0L && p.isEmpty) { conn = c; true } else false
+    } else if (c != conn) false
+    else if (p.isEmpty) { // DATA_ACK: completes the outstanding write
+      if (inFlight != null && s == clientSeq) { inFlight = null; true }
+      else false
+    } else if (s == serverSeq + 1) { // in-order data: deliver + ack
+      serverSeq = s
+      pending = pending :+ p
+      send(conn, s, null)
+      true
+    } else { // duplicate (server retransmit): re-ack so it stops
+      if (s > 0 && s <= serverSeq) send(conn, s, null)
+      false
+    }
+
+  /** THE receive loop: handle packets until `done`, running `retransmit`
+    * at the end of every epoch; throws ConnectionLost after `epochCnt`
+    * consecutive epochs without progress. */
+  private def await(done: => Boolean)(retransmit: => Unit): Unit = {
+    if (lost) throw new LspClient.ConnectionLost(conn)
+    val epochNs = epochMs * 1000000L
+    var epochEnd = System.nanoTime() + epochNs
+    var progress = false
+    var idle = 0
+    while (!done) {
+      val left = epochEnd - System.nanoTime()
+      if (left <= 0) {
+        idle = if (progress) 0 else idle + 1
+        if (idle > epochCnt) {
+          lost = true
+          throw new LspClient.ConnectionLost(conn)
+        }
+        progress = false
+        // from now, not from the old end: after a pause (GC, a slow
+        // retransmit) each epoch still gets its full receive window
+        epochEnd = System.nanoTime() + epochNs
+        retransmit
+      } else {
+        socket.setSoTimeout(math.max(1L, left / 1000000L).toInt)
+        val pkt = new DatagramPacket(buf, buf.length)
+        try {
+          socket.receive(pkt)
+          val row = LspWire.decode(java.util.Arrays.copyOf(buf, pkt.getLength))
+          // a malformed frame is ignored, like an unpack failure
+          if (row != null && handle(row.getLong(0), row.getLong(1), row.getBinary(2)))
+            progress = true
+        } catch { case _: SocketTimeoutException => }
+      }
+    }
   }
 
-  private def ensureLive(): Unit =
-    if (lost) throw new LspClient.ConnectionLost(connid)
+  send(0L, 0L, null)
+  await(conn != 0L)(send(0L, 0L, null))
 
-  /** Keep-alive: ack the most recent server data (seqnum 0 before any). */
-  private def ackLastReceived(): Unit = send(connid, serverSeq, null)
+  /** Server-assigned connection id (from CONN_ACK). */
+  val connid: Long = conn
 
   /** Send `payload` with the next seqnum; block until the server acks it
     * (retransmitting every epoch). Mirrors `lsp_client_write`. */
   def write(payload: Array[Byte]): Unit = {
-    ensureLive()
+    if (lost) throw new LspClient.ConnectionLost(conn)
     require(payload != null && payload.nonEmpty,
       "LSP data messages carry a non-empty payload (empty = ACK)")
     clientSeq += 1
-    send(connid, clientSeq, payload)
-    var epochs = 0
-    var acked = false
-    while (!acked) {
-      recv() match {
-        case Some((c, s, p)) =>
-          epochs = 0 // any traffic resets the liveness window
-          if (c == connid && s == clientSeq && p.isEmpty) acked = true
-          // in-order data crossing a write: absorb it for a later read
-          else if (c == connid && s == serverSeq + 1 && p.nonEmpty) {
-            pending = pending :+ p
-            serverSeq = s
-            send(connid, s, null)
-          }
-          // duplicate data (server retransmit): re-ack, same as read() —
-          // otherwise the retransmit keeps resetting our epoch window
-          // without ever terminating the server's retransmit loop, and
-          // recovery of our own unacked DATA_SEND rides on timing jitter
-          else if (c == connid && s > 0 && s <= serverSeq && p.nonEmpty)
-            send(connid, s, null)
-        case None =>
-          epochs += 1
-          if (epochs > epochCnt) {
-            lost = true
-            throw new LspClient.ConnectionLost(connid)
-          }
-          send(connid, clientSeq, payload) // stop-and-wait retransmit
-          ackLastReceived()
-      }
+    inFlight = payload
+    send(conn, clientSeq, payload)
+    await(inFlight == null) {
+      send(conn, clientSeq, payload) // stop-and-wait retransmit
+      ackLastReceived()
     }
   }
 
-  private var pending = Vector.empty[Array[Byte]]
-
-  /** Block until the next IN-ORDER server data message; ack and return
-    * its payload. Mirrors `lsp_client_read`. */
+  /** Block until the next IN-ORDER server data message; return its
+    * payload (already acked). Mirrors `lsp_client_read`. */
   def read(): Array[Byte] = {
-    ensureLive()
-    if (pending.nonEmpty) {
-      val h = pending.head
-      pending = pending.tail
-      return h
-    }
-    var epochs = 0
-    while (true) {
-      recv() match {
-        case Some((c, s, p)) =>
-          epochs = 0
-          if (c == connid && s == serverSeq + 1 && p.nonEmpty) {
-            serverSeq = s
-            send(connid, s, null)
-            return p
-          }
-          // duplicate data (retransmit): re-ack it so the server stops
-          if (c == connid && s > 0 && s <= serverSeq && p.nonEmpty)
-            send(connid, s, null)
-        case None =>
-          epochs += 1
-          if (epochs > epochCnt) {
-            lost = true
-            throw new LspClient.ConnectionLost(connid)
-          }
-          ackLastReceived()
-      }
-    }
-    sys.error("unreachable")
+    await(pending.nonEmpty)(ackLastReceived())
+    val h = pending.head
+    pending = pending.tail
+    h
   }
 
   def close(): Unit = socket.close()
@@ -154,34 +162,8 @@ object LspClient {
       host: String, port: Int,
       epochMs: Int = 2000, epochCnt: Int = 5): LspClient = {
     val socket = new DatagramSocket()
-    socket.setSoTimeout(epochMs)
     val server = new InetSocketAddress(InetAddress.getByName(host), port)
-    val req = LspWire.encode(0L, 0L, null)
-    def sendReq(): Unit =
-      socket.send(new DatagramPacket(req, req.length, server))
-    sendReq()
-    var epochs = 0
-    val buf = new Array[Byte](4096)
-    while (true) {
-      val pkt = new DatagramPacket(buf, buf.length)
-      try {
-        socket.receive(pkt)
-        val row = LspWire.decode(
-          java.util.Arrays.copyOf(pkt.getData, pkt.getLength))
-        if (row != null && row.getLong(0) != 0L && row.getLong(1) == 0L &&
-          row.getBinary(2).isEmpty)
-          return new LspClient(socket, server, row.getLong(0),
-            epochMs, epochCnt)
-      } catch {
-        case _: SocketTimeoutException =>
-          epochs += 1
-          if (epochs > epochCnt) {
-            socket.close()
-            throw new ConnectionLost(0L)
-          }
-          sendReq()
-      }
-    }
-    sys.error("unreachable")
+    try new LspClient(socket, server, epochMs, epochCnt)
+    catch { case e: Throwable => socket.close(); throw e }
   }
 }

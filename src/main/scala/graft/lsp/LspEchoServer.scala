@@ -6,8 +6,13 @@ import java.net.{DatagramPacket, DatagramSocket, SocketAddress, SocketTimeoutExc
   * `lsp_server_create` + read/write-back loop): assigns connids to
   * CONN_REQs, acks in-order data, re-acks duplicates (retransmit
   * tolerance, `lsp_server.c`'s seqnum gate), and echoes every delivered
-  * payload back as its own sequenced DATA_SEND with per-epoch
-  * retransmission until the client acks it.
+  * payload back as its own sequenced DATA_SEND.
+  *
+  * Echoes are STOP-AND-WAIT per connection, the reference's window of 1
+  * (`lsp_server.c:71-89`): only the oldest unacked echo is on the wire;
+  * the next one is sent when it is acked, and each epoch (a wall-clock
+  * slice of `epochMs`, so client traffic cannot postpone it) resends only
+  * that head.
   *
   * `dropEvery = n` deterministically drops every n-th OUTGOING packet
   * (0 = none) — the `lsp_set_drop_rate` chaos dial made replayable, so
@@ -29,7 +34,8 @@ final class LspEchoServer(epochMs: Int = 2000, dropEvery: Int = 0) {
       // two client write()s without an interleaved read() would otherwise
       // overwrite the first echo before it is acked, and the dropped echo
       // would never be retransmitted (the client's next read() would
-      // eventually ConnectionLost on a live connection)
+      // eventually ConnectionLost on a live connection). Only its head is
+      // ever on the wire.
       var unacked: Vector[(Long, Array[Byte])])
 
   private val conns = collection.mutable.Map.empty[Long, Conn]
@@ -45,11 +51,21 @@ final class LspEchoServer(epochMs: Int = 2000, dropEvery: Int = 0) {
     socket.send(new DatagramPacket(bytes, bytes.length, addr))
   }
 
+  private def sendHead(id: Long, c: Conn): Unit =
+    c.unacked.headOption.foreach { case (s, p) => send(c.addr, id, s, p) }
+
   private def loop(): Unit = {
     val buf = new Array[Byte](4096)
+    val epochNs = epochMs * 1000000L
+    var epochEnd = System.nanoTime() + epochNs
     while (running) {
-      val pkt = new DatagramPacket(buf, buf.length)
-      try {
+      val left = epochEnd - System.nanoTime()
+      if (left <= 0) { // epoch: retransmit each connection's unacked head
+        conns.foreach { case (id, c) => sendHead(id, c) }
+        epochEnd = System.nanoTime() + epochNs
+      } else try {
+        socket.setSoTimeout(math.max(1L, left / 1000000L).toInt)
+        val pkt = new DatagramPacket(buf, buf.length)
         socket.receive(pkt)
         val row = LspWire.decode(
           java.util.Arrays.copyOf(pkt.getData, pkt.getLength))
@@ -76,22 +92,19 @@ final class LspEchoServer(epochMs: Int = 2000, dropEvery: Int = 0) {
                 send(c.addr, connid, seq, null)
                 c.serverSeq += 1
                 c.unacked = c.unacked :+ (c.serverSeq, payload.clone())
-                send(c.addr, connid, c.serverSeq, payload)
+                if (c.unacked.size == 1) sendHead(connid, c)
               } else if (seq > 0 && seq <= c.clientSeq) {
                 send(c.addr, connid, seq, null) // duplicate: re-ack only
               }
-            } else if (seq > 0) { // DATA_ACK: everything <= seq delivered
+            } else if (c.unacked.headOption.exists(_._1 <= seq)) {
+              // DATA_ACK of the head: everything <= seq delivered
               c.unacked = c.unacked.filter(_._1 > seq)
+              sendHead(connid, c)
             }
           }
         }
       } catch {
-        case _: SocketTimeoutException => // epoch: retransmit unacked echoes
-          // in seqnum order: the client delivers strictly in-order, so the
-          // head must land first for the tail to ever be accepted
-          conns.foreach { case (id, c) =>
-            c.unacked.foreach { case (s, p) => send(c.addr, id, s, p) }
-          }
+        case _: SocketTimeoutException => // epoch boundary: top of loop
         case _: java.net.SocketException if !running => ()
       }
     }

@@ -1,108 +1,37 @@
 package graft.lsp
 
-import java.io.ByteArrayOutputStream
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.types._
 
-/** Wire-compatible LSPMessage protobuf codec, re-expressed natively
-  * (S4/S5, SURVEY.md §2.1). The reference links generated protobuf-c code
-  * (`lsp.pb-c.c:22-55`) for:
+/** The LSPMessage protobuf frame (S4/S5, SURVEY.md §2.1). The reference
+  * links generated protobuf-c code (`lsp.pb-c.c:22-55`) for:
   *
   * {{{ message LSPMessage { uint32 connid=1; uint32 seqnum=2; bytes payload=3; } }}}
   *
-  * Wire format: field 1 `0x08 <varint>`, field 2 `0x10 <varint>`,
-  * field 3 `0x1a <varint len> <bytes>`. [[encode]] always emits all three
-  * fields (matching protobuf-c's packer for a fully-populated message);
-  * [[decode]] also accepts messages with omitted defaulted fields
+  * Here that message is one spec string parsed once into a
+  * [[ProtoCodec.Schema]], the only protobuf codec in graft; this object
+  * holds no wire-format code of its own. [[encode]] always emits all
+  * three fields in field order (protobuf-c's packer for a fully-populated
+  * message); [[decode]] also accepts omitted defaulted fields
   * (proto3-style) and skips unknown fields by wire type.
   */
 object LspWire {
 
-  private def writeVarint(out: ByteArrayOutputStream, value: Long): Unit = {
-    var v = value
-    while ((v & ~0x7fL) != 0) {
-      out.write(((v & 0x7f) | 0x80).toInt)
-      v >>>= 7
-    }
-    out.write(v.toInt)
-  }
+  private val schema =
+    ProtoCodec.parse("1:connid:uint64,2:seqnum:uint64,3:payload:bytes")
 
-  def encode(connid: Long, seqnum: Long, payload: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(16 + (if (payload == null) 0 else payload.length))
-    out.write(0x08); writeVarint(out, connid)
-    out.write(0x10); writeVarint(out, seqnum)
-    val p = if (payload == null) Array.emptyByteArray else payload
-    out.write(0x1a); writeVarint(out, p.length.toLong); out.write(p, 0, p.length)
-    out.toByteArray
-  }
+  /** Frame bytes; a null payload encodes as empty. */
+  def encode(connid: Long, seqnum: Long, payload: Array[Byte]): Array[Byte] =
+    schema.encode(new GenericInternalRow(Array[Any](connid, seqnum,
+      if (payload == null) Array.emptyByteArray else payload)))
 
   /** Returns (connid, seqnum, payload), or null on malformed input. */
-  def decode(bytes: Array[Byte]): InternalRow = {
-    var i = 0
-    var connid = 0L
-    var seqnum = 0L
-    var payload = Array.emptyByteArray
+  def decode(bytes: Array[Byte]): InternalRow = schema.decode(bytes)
 
-    def readVarint(): Long = {
-      var shift = 0
-      var acc = 0L
-      while (i < bytes.length) {
-        val b = bytes(i) & 0xff
-        i += 1
-        acc |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return acc
-        shift += 7
-        if (shift > 63) throw new IllegalArgumentException("varint too long")
-      }
-      throw new IllegalArgumentException("truncated varint")
-    }
-
-    try {
-      while (i < bytes.length) {
-        val tag = readVarint()
-        val field = (tag >> 3).toInt
-        val wire = (tag & 7).toInt
-        (field, wire) match {
-          case (1, 0) => connid = readVarint()
-          case (2, 0) => seqnum = readVarint()
-          case (3, 2) =>
-            val len = readVarint().toInt
-            if (len < 0 || i + len > bytes.length)
-              throw new IllegalArgumentException("bad length")
-            payload = java.util.Arrays.copyOfRange(bytes, i, i + len)
-            i += len
-          case (_, 0) => readVarint() // skip unknown varint field
-          case (_, 1) => // skip unknown fixed64 field
-            if (i + 8 > bytes.length)
-              throw new IllegalArgumentException("truncated fixed64")
-            i += 8
-          case (_, 2) => // skip unknown length-delimited field
-            val len = readVarint().toInt
-            if (len < 0 || i + len > bytes.length)
-              throw new IllegalArgumentException("bad length")
-            i += len
-          case (_, 5) => // skip unknown fixed32 field
-            if (i + 4 > bytes.length)
-              throw new IllegalArgumentException("truncated fixed32")
-            i += 4
-          case _ => throw new IllegalArgumentException(s"unsupported wire type $wire")
-        }
-      }
-      InternalRow(connid, seqnum, payload)
-    } catch {
-      case _: IllegalArgumentException => null
-      case _: ArrayIndexOutOfBoundsException => null
-    }
-  }
-
-  val decodedSchema: StructType = StructType(Seq(
-    StructField("connid", LongType, nullable = false),
-    StructField("seqnum", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = false)))
+  val decodedSchema: StructType = schema.sqlSchema
 }
 
 /** `lsp_encode(connid, seqnum, payload)` → protobuf frame bytes

@@ -1,23 +1,21 @@
 package graft.lsp
 
-import java.io.ByteArrayOutputStream
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, SpecializedGetters, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Schema-DRIVEN protobuf wire codec — the generalization of the
-  * hand-specialized [[LspWire]] (S4/S5): where the reference compiles one
-  * fixed message (`lsp.pb-c.c:22-55` generated for `LSPMessage{1,2,3}`),
-  * this codec takes the message shape as DATA, so an evolved schema (new
-  * fields, renamed fields, new message types) is a spec-string change,
-  * not a code change.
+/** Schema-DRIVEN protobuf wire codec, the only one in graft (S4/S5):
+  * where the reference compiles one fixed message (`lsp.pb-c.c:22-55`
+  * generated for `LSPMessage{1,2,3}`), this codec takes the message shape
+  * as DATA, so an evolved schema (new fields, renamed fields, new message
+  * types) is a spec-string change, not a code change. [[LspWire]] is that
+  * LSPMessage spec.
   *
   * Spec syntax — one clause per field, comma-separated:
   * {{{ "<number>:<name>:<type>[,...]"   e.g. "1:connid:uint64,2:seqnum:uint64,3:payload:bytes" }}}
@@ -104,127 +102,71 @@ object ProtoCodec {
         else -1
       } else sparseSlots.getOrElse(number, -1)
 
-    /** proto3 defaults — what an absent field reads as. Fresh per decode:
-      * repeated slots hold mutable builders. */
-    private def defaults: Array[Any] = fields.map { f =>
-      (f.ptype match {
-        case PVarint | PZigzag => 0L
-        case PBool => false
-        case PDouble => 0.0
-        case PFloat => 0.0f
-        case PString => UTF8String.EMPTY_UTF8
-        case PBytes => Array.emptyByteArray
-        case _: PMessage => null // absence is observable for messages
-        case _: PRepeated => mutable.ArrayBuffer.empty[Any]
-      }): Any
+    // Per-field facts hoisted out of the per-frame paths: the decode and
+    // encode loops index these arrays instead of walking `fields`.
+    private val types: Array[PType] = fields.map(_.ptype).toArray
+    /** Encode-side tag of each field: its scalar wire type, else 2
+      * (messages, packed runs and string/bytes elements are all
+      * length-delimited). */
+    private val tags: Array[Long] = fields.map { f =>
+      (f.number.toLong << 3) | (f.ptype match {
+        case t: PScalar => t.wire
+        case _ => 2
+      })
     }.toArray
+    /** proto3 defaults — what an absent field reads as. Cloned per decode;
+      * repeated slots get a fresh builder only when the schema has any. */
+    private val template: Array[Any] = types.map {
+      case PVarint | PZigzag => 0L
+      case PBool => false
+      case PDouble => 0.0
+      case PFloat => 0.0f
+      case PString => UTF8String.EMPTY_UTF8
+      case PBytes => Array.emptyByteArray
+      case _: PMessage => null // absence is observable for messages
+      case _: PRepeated => null
+    }
+    private val repeatedSlots: Array[Int] =
+      types.indices.filter(s => types(s).isInstanceOf[PRepeated]).toArray
 
     def decode(bytes: Array[Byte]): InternalRow = {
-      val values = defaults
-      var i = 0
-
-      def readVarint(): Long = {
-        var shift = 0
-        var acc = 0L
-        while (i < bytes.length) {
-          val b = bytes(i) & 0xff
-          i += 1
-          acc |= (b & 0x7fL) << shift
-          if ((b & 0x80) == 0) return acc
-          shift += 7
-          if (shift > 63) throw new IllegalArgumentException("varint too long")
-        }
-        throw new IllegalArgumentException("truncated varint")
+      val values = template.clone()
+      var k = 0
+      while (k < repeatedSlots.length) {
+        values(repeatedSlots(k)) = mutable.ArrayBuffer.empty[Any]
+        k += 1
       }
-      def readLen(): Int = {
-        val len64 = readVarint()
-        // reject before toInt: a >2^31 length must not alias into a
-        // small-looking value and decode misaligned garbage
-        if (len64 < 0 || len64 > Int.MaxValue ||
-          i + len64.toInt > bytes.length)
-          throw new IllegalArgumentException("bad length")
-        len64.toInt
-      }
-      // little-endian fixed32/64 starting at i (caller bounds-checked)
-      def readFixed(n: Int): Long = {
-        if (i + n > bytes.length)
-          throw new IllegalArgumentException(s"truncated fixed$n")
-        var acc = 0L
-        var k = 0
-        while (k < n) { acc |= (bytes(i + k) & 0xffL) << (8 * k); k += 1 }
-        i += n
-        acc
-      }
-      def readScalar(t: PScalar): Any = t match {
-        case PVarint => readVarint()
-        case PZigzag =>
-          val raw = readVarint()
-          (raw >>> 1) ^ -(raw & 1)
-        case PBool => readVarint() != 0L
-        case PDouble => java.lang.Double.longBitsToDouble(readFixed(8))
-        case PFloat => java.lang.Float.intBitsToFloat(readFixed(4).toInt)
-        case PString =>
-          val len = readLen()
-          val v = UTF8String.fromBytes(bytes, i, len)
-          i += len
-          v
-        case PBytes =>
-          val len = readLen()
-          val v = java.util.Arrays.copyOfRange(bytes, i, i + len)
-          i += len
-          v
-      }
-      def readMessage(m: PMessage): InternalRow = {
-        val len = readLen()
-        val sub = m.schema.decode(java.util.Arrays.copyOfRange(bytes, i, i + len))
-        if (sub == null)
-          throw new IllegalArgumentException("malformed nested message")
-        i += len
-        sub
-      }
-      def skip(wire: Int): Unit = wire match {
-        case 0 => readVarint()
-        case 1 => readFixed(8)
-        case 2 =>
-          // NOT `i += readLen()`: the LHS `i` is read BEFORE readLen()
-          // advances it past the length varint, so += would rewind
-          val len = readLen()
-          i += len
-        case 5 => readFixed(4)
-        case w => throw new IllegalArgumentException(s"unsupported wire type $w")
-      }
-
+      def elems(s: Int) = values(s).asInstanceOf[mutable.ArrayBuffer[Any]]
+      val r = new Reader(bytes)
       try {
-        while (i < bytes.length) {
-          val tag = readVarint()
-          val number = (tag >>> 3).toInt
+        while (r.i < bytes.length) {
+          val tag = r.readVarint()
           val wire = (tag & 7).toInt
-          val s = slot(number)
-          val ptype = if (s >= 0) fields(s).ptype else null
-          ptype match {
-            case t: PScalar if t.wire == wire => values(s) = readScalar(t)
-            case m: PMessage if wire == 2 => values(s) = readMessage(m)
-            case PRepeated(t: PScalar) if t.wire == wire =>
-              values(s).asInstanceOf[mutable.ArrayBuffer[Any]] += readScalar(t)
+          val s = slot((tag >>> 3).toInt)
+          if (s < 0) r.skip(wire) // unknown field
+          else types(s) match {
+            case t: PScalar if t.wire == wire => values(s) = r.scalar(t)
+            case m: PMessage if wire == 2 => values(s) = r.message(m)
+            case PRepeated(t: PScalar) if t.wire == wire => elems(s) += r.scalar(t)
             case PRepeated(t: PScalar) if wire == 2 && t.wire != 2 =>
               // packed run of numeric elements
-              val len = readLen()
-              val end = i + len
-              val buf = values(s).asInstanceOf[mutable.ArrayBuffer[Any]]
-              while (i < end) buf += readScalar(t)
-              if (i != end)
+              val n = r.len()
+              val end = r.i + n
+              val buf = elems(s)
+              while (r.i < end) buf += r.scalar(t)
+              if (r.i != end)
                 throw new IllegalArgumentException("packed run overran")
-            case PRepeated(m: PMessage) if wire == 2 =>
-              values(s).asInstanceOf[mutable.ArrayBuffer[Any]] += readMessage(m)
-            case _ => skip(wire) // unknown field or type drift
+            case PRepeated(m: PMessage) if wire == 2 => elems(s) += r.message(m)
+            case _ => r.skip(wire) // type drift
           }
         }
-        fields.zipWithIndex.foreach { case (f, s) =>
-          if (f.ptype.isInstanceOf[PRepeated])
-            values(s) = new GenericArrayData(
-              values(s).asInstanceOf[mutable.ArrayBuffer[Any]].toArray)
+        k = 0
+        while (k < repeatedSlots.length) {
+          val s = repeatedSlots(k)
+          values(s) = new GenericArrayData(elems(s).toArray)
+          k += 1
         }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
+        new GenericInternalRow(values)
       } catch {
         case _: IllegalArgumentException => null
         case _: ArrayIndexOutOfBoundsException => null
@@ -237,120 +179,181 @@ object ProtoCodec {
       * decode-with-defaults is lossless for any value including zeros;
       * NULL messages and empty arrays emit nothing). */
     def encode(row: InternalRow): Array[Byte] = {
-      val out = new ByteArrayOutputStream(32)
-      writeTo(row, out)
-      out.toByteArray
-    }
-
-    private def writeTo(row: InternalRow, out: ByteArrayOutputStream): Unit = {
-      val w = new WireWriter(out)
-      def nonNull(s: Int, f: Field): Unit =
-        if (row.isNullAt(s))
-          throw new IllegalArgumentException(
-            s"proto_encode: field '${f.name}' is NULL — proto3 scalars and " +
-              "repeated fields have no null representation (only nested " +
-              "messages may be NULL)")
-      def elemAt(arr: ArrayData, j: Int, t: PType): Any = t match {
-        case PVarint | PZigzag => arr.getLong(j)
-        case PBool => arr.getBoolean(j)
-        case PDouble => arr.getDouble(j)
-        case PFloat => arr.getFloat(j)
-        case PString => arr.getUTF8String(j)
-        case PBytes => arr.getBinary(j)
-        case m: PMessage => arr.getStruct(j, m.schema.fields.size)
-        case _: PRepeated => throw new IllegalStateException("unreachable")
-      }
-
-      fields.zipWithIndex.foreach { case (f, s) =>
-        f.ptype match {
-          case t: PScalar =>
-            nonNull(s, f)
-            w.tag(f.number, t.wire)
-            w.scalarValue(t, t match {
-              case PVarint | PZigzag => row.getLong(s)
-              case PBool => row.getBoolean(s)
-              case PDouble => row.getDouble(s)
-              case PFloat => row.getFloat(s)
-              case PString => row.getUTF8String(s)
-              case PBytes => row.getBinary(s)
-            })
+      val w = new Writer(64)
+      var s = 0
+      while (s < types.length) {
+        types(s) match {
           case m: PMessage =>
-            if (!row.isNullAt(s))
-              w.lenDelimited(f.number, m.schema.encode(row.getStruct(s, m.schema.fields.size)))
+            if (!row.isNullAt(s)) {
+              w.writeVarint(tags(s))
+              w.bytes(m.schema.encode(row.getStruct(s, m.schema.fields.size)))
+            }
+          case _ if row.isNullAt(s) =>
+            throw new IllegalArgumentException(
+              s"proto_encode: field '${fields(s).name}' is NULL — proto3 scalars and " +
+                "repeated fields have no null representation (only nested " +
+                "messages may be NULL)")
+          case t: PScalar =>
+            w.writeVarint(tags(s))
+            w.scalar(t, row, s)
           case PRepeated(t: PScalar) if t.wire != 2 =>
             // packed (proto3 default for numeric elements): element
             // values into a side buffer, then one length-delimited run
-            nonNull(s, f)
             val arr = row.getArray(s)
             if (arr.numElements() > 0) {
-              val b = new ByteArrayOutputStream(arr.numElements() * 4)
-              val pw = new WireWriter(b)
+              val run = new Writer(arr.numElements() * 4)
               var j = 0
-              while (j < arr.numElements()) {
-                pw.scalarValue(t, elemAt(arr, j, t))
-                j += 1
-              }
-              w.lenDelimited(f.number, b.toByteArray)
+              while (j < arr.numElements()) { run.scalar(t, arr, j); j += 1 }
+              w.writeVarint(tags(s))
+              w.bytes(run.result)
             }
           case PRepeated(t) =>
-            nonNull(s, f)
             val arr = row.getArray(s)
             var j = 0
             while (j < arr.numElements()) {
+              w.writeVarint(tags(s))
               t match {
                 case m: PMessage =>
-                  w.lenDelimited(f.number,
-                    m.schema.encode(arr.getStruct(j, m.schema.fields.size)))
-                case sc: PScalar => // string / bytes
-                  w.tag(f.number, 2)
-                  w.scalarValue(sc, elemAt(arr, j, sc))
+                  w.bytes(m.schema.encode(arr.getStruct(j, m.schema.fields.size)))
+                case sc: PScalar => w.scalar(sc, arr, j) // string / bytes
                 case _: PRepeated => throw new IllegalStateException("unreachable")
               }
               j += 1
             }
         }
+        s += 1
       }
+      w.result
+    }
+  }
+
+  /** THE wire-format reader: a cursor over one frame. Every malformation
+    * (truncation, overlong varint, bad length, unsupported wire type)
+    * throws IllegalArgumentException, which [[Schema.decode]] turns into
+    * a null row. */
+  private final class Reader(bytes: Array[Byte]) {
+    var i = 0
+
+    def readVarint(): Long = {
+      var shift = 0
+      var acc = 0L
+      while (i < bytes.length) {
+        val b = bytes(i) & 0xff
+        i += 1
+        acc |= (b & 0x7fL) << shift
+        if ((b & 0x80) == 0) return acc
+        shift += 7
+        if (shift > 63) throw new IllegalArgumentException("varint too long")
+      }
+      throw new IllegalArgumentException("truncated varint")
+    }
+    def len(): Int = {
+      val len64 = readVarint()
+      // reject before toInt: a >2^31 length must not alias into a
+      // small-looking value and decode misaligned garbage
+      if (len64 < 0 || len64 > Int.MaxValue || i + len64.toInt > bytes.length)
+        throw new IllegalArgumentException("bad length")
+      len64.toInt
+    }
+    /** Little-endian fixed32/64. */
+    def fixed(n: Int): Long = {
+      if (i + n > bytes.length)
+        throw new IllegalArgumentException(s"truncated fixed$n")
+      var acc = 0L
+      var k = 0
+      while (k < n) { acc |= (bytes(i + k) & 0xffL) << (8 * k); k += 1 }
+      i += n
+      acc
+    }
+    def scalar(t: PScalar): Any = t match {
+      case PVarint => readVarint()
+      case PBytes =>
+        val n = len()
+        val v = java.util.Arrays.copyOfRange(bytes, i, i + n)
+        i += n
+        v
+      case PString =>
+        val n = len()
+        val v = UTF8String.fromBytes(bytes, i, n)
+        i += n
+        v
+      case PZigzag =>
+        val raw = readVarint()
+        (raw >>> 1) ^ -(raw & 1)
+      case PBool => readVarint() != 0L
+      case PDouble => java.lang.Double.longBitsToDouble(fixed(8))
+      case PFloat => java.lang.Float.intBitsToFloat(fixed(4).toInt)
+    }
+    def message(m: PMessage): InternalRow = {
+      val n = len()
+      val sub = m.schema.decode(java.util.Arrays.copyOfRange(bytes, i, i + n))
+      if (sub == null)
+        throw new IllegalArgumentException("malformed nested message")
+      i += n
+      sub
+    }
+    def skip(wire: Int): Unit = wire match {
+      case 0 => readVarint()
+      case 1 => fixed(8)
+      case 2 =>
+        // NOT `i += len()`: the LHS `i` is read BEFORE len() advances it
+        // past the length varint, so += would rewind
+        val n = len()
+        i += n
+      case 5 => fixed(4)
+      case w => throw new IllegalArgumentException(s"unsupported wire type $w")
     }
   }
 
   /** THE wire-format writer — one implementation shared by the top-level
     * message body and packed-run side buffers, so the scalar encodings
-    * can never diverge between the two paths. */
-  private final class WireWriter(out: ByteArrayOutputStream) {
-    def varint(value: Long): Unit = {
+    * can never diverge between the two paths. A plain growable array:
+    * ByteArrayOutputStream synchronizes every write. */
+  private final class Writer(capacity: Int) {
+    private var buf = new Array[Byte](math.max(capacity, 16))
+    private var n = 0
+
+    private def room(k: Int): Unit =
+      if (n + k > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, n + k))
+    def writeVarint(value: Long): Unit = {
+      room(10)
       var v = value
       while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt)
+        buf(n) = ((v & 0x7f) | 0x80).toByte
+        n += 1
         v >>>= 7
       }
-      out.write(v.toInt)
+      buf(n) = v.toByte
+      n += 1
     }
-    def fixed(v: Long, n: Int): Unit = {
-      var k = 0
-      while (k < n) { out.write(((v >>> (8 * k)) & 0xff).toInt); k += 1 }
+    def fixed(v: Long, k: Int): Unit = {
+      room(k)
+      var j = 0
+      while (j < k) { buf(n) = (v >>> (8 * j)).toByte; n += 1; j += 1 }
     }
-    def tag(number: Int, wire: Int): Unit = varint((number.toLong << 3) | wire)
-    def lenDelimited(number: Int, b: Array[Byte]): Unit = {
-      tag(number, 2); varint(b.length.toLong); out.write(b, 0, b.length)
+    /** Length-prefixed bytes. */
+    def bytes(b: Array[Byte]): Unit = {
+      writeVarint(b.length.toLong)
+      room(b.length)
+      System.arraycopy(b, 0, buf, n, b.length)
+      n += b.length
     }
-    /** Scalar VALUE bytes (no tag) — shared by plain and packed paths. */
-    def scalarValue(t: PScalar, v: Any): Unit = t match {
-      case PVarint => varint(v.asInstanceOf[Long])
+    /** Scalar VALUE bytes (no tag) of `src(ord)` — a row field or an
+      * array element, shared by plain and packed paths. */
+    def scalar(t: PScalar, src: SpecializedGetters, ord: Int): Unit = t match {
+      case PVarint => writeVarint(src.getLong(ord))
       case PZigzag =>
-        val x = v.asInstanceOf[Long]
-        varint((x << 1) ^ (x >> 63))
-      case PBool => varint(if (v.asInstanceOf[Boolean]) 1L else 0L)
-      case PDouble =>
-        fixed(java.lang.Double.doubleToLongBits(v.asInstanceOf[Double]), 8)
+        val x = src.getLong(ord)
+        writeVarint((x << 1) ^ (x >> 63))
+      case PBool => writeVarint(if (src.getBoolean(ord)) 1L else 0L)
+      case PDouble => fixed(java.lang.Double.doubleToLongBits(src.getDouble(ord)), 8)
       case PFloat =>
-        fixed(java.lang.Float.floatToIntBits(v.asInstanceOf[Float]) & 0xffffffffL, 4)
-      case PString =>
-        val b = v.asInstanceOf[UTF8String].getBytes
-        varint(b.length.toLong); out.write(b, 0, b.length)
-      case PBytes =>
-        val b = v.asInstanceOf[Array[Byte]]
-        varint(b.length.toLong); out.write(b, 0, b.length)
+        fixed(java.lang.Float.floatToIntBits(src.getFloat(ord)) & 0xffffffffL, 4)
+      case PString => bytes(src.getUTF8String(ord).getBytes)
+      case PBytes => bytes(src.getBinary(ord))
     }
+    def result: Array[Byte] = java.util.Arrays.copyOf(buf, n)
   }
 
   /** Split on `sep` at paren depth 0 only (nested specs contain both

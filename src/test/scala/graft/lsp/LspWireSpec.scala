@@ -20,6 +20,52 @@ class LspWireSpec extends SparkSpec {
     assert(new String(r.getBinary(2), US_ASCII) === "abc")
   }
 
+  test("known wire vectors: seeded random frames match a test-local encoder") {
+    // the LSPMessage layout written out by hand, independent of the codec:
+    // 0x08 varint(connid) 0x10 varint(seqnum) 0x1a varint(len) payload
+    def varint(v: Long): Seq[Int] =
+      if ((v & ~0x7fL) == 0) Seq(v.toInt) else ((v & 0x7f) | 0x80).toInt +: varint(v >>> 7)
+    def frame(c: Long, s: Long, p: Array[Byte]): Seq[Int] = {
+      val pl = if (p == null) Array.emptyByteArray else p
+      (0x08 +: varint(c)) ++ (0x10 +: varint(s)) ++ (0x1a +: varint(pl.length)) ++
+        pl.map(_ & 0xff)
+    }
+    val rng = new scala.util.Random(438)
+    // [0, 2^63) with every varint width equally likely
+    def id(): Long = (rng.nextLong() & Long.MaxValue) >>> rng.nextInt(63)
+    val edges = Seq(0L, 127L, 128L, (1L << 32) - 1, Long.MaxValue)
+    val cases = edges.map(v => (v, v, Array[Byte](1))) ++
+      Seq((3L, 4L, null: Array[Byte])) ++
+      Seq.fill(2000)((id(), id(),
+        if (rng.nextInt(20) == 0) null
+        else Array.fill(rng.nextInt(65))(rng.nextInt(256).toByte)))
+    cases.foreach { case (c, s, p) =>
+      val bytes = LspWire.encode(c, s, p)
+      assert(bytes.map(_ & 0xff).toSeq === frame(c, s, p), s"($c, $s)")
+      val r = row(bytes)
+      assert(r.getLong(0) === c && r.getLong(1) === s)
+      assert(r.getBinary(2).toSeq === Option(p).getOrElse(Array.emptyByteArray).toSeq)
+    }
+  }
+
+  test("SQL NULL in, NULL out: lsp_encode/lsp_decode never throw on NULL or bad frames") {
+    val viaSql = spark.sql(
+      """SELECT lsp_encode(NULL, 1, CAST('x' AS BINARY)),
+        |       lsp_encode(1, NULL, CAST('x' AS BINARY)),
+        |       lsp_encode(1, 1, NULL),
+        |       lsp_decode(NULL),
+        |       lsp_decode(X'1A7F61')""".stripMargin).collect()(0)
+    assert((0 until 5).forall(viaSql.isNullAt), viaSql)
+    val bin = lit(null).cast("binary")
+    val viaFunctions = spark.range(1).select(
+      lsp_encode(lit(null), lit(1L), lit(Array[Byte](1))),
+      lsp_encode(lit(1L), lit(null), lit(Array[Byte](1))),
+      lsp_encode(lit(1L), lit(1L), bin),
+      lsp_decode(bin),
+      lsp_decode(lit(Array[Byte](0x1a, 0x7f, 0x61)))).collect()(0)
+    assert((0 until 5).forall(viaFunctions.isNullAt), viaFunctions)
+  }
+
   test("multi-byte varints round-trip (uint32 range and beyond)") {
     val rng = new scala.util.Random(7)
     (1 to 500).foreach { _ =>
