@@ -135,6 +135,21 @@ object Bench {
         (q, prior(q), v)
     }.sortBy { case (_, p, v) => p * scale - v }
 
+  /** Whether a query's median rests on cold samples only: it has a
+    * successful sample (`runs`, every sample so far) but no warm one.
+    * A query whose only sample is a failed pass-0 run has no median at
+    * all — it is listed as failed, not as cold-only. */
+  private[graft] def isColdOnly(
+      runs: Vector[Double], warmRuns: Vector[Double]): Boolean =
+    runs.exists(_ >= 0) && warmRuns.isEmpty
+
+  /** Whether a sample taken in a warm pass is tagged warm: only when the
+    * query already has a successful sample (`prior`, its samples before
+    * this one). After a failed pass-0 run the first success still pays
+    * JIT and the first build of every session intermediate. */
+  private[graft] def tagsWarm(prior: Vector[Double], warmPass: Boolean): Boolean =
+    warmPass && prior.exists(_ >= 0)
+
   /** The last summary line emitted (or the pre-sweep bootstrap line) —
     * what the kill-time shutdown hook re-prints. Volatile: written by
     * the main loop, read by the shutdown thread. */
@@ -257,11 +272,10 @@ object Bench {
       .filter(q => only.forall(_.contains(q)))
     val runs = collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
-    // samples from the SEQUENTIAL warm passes only (a subset of `runs`),
-    // tagged explicitly instead of assuming runs(q)(0) is the cold one:
-    // a query skipped by a tripped warmup records its first sample in a
-    // warm pass, and the old index-0 drop silently discarded honest warm
-    // samples exactly there (the r16 ADVICE item)
+    // samples from the SEQUENTIAL warm passes taken after the query's
+    // first success (a subset of `runs`, see `tagsWarm`): a query
+    // skipped by a tripped warmup, or whose pass-0 run failed, takes its
+    // first successful sample, still a cold one, in a warm pass
     val warmRuns = collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
 
@@ -309,14 +323,15 @@ object Bench {
     // queries the budget gate never reached (their runs vector is
     // empty): counted loudly on the line, never silently dropped
     def unmeasuredNow: Seq[String] = names.filter(q => runs(q).isEmpty)
-    // queries whose ONLY sample is the concurrent pass-0 one: their
+    // queries whose successful samples are all cold (the concurrent
+    // pass-0 one, or a first success after a failed pass 0): their
     // median is a cold-and-possibly-contended number (and, for queries
     // whose compute consumes a sibling query's session result cache, a
     // possibly DEFLATED one — the r16 ADVICE hole), so they are counted
     // on the line and EXCLUDED from the regression diff rather than
     // compared against warm baselines
     def coldOnlyNow: Seq[String] =
-      names.filter(q => runs(q).nonEmpty && warmRuns(q).isEmpty)
+      names.filter(q => isColdOnly(runs(q), warmRuns(q)))
 
     // ---- sf1 scale leg (r11): one cold run of the 20 most expensive
     // queries at 10x the bench SF — the cliff probe (cache eviction,
@@ -540,8 +555,8 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       runsLock.synchronized {
         val sample = if (ok) dt else -1.0
+        if (tagsWarm(runs(name), warm)) warmRuns(name) = warmRuns(name) :+ sample
         runs(name) = runs(name) :+ sample
-        if (warm) warmRuns(name) = warmRuns(name) :+ sample
         emit()
       }
     }

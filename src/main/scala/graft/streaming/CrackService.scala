@@ -15,9 +15,9 @@ import org.apache.spark.sql.{Dataset, Encoders}
   *     eager reply without waiting for stragglers (`server.c:251-256`);
   *   - `x` only after ALL tiles report not-found (`server.c:257-263`).
   *
-  * [[step]] is the one definition of that logic; the fMGWS fold here and
-  * [[CrackServiceTws]] are thin adapters over it (both state APIs, one
-  * copy of the semantics).
+  * [[step]] is the one definition of that logic, pure and tested on its
+  * own; [[foldVerdictsRecovering]] is the `flatMapGroupsWithState`
+  * adapter that stores its state and arms the straggler timer.
   *
   * Deliberate deltas from the reference: a duplicate `found` does NOT
   * overwrite the stored pass (the reference overwrites unconditionally,
@@ -111,12 +111,11 @@ object CrackService {
     }
   }
 
-  /** The timeout-completion step, shared by the fMGWS fold and the
-    * transformWithState processor (API parity means ONE copy of the
-    * rescan semantics): re-run the unheard tiles, then answer. Tile
-    * bounds re-derive from the deterministic tiler, so state needs no
-    * bounds. A found-and-replied request emits nothing (it was answered
-    * eagerly; the timeout only frees state). */
+  /** The timeout-completion step of [[foldVerdictsRecovering]]: re-run
+    * the unheard tiles, then answer. Tile bounds re-derive from the
+    * deterministic tiler, so state needs no bounds. A found-and-replied
+    * request emits nothing (it was answered eagerly; the timeout only
+    * frees state). */
   def completeByRescan(
       reqId: Long,
       st: RecoveryState,

@@ -64,8 +64,8 @@ object SessionTracker {
     * deliver `expectedNext`, drop a retransmit of a delivered seqnum, drop
     * a future seqnum. Within a batch packets go in seqnum order (the
     * network may reorder; the reference's single-threaded read loop
-    * serializes arrival). Pure, and the one definition of the gate — the
-    * fMGWS fold here and [[SessionTrackerTws]] both call it. */
+    * serializes arrival). Pure, and the one definition of the gate;
+    * [[trackConn]] adds liveness and the state store around it. */
   def gate(state: ConnState, packets: Iterator[LspPacket]): (ConnState, Seq[ConnEvent]) = {
     var st = state
     val out = Seq.newBuilder[ConnEvent]

@@ -90,27 +90,25 @@ object StreamingNearDup {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  /** The shared per-bucket fold both state APIs run
-    * ([[StreamingNearDupTws]] is the transformWithState twin): compare
-    * each ACCEPTED fresh row against residents, emit first-match pairs
-    * above threshold, return (rows to append, pairs). A re-delivered id
-    * (at-least-once producer, re-ingested doc) is already indexed:
-    * storing it again would re-emit its pairs on every later collision,
-    * breaking exactly-once — so it is neither compared nor stored. */
-  private[streaming] def bucketFold(
-      tbKey: Int, threshold: Double, seen: Seq[BandedVec],
-      freshRaw: Seq[BandedVec]): (Seq[BandedVec], Seq[NearDupPair]) = {
+  /** One bucket's batch: compare each ACCEPTED fresh row against the
+    * residents, emit first-match pairs above threshold, and append the
+    * accepted rows to the bucket. A re-delivered id (at-least-once
+    * producer, re-ingested doc) is already indexed: storing it again
+    * would re-emit its pairs on every later collision, breaking
+    * exactly-once — so it is neither compared nor stored. */
+  private def updateBucket(threshold: Double)(
+      key: (Int, Long), rows: Iterator[BandedVec],
+      state: GroupState[Bucket]): Iterator[NearDupPair] = {
     // deterministic within-batch order (the emitted SET is order-free;
     // this just makes transcripts reproducible)
-    val fresh = freshRaw.sortBy(_.vecId)
+    val fresh = rows.toSeq.sortBy(_.vecId)
     val out = Seq.newBuilder[NearDupPair]
-    val accepted = Seq.newBuilder[BandedVec]
-    var residents = seen
-    var residentIds = seen.map(_.vecId).toSet
+    var residents = state.getOption.map(_.rows).getOrElse(Seq.empty)
+    var residentIds = residents.map(_.vecId).toSet
     fresh.foreach { r =>
       if (!residentIds.contains(r.vecId)) {
         residents.foreach { s =>
-          if (firstMatch(s.sigs, r.sigs) == tbKey) {
+          if (firstMatch(s.sigs, r.sigs) == key._1) {
             val (a, b) = if (s.vecId < r.vecId) (s, r) else (r, s)
             val c = sim(a, b)
             if (c > threshold) out += NearDupPair(a.vecId, b.vecId, c)
@@ -118,27 +116,21 @@ object StreamingNearDup {
         }
         residents = residents :+ r
         residentIds += r.vecId
-        accepted += r
       }
     }
-    (accepted.result(), out.result())
+    state.update(Bucket(residents))
+    out.result().iterator
   }
 
-  private def updateBucket(threshold: Double)(
-      key: (Int, Long), rows: Iterator[BandedVec],
-      state: GroupState[Bucket]): Iterator[NearDupPair] = {
-    val seen = state.getOption.map(_.rows).getOrElse(Seq.empty)
-    val (accepted, out) = bucketFold(key._1, threshold, seen, rows.toSeq)
-    state.update(Bucket(seen ++ accepted))
-    out.iterator
-  }
-
-  /** Band-bucket routing shared by both state APIs: 16 rows per vector,
-    * each carrying the signatures and the norm the exact check needs. */
-  private[streaming] def banded(in: Dataset[VecIn]): Dataset[BandedVec] = {
+  /** The streaming query: embedding rows → per-bucket incremental exact
+    * near-dup pairs above `threshold` (append mode; one row per pair,
+    * exactly once). Each vector is routed to its `tables × bands`
+    * buckets, carrying the signatures and the norm the exact check
+    * needs. */
+  def pairs(in: Dataset[VecIn], threshold: Double): DataFrame = {
     val spark = in.sparkSession
     import spark.implicits._
-    in.flatMap { v =>
+    val banded = in.flatMap { v =>
       val sigs = signatures(v.embedding)
       var dot = 0.0
       v.embedding.foreach(x => dot += x.toDouble * x.toDouble)
@@ -148,15 +140,7 @@ object StreamingNearDup {
       } yield BandedVec(t * BandsPerTable + b, bandVal(sigs(t), b),
         v.vecId, sigs, v.embedding, norm)
     }
-  }
-
-  /** The streaming query: embedding rows → per-bucket incremental exact
-    * near-dup pairs above `threshold` (append mode; one row per pair,
-    * exactly once). */
-  def pairs(in: Dataset[VecIn], threshold: Double): DataFrame = {
-    val spark = in.sparkSession
-    import spark.implicits._
-    banded(in)
+    banded
       .groupByKey(r => (r.tb, r.bval))
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.NoTimeout())(updateBucket(threshold))

@@ -79,9 +79,8 @@ object StreamingSketch {
   final case class HourEvent(eventType: String, hour: Long, userId: Long)
 
   /** Per-hour HLL registers as sorted parallel arrays (`hours(i)`'s 256
-    * registers are `regs.slice(i*256, (i+1)*256)`) — the MapType-free
-    * encoding BOTH state APIs accept (TWS rejects MapType; the dyadic
-    * twin established the workaround).
+    * registers are `regs.slice(i*256, (i+1)*256)`); the hours are
+    * sorted, so the serialized state is deterministic.
     *
     * State-size bound: 256 bytes per (key, hour) — the hour spine is
     * CALENDAR-bounded, so a year of hourly sketches is 8760 × 256 B
@@ -92,9 +91,7 @@ object StreamingSketch {
 
   final case class SlidingEst(eventType: String, hour: Long, hllEst: Double)
 
-  /** The one fold BOTH state APIs run ([[slidingDistinct]] on fMGWS,
-    * [[StreamingSketchTws.slidingDistinct]] on transformWithState):
-    * absorb the batch into per-hour max-registers, then emit the
+  /** Absorb the batch into per-hour max-registers, then emit the
     * refreshed trailing-`windowHours` estimate for every hour whose
     * window the batch TOUCHED — an hour h's estimate can only change
     * when some source hour in [h-w+1, h] absorbed rows, so emission is
@@ -107,16 +104,17 @@ object StreamingSketch {
     * (commutative, idempotent), so any batch split or arrival order
     * lands on the identical registers, and the LAST emission per
     * (key, hour) equals the batch `hll_est` bit-for-bit (the suite pins
-    * it on both APIs — untouched windows keep their prior emission,
-    * which is already final). */
-  private[streaming] def slidingFold(
+    * it — untouched windows keep their prior emission, which is already
+    * final). */
+  private def updateSliding(windowHours: Int)(
       eventType: String,
-      s: HourRegisters,
       events: Iterator[HourEvent],
-      windowHours: Int): (HourRegisters, Seq[SlidingEst]) = {
+      state: GroupState[HourRegisters]): Iterator[SlidingEst] = {
     val m = scala.collection.mutable.Map.empty[Long, Array[Byte]]
-    s.hours.zipWithIndex.foreach { case (h, i) =>
-      m(h) = s.regs.slice(i * 256, (i + 1) * 256).toArray
+    state.getOption.foreach { s =>
+      s.hours.zipWithIndex.foreach { case (h, i) =>
+        m(h) = s.regs.slice(i * 256, (i + 1) * 256).toArray
+      }
     }
     var tMin = Long.MaxValue
     var tMax = Long.MinValue
@@ -146,16 +144,7 @@ object StreamingSketch {
       }
       SlidingEst(eventType, h, estimate(merged.toIndexedSeq))
     }
-    (HourRegisters(hours, hours.flatMap(h => m(h).toVector)), ests)
-  }
-
-  private def updateSliding(windowHours: Int)(
-      eventType: String,
-      events: Iterator[HourEvent],
-      state: GroupState[HourRegisters]): Iterator[SlidingEst] = {
-    val s = state.getOption.getOrElse(HourRegisters(Vector.empty, Vector.empty))
-    val (next, ests) = slidingFold(eventType, s, events, windowHours)
-    state.update(next)
+    state.update(HourRegisters(hours, hours.flatMap(h => m(h).toVector)))
     ests.iterator
   }
 
@@ -282,14 +271,11 @@ object StreamingSketch {
     * matter how many rows or distinct values stream through — the
     * bounded-state property the residual-histogram conformal twin has
     * to bucket to get. */
-  /** The one counter fold BOTH state APIs run ([[dyadicQuantiles]] here,
-    * [[StreamingSketchTws.dyadicQuantiles]] on transformWithState):
-    * absorb the batch into the additive counter map, emit the refreshed
-    * estimates. */
-  private[streaming] def dyadicFold(
+  private def updateDyadic(
       eventType: String,
-      s: DyadicState,
-      events: Iterator[ValueRow]): (DyadicState, DyadicEst) = {
+      events: Iterator[ValueRow],
+      state: GroupState[DyadicState]): Iterator[DyadicEst] = {
+    val s = state.getOption.getOrElse(DyadicState(Map.empty, 0L))
     var counters = s.counters
     var n = s.n
     val cap = (1L << DqLevels) - 1
@@ -309,20 +295,10 @@ object StreamingSketch {
       }
       n += 1
     }
-    (DyadicState(counters, n),
-      DyadicEst(eventType, n,
-        dqQuantile(counters, (n + 1) / 2),
-        dqQuantile(counters, (19 * n + 19) / 20)))
-  }
-
-  private def updateDyadic(
-      eventType: String,
-      events: Iterator[ValueRow],
-      state: GroupState[DyadicState]): Iterator[DyadicEst] = {
-    val s = state.getOption.getOrElse(DyadicState(Map.empty, 0L))
-    val (next, est) = dyadicFold(eventType, s, events)
-    state.update(next)
-    Iterator.single(est)
+    state.update(DyadicState(counters, n))
+    Iterator.single(DyadicEst(eventType, n,
+      dqQuantile(counters, (n + 1) / 2),
+      dqQuantile(counters, (19 * n + 19) / 20)))
   }
 
   /** Update-mode per-key dyadic-CM quantile estimates from the bounded

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench regression gate's pure core: prior-median parsing and the
+/** The bench regression gate's pure core: prior-median parsing, the
   * 1.5×-and-0.25s diff rule (round 9's +25% graph-family drift went
-  * unnoticed for a full round — this is the tripwire). */
+  * unnoticed for a full round — this is the tripwire), and which samples
+  * count as warm or leave a query cold-only. */
 class BenchRegressionSpec extends AnyFunSuite {
 
   test("parseMedians reads the audit file's medians object") {
@@ -90,5 +91,39 @@ class BenchRegressionSpec extends AnyFunSuite {
       === Some(32))
     assert(Bench.parseCpus("""{"cpus":"4"}""") === Some(4))
     assert(Bench.parseCpus("""{"sf":"x"}""") === None)
+  }
+
+  /** Record samples the way the sweep does: each (sample, taken in a warm
+    * pass) goes into the query's runs, and into its warm samples when
+    * `tagsWarm` accepts it given the runs before it. */
+  private def record(
+      samples: (Double, Boolean)*): (Vector[Double], Vector[Double]) =
+    samples.foldLeft((Vector.empty[Double], Vector.empty[Double])) {
+      case ((runs, warm), (s, warmPass)) =>
+        (runs :+ s, if (Bench.tagsWarm(runs, warmPass)) warm :+ s else warm)
+    }
+
+  test("cold_only needs a successful sample: a lone failed pass 0 is only failed") {
+    assert(!Bench.isColdOnly(Vector(-1.0), Vector.empty))
+    assert(!Bench.isColdOnly(Vector.empty, Vector.empty))
+    assert(Bench.isColdOnly(Vector(3.2), Vector.empty))
+    assert(Bench.isColdOnly(Vector(-1.0, 3.2), Vector.empty))
+    assert(!Bench.isColdOnly(Vector(3.2, 0.9), Vector(0.9)))
+  }
+
+  test("warm tagging: the first success after a failed pass 0 is a cold sample") {
+    // pass 0 fails; pass 1's success still pays JIT and first builds
+    val (runs, warm) = record(-1.0 -> false, 3.2 -> true, 0.9 -> true)
+    assert(runs === Vector(-1.0, 3.2, 0.9))
+    assert(warm === Vector(0.9))
+    val (runs1, warm1) = record(-1.0 -> false, 3.2 -> true)
+    assert(warm1.isEmpty && Bench.isColdOnly(runs1, warm1))
+    // a query the warmup skipped: its first sample is cold too
+    assert(record(2.5 -> true, 0.7 -> true)._2 === Vector(0.7))
+    // after a success, every warm-pass sample is warm, failures included
+    assert(record(2.0 -> false, 0.8 -> true, -1.0 -> true)._2 ===
+      Vector(0.8, -1.0))
+    // pass-0 samples are never warm
+    assert(record(2.0 -> false, 1.5 -> false)._2.isEmpty)
   }
 }

@@ -8,9 +8,11 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/sf0.001/$name.parquet"
 
-  /** Run `body` with the RocksDB state store provider (the
-    * transformWithState requirement), restoring the previous provider
-    * after — the shared fixture for every TWS suite. */
+  /** Run `body` with the RocksDB state store provider, restoring the
+    * previous provider after — the fixture for the suites that replay a
+    * `flatMapGroupsWithState` operator on RocksDB state to pin that its
+    * output does not depend on the provider (the default is the
+    * HDFS-backed store). */
   def withRocksDbProvider[T](body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)

@@ -83,38 +83,4 @@ class SketchQuantileSpec extends SparkSpec {
     assert(got === want)
     assert(got.nonEmpty)
   }
-
-  test("transformWithState twin == fMGWS twin == batch (Spark 4 API)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    withRocksDbProvider {
-      val rows = Tables.load(spark, dir, "events")
-        .selectExpr("event_type", "event_id",
-          "cast(floor(value * 100 + 0.5) as long) as cents")
-        .as[(String, Long, Long)].collect()
-        .map(r => StreamingSketch.ValueRow(r._1, r._2, r._3))
-      val input = MemoryStream[StreamingSketch.ValueRow]
-      val name = s"dqtws_${System.nanoTime()}"
-      val q = graft.streaming.StreamingSketchTws.dyadicQuantiles(input.toDS())
-        .writeStream.format("memory").queryName(name).outputMode("update")
-        .start()
-      val got =
-        try {
-          rows.grouped(math.max(1, rows.length / 3 + 1))
-            .foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
-          spark.table(name)
-            .as[StreamingSketch.DyadicEst].collect()
-            .zipWithIndex.groupBy(_._1.eventType)
-            .map { case (t, v) =>
-              val last = v.maxBy(_._2)._1
-              t -> ((last.n, last.p50Est, last.p95Est))
-            }
-        } finally q.stop()
-      val want = Sketches.qDyadicQuantiles(spark, dir).collect()
-        .map(r =>
-          r.getString(0) -> ((r.getLong(1), r.getLong(3), r.getLong(5))))
-        .toMap
-      assert(got === want)
-    }
-  }
 }

@@ -61,35 +61,6 @@ class StreamingNearDupSpec extends SparkSpec {
     assert(got === want)
   }
 
-  test("transformWithState twin == batch strict door (split + re-delivery)") {
-    val rows = corpusRows()
-    val want = batchRelation()
-    val byId = rows.sortBy(_.vecId)
-    withRocksDbProvider {
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      // thirds + a full replay batch: split AND at-least-once in one run
-      val batches =
-        byId.grouped(math.max(1, byId.length / 3 + 1)).toSeq :+ byId
-      val input = MemoryStream[VecIn]
-      val name = s"neardup_tws_${System.nanoTime()}"
-      val q = StreamingNearDupTws.pairs(input.toDS(), threshold = 0.8)
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .start()
-      val got =
-        try {
-          batches.foreach { b => input.addData(b); q.processAllAvailable() }
-          spark.table(name).as[NearDupPair].collect().toSeq
-            .map(p => (p.d1, p.d2, p.sim))
-        } finally q.stop()
-      // SEQ assertions: set equality alone would collapse duplicate
-      // emissions — the exact defect the replay batch exists to catch
-      assert(got.distinct.size === got.size,
-        "TWS flavor emitted a duplicate pair row")
-      assert(got.toSet === want)
-    }
-  }
-
   test("within-batch duplicate ids ingest once; conflicting replays are ignored") {
     val rows = corpusRows()
     val want = batchRelation()
@@ -160,38 +131,6 @@ class StreamingNearDupSpec extends SparkSpec {
       "restart re-emitted a pair (state recovered but replay re-compared)")
     assert(got.toSet === want,
       "restart lost pairs (bucket state not recovered)")
-  }
-
-  test("TWS twin restart from checkpoint: RocksDB state recovers exactly-once") {
-    // same crash-boundary interleaving as the fMGWS restart case, on
-    // the transformWithState twin whose state lives in RocksDB — the
-    // provider a production deployment actually restarts on
-    withRocksDbProvider {
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      val rows = corpusRows().sortBy(_.vecId)
-      val want = batchRelation()
-      val (first, rest) = rows.splitAt(rows.length / 2)
-      val out = java.nio.file.Files.createTempDirectory("neardup_tws_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("neardup_tws_ckpt").toString
-      val input = MemoryStream[VecIn]
-      def start() = StreamingNearDupTws.pairs(input.toDS(), threshold = 0.8)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      val q1 = start()
-      try { input.addData(first); q1.processAllAvailable() } finally q1.stop()
-      val q2 = start()
-      try {
-        input.addData(first.takeRight(first.length / 3) ++ rest)
-        q2.processAllAvailable()
-      } finally q2.stop()
-      val got = spark.read.parquet(out).as[NearDupPair].collect().toSeq
-        .map(p => (p.d1, p.d2, p.sim))
-      assert(got.distinct.size === got.size,
-        "TWS restart re-emitted a pair")
-      assert(got.toSet === want, "TWS restart lost pairs")
-    }
   }
 
   test("fMGWS adversarial interleavings green on the RocksDB provider too") {

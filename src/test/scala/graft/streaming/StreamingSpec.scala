@@ -18,18 +18,13 @@ class StreamingSpec extends SparkSpec {
       reqId: Long, partId: Int, nParts: Int, found: Boolean, pass: String) =
     JobVerdict(reqId, partId, nParts, "0" * 40, 4, found, pass)
 
-  /** Verdict batches through the fMGWS fold (timers off), or through the
-    * transformWithState processor when `tws`. */
-  private def runVerdicts(
-      batches: Seq[Seq[JobVerdict]], tws: Boolean = false): Seq[CrackReply] = {
+  /** Verdict batches through the fMGWS fold (timers off). */
+  private def runVerdicts(batches: Seq[Seq[JobVerdict]]): Seq[CrackReply] = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[JobVerdict]
     val name = s"replies_${System.nanoTime()}"
-    val replies =
-      if (tws) CrackServiceTws.replyStreamRecovering(input.toDS(), timeoutMs = 0L)
-      else CrackService.replyStreamRecovering(input.toDS(), timeoutMs = 0L)
-    val q = replies
+    val q = CrackService.replyStreamRecovering(input.toDS(), timeoutMs = 0L)
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
       batches.foreach { b => input.addData(b); q.processAllAvailable() }
@@ -99,7 +94,7 @@ class StreamingSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("streaming sliding HLL == batch q_hll_sliding on BOTH state APIs") {
+  test("streaming sliding HLL == batch q_hll_sliding under any batch split") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
@@ -123,7 +118,6 @@ class StreamingSpec extends SparkSpec {
         .zipWithIndex.groupBy(v => (v._1.eventType, v._1.hour))
         .map { case (k, v) => k -> v.maxBy(_._2)._1.hllEst }
 
-    // fMGWS flavor
     val input = MemoryStream[graft.streaming.StreamingSketch.HourEvent]
     val name = s"shll_${System.nanoTime()}"
     val q = graft.streaming.StreamingSketch.slidingDistinct(input.toDS())
@@ -135,21 +129,6 @@ class StreamingSpec extends SparkSpec {
       } finally q.stop()
     assert(got === want)
     assert(got.nonEmpty)
-
-    // transformWithState flavor (RocksDB provider, the TWS requirement)
-    withRocksDbProvider {
-      val in2 = MemoryStream[graft.streaming.StreamingSketch.HourEvent]
-      val name2 = s"shlltws_${System.nanoTime()}"
-      val q2 = graft.streaming.StreamingSketchTws.slidingDistinct(in2.toDS())
-        .writeStream.format("memory").queryName(name2).outputMode("update")
-        .start()
-      val got2 =
-        try {
-          batches.foreach { b => in2.addData(b); q2.processAllAvailable() }
-          lastPerKey(name2)
-        } finally q2.stop()
-      assert(got2 === want)
-    }
   }
 
   test("space-saving guarantees hold under any arrival order") {
@@ -360,7 +339,7 @@ class StreamingSpec extends SparkSpec {
     assert(rb2.isEmpty && db2)
   }
 
-  test("verdict step parity: fMGWS and transformWithState reply identically") {
+  test("verdict fold: default and RocksDB state stores reply identically") {
     val batches = Seq(
       Seq(verdict(1L, 0, 3, found = false, null),
         verdict(2L, 0, 2, found = true, "mzzz"),
@@ -371,11 +350,13 @@ class StreamingSpec extends SparkSpec {
         verdict(4L, 0, 1, found = true, "test")),
       Seq(verdict(1L, 2, 3, found = false, null),
         verdict(3L, 1, 2, found = true, "abcd")))
-    val fmgws = runVerdicts(batches).sortBy(_.reqId)
-    val tws = withRocksDbProvider(runVerdicts(batches, tws = true)).sortBy(_.reqId)
-    assert(fmgws === Seq(CrackReply(1L, "x", null), CrackReply(2L, "f", "mzzz"),
+    // the reply stream must not depend on which provider stores the
+    // fold's state
+    val hdfs = runVerdicts(batches).sortBy(_.reqId)
+    val rocks = withRocksDbProvider(runVerdicts(batches)).sortBy(_.reqId)
+    assert(hdfs === Seq(CrackReply(1L, "x", null), CrackReply(2L, "f", "mzzz"),
       CrackReply(3L, "f", "abcd"), CrackReply(4L, "f", "test")))
-    assert(tws === fmgws)
+    assert(rocks === hdfs)
   }
 
   test("T8 straggler recovery: dropped verdict's tile is rescanned on timeout") {
@@ -592,72 +573,6 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table(name).count() === 2) // (1,1) once + (1,2) once
     } finally q.stop()
-  }
-
-  test("transformWithState tracker matches fMGWS semantics (Spark 4 API)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    withRocksDbProvider {
-      val input = MemoryStream[LspPacket]
-      val name = s"tws_${System.nanoTime()}"
-      val q = SessionTrackerTws.eventStream(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        input.addData(Seq(LspPacket(1L, 1L, 3), LspPacket(1L, 2L, 3),
-          LspPacket(2L, 1L, 3)))
-        q.processAllAvailable()
-        input.addData(Seq(LspPacket(1L, 2L, 3), // retransmit → dup
-          LspPacket(1L, 3L, 3), // continues across batches
-          LspPacket(2L, 9L, 3))) // future → out-of-order
-        q.processAllAvailable()
-        val events = spark.table(name).as[ConnEvent].collect()
-        assert(events.count(_.event == Delivered) === 4)
-        assert(events.count(_.event == DupDropped) === 1)
-        assert(events.count(_.event == OutOfOrderDropped) === 1)
-      } finally q.stop()
-    }
-  }
-
-  test("transformWithState recovery matches fMGWS: fold parity + live timer rescan") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val hash = "da23614e02469a0d7c7bd1bdab5c9c474b1904dc" // "ab", len 2
-    withRocksDbProvider {
-      // parity (timers off): complete verdict sets fold identically
-      val in1 = MemoryStream[JobVerdict]
-      val n1 = s"twsrecov_${System.nanoTime()}"
-      val q1 = CrackServiceTws.replyStreamRecovering(in1.toDS(), timeoutMs = 0L)
-        .writeStream.format("memory").queryName(n1).outputMode("append").start()
-      try {
-        in1.addData(Seq(
-          JobVerdict(5L, 0, 2, hash, 2, found = false, null),
-          JobVerdict(5L, 1, 2, hash, 2, found = true, "ab"),
-          JobVerdict(6L, 0, 1, hash, 2, found = false, null)))
-        q1.processAllAvailable()
-        assert(spark.table(n1).as[CrackReply].collect().toSet === Set(
-          CrackReply(5L, "f", "ab"), CrackReply(6L, "x", null)))
-      } finally q1.stop()
-
-      // live processing-time timer: the lost tile is rescanned
-      val in2 = MemoryStream[JobVerdict]
-      val n2 = s"twstimer_${System.nanoTime()}"
-      val q2 = CrackServiceTws.replyStreamRecovering(in2.toDS(), timeoutMs = 300L)
-        .writeStream.format("memory").queryName(n2).outputMode("append").start()
-      try {
-        in2.addData(Seq(
-          JobVerdict(9L, 1, 3, hash, 2, found = false, null),
-          JobVerdict(9L, 2, 3, hash, 2, found = false, null)))
-        val deadline = System.nanoTime() + 60_000_000_000L
-        var replies = Seq.empty[CrackReply]
-        while (replies.isEmpty && System.nanoTime() < deadline) {
-          Thread.sleep(100)
-          replies = spark.table(n2).as[CrackReply].collect().toSeq
-        }
-        assert(replies === Seq(CrackReply(9L, "f", "ab")),
-          "Tws timer recovery must rescan the lost tile")
-      } finally q2.stop()
-    }
   }
 
   test("event-time tumbling window with watermark drops late data") {
