@@ -143,6 +143,25 @@ object Bench {
       runs: Vector[Double], warmRuns: Vector[Double]): Boolean =
     runs.exists(_ >= 0) && warmRuns.isEmpty
 
+  /** The sf1 leg's wall budget (what the run has left, capped by the
+    * leg's own limit), or None below the per-run floor: then the leg
+    * builds no dataset and reports every entry skipped. Decided BEFORE
+    * generation, which alone takes ~25 s: building it for a leg with no
+    * budget pushed ~578 s sweeps past the 600 s line with sf1_n 0. */
+  private[graft] def sf1LegBudget(
+      legCap: Double, remaining: Double, capFloor: Double): Option[Double] =
+    Some(math.min(legCap, remaining)).filter(_ >= capFloor)
+
+  /** A query's sf1 ratio denominator and its source: the leg's cold
+    * bench-SF run, else (cold run skipped or failed) the sweep's warm
+    * median, else none (-1). */
+  private[graft] def sf1Denominator(
+      q: String, cold: collection.Map[String, Double],
+      warm: collection.Map[String, Double]): (Double, String) =
+    cold.get(q).map(_ -> "cold")
+      .orElse(warm.get(q).map(_ -> "warm"))
+      .getOrElse(-1.0 -> "none")
+
   /** Whether a sample taken in a warm pass is tagged warm: only when the
     * query already has a successful sample (`prior`, its samples before
     * this one). After a failed pass-0 run the first success still pays
@@ -390,6 +409,10 @@ object Bench {
         .map { case (q, v) => s""""$q":$v""" }.mkString("{", ",", "}")
       val s1cold = sf1Cold
         .map { case (q, v) => s""""$q":$v""" }.mkString("{", ",", "}")
+      val medMap = med.toMap
+      val s1denom = sf1Results.keys
+        .map(q => s""""$q":"${sf1Denominator(q, sf1Cold, medMap)._2}"""")
+        .mkString("{", ",", "}")
       val s1errs = sf1Errs
         .map { case (q, e) => s""""$q":"$e"""" }.mkString("{", ",", "}")
       val s1skip = sf1Skipped.map(q => s""""$q"""").mkString("[", ",", "]")
@@ -406,7 +429,7 @@ object Bench {
       val coldJson = coldOnlyNow.map(q => s""""$q"""")
         .mkString("[", ",", "]")
       val audit =
-        s"""{"sf":"$sfDir","n":$n,"cpus":$cpus,"elapsed":${fmt(elapsedAll)},"baseline":"$baselinePath","baseline_cpus_match":$cpusMatch,"ctx_scale":${fmt(contextScale(prior, medWarm))},"regressions":$reg,"cold_only":$coldJson,"sf1_top20":$s1,"sf1_cold":$s1cold,"sf1_errs":$s1errs,"sf1_skipped":$s1skip,"sf10_top5":$s10,"sf10_skipped":$s10skip,"runs":$r,"medians":$m}"""
+        s"""{"sf":"$sfDir","n":$n,"cpus":$cpus,"elapsed":${fmt(elapsedAll)},"baseline":"$baselinePath","baseline_cpus_match":$cpusMatch,"ctx_scale":${fmt(contextScale(prior, medWarm))},"regressions":$reg,"cold_only":$coldJson,"sf1_top20":$s1,"sf1_cold":$s1cold,"sf1_denom":$s1denom,"sf1_errs":$s1errs,"sf1_skipped":$s1skip,"sf10_top5":$s10,"sf10_skipped":$s10skip,"runs":$r,"medians":$m}"""
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_LOCAL.json"),
         audit.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -451,7 +474,7 @@ object Bench {
       // counted, never silently dropped.
       val sf1Entries = sf1Results.toSeq.sortBy { case (_, v) => -v }
         .map { case (q, v) =>
-          val denom = sf1Cold.getOrElse(q, medMap.getOrElse(q, -1.0))
+          val (denom, _) = sf1Denominator(q, sf1Cold, medMap)
           s""""$q":"${fmt(denom)}->${fmt(v)}"""" }
       val sf1Budget = 800
       val sf1Kept = scala.collection.mutable.ListBuffer.empty[String]
@@ -654,7 +677,7 @@ object Bench {
     // shingle arrays, trained models) — r11 and r12 each spent a
     // round adjudicating leg readings that turned out to be
     // leftover-resident pressure from earlier entries' 10×-sized
-    // artifacts. The stray-RDD sweep catches checkpoint/leaf
+    // artifacts. The stray-RDD sweep catches cut-leaf
     // storage that a Dataset.unpersist (a CacheManager op) cannot
     // release; it is safe precisely because every cache was just
     // dropped, so nothing alive still expects those blocks.
@@ -718,31 +741,52 @@ object Bench {
     }
 
     if (sf1Wanted) {
-      val sf1Dir = resolveSf1Dir()
-      if (sf1Dir.nonEmpty) {
-        // the leg gets what the TOTAL budget leaves (at most the leg's
-        // own cap), MINUS the stop margin: r12 raised the leg budget to
-        // 1200 s in isolation and the whole run outgrew the driver's
-        // kill window — the budget that matters is the one the PROCESS
-        // lives under. The margin subtraction is the r15 overshoot fix:
-        // the leg previously ran to the raw budget line, so a leg entry
-        // admitted late + spark.stop() landed the driver artifact at
-        // elapsed 602.5 s on a 600 s budget.
-        val budget = math.min(
-          sys.env.getOrElse("SPARK_GRAFT_SF1_BUDGET", "900").toDouble,
-          totalBudget - stopMargin - elapsedAll)
-        val top20 = med.filter(_._2 >= 0).sortBy(-_._2).take(20).map(_._1)
-        // Scale SENTINELS ride along regardless of sf0.1 cost: the
-        // candidate-join families (banded dedup, prefix filter, ANN
-        // serving, inverted-index retrieval, iterative clustering,
-        // session windows) are sub-second at sf0.1 and would never make
-        // the top-20, yet THEIR shapes — equi-join fan-in, index probe
-        // width, star-contraction rounds — are exactly where a 100 TB
-        // cliff would hide. Only registered names run (a renamed query
-        // drops out visibly via the sentinel's absence from sf1_top20,
-        // not a crash).
-        val sentinels = scaleSentinels
-          .filter(s => SparkEntry.queries.contains(s) && names.contains(s))
+      val top20 = med.filter(_._2 >= 0).sortBy(-_._2).take(20).map(_._1)
+      // Scale SENTINELS ride along regardless of sf0.1 cost: the
+      // candidate-join families (banded dedup, prefix filter, ANN
+      // serving, inverted-index retrieval, iterative clustering,
+      // session windows) are sub-second at sf0.1 and would never make
+      // the top-20, yet THEIR shapes — equi-join fan-in, index probe
+      // width, star-contraction rounds — are exactly where a 100 TB
+      // cliff would hide. Only registered names run (a renamed query
+      // drops out visibly via the sentinel's absence from sf1_top20,
+      // not a crash).
+      // SENTINELS FIRST: they are the leg's reason to exist (the
+      // candidate-join shapes a cost-ranked top-20 never surfaces),
+      // and under a shrunken budget the top-20's tail — whose scale
+      // ratios are re-measured every round — is the right thing to
+      // lose first. r12 lost every sentinel instead, because they ran
+      // last when the harness died.
+      val entries = (scaleSentinels
+        .filter(s => SparkEntry.queries.contains(s) && names.contains(s)) ++
+        top20).distinct
+      // minimum per-run budget floor: a cappedRun whose cap is <= 0
+      // has a watchdog deadline already in the past, and
+      // cancelJobGroup only cancels ACTIVE jobs — cancelling before
+      // the first job submits leaves the query running completely
+      // UNCAPPED (an sf1 quadratic can then blow straight through the
+      // kill window this budget exists to respect). Entries that
+      // cannot get at least the floor are SKIPPED, loudly.
+      val capFloor = 5.0
+      // the leg gets what the TOTAL budget leaves (at most the leg's
+      // own cap), MINUS the stop margin: r12 raised the leg budget to
+      // 1200 s in isolation and the whole run outgrew the driver's
+      // kill window — the budget that matters is the one the PROCESS
+      // lives under. The margin subtraction is the r15 overshoot fix:
+      // the leg previously ran to the raw budget line, so a leg entry
+      // admitted late + spark.stop() landed the driver artifact at
+      // elapsed 602.5 s on a 600 s budget. The leg clock starts BEFORE
+      // the dataset is resolved, so generation time counts against it.
+      val t0 = System.nanoTime()
+      val legBudget = sf1LegBudget(
+        sys.env.getOrElse("SPARK_GRAFT_SF1_BUDGET", "900").toDouble,
+        totalBudget - stopMargin - elapsedAll, capFloor)
+      val sf1Dir = if (legBudget.isEmpty) "" else resolveSf1Dir()
+      if (legBudget.isEmpty) {
+        sf1Skipped ++= entries
+        emit()
+      } else if (sf1Dir.nonEmpty) {
+        val budget = legBudget.get
         // per-QUERY hard cap on top of the leg budget: the leg exists to
         // find 10x-data cliffs, and a cliff query would otherwise run
         // unbounded (a quadratic plan at sf1 can run for hours) — cancel
@@ -755,22 +799,7 @@ object Bench {
         // out at 120 s on a 1.6×-loaded one (r13 measurement).
         val queryCap =
           sys.env.getOrElse("SPARK_GRAFT_SF1_QUERY_CAP", "150").toDouble
-        val t0 = System.nanoTime()
-        // SENTINELS FIRST: they are the leg's reason to exist (the
-        // candidate-join shapes a cost-ranked top-20 never surfaces),
-        // and under a shrunken budget the top-20's tail — whose scale
-        // ratios are re-measured every round — is the right thing to
-        // lose first. r12 lost every sentinel instead, because they ran
-        // last when the harness died.
-        // minimum per-run budget floor: a cappedRun whose cap is <= 0
-        // has a watchdog deadline already in the past, and
-        // cancelJobGroup only cancels ACTIVE jobs — cancelling before
-        // the first job submits leaves the query running completely
-        // UNCAPPED (an sf1 quadratic can then blow straight through the
-        // kill window this budget exists to respect). Entries that
-        // cannot get at least the floor are SKIPPED, loudly.
-        val capFloor = 5.0
-        (sentinels ++ top20).distinct.foreach { name =>
+        entries.foreach { name =>
           if (dying || (System.nanoTime() - t0) / 1e9 > budget - capFloor)
             sf1Skipped += name
           else {

@@ -68,9 +68,13 @@ object SessionCache {
   case object Result extends Kind
   case object Artifact extends Kind
 
-  /** The common case: cached persisted DataFrames. */
+  /** The common case: cached DataFrames, each either persisted or a
+    * [[Cut]] leaf (or a projection of one); dropping one releases both. */
   def frames[K](kind: Kind): SessionCache[K, DataFrame] =
-    new SessionCache[K, DataFrame](kind, _.unpersist(blocking = false))
+    new SessionCache[K, DataFrame](kind, { df =>
+      df.unpersist(blocking = false)
+      Cut.release(df)
+    })
 
   // Every instance self-registers (object-field instances: a few dozen
   // for the JVM's life), so one call can reach every cache.
@@ -93,19 +97,4 @@ object SessionCache {
     * cold and entries cannot couple through shared residents (eviction
     * pressure from earlier entries' 10×-sized leftovers). */
   def invalidateAll(): Unit = instances.forEach(_.drop(_ => true))
-}
-
-/** Named (non-lambda) per-row copy for `toRdd.map`: unsafe rows are
-  * reused per partition, so caching requires copies. A NAMED function
-  * object deliberately: `SparkContext.clean` introspects the bytecode
-  * of a lambda's capturing class via the thread context classloader,
-  * which a previously-run streaming micro-batch thread can leave
-  * pointing somewhere that cannot resolve graft classes — the
-  * ClosureCleaner NPE that flaked two suites in a full test run. Named
-  * function classes skip the cleaner's lambda path entirely. */
-private[graft] object CopyInternalRow
-    extends (org.apache.spark.sql.catalyst.InternalRow =>
-      org.apache.spark.sql.catalyst.InternalRow) with Serializable {
-  override def apply(r: org.apache.spark.sql.catalyst.InternalRow)
-      : org.apache.spark.sql.catalyst.InternalRow = r.copy()
 }

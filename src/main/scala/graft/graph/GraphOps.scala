@@ -211,11 +211,11 @@ object GraphOps {
     *
     * Scale shape: edges degree-annotated, partitioned once, persisted;
     * each round is one contribution shuffle + one node-sized left join,
-    * LINEAGE-CUT via eager localCheckpoint (deep iteration — a lazy
-    * 40-round chain is unanalyzable). Driver-side scalars are ONE fused
+    * cut per round by a [[graft.Cut]] (deep iteration — a lazy 40-round
+    * chain is unanalyzable). Driver-side scalars are ONE fused
     * single-row aggregate per round (r16; was three actions): the rank
     * frame carries a static `dang` flag (no out-degree) and each
-    * checkpointed round carries its predecessor rank `rp`, so the
+    * cut round carries its predecessor rank `rp`, so the
     * residual max|r−rp| of round i and the dangling mass Σr·[dang] that
     * round i+1's share needs come out of one head() over the
     * just-materialized node-sized frame — the per-round anti-join
@@ -238,15 +238,14 @@ object GraphOps {
       // dang = the node has no out-degree; identical to the former
       // per-round `ranks LEFT ANTI JOIN degN` membership, hoisted out
       // of the loop because the node universe never changes
-      var ranks = nodes.join(degN, Seq("node"), "left")
+      var cut = graft.Cut(nodes.join(degN, Seq("node"), "left")
         .select(col("node"), lit(Scale).as("r"),
-          col("outdeg").isNull.as("dang"))
-        .localCheckpoint(true)
-      val init = ranks.agg(count(lit(1)).as("n"),
+          col("outdeg").isNull.as("dang")))
+      var ranks = cut.df
+      val n = cut.rows
+      var dm = ranks.agg(
         coalesce(sum(when(col("dang"), col("r"))), lit(0L)).as("dm"))
-        .head()
-      val n = init.getLong(0)
-      var dm = init.getLong(1)
+        .head().getLong(0)
       var i = 0
       var converged = false
       while (i < maxIters && !converged) {
@@ -257,21 +256,20 @@ object GraphOps {
           .select(col("dst"), expr("r div outdeg").as("c"))
           .groupBy(col("dst").as("node"))
           .agg(sum("c").as("sc"))
-        val next = ranks
+        cut = cut.next(ranks
           .select(col("node"), col("r").as("rp"), col("dang"))
           .join(contribs, Seq("node"), "left")
           .select(col("node"),
             expr(s"$Teleport + (85 * (coalesce(sc, 0L) + ${share}L)) div 100")
               .as("r"),
-            col("dang"), col("rp"))
-          .localCheckpoint(true)
+            col("dang"), col("rp")))
         // one action: round i's residual + round i+1's dangling mass
-        val probe = next.agg(
+        val probe = cut.df.agg(
           coalesce(max(abs(col("r") - col("rp"))), lit(0L)).as("resid"),
           coalesce(sum(when(col("dang"), col("r"))), lit(0L)).as("dm"))
           .head()
         dm = probe.getLong(1)
-        ranks = next.select("node", "r", "dang")
+        ranks = cut.df.select("node", "r", "dang")
         converged = probe.getLong(0) < eps
       }
       (ranks.select("node", "r"), i)
@@ -386,7 +384,7 @@ object GraphOps {
     * sort_array order IS the rank-by-dst order — so both paths honor
     * one hash contract and one oracle. The step loop is then pure plan
     * construction: no per-step broadcast build, no window; only the
-    * cadence checkpoints and the final count submit jobs. The grouped
+    * cadence cuts and the final cut submit jobs. The grouped
     * shape is not the scale default because a hub node's whole
     * neighbor list becomes one row (degree-unbounded array), while the
     * flat index stays row-per-edge under any skew. */
@@ -493,15 +491,16 @@ object GraphOps {
         .select((col("node") * walksPerNode + col("w")).as("walk_id"),
           lit(0L).as("step"), col("node"))
       var frames = List(cur)
-      // CUT LINEAGE every ckptEvery steps (eager localCheckpoint) and
-      // persist the steps between: step i feeds both the union and
-      // step i+1, and with no checkpoint at all the accumulated plan
-      // tree grows O(steps²) and analysis/explain alone OOMs the
-      // driver (measured at 20 steps). Per-step checkpointing is one
-      // extra JOB per step though, and at toy SF stage-count overhead
-      // dominates — a bounded cadence keeps every frame ≤ ckptEvery
-      // joins above a shallow LogicalRDD while halving the job count
-      // (on the frontier-broadcast path, intermediate frames
+      val cuts = collection.mutable.Buffer.empty[graft.Cut]
+      // CUT LINEAGE every ckptEvery steps and persist the steps
+      // between: step i feeds both the union and step i+1, and with no
+      // cut at all the accumulated plan tree grows O(steps²) and
+      // analysis/explain alone OOMs the driver (measured at 20 steps).
+      // A cut per step is one extra JOB per step though, and at toy SF
+      // stage-count overhead dominates — a bounded cadence keeps every
+      // frame ≤ ckptEvery joins above a shallow LogicalRDD while
+      // halving the job count (on the frontier-broadcast path,
+      // intermediate frames
       // materialize as a side effect of the next step's broadcast
       // build, which populates their persisted blocks). The cadence is
       // load-bearing on BOTH paths: nested InMemoryRelation plans
@@ -525,26 +524,22 @@ object GraphOps {
           // coalesce keeps the per-frame task count flat.
           .coalesce(4)
         cur =
-          if (i % ckptEvery == 0) next.localCheckpoint(eager = true)
+          if (i % ckptEvery == 0) { cuts += graft.Cut(next); cuts.last.df }
           else next.persist(StorageLevel.MEMORY_AND_DISK)
         frames ::= cur
       }
       val union = frames.reverse.reduce(_ unionAll _)
-      // Publish the corpus as a FRESH LogicalRDD leaf, not the persisted
-      // union: every downstream ACTION (each SGNS epoch checkpoint, the
-      // eval aggregate) renders the full plan string for the SQL-listener
-      // event, and the union of `steps` persisted join chains — each
-      // InMemoryRelation re-rendering the 10M-row index lineage — made
-      // PLAN RENDERING the dominant cost of q_embed_eval at sf1 (r12's
-      // "92× cliff" was the driver regex-quoting tree strings, measured
-      // by stack sampling, not executor compute). The leaf renders as
-      // one line; the copied-row RDD is the same matLeaf discipline the
-      // Borůvka loop uses.
-      val out = org.apache.spark.sql.GraftShim.ofInternalRows(
-        spark, union.queryExecution.toRdd.map(graft.CopyInternalRow),
-        union.schema)
-      out.persist(StorageLevel.MEMORY_AND_DISK).count()
+      // Publish the corpus as a cut leaf, not the persisted union:
+      // every downstream ACTION (each SGNS epoch, the eval aggregate)
+      // renders the full plan string for the SQL-listener event, and the
+      // union of `steps` persisted join chains — each InMemoryRelation
+      // re-rendering the 10M-row index lineage — made PLAN RENDERING the
+      // dominant cost of q_embed_eval at sf1 (r12's "92× cliff" was the
+      // driver regex-quoting tree strings, measured by stack sampling,
+      // not executor compute). The leaf renders as one line.
+      val out = graft.Cut(union).df
       frames.foreach(_.unpersist(blocking = false))
+      cuts.foreach(_.release())
       out
     } finally {
       if (index.isEmpty) nbr.unpersist(blocking = false)
@@ -584,7 +579,7 @@ object GraphOps {
   /** Residual stop threshold for [[qPageRankDangling]]: 1e10 fixed-point
     * units = 0.01 rank. Geometric decay at damping 0.85 puts the
     * realized round count in the teens on the trade graph — deep enough
-    * to prove the per-round checkpoint discipline, cheap enough for the
+    * to prove the per-round cut, cheap enough for the
     * bench. */
   val DanglingEps: Long = 10000000000L
 
@@ -1020,6 +1015,7 @@ object GraphOps {
     val finalLabels = rankCache.get(spark, (s"$dir#louvain", LouvainRounds)) {
       var labels = arcs.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("lbl"))
+      var cut: Option[graft.Cut] = None
       for (_ <- 1 to LouvainRounds) {
         val kiin = arcs
           .join(labels.select(col("node").as("dst"), col("lbl").as("comm")),
@@ -1031,7 +1027,7 @@ object GraphOps {
         val sigtot = labels
           .join(k, "node")
           .groupBy(col("lbl").as("comm")).agg(sum("kw").as("sig"))
-        labels = kiin
+        val next = graft.Cut(kiin
           .join(labels.select(col("node").as("src"), col("lbl").as("own")),
             "src")
           .join(k.select(col("node").as("src"), col("kw")), "src")
@@ -1047,15 +1043,15 @@ object GraphOps {
               .stripMargin))
           .groupBy(col("src").as("node"))
           .agg(min(struct((-col("score")).as("ns"), col("comm"))).as("m"))
-          .select(col("node"), col("m.comm").as("lbl"))
-          // labels_{t-1} feeds THREE subtrees per round (kiin, sigtot,
-          // own-community join) — without an eager per-round cut the
-          // round-0 work replays 3^rounds times (the qBfsDist lesson)
-          .localCheckpoint(true)
+          .select(col("node"), col("m.comm").as("lbl")))
+        // labels_{t-1} feeds THREE subtrees per round (kiin, sigtot,
+        // own-community join) — without a per-round cut the round-0
+        // work replays 3^rounds times (the qBfsDist lesson)
+        cut.foreach(_.release())
+        cut = Some(next)
+        labels = next.df
       }
-      val out = labels.persist(StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      out
+      labels
     }
     val in2 = arcs
       .join(finalLabels.select(col("node").as("src"), col("lbl").as("la")),
@@ -1234,27 +1230,32 @@ object GraphOps {
     * mining, spam-farm detection, co-occurrence noise pruning).
     *
     * Scale shape: each round is one degree aggregation + two semi-joins
-    * of the edge list against the (node-sized) survivor set, with the
-    * lineage cut per round by an eager localCheckpoint — the deep-
-    * iteration discipline of [[pageRankDangling]]. Output is one row
-    * per surviving node with its in-core degree. */
+    * of the edge list against the (node-sized) survivor set, cut per
+    * round. A round removes edges only, so one that keeps every edge
+    * is the fixpoint: the loop stops there, on the cut's own row count,
+    * and the remaining rounds (identities) are skipped. Output is one
+    * row per surviving node with its in-core degree. */
   def kCore(
       spark: SparkSession, edges: DataFrame, k: Int,
       rounds: Int = KCoreRounds): DataFrame = {
-    var e = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+    var cut = graft.Cut(edges.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(edges.select(col("v").as("src"), col("u").as("dst"))))
+    var round = 0
+    var shrinking = true
+    while (shrinking && round < rounds) {
+      val e = cut.df
       val keep = e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select("node")
-      e = e
+      val before = cut.rows
+      cut = cut.next(e
         .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .localCheckpoint(true)
+        .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"))
+      shrinking = cut.rows < before
+      round += 1
     }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg_in_core"))
+    cut.df.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg_in_core"))
   }
 
   /** 3-core of the co-purchase graph. */
@@ -1292,44 +1293,42 @@ object GraphOps {
           spark.sparkContext.defaultParallelism, col("s"))
           .persist(StorageLevel.MEMORY_AND_DISK)
         arcs.count()
-        var hub = arcs.select(col("s")).distinct()
-          .select(col("s"), lit(1000000L).as("h"))
-          .localCheckpoint(true)
-        var auth: DataFrame = null
-        // per-HALF-ROUND eager cut, deliberately: an r16 experiment made
+        var hub = graft.Cut(arcs.select(col("s")).distinct()
+          .select(col("s"), lit(1000000L).as("h")))
+        var auth: graft.Cut = null
+        // per-HALF-ROUND cut, deliberately: an r16 experiment made
         // auth lazy inside hub's round plan (hoping the duplicate aRaw
         // aggregation exchanges would dedupe via exchange reuse) and
         // MEASURED WORSE — 4.31 → 6.05 s isolated warm median, 56 → 75
         // jobs — because the aMax/hMax scalar subqueries re-run the raw
         // aggregation subtree per reference under AQE instead of
-        // reusing it. Reverted; the two checkpoints per round are the
-        // cheap end of that trade.
+        // reusing it. Reverted; the two cuts per round are the cheap end
+        // of that trade.
         for (_ <- 1 to iters) {
-          val aRaw = arcs.join(hub, "s")
+          val aRaw = arcs.join(hub.df, "s")
             .groupBy("p").agg(sum("h").as("raw"))
           val aMax = aRaw.agg(max("raw").as("mx"))
-          auth = aRaw.crossJoin(broadcast(aMax))
+          if (auth != null) auth.release()
+          auth = graft.Cut(aRaw.crossJoin(broadcast(aMax))
             .select(col("p"),
               expr("cast(cast(raw as decimal(38,0)) * 1000000" +
-                " div mx as bigint)").as("a"))
-            .localCheckpoint(true)
-          val hRaw = arcs.join(auth, "p")
+                " div mx as bigint)").as("a")))
+          val hRaw = arcs.join(auth.df, "p")
             .groupBy("s").agg(sum("a").as("raw"))
           val hMax = hRaw.agg(max("raw").as("mx"))
-          hub = hRaw.crossJoin(broadcast(hMax))
+          hub = hub.next(hRaw.crossJoin(broadcast(hMax))
             .select(col("s"),
               expr("cast(cast(raw as decimal(38,0)) * 1000000" +
-                " div mx as bigint)").as("h"))
-            .localCheckpoint(true)
+                " div mx as bigint)").as("h")))
         }
-        val out = hub.select(lit("hub").as("role"),
+        val out = graft.Cut(hub.df.select(lit("hub").as("role"),
             col("s").as("node_id"), col("h").as("score_ppm"))
-          .unionAll(auth.select(lit("authority").as("role"),
-            col("p").as("node_id"), col("a").as("score_ppm")))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
+          .unionAll(auth.df.select(lit("authority").as("role"),
+            col("p").as("node_id"), col("a").as("score_ppm"))))
+        hub.release()
+        auth.release()
         arcs.unpersist(blocking = false)
-        out
+        out.df
       }
     }
     scored
@@ -1351,10 +1350,10 @@ object GraphOps {
     * src-partitioned edge artifact, anti-joins the visited set, and
     * unions the new level in. Per-round shuffle work is frontier-sized,
     * not graph-sized; rounds are bounded by [[BfsMaxDepth]] and stop
-    * EARLY when a level adds no nodes (the materializing count that
-    * fills each round's cache doubles as the fixpoint test, so the
-    * early exit costs no extra action). BFS levels are unique minima,
-    * so the output is deterministic under any partitioning. Unreached
+    * EARLY when a level adds no nodes (the row count of each round's
+    * cut is the fixpoint test, so the early exit costs no extra
+    * action). BFS levels are unique minima, so the output is
+    * deterministic under any partitioning. Unreached
     * nodes are absent (mirrored by the oracle's recursive CTE). */
   def qBfsDistances(spark: SparkSession, dir: String,
       nation: String = "NATION_3", maxDepth: Int = BfsMaxDepth): DataFrame = {
@@ -1380,32 +1379,27 @@ object GraphOps {
     * owns its lifetime). See [[qBfsDistances]] for the scale contract. */
   private[graph] def bfsFrom(
       edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame = {
-    // eager localCheckpoint per round, NOT persist: round r's plan
-    // references round r−1 THREE times (union + frontier + anti join),
-    // so an un-cut lineage grows 3^r nodes and ANALYSIS time — not
-    // execution — triples every round (measured 1.0 → 5.5 s/round by
-    // round 4 at sf0.1). The checkpoint truncates the plan to a
-    // LogicalRDD, the same per-round discipline as the PageRank loops.
-    var visited = sources.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var visitedCount = visited.count()
-    var frontierNonEmpty = visitedCount > 0
+    // a cut per round, NOT persist: round r's plan references round
+    // r−1 THREE times (union + frontier + anti join), so an un-cut
+    // lineage grows 3^r nodes and ANALYSIS time — not execution —
+    // triples every round (measured 1.0 → 5.5 s/round by round 4 at
+    // sf0.1)
+    var visited = graft.Cut(sources.select(col("node"), lit(0L).as("dist")))
+    var frontierNonEmpty = visited.rows > 0
     var round = 1
     while (frontierNonEmpty && round <= maxDepth) {
-      val frontier = visited.filter(col("dist") === (round - 1))
+      val frontier = visited.df.filter(col("dist") === (round - 1))
         .select(col("node").as("src"))
       val next = edges.join(frontier, "src")
         .select(col("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
+        .join(visited.df, Seq("node"), "left_anti")
         .select(col("node"), lit(round.toLong).as("dist"))
-      val grown = visited.unionAll(next).localCheckpoint(true)
-      val grownCount = grown.count()
-      frontierNonEmpty = grownCount > visitedCount
-      visited = grown
-      visitedCount = grownCount
+      val before = visited.rows
+      visited = visited.next(visited.df.unionAll(next))
+      frontierNonEmpty = visited.rows > before
       round += 1
     }
-    visited
+    visited.df
   }
 
   /** Max relaxation rounds for [[qSsspWeighted]] — Bellman-Ford round r
@@ -1480,16 +1474,15 @@ object GraphOps {
 
   /** Frontier Bellman-Ford core: `edges(src, dst, w)` × `sources(node)`
     * → `(node, dist)` where dist is the min-cost path using ≤
-    * `maxRounds` edges. Eager localCheckpoint per round (the BFS/
-    * PageRank lineage-cut discipline); returns a checkpoint-backed
-    * frame whose lifetime the caller's cache owns. */
+    * `maxRounds` edges, cut per round; returns a cut-backed frame
+    * whose lifetime the caller's cache owns. */
   private[graph] def ssspFrom(
       edges: DataFrame, sources: DataFrame, maxRounds: Int): DataFrame = {
-    var dist = sources.select(col("node"), lit(0L).as("dist"))
-      .groupBy("node").agg(min("dist").as("dist"))
-      .localCheckpoint(true)
+    var cut = graft.Cut(sources.select(col("node"), lit(0L).as("dist"))
+      .groupBy("node").agg(min("dist").as("dist")))
+    var dist = cut.df
     var improved = dist
-    var frontierNonEmpty = improved.count() > 0
+    var frontierNonEmpty = cut.rows > 0
     var round = 1
     while (frontierNonEmpty && round <= maxRounds) {
       val relax = edges
@@ -1499,43 +1492,23 @@ object GraphOps {
         .groupBy("node").agg(min("cand").as("cand"))
       // full-outer min-merge: a node unseen by either side keeps the
       // other's value; `chg` marks strict improvements (the next
-      // frontier) and doubles as the fixpoint test
-      val merged = dist.join(relax, Seq("node"), "full_outer")
+      // frontier), and the cut counts them as the fixpoint test
+      val merged = graft.Cut.flagged(dist.join(relax, Seq("node"), "full_outer")
         .select(col("node"),
           when(col("dist").isNull ||
               (col("cand").isNotNull && col("cand") < col("dist")),
             col("cand")).otherwise(col("dist")).as("dist"),
           (col("dist").isNull ||
-            (col("cand").isNotNull && col("cand") < col("dist"))).as("chg"))
-        .localCheckpoint(true)
-      improved = merged.filter(col("chg")).select("node", "dist")
-      frontierNonEmpty = improved.count() > 0
-      dist = merged.select("node", "dist")
+            (col("cand").isNotNull && col("cand") < col("dist"))).as("chg")),
+        "chg")
+      cut.release()
+      cut = merged
+      improved = merged.df.filter(col("chg")).select("node", "dist")
+      frontierNonEmpty = merged.sum > 0
+      dist = merged.df.select("node", "dist")
       round += 1
     }
     dist
-  }
-
-  /** A frame materialized into a FRESH leaf (persisted copied-row RDD +
-    * `internalCreateDataFrame`), returned with its row count and the RDD
-    * handle for eager unpersist. Deliberately NOT `localCheckpoint`:
-    * Spark 4's checkpoint carries the original plan's statistics into
-    * the `LogicalRDD` (`rewriteStatsAndConstraints`), so an iterative
-    * join of checkpointed frames MULTIPLIES sizeInBytes round over
-    * round — the BigInt's digit count doubles per join and by round ~3
-    * of a nested loop the driver sits in megadigit Karatsuba
-    * multiplications inside the stats visitor (observed: q_mst wedged
-    * at sf0.01). The copied-RDD leaf resets stats to the honest default
-    * every round, and the forcing count doubles as the loop's
-    * emptiness/convergence probe — no separate action. */
-  private def matLeaf(df: DataFrame): (DataFrame, Long,
-      org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val schema = df.schema
-    val rdd = df.queryExecution.toRdd.map(graft.CopyInternalRow)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = rdd.count() // one forcing action
-    (org.apache.spark.sql.GraftShim.ofInternalRows(
-      df.sparkSession, rdd, schema), n, rdd)
   }
 
   /** Below this edge count the forest is solved with a driver-side
@@ -1592,88 +1565,69 @@ object GraphOps {
     * node→component map (edges stay the big relation; the map is
     * node-sized), one map-side-combinable min per component, and
     * pointer jumps on the COMPONENT-sized table only. Lineage is cut
-    * per round (the BFS/PageRank discipline). Not SQL-expressible
+    * per round. Not SQL-expressible
     * (inter-round argmin + contraction), so the registry entry is
     * rows-only by design — exactness is pinned in-suite instead. */
   private[graph] def boruvkaForest(
       edgesIn: DataFrame, maxRounds: Int = 64,
-      localSolveMax: Long = MstLocalSolveMaxEdges): DataFrame =
-    boruvkaForestHandle(edgesIn, maxRounds, localSolveMax)._1
-
-  /** [[boruvkaForest]] plus the persisted leaf RDD backing the result
-    * (None on the local-solve path, whose frame is driver-local) — the
-    * caller owns unpersisting it, the [[graft.pipeline.TrainingData]]
-    * materialize contract. */
-  private def boruvkaForestHandle(
-      edgesIn: DataFrame, maxRounds: Int, localSolveMax: Long)
-      : (DataFrame, Option[org.apache.spark.rdd.RDD[
-        org.apache.spark.sql.catalyst.InternalRow]]) = {
-    val rdds = collection.mutable.Buffer.empty[
-      org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
-    val (edges, nEdges, edgesRdd) = matLeaf(edgesIn) // resident across rounds
-    if (nEdges <= localSolveMax) {
-      val out = kruskalLocal(edges)
-      edgesRdd.unpersist(blocking = false)
-      return (out, None)
+      localSolveMax: Long = MstLocalSolveMaxEdges): DataFrame = {
+    val edges = graft.Cut(edgesIn) // resident across rounds
+    if (edges.rows <= localSolveMax) {
+      val out = kruskalLocal(edges.df)
+      edges.release()
+      return out
     }
-    rdds += edgesRdd
-    var (comp, _, compRdd) = matLeaf(edges.select(col("u").as("node"))
-      .unionAll(edges.select(col("v").as("node")))
+    // the round's candidate cuts stay until the end: the per-round
+    // chosen-edge frames read them, and are unioned ONCE at the end (no
+    // round re-copies the accumulated forest)
+    val cands = collection.mutable.Buffer.empty[graft.Cut]
+    var comp = graft.Cut(edges.df.select(col("u").as("node"))
+      .unionAll(edges.df.select(col("v").as("node")))
       .distinct()
       .select(col("node"), col("node").as("comp")))
-    rdds += compRdd
-    // per-round chosen-edge frames; unioned ONCE at the end (their cand
-    // leaves stay persisted until then, so no round re-copies the
-    // accumulated forest)
-    val picks = collection.mutable.Buffer.empty[DataFrame]
     var round = 0
     var live = true
     while (live && round < maxRounds) {
-      val eC = edges
-        .join(comp.select(col("node").as("u"), col("comp").as("cu")), "u")
-        .join(comp.select(col("node").as("v"), col("comp").as("cv")), "v")
+      val eC = edges.df
+        .join(comp.df.select(col("node").as("u"), col("comp").as("cu")), "u")
+        .join(comp.df.select(col("node").as("v"), col("comp").as("cv")), "v")
         .filter(col("cu") =!= col("cv"))
       // every component's lightest outgoing arc (both directions feed
       // the min, so each side of an edge sees it)
-      val (cand, nCand, candRdd) = matLeaf(eC
+      val cand = graft.Cut(eC
         .select(col("cu").as("c"),
           struct(col("w"), col("u"), col("v"), col("cv").as("o")).as("e"))
         .unionAll(eC.select(col("cv").as("c"),
           struct(col("w"), col("u"), col("v"), col("cu").as("o")).as("e")))
         .groupBy("c").agg(min("e").as("e")))
-      rdds += candRdd
-      if (nCand == 0) live = false
+      cands += cand
+      if (cand.rows == 0) live = false
       else {
-        picks += cand.select(col("e.u").as("u"), col("e.v").as("v"),
-          col("e.w").as("w"))
         // pointer graph parent(c) = other side; 2-cycles root at the
         // smaller id, then jump p <- p(p) until flat. The convergence
-        // flag rides IN the jump join (y.p != x.p), so each jump is one
-        // materialization plus a count over the persisted leaf.
-        val par0 = cand.select(col("c"), col("e.o").as("p"))
-        var (ptr, _, ptrRdd) = matLeaf(par0.alias("a")
+        // flag rides IN the jump join (y.p != x.p), and the jump's cut
+        // counts it: one job per jump.
+        val par0 = cand.df.select(col("c"), col("e.o").as("p"))
+        var ptr = graft.Cut(par0.alias("a")
           .join(par0.alias("b"), col("a.p") === col("b.c"))
           .select(col("a.c").as("c"),
             when(col("b.p") === col("a.c") && col("a.c") < col("a.p"),
               col("a.c")).otherwise(col("a.p")).as("p")))
         var jumping = true
         while (jumping) {
-          val (step, _, stepRdd) = matLeaf(ptr.alias("x")
-            .join(ptr.alias("y"), col("x.p") === col("y.c"))
+          val step = graft.Cut.flagged(ptr.df.alias("x")
+            .join(ptr.df.alias("y"), col("x.p") === col("y.c"))
             .select(col("x.c").as("c"), col("y.p").as("p"),
-              (col("y.p") =!= col("x.p")).as("chg")))
-          jumping = step.filter(col("chg")).limit(1).count() > 0
-          ptrRdd.unpersist(blocking = false)
-          ptr = step.select("c", "p"); ptrRdd = stepRdd
+              (col("y.p") =!= col("x.p")).as("chg")), "chg")
+          jumping = step.sum > 0
+          ptr.release()
+          ptr = step
         }
-        val (c2, _, c2Rdd) = matLeaf(comp.alias("m")
-          .join(ptr.alias("r"), col("m.comp") === col("r.c"), "left")
+        comp = comp.next(comp.df.alias("m")
+          .join(ptr.df.alias("r"), col("m.comp") === col("r.c"), "left")
           .select(col("m.node").as("node"),
             coalesce(col("r.p"), col("m.comp")).as("comp")))
-        compRdd.unpersist(blocking = false)
-        ptrRdd.unpersist(blocking = false)
-        comp = c2; compRdd = c2Rdd
-        rdds += c2Rdd
+        ptr.release()
       }
       round += 1
     }
@@ -1684,12 +1638,14 @@ object GraphOps {
     if (live) throw new IllegalStateException(
       s"Borůvka did not converge in $maxRounds rounds — " +
         "raise maxRounds (component count halves per round)")
-    val empty = edges.select("u", "v", "w").limit(0)
-    val (forest, _, fRdd) = matLeaf(
-      picks.foldLeft(empty)(_ unionAll _).distinct())
-    rdds.foreach(_.unpersist(blocking = false))
-    compRdd.unpersist(blocking = false)
-    (forest, Some(fRdd))
+    val empty = edges.df.select("u", "v", "w").limit(0)
+    val forest = graft.Cut(cands.map(_.df.select(col("e.u").as("u"),
+        col("e.v").as("v"), col("e.w").as("w")))
+      .foldLeft(empty)(_ unionAll _).distinct())
+    cands.foreach(_.release())
+    comp.release()
+    edges.release()
+    forest.df
   }
 
   private val misCache =
@@ -1715,61 +1671,59 @@ object GraphOps {
     * Scale shape: per round, two semi-joins restrict the resident edge
     * artifact to undecided endpoints, one (node) aggregation takes the
     * neighbor min, one anti-join shrinks the undecided set; every
-    * frame crossing rounds goes through [[matLeaf]] (fresh stats leaf +
-    * persisted RDD — the localCheckpoint stats-explosion lesson), and
-    * the forcing count doubles as the convergence probe. */
+    * frame crossing rounds is cut, and the undecided cut's row count is
+    * the convergence probe. */
   def qLubyMis(spark: SparkSession, dir: String, maxRounds: Int = 64)
       : DataFrame =
-    misCache.get(spark, dir) {
-      val (edges, _, eRdd) = matLeaf(
-        copurchaseEdges(spark, dir).select("u", "v"))
-      var (und, nU, undRdd) = matLeaf(
-        edges.select(col("u").as("n"))
-          .unionAll(edges.select(col("v").as("n"))).distinct())
-      val rounds = collection.mutable.ArrayBuffer
-        .empty[(DataFrame, org.apache.spark.rdd.RDD[_])]
-      var r = 0
-      while (nU > 0 && r < maxRounds) {
-        val pri = und.withColumn("k", expr(
-          s"""cast(conv(substring(md5(concat('mis:$r:',
-             |  cast(n as string))), 1, 8), 16, 10) as long)
-             |  * 2147483648 + n""".stripMargin))
-        val act = edges
-          .join(und.select(col("n").as("u")), Seq("u"), "left_semi")
-          .join(und.select(col("n").as("v")), Seq("v"), "left_semi")
-        val arcs = act.select(col("u").as("a"), col("v").as("b"))
-          .unionAll(act.select(col("v").as("a"), col("u").as("b")))
-        val nbrMin = arcs
-          .join(pri.select(col("n").as("b"), col("k").as("kb")), "b")
-          .groupBy(col("a").as("n")).agg(min("kb").as("mk"))
-        val winners = pri.join(nbrMin, Seq("n"), "left")
-          .filter(col("mk").isNull || col("k") < col("mk"))
-          .select("n")
-        val losers = arcs
-          .join(winners.select(col("n").as("a")), Seq("a"), "left_semi")
-          .select(col("b").as("n")).distinct()
-        val (dec, _, decRdd) = matLeaf(
-          winners.select(col("n"), lit(1L).as("in_mis"),
-              lit(r.toLong).as("mis_round"))
-            .unionAll(losers.select(col("n"), lit(0L).as("in_mis"),
-              lit(r.toLong).as("mis_round"))))
-        rounds += ((dec, decRdd))
-        val (u2, n2, u2Rdd) = matLeaf(
-          und.join(dec.select("n"), Seq("n"), "left_anti"))
-        undRdd.unpersist(blocking = false)
-        und = u2; nU = n2; undRdd = u2Rdd
-        r += 1
-      }
-      require(nU == 0, s"Luby MIS did not converge in $maxRounds rounds")
-      val out = rounds.map(_._1).reduce(_ unionAll _)
-        .select(col("n").as("node"), col("in_mis"), col("mis_round"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      eRdd.unpersist(blocking = false)
-      undRdd.unpersist(blocking = false)
-      rounds.foreach(_._2.unpersist(blocking = false))
-      out
+    misCache.get(spark, dir)(
+      lubyMis(copurchaseEdges(spark, dir).select("u", "v"), maxRounds))
+
+  /** The Luby rounds of [[qLubyMis]] over any undirected edge frame
+    * `(u, v)`: `(node, in_mis, mis_round)`, a cut leaf. */
+  private[graph] def lubyMis(edgesIn: DataFrame, maxRounds: Int): DataFrame = {
+    val eCut = graft.Cut(edgesIn)
+    val edges = eCut.df
+    var und = graft.Cut(
+      edges.select(col("u").as("n"))
+        .unionAll(edges.select(col("v").as("n"))).distinct())
+    val rounds = collection.mutable.ArrayBuffer.empty[graft.Cut]
+    var r = 0
+    while (und.rows > 0 && r < maxRounds) {
+      val pri = und.df.withColumn("k", expr(
+        s"""cast(conv(substring(md5(concat('mis:$r:',
+           |  cast(n as string))), 1, 8), 16, 10) as long)
+           |  * 2147483648 + n""".stripMargin))
+      val act = edges
+        .join(und.df.select(col("n").as("u")), Seq("u"), "left_semi")
+        .join(und.df.select(col("n").as("v")), Seq("v"), "left_semi")
+      val arcs = act.select(col("u").as("a"), col("v").as("b"))
+        .unionAll(act.select(col("v").as("a"), col("u").as("b")))
+      val nbrMin = arcs
+        .join(pri.select(col("n").as("b"), col("k").as("kb")), "b")
+        .groupBy(col("a").as("n")).agg(min("kb").as("mk"))
+      val winners = pri.join(nbrMin, Seq("n"), "left")
+        .filter(col("mk").isNull || col("k") < col("mk"))
+        .select("n")
+      val losers = arcs
+        .join(winners.select(col("n").as("a")), Seq("a"), "left_semi")
+        .select(col("b").as("n")).distinct()
+      val dec = graft.Cut(
+        winners.select(col("n"), lit(1L).as("in_mis"),
+            lit(r.toLong).as("mis_round"))
+          .unionAll(losers.select(col("n"), lit(0L).as("in_mis"),
+            lit(r.toLong).as("mis_round"))))
+      rounds += dec
+      und = und.next(und.df.join(dec.df.select("n"), Seq("n"), "left_anti"))
+      r += 1
     }
+    require(und.rows == 0, s"Luby MIS did not converge in $maxRounds rounds")
+    val out = graft.Cut(rounds.map(_.df).reduce(_ unionAll _)
+      .select(col("n").as("node"), col("in_mis"), col("mis_round")))
+    eCut.release()
+    und.release()
+    rounds.foreach(_.release())
+    out.df
+  }
 
   /** The lexicographic-minimum spanning forest of the co-purchase
     * graph, association distance `1e6 div support` (strong co-purchase
@@ -1779,27 +1733,23 @@ object GraphOps {
     graft.SessionCache.frames[String](graft.SessionCache.Result)
 
   def qMst(spark: SparkSession, dir: String): DataFrame =
-    // session-cached like rankCache: repeated calls reuse ONE persisted
+    // session-cached like rankCache: repeated calls reuse ONE cut
     // result instead of accreting orphaned leaf blocks per call
     mstCache.get(spark, dir) {
       // materialize the (expensive) co-purchase aggregation ONCE — it
       // is referenced both as the forest input and the final support
       // join
-      val (e, _, eRdd) = matLeaf(copurchaseEdges(spark, dir)
+      val e = graft.Cut(copurchaseEdges(spark, dir)
         .select(col("u"), col("v"),
           expr("1000000 div support").as("w"), col("support")))
-      val (forest, fRdd) =
-        boruvkaForestHandle(e.select("u", "v", "w"), 64,
-          MstLocalSolveMaxEdges)
-      val res = forest.join(e, Seq("u", "v", "w"))
-        .select(col("u"), col("v"), col("w").as("dist"), col("support"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      res.count() // force into the persisted blocks, then free the
-      // intermediates (re-materialization on eviction walks their
-      // still-defined lineage — rare and slow, never wrong)
-      fRdd.foreach(_.unpersist(blocking = false))
-      eRdd.unpersist(blocking = false)
-      res
+      val forest = boruvkaForest(e.df.select("u", "v", "w"))
+      val res = graft.Cut(forest.join(e.df, Seq("u", "v", "w"))
+        .select(col("u"), col("v"), col("w").as("dist"), col("support")))
+      // free the intermediates (re-materialization on eviction walks
+      // their still-defined lineage — rare and slow, never wrong)
+      graft.Cut.release(forest)
+      e.release()
+      res.df
     }
 
   /** Degree distribution of the trade graph in log₂ buckets, per node
@@ -2004,9 +1954,8 @@ object GraphOps {
     * the per-node sum of δ over sources, excluding endpoints.
     *
     * Scale shape: forward rounds shuffle only frontier-sized relations
-    * (≤ sources × |V| rows in total across the run); levels are
-    * materialized through [[matLeaf]] (fresh-leaf stats, the Borůvka
-    * lesson) and retained for the backward pass; the backward rounds
+    * (≤ sources × |V| rows in total across the run); levels are cut
+    * and retained for the backward pass; the backward rounds
     * join two adjacent levels against the resident arc table. Below
     * [[MstLocalSolveMaxEdges]] edges the whole computation local-solves
     * on the driver with the SAME integer arithmetic (GraphSpec pins
@@ -2021,11 +1970,10 @@ object GraphOps {
     // session-cached (the qMst posture): one persisted result per
     // (session, dir, params), owned by the cache
     betwCache.get(spark, (dir, nSources, k)) {
-      val (edges, nEdges, edgesRdd) = matLeaf(
-        copurchaseEdges(spark, dir).select("u", "v"))
-      val out = betweennessOver(spark, edges, nEdges, nSources, k,
+      val edges = graft.Cut(copurchaseEdges(spark, dir).select("u", "v"))
+      val out = betweennessOver(spark, edges.df, edges.rows, nSources, k,
         maxDepth, localSolveMax)
-      edgesRdd.unpersist(blocking = false)
+      edges.release()
       out
     }
 
@@ -2042,40 +1990,33 @@ object GraphOps {
       val es = edges.select("u", "v").as[(Long, Long)].collect()
       return brandesLocal(spark, es, nSources, k, maxDepth)
     }
-    val rdds = collection.mutable.Buffer.empty[
-      org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
-    val (arcs, _, arcsRdd) = matLeaf(
+    val cuts = collection.mutable.Buffer.empty[graft.Cut]
+    def cut(df: DataFrame): graft.Cut = { cuts += graft.Cut(df); cuts.last }
+    val arcs = cut(
       edges.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(edges.select(col("v").as("a"), col("u").as("b"))))
-    rdds += arcsRdd
+        .unionAll(edges.select(col("v").as("a"), col("u").as("b")))).df
     val sources = edges.select(col("u").as("node"))
       .unionAll(edges.select(col("v").as("node")))
       .distinct().orderBy("node").limit(nSources)
     // forward: levels(d) = (s, v, sigma)
     val levels = collection.mutable.Buffer.empty[DataFrame]
-    var (frontier, nF, fRdd) = matLeaf(sources
+    var frontier = cut(sources
       .select(col("node").as("s"), col("node").as("v"), lit(1L).as("sigma")))
-    rdds += fRdd
-    levels += frontier
-    var (seen, _, seenRdd) = matLeaf(frontier.select("s", "v"))
-    rdds += seenRdd
+    levels += frontier.df
+    var seen = cut(frontier.df.select("s", "v")).df
     var d = 0
-    while (nF > 0 && d < maxDepth) {
-      val (nxt, n2, nxtRdd) = matLeaf(frontier
+    while (frontier.rows > 0 && d < maxDepth) {
+      val nxt = cut(frontier.df
         .join(arcs, col("v") === col("a"))
         .groupBy(col("s"), col("b").as("v2"))
         .agg(sum("sigma").as("sigma"))
         .withColumnRenamed("v2", "v")
         .join(seen, Seq("s", "v"), "left_anti"))
-      rdds += nxtRdd
-      if (n2 > 0) {
-        levels += nxt
-        val (s2, _, s2Rdd) = matLeaf(
-          seen.unionAll(nxt.select("s", "v")))
-        rdds += s2Rdd
-        seen = s2
+      if (nxt.rows > 0) {
+        levels += nxt.df
+        seen = cut(seen.unionAll(nxt.df.select("s", "v"))).df
       }
-      frontier = nxt; nF = n2; d += 1
+      frontier = nxt; d += 1
     }
     // backward: deepest level has delta 0; walk up
     var delta = levels.last.select(col("s"), col("v"), lit(0L).as("delta"))
@@ -2091,34 +2032,29 @@ object GraphOps {
         .join(arcs, col("v") === col("a"))
         .join(wLvl, col("b") === col("w") &&
           wLvl("s") === levels(di)("s")) // same-source predecessor arcs
-      val (d2, _, d2Rdd) = matLeaf(contrib
+      val d2 = cut(contrib
         .groupBy(levels(di)("s").as("s"), col("v"))
         .agg(sum(expr(
           s"sigma_v * ($BetweennessFp + delta_w) div sigma_w"))
-          .as("delta")))
-      rdds += d2Rdd
+          .as("delta"))).df
       // nodes at this level with no successors keep delta 0
-      val (dj, _, djRdd) = matLeaf(levels(di).select("s", "v")
+      delta = cut(levels(di).select("s", "v")
         .join(d2, Seq("s", "v"), "left")
-        .na.fill(0L, Seq("delta")))
-      rdds += djRdd
-      delta = dj
+        .na.fill(0L, Seq("delta"))).df
       perLevelDeltas += delta
     }
     // centrality: sum of deltas over sources, endpoints excluded
     // (depth-0 rows are the sources themselves — drop them)
     val nonSource = perLevelDeltas.init // last appended frame is depth 0
     val all = nonSource.reduce(_ unionAll _)
-    val res = all
+    val res = graft.Cut(all
       .filter(col("v") =!= col("s"))
       .groupBy(col("v").as("node"))
       .agg(sum("delta").as("centrality_fp"))
       .orderBy(col("centrality_fp").desc, col("node").asc)
-      .limit(k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    res.count() // force into the persisted blocks, then free intermediates
-    rdds.foreach(_.unpersist(blocking = false))
-    res
+      .limit(k))
+    cuts.foreach(_.release())
+    res.df
   }
 
   /** Driver Brandes with the SAME fixed-point integer recurrence AND
@@ -2177,52 +2113,48 @@ object GraphOps {
     * [[graft.relational.DataQuality.qDpCounts]]: a real estimator
     * would average worlds over secret salts; this operator's job is to
     * be verifiable). Multi-seed BFS — all seeds advance in one join
-    * round each (the [[qBetweenness]] forward shape), frontiers
-    * materialized through [[matLeaf]], loud failure on round-budget
-    * exhaustion. Output: seed, reached-set size, live-arc count. */
+    * round each (the [[qBetweenness]] forward shape), frontiers cut,
+    * loud failure on round-budget exhaustion. Output: seed, reached-set size, live-arc count. */
   def qInfluenceSpread(
       spark: SparkSession, dir: String, nSeeds: Int = 3,
       pPct: Int = 30, maxRounds: Int = 64): DataFrame = {
     val und = copurchaseEdges(spark, dir).select("u", "v")
     val arcsAll = und.select(col("u").as("a"), col("v").as("b"))
       .unionAll(und.select(col("v").as("a"), col("u").as("b")))
-    val (arcs, nLive, arcsRdd) = matLeaf(arcsAll.filter(expr(
+    val arcs = graft.Cut(arcsAll.filter(expr(
       "cast(conv(substring(md5(concat('ic:', cast(a as string), ':'," +
         s" cast(b as string))), 1, 8), 16, 10) as bigint) % 100 < $pPct")))
     val seeds = und.select(col("u").as("node"))
       .unionAll(und.select(col("v").as("node")))
       .distinct().orderBy("node").limit(nSeeds)
-    val rdds = collection.mutable.Buffer(arcsRdd)
-    var (frontier, nF, fRdd) = matLeaf(
+    val cuts = collection.mutable.Buffer(arcs)
+    var frontier = graft.Cut(
       seeds.select(col("node").as("s"), col("node").as("v")))
-    rdds += fRdd
-    // `seen` is a LAZY union of the already-materialized round leaves:
-    // every member is a persisted matLeaf RDD, so re-reading the union
-    // costs cache scans only, and the former per-round
-    // matLeaf(seen ∪ nxt) copy — a second action + a full rewrite of
+    cuts += frontier
+    // `seen` is a LAZY union of the already-cut round leaves, so
+    // re-reading the union costs cache scans only, and the former
+    // per-round cut of seen ∪ nxt — a second action + a full rewrite of
     // the visited set every round — is gone (r16; one action per round
-    // instead of two). Union depth is bounded by the round cap, and
-    // union stats ADD (no per-round stats multiplication — the join
-    // blowup matLeaf exists to prevent cannot re-enter through a union).
-    var seen = frontier
+    // instead of two). Union depth is bounded by the round cap.
+    var seen = frontier.df
     var round = 0
-    while (nF > 0 && round < maxRounds) {
-      val (nxt, n2, nxtRdd) = matLeaf(frontier
-        .join(arcs, col("v") === col("a"))
+    while (frontier.rows > 0 && round < maxRounds) {
+      val nxt = graft.Cut(frontier.df
+        .join(arcs.df, col("v") === col("a"))
         .select(col("s"), col("b").as("v")).distinct()
         .join(seen, Seq("s", "v"), "left_anti"))
-      rdds += nxtRdd
-      if (n2 > 0) seen = seen.unionAll(nxt)
-      frontier = nxt; nF = n2; round += 1
+      cuts += nxt
+      if (nxt.rows > 0) seen = seen.unionAll(nxt.df)
+      frontier = nxt; round += 1
     }
-    if (nF > 0) throw new IllegalStateException(
+    if (frontier.rows > 0) throw new IllegalStateException(
       s"cascade did not settle in $maxRounds rounds")
     val out = seen.groupBy(col("s").as("seed"))
       .agg(count(lit(1)).as("n_reached"))
-      .withColumn("n_live_arcs", lit(nLive))
+      .withColumn("n_live_arcs", lit(arcs.rows))
       .orderBy("seed")
     val rows = out.collect() // nSeeds rows — force, then free the run
-    rdds.foreach(_.unpersist(blocking = false))
+    cuts.foreach(_.release())
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
   }

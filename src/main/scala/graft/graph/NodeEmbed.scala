@@ -31,8 +31,8 @@ import graft.relational.Tables.load
   * is two equi-joins of the persisted training rows against it (center
   * and context side), one node-keyed gradient aggregation (map-side
   * combinable, decimal(38,0) sums), and one left join applying the
-  * update — all shuffles on the node key, lineage cut per epoch with
-  * an eager localCheckpoint. Negative sampling is a per-row hash
+  * update — all shuffles on the node key, lineage cut per epoch.
+  * Negative sampling is a per-row hash
   * expression (no sampling state, no RNG): negatives landing on a node
   * outside the walk vocabulary simply drop out of the context join,
   * identically in both engines.
@@ -145,20 +145,18 @@ object NodeEmbed {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rows.count()
     try {
-      // the INITIAL table checkpoints too (r13): epoch 1 evaluates emb
+      // the INITIAL table is cut too (r13): epoch 1 evaluates emb
       // THREE times (center side, context side, update join), and when
       // `nodes` is a distinct over the corpus-sized edge table that
-      // tripled an 11.8M-row shuffle at sf1 — one eager checkpoint of
-      // the node-count-sized init table buys all three back. EPOCH
-      // outputs checkpoint for the same reason: each feeds both sides
-      // of the next epoch's join, and without the cut lineage doubles
-      // per epoch and the final plan re-runs every prior epoch twice
-      var emb = nodes
-        .select(col("node") +: (0 until Dims).map(i => init(i).as(s"v$i")): _*)
-        .localCheckpoint()
-      for (_ <- 1 to epochs)
-        emb = epoch(emb, rows).localCheckpoint()
-      emb
+      // tripled an 11.8M-row shuffle at sf1 — one cut of the
+      // node-count-sized init table buys all three back. EPOCH outputs
+      // are cut for the same reason: each feeds both sides of the next
+      // epoch's join, and without the cut lineage doubles per epoch and
+      // the final plan re-runs every prior epoch twice
+      var emb = graft.Cut(nodes
+        .select(col("node") +: (0 until Dims).map(i => init(i).as(s"v$i")): _*))
+      for (_ <- 1 to epochs) emb = emb.next(epoch(emb.df, rows))
+      emb.df
     } finally rows.unpersist(blocking = false)
   }
 
@@ -177,7 +175,7 @@ object NodeEmbed {
         .select(col("src").as("node")).distinct()
       val ns = load(spark, dir, "supplier").count()
       val np = load(spark, dir, "part").count()
-      // train ends in an eager localCheckpoint — already materialized
+      // train ends in a cut — already materialized
       train(spark, pairCounts, nodes, ns, np)
     }
 

@@ -20,16 +20,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      ([[TrainingData.incrementalClusters]] — untouched clusters pass
   *      through unchanged).
   *
-  * State here is two persisted LEAF frames (signature store + labels):
-  * each generation is materialized into an explicit RDD and wrapped as a
-  * leaf plan, so batch N's plan does NOT nest batch N-1's (an unioned
-  * chain would grow analysis cost O(N) per batch and eventually overflow
-  * the driver); the previous generation's blocks are freed once the next
-  * is materialized. This is the in-memory stand-in for the lake tables a
-  * production pipeline would maintain (store and keep-list as parquet,
-  * compacted periodically — which also truncates the RDD lineage chain a
-  * very-long-running in-memory stream would accumulate for block-loss
-  * recovery). Exactness is inherited, not approximated: after every
+  * State here is two cut frames (signature store + labels, see
+  * [[graft.Cut]]), so batch N's plan does NOT nest batch N-1's (an
+  * unioned chain would grow analysis cost O(N) per batch and eventually
+  * overflow the driver); the previous generation's cut is released once
+  * the next is materialized. This is the in-memory stand-in for the
+  * lake tables a production pipeline would maintain (store and
+  * keep-list as parquet, compacted periodically — which also truncates
+  * the RDD lineage chain a very-long-running in-memory stream would
+  * accumulate for block-loss recovery). Exactness is inherited, not approximated: after every
   * batch the keep-list equals the from-scratch clusters over all docs
   * ingested so far (DedupIngestSpec replays a multi-batch stream against
   * the from-scratch solve).
@@ -40,7 +39,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object DedupIngest {
 
   /** Mutable ingest state: the accumulated signature store and current
-    * labels, both persisted; `keepList` is safe to read between batches. */
+    * labels, both cut leaves; `keepList` is safe to read between batches. */
   final class IngestState(val spark: SparkSession) {
     @volatile private[DedupIngest] var store: DataFrame =
       spark.emptyDataFrame
@@ -54,8 +53,6 @@ object DedupIngest {
           StructField("is_keeper", BooleanType, nullable = false))))
     }
     @volatile private[DedupIngest] var nDocs: Long = 0L
-    @volatile private[DedupIngest] var labelsRdd: org.apache.spark.rdd.RDD[_] = _
-    @volatile private[DedupIngest] var storeRdd: org.apache.spark.rdd.RDD[_] = _
 
     /** The current (doc_id, cluster_id, is_keeper) keep-list — pair
       * endpoints only, labels = component minima, exactly
@@ -65,23 +62,6 @@ object DedupIngest {
     def docsIngested: Long = nDocs
   }
 
-  /** Materialize a frame into an explicit persisted RDD and hand back a
-    * LEAF plan over it (plus the row count the materializing action
-    * produces) — the lineage-truncation step that keeps each batch's
-    * plan depth constant instead of nesting every prior batch's plan. */
-  private[graft] def materializeLeaf(
-      df: DataFrame, spark: SparkSession):
-        (DataFrame, org.apache.spark.rdd.RDD[_], Long) = {
-    val schema = df.schema
-    val rdd = df.queryExecution.toRdd
-      // named copy fn (not a lambda): see graft.CopyInternalRow
-      .map(graft.CopyInternalRow)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = rdd.count()
-    (org.apache.spark.sql.GraftShim.ofInternalRows(spark, rdd, schema),
-      rdd, n)
-  }
-
   /** Fold one batch of `(doc_id, text)` rows into the state. Exposed so
     * batch callers (and the spec) can drive the same fold the stream
     * runs. */
@@ -89,20 +69,18 @@ object DedupIngest {
     val spark = state.spark
     val newSh = graft.dedup.Dedup.shingleArraysOf(
       batch.select(col("doc_id").cast("long").as("doc_id"), col("text")))
-    val (all, allRdd, n) = materializeLeaf(
-      if (state.nDocs == 0L) newSh else state.store.unionAll(newSh), spark)
+    val all = graft.Cut(
+      if (state.nDocs == 0L) newSh else state.store.unionAll(newSh))
     val delta = graft.dedup.Dedup.minhashLshPairsDeltaIds(
-      all, newSh.select("doc_id"))
-    val (next, nextRdd) = TrainingData.incrementalClustersImpl(
+      all.df, newSh.select("doc_id"))
+    val next = TrainingData.incrementalClusters(
       state.labels, delta.select("d1", "d2"), spark)
     // both successors are materialized — free the superseded generation
-    if (state.storeRdd != null) state.storeRdd.unpersist(blocking = false)
-    if (state.labelsRdd != null) state.labelsRdd.unpersist(blocking = false)
-    state.store = all
-    state.storeRdd = allRdd
+    graft.Cut.release(state.store)
+    graft.Cut.release(state.labels)
+    state.store = all.df
     state.labels = next
-    state.labelsRdd = nextRdd
-    state.nDocs = n
+    state.nDocs = all.rows
   }
 
   /** Attach the fold to a streaming `(doc_id, text)` frame. The caller

@@ -22,20 +22,15 @@ object TrainingData {
   /** One computed cluster table per (session, dir): the iterative label
     * propagation is this module's only multi-job operator, and both its
     * direct query and the corpus-build composition consume the SAME
-    * small materialized result — recomputing it per caller would re-run
-    * the whole loop. The backing RDD is kept alongside so invalidation
-    * can free its storage blocks deterministically (an
-    * invalidated-but-persisted block would otherwise linger until GC +
-    * ContextCleaner). */
-  private val clusterCache = new graft.SessionCache[
-    String, (DataFrame, org.apache.spark.rdd.RDD[_])](
-    graft.SessionCache.Result, _._2.unpersist(blocking = false))
+    * small cut result — recomputing it per caller would re-run the
+    * whole loop. Invalidation releases the cut. */
+  private val clusterCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Result)
 
   /** Same contract for the incremental two-batch fixture: one computed
     * (existing ⊕ delta) keep-list per (session, dir). */
-  private val incrementalCache = new graft.SessionCache[
-    String, (DataFrame, org.apache.spark.rdd.RDD[_])](
-    graft.SessionCache.Result, _._2.unpersist(blocking = false))
+  private val incrementalCache =
+    graft.SessionCache.frames[String](graft.SessionCache.Result)
 
   /** Drop this session's cached query results, in every family. */
   def invalidateCaches(spark: SparkSession): Unit =
@@ -65,17 +60,15 @@ object TrainingData {
     * Oracle: DuckDB recursive-CTE reachability computing min reachable
     * id per node — an independent formulation of the same fixpoint.
     *
-    * The result is cached per (session, dir) — the same checkpointed
+    * The result is cached per (session, dir) — the same cut
     * frame is returned to every caller, so do NOT unpersist it; use
     * [[graft.SessionCache.invalidate]] when the underlying data
     * changes. */
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame =
     clusterCache.get(spark, dir) {
-        val (df, rounds @ _, rdd) = connectedComponentsImpl(
-          graft.dedup.Dedup.qMinhashLshPairs(spark, dir)
-            .select(col("d1"), col("d2")), spark)
-        (df, rdd)
-      }._1
+      connectedComponentsImpl(graft.dedup.Dedup.qMinhashLshPairs(spark, dir)
+        .select(col("d1"), col("d2")), spark)._1
+    }
 
   /** Connected components over an undirected pair relation `(d1, d2)` via
     * large-star/small-star; returns (doc_id, cluster_id, is_keeper) for
@@ -93,75 +86,30 @@ object TrainingData {
     * assertion can't be satisfied vacuously by the small-input local
     * solve. */
   private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame, spark: SparkSession): (DataFrame, Int) = {
-    val (df, rounds, _) = connectedComponentsImpl(pairs, spark, localSolveMax = 0L)
-    (df, rounds)
-  }
+      pairs: DataFrame, spark: SparkSession): (DataFrame, Int) =
+    connectedComponentsImpl(pairs, spark, localSolveMax = 0L)
 
-  /** An edge frame materialized to ONE action: the plan's InternalRows
-    * are copied into an explicitly-persisted RDD, and the same action
-    * that fills the cache folds a set fingerprint — (row count, wrapping
-    * sum of per-row xxhash64(lo) ⊕ xxhash64(hi)). The frame handed back
-    * is a leaf over that RDD, so each round's plan starts from a leaf
-    * (no 4^rounds lineage growth) and the blocks are freed by an
-    * explicit `rdd.unpersist` the moment the next round lands —
-    * checkpoint blocks, by contrast, linger until GC + ContextCleaner. */
-  private final case class MatEdges(
-      df: DataFrame, rdd: org.apache.spark.rdd.RDD[
-        org.apache.spark.sql.catalyst.InternalRow],
-      count: Long, hashSum: Long)
-
-  /** Named per-partition (count, xor-of-hashes sum) fold — see
-    * [[graft.CopyInternalRow]] for why these are not lambdas. */
-  private object EdgeFingerprintPartition
-      extends (Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
-        Iterator[(Long, Long)]) with Serializable {
-    override def apply(
-        it: Iterator[org.apache.spark.sql.catalyst.InternalRow])
-        : Iterator[(Long, Long)] = {
+  /** A canonical edge set's fingerprint, summed by the cut's forcing
+    * pass: per row xxhash64(lo) ⊕ xxhash64(hi), so (row count, wrapping
+    * sum) identifies the set up to a 64-bit collision. */
+  private object EdgeFingerprint
+      extends (org.apache.spark.sql.catalyst.InternalRow => Long)
+      with Serializable {
+    override def apply(r: org.apache.spark.sql.catalyst.InternalRow): Long = {
       import org.apache.spark.sql.catalyst.expressions.XXH64
-      var n = 0L; var s = 0L
-      while (it.hasNext) {
-        val r = it.next()
-        n += 1
-        s += XXH64.hashLong(r.getLong(0), 0x9E3779B97F4A7C15L) ^
-          XXH64.hashLong(r.getLong(1), 0xC2B2AE3D27D4EB4FL)
-      }
-      Iterator.single((n, s))
+      XXH64.hashLong(r.getLong(0), 0x9E3779B97F4A7C15L) ^
+        XXH64.hashLong(r.getLong(1), 0xC2B2AE3D27D4EB4FL)
     }
   }
 
-  private object SumCountHash
-      extends (((Long, Long), (Long, Long)) => (Long, Long))
-      with Serializable {
-    override def apply(a: (Long, Long), b: (Long, Long)): (Long, Long) =
-      (a._1 + b._1, a._2 + b._2)
-  }
-
-  private def materializeEdges(
-      plan: DataFrame, spark: SparkSession): MatEdges = {
-    val schema = plan.schema
-    // named function objects (not lambdas) throughout: see
-    // graft.CopyInternalRow for why — the ClosureCleaner's lambda
-    // introspection can NPE under a polluted context classloader
-    val rdd = plan.queryExecution.toRdd
-      .map(graft.CopyInternalRow) // unsafe rows are reused per-partition
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // one job: computing the fingerprint materializes the cache
-    val (count, hashSum) = rdd
-      .mapPartitions(EdgeFingerprintPartition)
-      .fold((0L, 0L))(SumCountHash)
-    MatEdges(org.apache.spark.sql.GraftShim.ofInternalRows(spark, rdd, schema),
-      rdd, count, hashSum)
-  }
-
-  /** Core loop. Returns (labels, rounds, backing RDD of the labels —
-    * persisted; the caller owns unpersisting it).
+  /** Core loop. Returns (labels, rounds); the labels are a projection
+    * of a cut, released by [[graft.Cut.release]] (a frames cache does
+    * that on drop).
     *
     * Algorithm as documented on [[qDedupClusters]]; the execution shape
     * is ONE Spark job per contraction round: the round's new edge set is
-    * materialized through [[materializeEdges]], whose fingerprint doubles
-    * as the fixpoint probe. Only when the fingerprint repeats does an
+    * cut with its [[EdgeFingerprint]] sum, and (rows, sum) is the
+    * fixpoint probe. Only when the fingerprint repeats does an
     * exact symmetric-difference count run to CONFIRM set equality (a
     * 64-bit sum collision would otherwise terminate the loop early), so
     * the exact check costs one job for the whole loop instead of one per
@@ -184,18 +132,17 @@ object TrainingData {
 
   private def connectedComponentsImpl(
       pairs: DataFrame, spark: SparkSession,
-      localSolveMax: Long = LocalSolveMaxEdges): (DataFrame,
-        Int, org.apache.spark.rdd.RDD[_]) = {
+      localSolveMax: Long = LocalSolveMaxEdges): (DataFrame, Int) = {
     // canonical undirected edge set (lo < hi), deduped once up front —
     // star-contraction is a SET algorithm; the fixpoint test needs
     // canonical rows. Endpoints cast to long so the fingerprint fold and
     // the emitted cluster ids have one stable type.
-    val initial = materializeEdges(pairs
+    val initial = graft.Cut(pairs
       .select(least(col("d1"), col("d2")).cast("long").as("lo"),
         greatest(col("d1"), col("d2")).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi"))
-      .distinct(), spark)
-    if (initial.count <= localSolveMax)
+      .distinct(), EdgeFingerprint)
+    if (initial.rows <= localSolveMax)
       return localSolve(initial, spark)
     var edges = initial
     // O(log² n) worst case for star-contraction; 64 rounds is orders of
@@ -224,14 +171,14 @@ object TrainingData {
       // itself) to their minimum. v ∈ smaller(hi) ⇒ v ≥ m, so orientation
       // stays canonical here too.
       val smins = large.groupBy("hi").agg(min("lo").as("m"))
-      val next = materializeEdges(large.join(smins, "hi")
+      val next = graft.Cut(large.join(smins, "hi")
         .filter(col("lo") =!= col("m"))
         .select(col("m").as("lo"), col("lo").as("hi"))
         .unionAll(smins.select(col("m").as("lo"), col("hi")))
-        .distinct(), spark)
+        .distinct(), EdgeFingerprint)
       rounds += 1
       // fingerprint probe; exact confirm only on a hit (≈ once per loop)
-      if (next.count == edges.count && next.hashSum == edges.hashSum) {
+      if (next.rows == edges.rows && next.sum == edges.sum) {
         val changed = edges.df.withColumn("a", lit(1))
           .join(next.df.withColumn("b", lit(1)), Seq("lo", "hi"),
             "full_outer")
@@ -241,7 +188,7 @@ object TrainingData {
       }
       // the INITIAL edge set stays cached through the loop: the node
       // universe is derived from it inside the final labeling job
-      if (!(edges.rdd eq initial.rdd)) edges.rdd.unpersist(blocking = false)
+      if (!(edges eq initial)) edges.release()
       edges = next
     }
     if (!converged)
@@ -258,16 +205,16 @@ object TrainingData {
     val nodes = initial.df.select(col("lo").as("id"))
       .unionAll(initial.df.select(col("hi").as("id")))
       .distinct()
-    val result = materializeEdges(nodes
+    val result = graft.Cut(nodes
       .join(edges.df.select(col("hi").as("id"), col("lo").as("root")),
         Seq("id"), "left")
       .select(col("id").as("doc_id"),
-        coalesce(col("root"), col("id")).as("cluster_id")), spark)
+        coalesce(col("root"), col("id")).as("cluster_id")))
     val labeled = result.df
       .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
-    if (!(edges.rdd eq initial.rdd)) edges.rdd.unpersist(blocking = false)
-    initial.rdd.unpersist(blocking = false)
-    (labeled, rounds, result.rdd)
+    if (!(edges eq initial)) edges.release()
+    initial.release()
+    (labeled, rounds)
   }
 
   /** Small-input strategy: the canonicalized edge set already sits in
@@ -277,12 +224,9 @@ object TrainingData {
     * identical (doc_id, cluster_id, is_keeper) contract. Rounds = 0 —
     * no contraction ran. */
   private def localSolve(
-      initial: MatEdges, spark: SparkSession): (DataFrame,
-        Int, org.apache.spark.rdd.RDD[_]) = {
-    val edges = initial.rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .collect()
-    initial.rdd.unpersist(blocking = false)
+      initial: graft.Cut, spark: SparkSession): (DataFrame, Int) = {
+    val edges = initial.df.collect().map(r => (r.getLong(0), r.getLong(1)))
+    initial.release()
     val parent = new java.util.HashMap[Long, Long](edges.length * 2)
     def find(x0: Long): Long = {
       var x = x0
@@ -307,14 +251,14 @@ object TrainingData {
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("cluster_id",
         org.apache.spark.sql.types.LongType, nullable = false)))
-    val result = materializeEdges(
+    val result = graft.Cut(
       spark.createDataFrame(
         spark.sparkContext.parallelize(labels.toIndexedSeq,
           math.max(1, math.min(spark.sparkContext.defaultParallelism,
             labels.length / 4096 + 1))),
-        schema), spark)
+        schema))
     (result.df.withColumn("is_keeper", col("doc_id") === col("cluster_id")),
-      0, result.rdd)
+      0)
   }
 
   /** Incremental near-dup ingest: fold a batch of NEW verified pair
@@ -340,19 +284,14 @@ object TrainingData {
     * from-scratch run in TrainingDataSpec, and by `q_dedup_incremental`'s
     * oracle, which IS the from-scratch recursive CTE). Untouched clusters
     * never enter a shuffle: they pass through the final left join
-    * unchanged. */
+    * unchanged.
+    *
+    * The result is a projection of a cut, materialized before return:
+    * callers that CHAIN folds (the streaming ingest) free a superseded
+    * generation with [[graft.Cut.release]] right after. */
   def incrementalClusters(
       existing: DataFrame, newEdges: DataFrame,
-      spark: SparkSession): DataFrame =
-    incrementalClustersImpl(existing, newEdges, spark)._1
-
-  /** Impl variant handing back the result's backing RDD so callers that
-    * CHAIN folds (the streaming ingest) can free superseded generations;
-    * the result is materialized before return, so the previous
-    * generation is safe to unpersist immediately after. */
-  private[pipeline] def incrementalClustersImpl(
-      existing: DataFrame, newEdges: DataFrame, spark: SparkSession):
-        (DataFrame, org.apache.spark.rdd.RDD[_]) = {
+      spark: SparkSession): DataFrame = {
     val labels = existing.select(
       col("doc_id").cast("long").as("doc_id"),
       col("cluster_id").cast("long").as("cluster_id"))
@@ -367,7 +306,7 @@ object TrainingData {
         coalesce(col("c2"), col("d2")).as("d2"))
     // component labels over the delta graph only; nodes are new docs,
     // touched super-nodes, and previously-isolated old docs
-    val (deltaLabels, _, deltaRdd) = connectedComponentsImpl(mapped, spark)
+    val (deltaLabels, _) = connectedComponentsImpl(mapped, spark)
     val delta = deltaLabels
       .select(col("doc_id").as("node"), col("cluster_id").as("label"))
     // relabel ONLY the clusters whose super-node landed in the delta
@@ -386,10 +325,9 @@ object TrainingData {
     val fresh = delta
       .join(labels.select(col("doc_id").as("node")), Seq("node"), "left_anti")
       .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-    val out = materializeEdges(updated.unionAll(fresh), spark)
-    deltaRdd.unpersist(blocking = false)
-    (out.df.withColumn("is_keeper", col("doc_id") === col("cluster_id")),
-      out.rdd)
+    val out = graft.Cut(updated.unionAll(fresh))
+    graft.Cut.release(deltaLabels)
+    out.df.withColumn("is_keeper", col("doc_id") === col("cluster_id"))
   }
 
   /** Two-batch incremental-ingest fixture over `documents`: "yesterday's"
@@ -407,14 +345,14 @@ object TrainingData {
         val oldPairs = graft.dedup.Dedup.qMinhashLshPairs(spark, dir)
           .filter(col("d1") % 2 === 0 && col("d2") % 2 === 0)
           .select("d1", "d2")
-        val (existing, _, exRdd) = connectedComponentsImpl(oldPairs, spark)
+        val (existing, _) = connectedComponentsImpl(oldPairs, spark)
         val delta = graft.dedup.Dedup
           .minhashLshPairsDelta(spark, dir, id => id % 2 === 1)
           .select("d1", "d2")
-        val result = incrementalClustersImpl(existing, delta, spark)
-        exRdd.unpersist(blocking = false)
+        val result = incrementalClusters(existing, delta, spark)
+        graft.Cut.release(existing)
         result
-      }._1
+      }
 
   /** THE split policy — one definition, because two drifting copies of
     * the 80/90 cut or the hash width would silently put docs in
@@ -1474,10 +1412,10 @@ object TrainingData {
           .withColumn("r_ppl", rank(col("nll").asc, col("doc_id").asc))
           .withColumn("r_clf", rank(col("score_fp").desc, col("doc_id").asc))
       } else {
-        // three rank passes branch from this frame; localCheckpoint
-        // runs the (expensive) classifier/perplexity lineage ONCE and
-        // materializes, instead of four replays
-        val j = joined.localCheckpoint()
+        // three rank passes branch from this frame; the cut runs the
+        // (expensive) classifier/perplexity lineage ONCE, instead of
+        // four replays
+        val j = graft.Cut(joined).df
         j.join(langRankOf(spark, j, "r_heur",
             Seq(col("stop_ppm").asc, col("doc_id").asc)), "doc_id")
           .join(langRankOf(spark, j, "r_ppl",

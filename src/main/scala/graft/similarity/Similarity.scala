@@ -1920,13 +1920,12 @@ object Similarity {
           / (col("na") * col("nb"))).as("s_fp"))
       .persist()
     try {
-      var chosen = short
+      var chosen = graft.Cut(short
         .select(col("vec_id"), col("rel_fp"))
         .orderBy(col("rel_fp").desc, col("vec_id")).limit(1)
-        .select(col("vec_id"), col("rel_fp"), lit(1L).as("mmr_rank"))
-        .localCheckpoint(true)
+        .select(col("vec_id"), col("rel_fp"), lit(1L).as("mmr_rank")))
       for (r <- 2 to k) {
-        val sel = chosen.select(col("vec_id"))
+        val sel = chosen.df.select(col("vec_id"))
         val maxSim = sims
           .join(sel.withColumnRenamed("vec_id", "b"), "b")
           .groupBy(col("a").as("vec_id")).agg(max("s_fp").as("max_s"))
@@ -1937,9 +1936,9 @@ object Similarity {
             (col("rel_fp") * 7 - col("max_s") * 3).as("score"))
           .orderBy(col("score").desc, col("vec_id")).limit(1)
           .select(col("vec_id"), col("rel_fp"), lit(r.toLong).as("mmr_rank"))
-        chosen = chosen.unionByName(pick).localCheckpoint(true)
+        chosen = chosen.next(chosen.df.unionByName(pick))
       }
-      chosen.select(col("mmr_rank"), col("vec_id"), col("rel_fp"))
+      chosen.df.select(col("mmr_rank"), col("vec_id"), col("rel_fp"))
     } finally {
       short.unpersist(blocking = false)
       sims.unpersist(blocking = false)

@@ -29,25 +29,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      foreachBatch recipe — so a restart replaying the last
   *      uncommitted batch does no duplicate WORK either.
   *
-  * State is one persisted LEAF frame per generation (the
-  * [[graft.pipeline.DedupIngest]] pattern): each merge result is
-  * materialized into an explicit RDD and wrapped as a leaf plan, so
-  * batch N's plan does not nest batch N−1's, and the superseded
-  * generation's blocks are freed once the next is resident. In
+  * State is one cut frame per generation (the
+  * [[graft.pipeline.DedupIngest]] pattern, see [[graft.Cut]]), so batch
+  * N's plan does not nest batch N−1's, and the superseded generation's
+  * cut is released once the next is resident. In
   * production the same fold writes parquet generations (compacted
   * periodically); the in-memory leaf is the test-scale stand-in with
   * identical plan shape.
   */
 object LakeMergeIngest {
 
-  /** Mutable lake state: the current table generation (persisted leaf)
+  /** Mutable lake state: the current table generation (a cut leaf)
     * and the last applied batch id. Single-writer per state
     * (foreachBatch serializes batches within one query). */
   final class MergeState(
       val spark: SparkSession, initial: DataFrame, val key: String) {
     @volatile private[LakeMergeIngest] var current: DataFrame = initial
-    @volatile private[LakeMergeIngest] var currentRdd:
-      org.apache.spark.rdd.RDD[_] = _
     @volatile private[LakeMergeIngest] var lastApplied: Long = -1L
     @volatile private[LakeMergeIngest] var generation: Long = 0L
 
@@ -75,12 +72,9 @@ object LakeMergeIngest {
     if (batchId > state.lastApplied) {
       val merged = LakeMerge.merge(
         state.current, lastWriter(changes, state.key), state.key)
-      val (leaf, rdd, _) =
-        graft.pipeline.DedupIngest.materializeLeaf(merged, state.spark)
-      if (state.currentRdd != null)
-        state.currentRdd.unpersist(blocking = false)
+      val leaf = graft.Cut(merged).df
+      graft.Cut.release(state.current)
       state.current = leaf
-      state.currentRdd = rdd
       state.lastApplied = batchId
       state.generation += 1
     }
@@ -95,8 +89,6 @@ object LakeMergeIngest {
       val spark: SparkSession, initial: DataFrame, val key: String,
       val trackedCols: Seq[String]) {
     @volatile private[LakeMergeIngest] var current: DataFrame = initial
-    @volatile private[LakeMergeIngest] var currentRdd:
-      org.apache.spark.rdd.RDD[_] = _
     @volatile private[LakeMergeIngest] var lastApplied: Long = -1L
 
     /** The current full version history — safe to read between batches. */
@@ -114,12 +106,9 @@ object LakeMergeIngest {
       val next = LakeMerge.scd2Apply(
         state.current, lastWriter(changes, state.key), state.key,
         state.trackedCols, version = batchId + 1)
-      val (leaf, rdd, _) =
-        graft.pipeline.DedupIngest.materializeLeaf(next, state.spark)
-      if (state.currentRdd != null)
-        state.currentRdd.unpersist(blocking = false)
+      val leaf = graft.Cut(next).df
+      graft.Cut.release(state.current)
       state.current = leaf
-      state.currentRdd = rdd
       state.lastApplied = batchId
     }
 

@@ -53,15 +53,19 @@ object GraftShim {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Wrap an InternalRow RDD as a leaf DataFrame (LogicalRDD): the
-    * lineage-truncation primitive iterative algorithms need — unlike
-    * `localCheckpoint`, the backing RDD stays in the caller's hands, so
-    * its storage blocks can be unpersisted deterministically instead of
-    * lingering until ContextCleaner gets to them. */
+  /** The leaf of a [[graft.Cut]] over `rdd`, the copied rows of
+    * `origin`'s executed plan: origin's partitioning and ordering (from
+    * `LogicalRDD.fromDataset`), but only the measured statistics. */
   def ofInternalRows(
-      spark: SparkSession,
+      origin: DataFrame,
       rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow],
-      schema: types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming = false)
+      rows: Long, bytes: Long): DataFrame = {
+    val ds = origin.asInstanceOf[classic.Dataset[_]]
+    val from = execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
+    val stats = catalyst.plans.logical.Statistics(
+      sizeInBytes = BigInt(math.max(bytes, 1L)), rowCount = Some(BigInt(rows)))
+    val leaf = execution.LogicalRDD(from.output, rdd, from.outputPartitioning,
+      from.outputOrdering, isStreaming = false)(ds.sparkSession, Some(stats))
+    ofRows(ds.sparkSession, leaf.newInstance())
+  }
 }

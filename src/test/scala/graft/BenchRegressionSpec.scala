@@ -126,4 +126,24 @@ class BenchRegressionSpec extends AnyFunSuite {
     // pass-0 samples are never warm
     assert(record(2.0 -> false, 1.5 -> false)._2.isEmpty)
   }
+
+  test("sf1 leg budget: decided before generation, skipped below the floor") {
+    // a sweep that ends at 578 s of a 600 s budget (20 s stop margin)
+    // leaves 2 s: no dataset generation, every entry reported skipped
+    assert(Bench.sf1LegBudget(900.0, 600.0 - 20.0 - 578.0, 5.0).isEmpty)
+    assert(Bench.sf1LegBudget(900.0, 4.99, 5.0).isEmpty)
+    assert(Bench.sf1LegBudget(900.0, -3.0, 5.0).isEmpty)
+    // otherwise the leg gets what the run has left, at most its own cap
+    assert(Bench.sf1LegBudget(900.0, 5.0, 5.0) === Some(5.0))
+    assert(Bench.sf1LegBudget(900.0, 200.0, 5.0) === Some(200.0))
+    assert(Bench.sf1LegBudget(120.0, 200.0, 5.0) === Some(120.0))
+  }
+
+  test("sf1 denominator: the cold leg run, else the warm median, named") {
+    val cold = Map("q_a" -> 1.5)
+    val warm = Map("q_a" -> 0.4, "q_b" -> 0.9)
+    assert(Bench.sf1Denominator("q_a", cold, warm) === ((1.5, "cold")))
+    assert(Bench.sf1Denominator("q_b", cold, warm) === ((0.9, "warm")))
+    assert(Bench.sf1Denominator("q_c", cold, warm) === ((-1.0, "none")))
+  }
 }

@@ -101,7 +101,7 @@ class NodeEmbedSpec extends SparkSpec {
   test("scale gate: per-epoch cost stays flat (checkpoint cuts lineage)") {
     import spark.implicits._
     // synthetic pair counts over a 300-node universe: the gate pins the
-    // failure mode where the per-epoch localCheckpoint goes lazy and
+    // failure mode where the per-epoch lineage cut goes lazy and
     // epoch N's plan nests every prior epoch TWICE (both join sides) —
     // 12 epochs would then cost ~2^12 of epoch work, not 6x 2 epochs
     val n = 300L
@@ -115,7 +115,7 @@ class NodeEmbedSpec extends SparkSpec {
       val t0 = System.nanoTime()
       val out = NodeEmbed.train(spark, pairs, nodes, n, n, epochs)
       assert(out.count() === 2 * n)
-      // the returned frame is a checkpointed LEAF: plan depth must not
+      // the returned frame is a cut LEAF: plan depth must not
       // encode the epoch count
       assert(out.queryExecution.executedPlan.toString.linesIterator.size < 10)
       (System.nanoTime() - t0) / 1e9
