@@ -33,10 +33,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name),
         builder))
     }
-    // whole-operator plans (SURVEY §4.2 option c): the strategy plans
-    // explicit TopKPerKey nodes; the optimizer rule rewrites
-    // Filter(rank<=k, Window(row_number)) plans into them automatically
+    // whole-operator plans (SURVEY §4.2 option c): the strategies plan
+    // explicit TopKPerKey nodes and the crack plan's FirstHit; the rule
+    // rewrites Filter(rank<=k, Window(row_number)) plans into TopKPerKey
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.FirstHitStrategy)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
   }
 }

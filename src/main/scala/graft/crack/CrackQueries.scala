@@ -33,14 +33,10 @@ object CrackQueries {
   def qCrackLen5(spark: SparkSession, dir: String): DataFrame =
     CrackQuery.crackDF(spark, "aaf4c61ddcc5e8a2dabede0f3b482cd9aea9434d", 5)
 
-  /** Chunked cancel-on-first-hit (§7.4): the driver loop runs eagerly and
-    * the verdict is returned as a 1-row frame (≅ "f <pass>" to stdout). */
-  def qCrackChunked(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    CrackQuery.chunkedCrack(spark,
-        "81fe8bfe87576c3ecb22426f8e57847382917acf", 4, chunkSize = 65536)
-      .toSeq.toDF("pass")
-  }
+  /** Cancel-on-first-hit (§7.4): the crack plan's FirstHit stops at the
+    * hit and cancels the tiles above it (≅ "f <pass>" to stdout). */
+  def qCrackChunked(spark: SparkSession, dir: String): DataFrame =
+    CrackQuery.crackDF(spark, "81fe8bfe87576c3ecb22426f8e57847382917acf", 4)
 
   /** Multi-length search: sha1("ab") hunted across len ∈ 1..4 — the
     * generator-style generalization (union of range scans). */

@@ -1,6 +1,6 @@
 package graft.crack
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CaseWhen, EqualTo, Expression, GreaterThanOrEqual, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CaseWhen, EqualTo, Expression, GreaterThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Min
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 
 import graft.keyspace.{Keyspace, NumToPass, Sha1MultiOrdinalMatch, Sha1OrdinalMatch}
-import graft.streaming.CrackPipeline
+import graft.plans.{FirstHit, FirstHitStrategy}
 
 /** Batch re-expression of the reference's one parameterized query
   * (SURVEY.md §0):
@@ -21,10 +21,12 @@ import graft.streaming.CrackPipeline
   *
   * The whole request/server/worker round-trip (`request.c`, `server.c`,
   * `worker.c`) collapses into one whole-stage-codegen'd Spark job:
-  * `Range → Project(NumToPass) → Filter(sha1 = h) → TakeOrdered(1)`.
+  * `Range → Filter(sha1 = h) → Project(NumToPass) → FirstHit`.
   * `spark.range` supplies the reference's uniform range partitioning
   * (`server.c:333-438`) exactly — ordinal tiling with no overshoot — at
   * arbitrary parallelism instead of the reference's cap of 10(+1) workers.
+  * `FirstHit` answers at the first hit like the reference
+  * (`server.c:251-256`), but always with the minimum preimage.
   */
 object CrackQuery {
 
@@ -69,14 +71,13 @@ object CrackQuery {
       logical.Filter(Sha1OrdinalMatch(id, len, hashHex.toLowerCase), range))
   }
 
-  /** The reference's query over the full `[a-z]^len` domain, then
-    * `Sort(pass) → Limit 1`: deterministic first-found-wins (the minimum
-    * preimage). */
+  /** The reference's query over the full `[a-z]^len` domain under
+    * [[graft.plans.FirstHit]]: deterministic first-found-wins (the minimum
+    * preimage), since `Range` tiles are ascending ordinal ranges and
+    * `num_to_pass` preserves order for a fixed `len`. */
   private[graft] def crackPlan(hashHex: String, len: Int, parallelism: Int): LogicalPlan = {
     val (lo, hi) = Keyspace.fullRange(len)
-    val hits = matchesPlan(hashHex, len, lo, hi, parallelism)
-    logical.Limit(Literal(1),
-      logical.Sort(Seq(SortOrder(hits.output.head, Ascending)), global = true, hits))
+    FirstHit(matchesPlan(hashHex, len, lo, hi, parallelism))
   }
 
   /** A batch of targets in ONE full-domain scan: the fused
@@ -148,8 +149,10 @@ object CrackQuery {
       spark: SparkSession,
       hashHex: String,
       len: Int,
-      parallelism: Int = 32): DataFrame =
+      parallelism: Int = 32): DataFrame = {
+    FirstHitStrategy.register(spark)
     GraftShim.ofRows(spark, crackPlan(hashHex, len, parallelism))
+  }
 
   /** `./request host:port <hash> <len>` ≅ `crack(hash, len)`:
     * `Some(pass)` ≅ "f <pass>", `None` ≅ "x". */
@@ -212,101 +215,5 @@ object CrackQuery {
         .select(lit(len).as("len"), col("pass"))
     }.reduce(_.unionAll(_))
       .orderBy("len", "pass")
-  }
-
-  /** Cancel-on-first-hit driver loop (SURVEY.md §7.4): scan the keyspace in
-    * ordinal chunks; work beyond the hit's chunk is never launched, and
-    * WITHIN the hit's chunk sibling tasks are killed via
-    * [[cancellingScan]] as soon as the hit's task completes. Strictly
-    * better than the reference, which replies early (`server.c:251-256`)
-    * but never cancels sibling workers (`worker.c` has no abort path).
-    *
-    * Determinism contract (inherited from [[cancellingScan]]): assumes at
-    * most one preimage per chunk — true for any cryptographic digest.
-    * With multiple preimages in ONE chunk the cancelled scan may return
-    * whichever hit reported first, where the pre-cancellation version
-    * returned the chunk minimum; callers needing the global minimum under
-    * colliding inputs use [[crackDF]] (full ordered scan). */
-  def chunkedCrack(
-      spark: SparkSession,
-      hashHex: String,
-      len: Int,
-      chunkSize: Long = 1L << 24,
-      parallelism: Int = 32): Option[String] = {
-    val (lo, hi) = Keyspace.fullRange(len)
-    var start = lo
-    while (start <= hi) {
-      val end = math.min(start + chunkSize - 1, hi)
-      val hit = cancellingScan(spark, hashHex, len, start, end, parallelism)
-      if (hit.isDefined) return hit
-      start = end + 1
-    }
-    None
-  }
-
-  /** One crack scan of `[lo, hi]` that CANCELS its own sibling tasks on
-    * the first hit (L3 completion): tiles run as one job in a dedicated
-    * job group; a hit task publishes the preimage through an accumulator
-    * before completing, a driver-side listener cancels the group on the
-    * first hit-carrying task completion, and in-flight tasks notice the
-    * interrupt at their next 64k-candidate check and die. Queued tiles
-    * are never launched — measured in CrackSpec as tasks-started <
-    * tiles for an early hit.
-    *
-    * Each tile runs [[graft.streaming.CrackPipeline.scanTile]], the one
-    * worker tile loop (the streaming fan-out and the straggler rescan run
-    * it too). Result is the minimum over reported hits —
-    * identical to the ordered scan whenever the digest has at most one
-    * preimage in the range (any cryptographic hash in practice; with
-    * multiple preimages a cancelled scan may legitimately return
-    * whichever hit reported, so callers needing the global minimum use
-    * [[matchesOrdinals]] + orderBy). */
-  def cancellingScan(
-      spark: SparkSession,
-      hashHex: String,
-      len: Int,
-      lo: Long,
-      hi: Long,
-      parallelism: Int): Option[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val sc = spark.sparkContext
-    val tiles = Keyspace.tile(lo, hi, parallelism)
-    val hits = sc.collectionAccumulator[String]("graft.crack.hits")
-    val group = s"graft-crack-cancel-${java.util.UUID.randomUUID()}"
-    @volatile var fired = false
-    val listener = new SparkListener {
-      override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit =
-        // accumulator updates merge before the event posts, so a hit is
-        // visible here the moment its task ends
-        if (!fired && !hits.isZero) {
-          fired = true
-          sc.cancelJobGroup(group)
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, s"crack $hashHex len=$len", interruptOnCancel = true)
-      val collected =
-        try {
-          sc.parallelize(tiles, tiles.size).flatMap { case (s, e) =>
-            CrackPipeline.scanTile(hashHex, len, s, e) match {
-              case Some(p) => hits.add(p); Iterator.single(p)
-              case None => Iterator.empty
-            }
-          }.collect().toSeq
-        } catch {
-          case e: org.apache.spark.SparkException if fired =>
-            // expected path: job killed after the hit; the accumulator
-            // carries every hit whose task completed
-            val v = hits.value
-            if (v.isEmpty) throw e
-            import scala.jdk.CollectionConverters._
-            v.asScala.toSeq
-        }
-      collected.sorted.headOption
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 }

@@ -148,7 +148,8 @@ object functions {
     * reset registry re-registers instead of silently no-oping, and
     * nothing accumulates per stopped session. Re-registration of an
     * existing function is a WARN, not an error, so the benign race
-    * between two threads registering at once costs noise at worst. */
+    * between two threads registering at once costs noise at worst. The
+    * `crack` table function's [[graft.plans.FirstHitStrategy]] comes too. */
   def registerAll(spark: SparkSession): Unit =
     if (!spark.catalog.functionExists("num_to_pass")) {
       GraftExtensions.builders.foreach { case (name, builder) =>
@@ -157,5 +158,6 @@ object functions {
       GraftExtensions.tableBuilders.foreach { case (name, builder) =>
         GraftShim.registerTableFunction(spark, name, builder)
       }
+      graft.plans.FirstHitStrategy.register(spark)
     }
 }

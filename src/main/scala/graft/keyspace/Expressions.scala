@@ -87,68 +87,75 @@ case class PassToNum(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Zero-allocation SHA-1 match kernel for the crack hot loop. */
-object CrackKernels {
+/** One thread's SHA-1 crack-kernel state: the digest, the candidate and
+  * output buffers, and the last `(ordinal, len)` the candidate holds. A
+  * scan in ascending ordinal order (every `Range` tile, every
+  * [[graft.streaming.CrackPipeline.scanTile]]) steps the candidate's
+  * base-26 successor in place instead of decoding every ordinal. Not
+  * thread-safe: generated code holds one per task, [[CrackKernels]] one
+  * per thread. */
+private[graft] final class Sha1KernelState {
+  private val md = java.security.MessageDigest.getInstance("SHA-1")
+  private val buf = new Array[Byte](Keyspace.MaxLen)
+  private val out = new Array[Byte](20)
+  private var last = 0L
+  private var lastLen = 0 // no candidate yet: the first call decodes
 
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("SHA-1")
-  }
-  private val bufLocal = new ThreadLocal[Array[Byte]] {
-    override def initialValue(): Array[Byte] = new Array[Byte](32)
-  }
-  private val outLocal = new ThreadLocal[Array[Byte]] {
-    override def initialValue(): Array[Byte] = new Array[Byte](20)
-  }
-
-  /** Does `sha1(base26(ordinal, len)) == target`? One reused candidate
-    * buffer, one thread-local digest, raw 20-byte compare — no string,
-    * hex, or digest allocation per candidate. */
-  def sha1MatchesOrdinal(ordinal: Long, len: Int, target: Array[Byte]): Boolean = {
-    val buf = bufLocal.get()
-    var n = ordinal
-    var i = len - 1
-    while (i >= 0) {
-      buf(i) = ('a' + (n % 26)).toByte
-      n /= 26
-      i -= 1
+  /** `sha1(base26(ordinal, len))` into the reused output buffer. */
+  private def digest(ordinal: Long, len: Int): Array[Byte] = {
+    if (len == lastLen && ordinal == last + 1) {
+      // in-place lexicographic successor with carry (z→a), worker.c:21-39
+      var p = len - 1
+      while (p >= 0 && buf(p) == 'z') { buf(p) = 'a'; p -= 1 }
+      if (p >= 0) buf(p) = (buf(p) + 1).toByte
+    } else {
+      Keyspace.decodeInto(ordinal, len, buf)
+      lastLen = len
     }
-    val md = mdLocal.get()
-    md.reset()
+    last = ordinal
     md.update(buf, 0, len)
-    val out = outLocal.get()
     md.digest(out, 0, 20)
-    java.util.Arrays.equals(out, target)
+    out
   }
+
+  /** Does `sha1(base26(ordinal, len)) == target`? Raw 20-byte compare —
+    * no string, hex, or digest allocation per candidate. */
+  def matches(ordinal: Long, len: Int, target: Array[Byte]): Boolean =
+    java.util.Arrays.equals(digest(ordinal, len), target)
 
   /** Index of `sha1(base26(ordinal, len))` in `targets` (flat array of
     * sorted 20-byte digests), or -1 — binary search per candidate, so a
     * batch of B targets costs one hash + log2(B) 20-byte compares per
     * candidate instead of B string equalities or a join probe. */
-  def sha1MultiMatchOrdinal(ordinal: Long, len: Int, targets: Array[Byte]): Int = {
-    val buf = bufLocal.get()
-    var n = ordinal
-    var i = len - 1
-    while (i >= 0) {
-      buf(i) = ('a' + (n % 26)).toByte
-      n /= 26
-      i -= 1
-    }
-    val md = mdLocal.get()
-    md.reset()
-    md.update(buf, 0, len)
-    val out = outLocal.get()
-    md.digest(out, 0, 20)
+  def multiMatch(ordinal: Long, len: Int, targets: Array[Byte]): Int = {
+    val d = digest(ordinal, len)
     var lo = 0
     var hi = targets.length / 20 - 1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
-      val c = java.util.Arrays.compare(out, 0, 20, targets, mid * 20, mid * 20 + 20)
+      val c = java.util.Arrays.compare(d, 0, 20, targets, mid * 20, mid * 20 + 20)
       if (c == 0) return mid
       else if (c < 0) hi = mid - 1
       else lo = mid + 1
     }
     -1
+  }
+}
+
+/** Zero-allocation SHA-1 match kernels for the crack hot loop, on one
+  * [[Sha1KernelState]] per thread (the interpreted path; generated code
+  * keeps its own state and skips the thread-local lookup). */
+object CrackKernels {
+
+  private[keyspace] val state = ThreadLocal.withInitial[Sha1KernelState](() => new Sha1KernelState)
+
+  def sha1MatchesOrdinal(ordinal: Long, len: Int, target: Array[Byte]): Boolean =
+    state.get().matches(ordinal, len, target)
+
+  /** A task's own [[Sha1KernelState]], as a field of the generated class. */
+  private[keyspace] def kernelState(ctx: CodegenContext): String = {
+    val cls = classOf[Sha1KernelState].getName
+    ctx.addMutableState(cls, "sha1State", v => s"$v = new $cls();")
   }
 
   def hexToBytes(hex: String): Array[Byte] = {
@@ -211,12 +218,12 @@ case class Sha1MultiOrdinalMatch(
       s"$prettyName requires BIGINT ordinal, got ${child.dataType.simpleString}")
 
   override protected def nullSafeEval(input: Any): Any =
-    CrackKernels.sha1MultiMatchOrdinal(input.asInstanceOf[Long], len, flat)
+    CrackKernels.state.get().multiMatch(input.asInstanceOf[Long], len, flat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val flatRef = ctx.addReferenceObj("sha1Targets", flat, "byte[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.keyspace.CrackKernels.sha1MultiMatchOrdinal($c, $len, $flatRef)")
+    val state = CrackKernels.kernelState(ctx)
+    defineCodeGen(ctx, ev, c => s"$state.multiMatch($c, $len, $flatRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Sha1MultiOrdinalMatch =
@@ -250,8 +257,8 @@ case class Sha1OrdinalMatch(child: Expression, len: Int, digestHex: String)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val digestRef = ctx.addReferenceObj("sha1Target", digest, "byte[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.keyspace.CrackKernels.sha1MatchesOrdinal($c, $len, $digestRef)")
+    val state = CrackKernels.kernelState(ctx)
+    defineCodeGen(ctx, ev, c => s"$state.matches($c, $len, $digestRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Sha1OrdinalMatch =

@@ -50,17 +50,23 @@ object Keyspace {
     require(len >= 1 && len <= MaxLen, s"len must be in [1, $MaxLen], got $len")
     if (num < 0) throw new IllegalArgumentException(s"negative ordinal $num")
     val bytes = new Array[Byte](len)
-    var n = num
-    var i = len - 1
-    while (i >= 0) {
-      bytes(i) = ('a' + (n % Radix)).toByte
-      n /= Radix
-      i -= 1
-    }
-    if (n != 0 && !wrap)
+    if (decodeInto(num, len, bytes) != 0 && !wrap)
       throw new IllegalArgumentException(
         s"ordinal $num out of range for len=$len keyspace (size ${pows(len)})")
     bytes
+  }
+
+  /** `num`'s low `len` base-26 digits as `[a-z]` into `buf`, unchecked;
+    * returns the quotient left above them (0 when `num` fits). */
+  private[keyspace] def decodeInto(num: Long, len: Int, buf: Array[Byte]): Long = {
+    var n = num
+    var i = len - 1
+    while (i >= 0) {
+      buf(i) = ('a' + (n % Radix)).toByte
+      n /= Radix
+      i -= 1
+    }
+    n
   }
 
   /** Ordinal → `UTF8String` (called from generated code — keep signature

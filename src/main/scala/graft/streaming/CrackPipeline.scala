@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{Dataset, Encoders}
 
-import graft.keyspace.{CrackKernels, Keyspace}
+import graft.keyspace.{CrackKernels, Keyspace, Sha1KernelState}
 import graft.streaming.CrackService.{CrackReply, JobVerdict}
 
 /** The complete reference dataflow as ONE streaming job (SURVEY.md §3):
@@ -14,8 +12,7 @@ import graft.streaming.CrackService.{CrackReply, JobVerdict}
   * - request intake ≅ `handle_crack_req` (`server.c:229-241`)
   * - tiling ≅ `assign_one_req` (`server.c:333-438`; exact, no overshoot)
   * - [[scanTile]] ≅ the worker loop (`worker.c:58-108`) — the one tile
-  *   loop, also run by the straggler rescan and
-  *   [[graft.crack.CrackQuery.cancellingScan]]
+  *   loop, also run by the straggler rescan
   * - verdict fold ≅ `check_req_status` (`server.c:243-331`) via
   *   [[CrackService.step]], the one per-batch verdict step
   */
@@ -33,8 +30,8 @@ object CrackPipeline {
 
   /** Sequential scan of ordinals `[lo, hi]` for the first sha1 preimage —
     * the worker inner loop, re-expressed without the reference's
-    * per-candidate allocation: the candidate buffer is mutated in place
-    * via base-26 successor and hashed into one reused 20-byte digest
+    * per-candidate allocation: one [[graft.keyspace.Sha1KernelState]]
+    * steps the candidate in place and hashes it into one reused 20-byte
     * buffer, and the target hex is decoded ONCE to raw bytes, so the loop
     * compares 20 bytes fail-fast instead of hex-encoding every candidate.
     * Bounds are ordinals, so the reference's all-`z` UB cannot arise.
@@ -42,20 +39,12 @@ object CrackPipeline {
     * way `interruptOnCancel` kills a task, which a pure compute loop
     * would otherwise never observe. */
   def scanTile(hashHex: String, len: Int, lo: Long, hi: Long): Option[String] = {
+    require(lo >= 0 && hi < Keyspace.size(len), s"tile [$lo,$hi] outside len=$len")
     val target = CrackKernels.hexToBytes(hashHex.toLowerCase)
-    val md = MessageDigest.getInstance("SHA-1")
-    val buf = Keyspace.numToPassBytes(lo, len, wrap = false)
-    val out = new Array[Byte](20)
+    val kernel = new Sha1KernelState
     var ord = lo
     while (ord <= hi) {
-      md.update(buf, 0, len)
-      md.digest(out, 0, 20)
-      if (java.util.Arrays.equals(out, target))
-        return Some(new String(buf, java.nio.charset.StandardCharsets.US_ASCII))
-      // in-place lexicographic successor with carry (z→a), worker.c:21-39
-      var p = len - 1
-      while (p >= 0 && buf(p) == 'z') { buf(p) = 'a'; p -= 1 }
-      if (p >= 0) buf(p) = (buf(p) + 1).toByte
+      if (kernel.matches(ord, len, target)) return Some(Keyspace.numToPass(ord, len))
       ord += 1
       if ((ord & 0xffffL) == 0L && Thread.currentThread().isInterrupted)
         throw new InterruptedException(s"crack tile [$lo,$hi] cancelled")

@@ -1,10 +1,58 @@
 package graft.crack
 
+import scala.concurrent.duration._
+import scala.concurrent.{Await, ExecutionContext, Future}
+
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
+import org.apache.spark.sql.{DataFrame, GraftShim}
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.functions.{col, lit, sha1, udf}
+import org.scalatest.concurrent.{Signaler, TimeLimitedTests}
+import org.scalatest.time.{Seconds, Span}
+
 import graft.SparkSpec
+import graft.plans.{FirstHit, FirstHitExec, FirstHitStrategy}
 
 /** Known-answer vectors from FIXTURES.md §1 (reference query parity:
   * `request.c` / `worker.c:41-56,84`). */
-class CrackSpec extends SparkSpec {
+class CrackSpec extends SparkSpec with TimeLimitedTests {
+
+  // Every test runs under a limit far above the slowest one (the len-6
+  // gate, about 15-30 s), so a crack that never returns fails its test by
+  // name instead of stalling the suite. The signaler cancels the running
+  // jobs, which ends a FirstHitExec wait, and interrupts the test thread.
+  override val timeLimit: Span = Span(300, Seconds)
+  override val defaultTestSignaler: Signaler = (t: Thread) => {
+    spark.sparkContext.cancelAllJobs()
+    t.interrupt()
+  }
+
+  /** `body`'s result and the tasks that started while it ran (the
+    * listener bus is async, so the count is read once it settles). */
+  private def withTaskStarts[T](body: => T): (T, Int) = {
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onTaskStart(ts: SparkListenerTaskStart): Unit =
+        started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val out = body
+      val deadline = System.nanoTime() + 5_000_000_000L
+      var last = -1
+      while (System.nanoTime() < deadline && started.get() != last) {
+        last = started.get()
+        Thread.sleep(100)
+      }
+      (out, started.get())
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  private def firstHit(df: DataFrame): DataFrame = {
+    FirstHitStrategy.register(spark)
+    GraftShim.ofRows(spark, FirstHit(GraftShim.logicalPlan(df)))
+  }
 
   test("len=2: domain min / max / early / X1-wrap-regression vectors") {
     assert(CrackQuery.crack(spark, "e0c9035898dd52fc65c41454cec9c4d2611bfb37", 2)
@@ -34,7 +82,6 @@ class CrackSpec extends SparkSpec {
   }
 
   test("fused sha1 kernel == generic sha1(num_to_pass) pipeline on full len-3 domain") {
-    import org.apache.spark.sql.functions._
     // every ordinal where the fused kernel fires must be exactly the set
     // the generic pipeline finds, for several targets incl. no-match
     val targets = Seq(
@@ -61,56 +108,38 @@ class CrackSpec extends SparkSpec {
       parallelism = 100) === Some("a"))
   }
 
-  test("chunkedCrack: early exit finds answer without scanning later chunks") {
-    assert(CrackQuery.chunkedCrack(spark,
-      "81fe8bfe87576c3ecb22426f8e57847382917acf", 4, chunkSize = 32768)
+  test("crack: early exit finds the answer; a miss returns None") {
+    assert(CrackQuery.crack(spark, "81fe8bfe87576c3ecb22426f8e57847382917acf", 4)
       === Some("abcd"))
-    assert(CrackQuery.chunkedCrack(spark,
-      "7110eda4d09e062aa5e4a390b0a572ac0d2c0220", 4, chunkSize = 200000)
+    assert(CrackQuery.crack(spark, "7110eda4d09e062aa5e4a390b0a572ac0d2c0220", 4)
       === None)
   }
 
-  test("cancellingScan: early hit cancels sibling tasks (launched < tiles)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart}
+  test("crack: early hit cancels sibling tasks (launched < tiles)") {
     // sha1("aaaaa") — ordinal 0, so tile 0 hits instantly while 255 other
     // tiles are queued behind local[4]'s cores
     val md = java.security.MessageDigest.getInstance("SHA-1")
     val hash = md.digest("aaaaa".getBytes).map("%02x".format(_)).mkString
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val counter = new SparkListener {
-      override def onTaskStart(ts: SparkListenerTaskStart): Unit =
-        started.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val (lo, hi) = graft.keyspace.Keyspace.fullRange(5)
-      assert(CrackQuery.cancellingScan(spark, hash, 5, lo, hi,
-        parallelism = 256) === Some("aaaaa"))
-      // listener bus is async — wait for the count to settle
-      val deadline = System.nanoTime() + 5_000_000_000L
-      var last = -1
-      while (System.nanoTime() < deadline && started.get() != last) {
-        last = started.get()
-        Thread.sleep(100)
-      }
-      assert(started.get() < 256,
-        s"cancel-on-hit must keep queued tiles from launching, started=${started.get()}")
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val (hit, started) = withTaskStarts(
+      CrackQuery.crack(spark, hash, 5, parallelism = 256))
+    assert(hit === Some("aaaaa"))
+    assert(started < 256,
+      s"cancel-on-hit must keep queued tiles from launching, started=$started")
   }
 
   test("len-6 throughput gate: fused kernel sustains the per-core floor") {
     // pins the fused-kernel claim (CrackQuery.scaladoc: no per-candidate
     // string/hex/digest allocation) against regression: a full 26^6 ≈
-    // 309M-ordinal scan through chunkedCrack, timed. The floor is
+    // 309M-ordinal scan through CrackQuery.crack, timed. The floor is
     // per-core so the same gate holds at local[4] (suite) and local[32]
-    // (bench box); an all-zeros digest has no preimage, so every chunk
+    // (bench box); an all-zeros digest has no preimage, so every tile
     // scans to completion — the clean full-throughput measurement.
     val cores = spark.sparkContext.defaultParallelism
     val keyspace = graft.keyspace.Keyspace.size(6)
     assert(keyspace === 308915776L)
     def measure(): Double = {
       val t0 = System.nanoTime()
-      val hit = CrackQuery.chunkedCrack(spark, "0" * 40, 6, parallelism = cores)
+      val hit = CrackQuery.crack(spark, "0" * 40, 6, parallelism = cores)
       val secs = (System.nanoTime() - t0) / 1e9
       assert(hit.isEmpty)
       val rate = keyspace / secs
@@ -165,11 +194,76 @@ class CrackSpec extends SparkSpec {
     }
   }
 
-  test("cancellingScan: miss scans everything and returns None") {
+  test("crack: a miss scans every tile and returns None") {
     // "1234"'s sha1 has no len-2 preimage
-    assert(CrackQuery.cancellingScan(spark,
-      "7110eda4d09e062aa5e4a390b0a572ac0d2c0220", 2, 0L, 675L,
-      parallelism = 8) === None)
+    val (hit, started) = withTaskStarts(CrackQuery.crack(spark,
+      "7110eda4d09e062aa5e4a390b0a572ac0d2c0220", 2, parallelism = 8))
+    assert(hit === None)
+    assert(started === 8)
+  }
+
+  test("FirstHit: several hits give partition 0's, though a higher partition ends first") {
+    // hits at 999 (the last row of partition 0, which sleeps first) and at
+    // 1000, 2000, 3000 (the first rows of partitions 1-3, which end at
+    // once): the answer is the minimum, not the first hit reported
+    val slowLastRow = udf { (id: Long) =>
+      if (id == 999L) { Thread.sleep(1000); true } else id > 0 && id % 1000 == 0
+    }
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val order = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = ended.add(te.taskInfo.index)
+    }
+    spark.sparkContext.addSparkListener(order)
+    try {
+      val hits = firstHit(spark.range(0, 4000, 1, 4).filter(slowLastRow(col("id"))).toDF())
+        .collect().map(_.getLong(0)).toSeq
+      assert(hits === Seq(999L))
+      val deadline = System.nanoTime() + 5_000_000_000L
+      while (ended.size < 4 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(ended.size === 4 && ended.toArray.last === 0, s"task end order: $ended")
+    } finally spark.sparkContext.removeSparkListener(order)
+  }
+
+  test("crackDF and SQL crack() plan FirstHitExec, never TakeOrderedAndProject") {
+    def assertFirstHit(df: DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case f: FirstHitExec => f }.size === 1, plan)
+      assert(plan.collect { case t: TakeOrderedAndProjectExec => t }.isEmpty, plan)
+      assert(df.collect().map(_.getString(0)).toSeq === Seq("abcd"))
+    }
+    val abcd = "81fe8bfe87576c3ecb22426f8e57847382917acf"
+    assertFirstHit(CrackQuery.crackDF(spark, abcd, 4))
+    assertFirstHit(spark.sql(s"SELECT * FROM crack('$abcd', 4)"))
+    // a fresh session: no spark.sql.extensions, no strategy registered yet
+    val fresh = spark.newSession()
+    assert(fresh.experimental.extraStrategies.isEmpty)
+    assertFirstHit(CrackQuery.crackDF(fresh, abcd, 4))
+    val freshSql = spark.newSession()
+    graft.functions.registerAll(freshSql)
+    assertFirstHit(freshSql.sql(s"SELECT * FROM crack('$abcd', 4, 8)"))
+  }
+
+  test("FirstHit: a task that throws in partition k fails the query, not hangs") {
+    val failAt2 = udf { (id: Long) =>
+      if (id == 2500L) throw new IllegalStateException("injected failure in partition 2")
+      false
+    }
+    val e = intercept[SparkException] {
+      firstHit(spark.range(0, 4000, 1, 4).filter(failAt2(col("id"))).toDF()).collect()
+    }
+    assert(e.getMessage.contains("injected failure in partition 2"), e.getMessage)
+  }
+
+  test("crack: cancelAllJobs during a crack raises, not hangs") {
+    // a len-6 miss scans ~309M keys, many seconds at local[4]
+    val crack = Future(CrackQuery.crack(spark, "0" * 40, 6, parallelism = 64))(
+      ExecutionContext.global)
+    val deadline = System.nanoTime() + 60_000_000_000L
+    while (spark.sparkContext.statusTracker.getActiveJobIds().isEmpty &&
+      !crack.isCompleted && System.nanoTime() < deadline) Thread.sleep(20)
+    spark.sparkContext.cancelAllJobs()
+    val e = intercept[SparkException](Await.result(crack, 60.seconds))
+    assert(e.getMessage.contains("cancel"), e.getMessage)
   }
 
   test("crackMany: batch of hashes in one scan (fused == broadcast join)") {
