@@ -1,7 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Benchmark harness: runs every query in [[SparkEntry.queries]] in
+/** The one in-repo timer of registry queries: runs every query in
+  * [[SparkEntry.queries]] in
   * round-robin passes — pass 0 is the cold/warmup pass (recorded but
   * excluded from medians once a warm sample exists), then up to `n`
   * (default 3) warm passes AS THE WALL BUDGET ALLOWS
@@ -19,7 +20,11 @@ import org.apache.spark.sql.SparkSession
   * The round driver keeps only a bounded tail of the log, so the line is
   * kept small: 2-decimal medians (10 ms resolution — ample for 0.1–15 s
   * queries) and a bare scale-factor label. Full-precision per-run timings
-  * are written to `BENCH_LOCAL.json` in the working directory for audit.
+  * are written to `BENCH_LOCAL.json` in the working directory for audit,
+  * with the Spark jobs each sample ran (`"jobs"`, parallel to `"runs"`).
+  *
+  * To probe one query: `SPARK_GRAFT_BENCH_ONLY=<q> SPARK_GRAFT_SF1=0
+  * SPARK_GRAFT_BENCH_N=5 sbt "runMain graft.Bench"`.
   */
 object Bench {
   /** sf1 scale SENTINELS — queries that ride the 10× leg regardless of
@@ -236,7 +241,7 @@ object Bench {
         }
       }, 1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.cpus
     val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt.max(1)
     // bootstrap summary: parseable from the instant the hook exists, so
     // even a kill during SparkSession startup leaves a valid (if empty)
@@ -246,39 +251,37 @@ object Bench {
     // OUTPUT DISCIPLINE: the consumer keeps only a bounded ~2000-char
     // tail of the merged stream, and the r14 tail was wall-to-wall
     // `WindowExec: No Partition Defined` WARN spam — enough alone to
-    // displace any summary line. The bench session logs ERRORs only
-    // (query failures print through System.err directly and are
-    // unaffected); root level drops to ERROR before the session builds
-    // so startup INFO/WARN noise never enters the stream either.
-    try org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin the session zone so the events-lake timestamp normalization
-      // (Tables.load NTZ→UTC micros) is box-independent
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // displace any summary line. The session logs ERRORs only (query
+    // failures print through System.err directly and are unaffected).
+    val spark = LocalSession(
       // the 127-query round-robin compiles far more than 100 distinct
       // codegen stages per sweep, so the default 100-entry class cache
       // evicts everything between two runs of the same query and every
       // timed run re-pays wholestage compilation; the cache is bounded
       // by entry count either way, just large enough to actually hit
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      // bucketed-table queries saveAsTable into the warehouse; keep it
-      // out of the repo working tree (default is ./spark-warehouse)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
+      "spark.sql.codegen.cache.maxEntries" -> "4000",
       // the bench driver runs at 24 GB (build.sbt), so it can afford the
       // grouped broadcast walk index up to 256 MB packed — the kernel
       // path beats ten serial probe jobs over the sf1 trade graph's
       // 12M-row flat index ~4×. The LIBRARY default stays 64 MB
       // (GraphOps.walkIndex): a default-heap driver must not be routed
       // into a multi-GB transient collect.
-      .config("spark.graft.walkIndex.maxBytes", String.valueOf(256L << 20))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.graft.walkIndex.maxBytes" -> String.valueOf(256L << 20))
+    // Spark jobs per timed run, keyed on the job group `timedRun` sets
+    // (job groups are thread-local, so the concurrent warmup's runs
+    // count apart). The listener bus is asynchronous: an emission can
+    // miss the last run's tail, which a later one picks up; the final
+    // emission, after spark.stop() drained the bus, is exact.
+    val jobsOf = new java.util.concurrent.ConcurrentHashMap[
+      String, java.util.concurrent.atomic.AtomicInteger]
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobsOf.computeIfAbsent(g,
+            _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet())
+    })
+    // the job group of `name`'s sample number `k` (its index in `runs`)
+    def sampleGroup(name: String, k: Int): String = s"$name:$k"
     // warm up JIT/codegen + parquet footer caches before timing
     spark.range(0, 1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -315,7 +318,7 @@ object Bench {
       catch { case _: Throwable => "" }
     // provenance gate: a baseline written at a different parallelism is
     // not per-query comparable — skip the diff instead of flagging noise
-    val cpusMatch = parseCpus(baselineTxt).forall(_ == cpus.toInt)
+    val cpusMatch = parseCpus(baselineTxt).forall(_ == cpus)
     val prior =
       if (cpusMatch) parseMedians(baselineTxt) else Map.empty[String, Double]
 
@@ -357,11 +360,11 @@ object Bench {
     // spill, broadcast-threshold flips) the sf0.1 medians cannot see.
     // Runs only for the standard sf0.1 bench config; SPARK_GRAFT_SF1=0
     // disables, and the leg's wall clock is whatever the TOTAL budget
-    // leaves after the sweep (at most SPARK_GRAFT_SF1_BUDGET, default
-    // 900 s) — queries past the budget are REPORTED as skipped, never
-    // silently dropped. Uses the driver-provided /root/testdata/sf1
-    // when present, else generates a deterministic 10x upsample under the
-    // working dir (tools.GenScale documents the shape contract).
+    // leaves after the sweep (at most 900 s) — queries past the budget
+    // are REPORTED as skipped, never silently dropped. Uses a provided
+    // sf1 dataset when present (`resolveSf1Dir`), else generates a
+    // deterministic 10x upsample under the working dir (tools.GenScale
+    // documents the shape contract).
     val sf1Results = collection.mutable.LinkedHashMap.empty[String, Double]
     // cold sf0.1 denominators, measured inside the leg: the sweep median
     // is a WARM number for every query backed by a session-lifetime
@@ -378,14 +381,6 @@ object Bench {
     // rides the audit file next to the timing
     val sf1Errs = collection.mutable.LinkedHashMap.empty[String, String]
     val sf1Skipped = collection.mutable.ListBuffer.empty[String]
-    // ---- sf10 spot leg (r14): the 100× decade probe for the five
-    // flagship doors, env-gated (SPARK_GRAFT_SF10=1, never set by the
-    // driver) — one cold run each at 100× the bench SF, with the cold
-    // sf1 run as denominator, so BENCH_LOCAL carries two decades of
-    // ratio evidence for the banded shapes.
-    val sf10Results = collection.mutable.LinkedHashMap.empty[String, Double]
-    val sf10Base = collection.mutable.LinkedHashMap.empty[String, Double]
-    val sf10Skipped = collection.mutable.ListBuffer.empty[String]
 
     // ---- incremental emission: the audit file AND the stdout summary
     // line are (re)written after EVERY completed query — sweep passes
@@ -416,20 +411,17 @@ object Bench {
       val s1errs = sf1Errs
         .map { case (q, e) => s""""$q":"$e"""" }.mkString("{", ",", "}")
       val s1skip = sf1Skipped.map(q => s""""$q"""").mkString("[", ",", "]")
-      // sf10 spot leg: per-door "coldSf1->coldSf10" pairs plus the
-      // derived decade ratio (a LINEAR door reads ~10)
-      val s10 = sf10Results.map { case (q, v) =>
-        val base = sf10Base.getOrElse(q, -1.0)
-        val ratio = if (base > 0 && v > 0) fmt(v / base) else "-1"
-        s""""$q":{"sf1":$base,"sf10":$v,"ratio":$ratio}"""
+      val jobs = names.map { q =>
+        val counts = runs(q).indices.map(k =>
+          Option(jobsOf.get(sampleGroup(q, k))).fold(0)(_.get))
+        s""""$q":[${counts.mkString(",")}]"""
       }.mkString("{", ",", "}")
-      val s10skip = sf10Skipped.map(q => s""""$q"""").mkString("[", ",", "]")
       // NOTE: "medians" stays the LAST key (parseMedians is brace-bounded
       // now, but the audit format keeps the convention regardless)
       val coldJson = coldOnlyNow.map(q => s""""$q"""")
         .mkString("[", ",", "]")
       val audit =
-        s"""{"sf":"$sfDir","n":$n,"cpus":$cpus,"elapsed":${fmt(elapsedAll)},"baseline":"$baselinePath","baseline_cpus_match":$cpusMatch,"ctx_scale":${fmt(contextScale(prior, medWarm))},"regressions":$reg,"cold_only":$coldJson,"sf1_top20":$s1,"sf1_cold":$s1cold,"sf1_denom":$s1denom,"sf1_errs":$s1errs,"sf1_skipped":$s1skip,"sf10_top5":$s10,"sf10_skipped":$s10skip,"runs":$r,"medians":$m}"""
+        s"""{"sf":"$sfDir","n":$n,"cpus":$cpus,"elapsed":${fmt(elapsedAll)},"baseline":"$baselinePath","baseline_cpus_match":$cpusMatch,"ctx_scale":${fmt(contextScale(prior, medWarm))},"regressions":$reg,"cold_only":$coldJson,"sf1_top20":$s1,"sf1_cold":$s1cold,"sf1_denom":$s1denom,"sf1_errs":$s1errs,"sf1_skipped":$s1skip,"jobs":$jobs,"runs":$r,"medians":$m}"""
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_LOCAL.json"),
         audit.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -556,26 +548,56 @@ object Bench {
       runsLock.synchronized {
         dying || elapsedAll + estOf(name) > totalBudget - stopMargin - reserve
       }
-    def runOnce(name: String, warm: Boolean): Unit = {
-      // at each query's own start, so under the concurrent warmup too a
-      // sibling's cached Result is dropped before this clock starts
-      SessionCache.invalidate(spark, SessionCache.Result)
-      val fn = SparkEntry.queries(name)
+    // ONE timed run of `name` against `dir` under job group `group`:
+    // (ok, timedOut, seconds, errClass), errClass empty when clean. With
+    // a cap, a watchdog cancels the group at the cap; without one no
+    // watchdog thread starts. A failure is LOUD: a silently-dropped
+    // query shrinks the total, which reads as a speedup to anyone
+    // comparing lines.
+    def timedRun(name: String, dir: String, group: String, cap: Option[Double])
+        : (Boolean, Boolean, Double, String) = {
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, name, interruptOnCancel = true)
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
+      cap.foreach { c =>
+        val watchdog = new Thread(() => {
+          val deadline = System.nanoTime() + (c * 1e9).toLong
+          while (!done.get && System.nanoTime() < deadline)
+            Thread.sleep(100)
+          if (!done.get) {
+            timedOut.set(true)
+            sc.cancelJobGroup(group)
+          }
+        }, s"watchdog-$group")
+        watchdog.setDaemon(true)
+        watchdog.start()
+      }
       val t0 = System.nanoTime()
-      // a failure must be LOUD: a silently-dropped query shrinks the
-      // total, which reads as a speedup to anyone comparing lines
+      var err = ""
       val ok =
-        try { fn(spark, sfDir).count(); true }
+        try { SparkEntry.queries(name)(spark, dir).count(); true }
         catch {
           case e: Throwable =>
+            err = e.getClass.getName
             // a dying JVM's stopped-context failures are shutdown
             // noise, not query verdicts — and printing them would
             // push the summary line out of the consumer's tail
             if (!dying) System.err.println(
-              s"FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
+              s"FAILED $group: $err: ${e.getMessage}")
             false
+        } finally {
+          done.set(true)
+          sc.clearJobGroup()
         }
-      val dt = (System.nanoTime() - t0) / 1e9
+      (ok, timedOut.get, (System.nanoTime() - t0) / 1e9, err)
+    }
+    def runOnce(name: String, warm: Boolean): Unit = {
+      // at each query's own start, so under the concurrent warmup too a
+      // sibling's cached Result is dropped before this clock starts
+      SessionCache.invalidate(spark, SessionCache.Result)
+      val group = runsLock.synchronized(sampleGroup(name, runs(name).size))
+      val (ok, _, dt, _) = timedRun(name, sfDir, group, cap = None)
       runsLock.synchronized {
         val sample = if (ok) dt else -1.0
         if (tagsWarm(runs(name), warm)) warmRuns(name) = warmRuns(name) :+ sample
@@ -603,7 +625,7 @@ object Bench {
     // session intermediates, and it must not starve the warm passes
     // that produce the numbers the round is judged on.
     {
-      val workers = math.max(2, math.min(4, cpus.toInt / 4))
+      val workers = math.max(2, math.min(4, cpus / 4))
       val next = new java.util.concurrent.atomic.AtomicInteger(0)
       val pool = (0 until workers).map { w =>
         val t = new Thread(() => {
@@ -651,9 +673,7 @@ object Bench {
     // worth less than scale-evidence rows; pass 1 (every query's FIRST
     // warm sample — the one the medians need) still gets the full
     // budget, so median coverage is never traded away.
-    val sf1Reserve =
-      if (sf1Wanted) sys.env.getOrElse("SPARK_GRAFT_SF1_RESERVE", "180").toDouble
-      else 0.0
+    val sf1Reserve = if (sf1Wanted) 180.0 else 0.0
     for (pass <- 1 to n) {
       val order = runsLock.synchronized { names.sortBy(q => -estOf(q)) }
       val reserve = if (pass >= 2) sf1Reserve else 0.0
@@ -670,8 +690,7 @@ object Bench {
     sys.env.get("SPARK_GRAFT_TEST_SLEEP_AFTER_SWEEP")
       .foreach(s => Thread.sleep(s.toLong * 1000))
 
-    // ---- shared scale-leg machinery (sf1 every round; sf10 spot leg
-    // when explicitly requested) ----
+    // ---- scale-leg machinery ----
     // FULLY cold per entry: every family's result caches AND the
     // intermediate corpus artifacts (edge tables, walk indexes,
     // shingle arrays, trained models) — r11 and r12 each spent a
@@ -685,43 +704,6 @@ object Bench {
       graft.SessionCache.invalidateAll()
       spark.sparkContext.getPersistentRDDs.valuesIterator
         .foreach(_.unpersist(blocking = false))
-    }
-    // one watchdog-capped, job-group-cancellable run of `name`
-    // against `dir`: (completed, timedOut, seconds, errClass) —
-    // errClass empty when clean
-    def cappedRun(name: String, dir: String, cap: Double)
-        : (Boolean, Boolean, Double, String) = {
-      val group = s"leg-$name@$dir"
-      spark.sparkContext.setJobGroup(group, s"scale leg: $name",
-        interruptOnCancel = true)
-      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val watchdog = new Thread(() => {
-        val deadline = System.nanoTime() + (cap * 1e9).toLong
-        while (!done.get && System.nanoTime() < deadline)
-          Thread.sleep(100)
-        if (!done.get) {
-          timedOut.set(true)
-          spark.sparkContext.cancelJobGroup(group)
-        }
-      }, s"leg-watchdog-$name")
-      watchdog.setDaemon(true)
-      watchdog.start()
-      val q0 = System.nanoTime()
-      var err = ""
-      val ok =
-        try { SparkEntry.queries(name)(spark, dir).count(); true }
-        catch {
-          case e: Throwable =>
-            err = e.getClass.getName
-            if (!dying) System.err.println(
-              s"LEG FAILED $name@$dir: $err: ${e.getMessage}")
-            false
-        } finally {
-          done.set(true)
-          spark.sparkContext.clearJobGroup()
-        }
-      (ok, timedOut.get, (System.nanoTime() - q0) / 1e9, err)
     }
     // the 10× dataset: driver-provided when present, else the
     // deterministic GenScale upsample (built once, marker-cached)
@@ -760,7 +742,7 @@ object Bench {
       val entries = (scaleSentinels
         .filter(s => SparkEntry.queries.contains(s) && names.contains(s)) ++
         top20).distinct
-      // minimum per-run budget floor: a cappedRun whose cap is <= 0
+      // minimum per-run budget floor: a timed run whose cap is <= 0
       // has a watchdog deadline already in the past, and
       // cancelJobGroup only cancels ACTIVE jobs — cancelling before
       // the first job submits leaves the query running completely
@@ -779,8 +761,7 @@ object Bench {
       // the dataset is resolved, so generation time counts against it.
       val t0 = System.nanoTime()
       val legBudget = sf1LegBudget(
-        sys.env.getOrElse("SPARK_GRAFT_SF1_BUDGET", "900").toDouble,
-        totalBudget - stopMargin - elapsedAll, capFloor)
+        900.0, totalBudget - stopMargin - elapsedAll, capFloor)
       val sf1Dir = if (legBudget.isEmpty) "" else resolveSf1Dir()
       if (legBudget.isEmpty) {
         sf1Skipped ++= entries
@@ -797,8 +778,7 @@ object Bench {
         // slowest HONEST sentinel — q_mutual_knn_lsh's contract-priced
         // quadratic runs ~75 s at sf1 on the reference box and timed
         // out at 120 s on a 1.6×-loaded one (r13 measurement).
-        val queryCap =
-          sys.env.getOrElse("SPARK_GRAFT_SF1_QUERY_CAP", "150").toDouble
+        val queryCap = 150.0
         entries.foreach { name =>
           if (dying || (System.nanoTime() - t0) / 1e9 > budget - capFloor)
             sf1Skipped += name
@@ -826,7 +806,8 @@ object Bench {
                 .getOrElse(30.0),
               math.min(30.0, budget - elapsed))
             if (denomCap >= capFloor) {
-              val (cOk, _, cSecs, _) = cappedRun(name, sfDir, denomCap)
+              val (cOk, _, cSecs, _) =
+                timedRun(name, sfDir, s"$name@$sfDir", Some(denomCap))
               if (cOk) sf1Cold(name) = cSecs
               dropAll()
             }
@@ -837,7 +818,8 @@ object Bench {
               budget - (System.nanoTime() - t0) / 1e9)
             if (capSecs < capFloor) sf1Skipped += name
             else {
-              val (ok, timedOut, secs, err) = cappedRun(name, sf1Dir, capSecs)
+              val (ok, timedOut, secs, err) =
+                timedRun(name, sf1Dir, s"$name@$sf1Dir", Some(capSecs))
               // a query that finished AT the cap can lose the race (done
               // is set in the finally, after count() returned), so the
               // timeout verdict requires the run to have actually failed
@@ -858,83 +840,7 @@ object Bench {
       }
     }
 
-    // ---- sf10 spot leg (r14): one more decade of scale evidence for
-    // the flagship doors. The brief's bar is plans that survive 100× —
-    // 10× is proven every round; this probes the banded shapes one
-    // decade further (100× the bench SF) on explicit request
-    // (SPARK_GRAFT_SF10=1; builder-local only — the driver's kill
-    // window cannot fit a 100× build + leg, so it never rides a round
-    // bench). Denominator = the leg's own cold sf1 run, so the
-    // reported ratio is decade-over-decade cold-to-cold: a LINEAR door
-    // reads ~10, superlinearity reads as the ratio drifting past it.
-    val sf10Wanted = sys.env.get("SPARK_GRAFT_SF10").exists(_ != "0") &&
-      sfDir.split('/').last == "sf0.1" && !dying
-    if (sf10Wanted) {
-      val doors = Seq("q_embedding_neardup_strict", "q_minhash_lsh",
-        "q_dedup_clusters", "q_mutual_knn_ivf", "q_corpus_build")
-        .filter(d => SparkEntry.queries.contains(d) && names.contains(d))
-      val sf1Dir = resolveSf1Dir()
-      val sf10Dir = {
-        val d = "testdata_sf10"
-        try { graft.tools.GenScale.ensure(spark, sfDir, d, copies = 100); d }
-        catch { case e: Throwable =>
-          if (!dying)
-            System.err.println(s"sf10 generation failed: ${e.getMessage}")
-          ""
-        }
-      }
-      if (sf1Dir.nonEmpty && sf10Dir.nonEmpty) {
-        val budget = math.min(
-          sys.env.getOrElse("SPARK_GRAFT_SF10_BUDGET", "3600").toDouble,
-          totalBudget - stopMargin - elapsedAll)
-        val queryCap =
-          sys.env.getOrElse("SPARK_GRAFT_SF10_QUERY_CAP", "900").toDouble
-        val capFloor = 5.0
-        val t0 = System.nanoTime()
-        doors.foreach { name =>
-          if (dying || (System.nanoTime() - t0) / 1e9 > budget - capFloor)
-            sf10Skipped += name
-          else {
-            dropAll()
-            // cold sf1 denominator, measured in THIS leg (the sf1
-            // leg's reading, when present, was a different moment of
-            // the box — decade ratios must be same-conditions); same
-            // capFloor guard as the sf1 leg's denominator (a cap <= 0
-            // would run uncapped — the r15 ADVICE hole)
-            val baseCap = math.min(
-              300.0, budget - (System.nanoTime() - t0) / 1e9)
-            if (baseCap >= capFloor) {
-              val (bOk, _, bSecs, _) = cappedRun(name, sf1Dir, baseCap)
-              if (bOk) sf10Base(name) = bSecs
-              dropAll()
-            }
-            val capSecs = math.min(queryCap,
-              budget - (System.nanoTime() - t0) / 1e9)
-            if (capSecs < capFloor) sf10Skipped += name
-            else {
-              // shuffle partitions scale with the decade: at 100× the
-              // bench SF, the 32 fixed partitions the sweep pins spill
-              // hard (r14 measured the strict near-dup door 64.5 s at
-              // 32 partitions vs 23.4 s at 128 — the slowdown was
-              // sort-spill, not plan physics). A competent operator
-              // sizes partitions to the data; the leg does the same,
-              // and the sf1 denominator stays at the sweep's 32 for
-              // continuity with three rounds of sf1 baselines.
-              spark.conf.set("spark.sql.shuffle.partitions", "128")
-              val (ok, timedOut, secs, _) =
-                try cappedRun(name, sf10Dir, capSecs)
-                finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
-              if (timedOut && !ok)
-                sf10Skipped += s"$name:timeout>${capSecs.toInt}s"
-              else sf10Results(name) = if (ok) secs else -1.0
-            }
-            emit()
-          }
-        }
-        dropAll()
-      }
-    }
     spark.stop()
-    emit() // final state (identical to the last incremental emission)
+    emit() // final state: job counts are exact once the bus has drained
   }
 }

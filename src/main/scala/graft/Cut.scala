@@ -16,9 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * `Cut(df)` copies the rows of `df`'s executed plan into a persisted
   * RDD and returns a leaf over it (fresh output attributes):
   *  - ONE forcing job fills the blocks, and it is the round's probe: it
-  *    counts the rows (`rows`) and sums a per-row [[Cut.Measure]]
-  *    (`sum`: a changed-row count, a set fingerprint), so no loop runs
-  *    a separate action over a frame it just cut.
+  *    counts the rows (`rows`) and sums each per-row [[Cut.Measure]]
+  *    (`sums`: a changed-row count, a set fingerprint, a mass), so no
+  *    loop runs a separate action over a frame it just cut.
   *  - The leaf records `df`'s output partitioning and ordering, so the
   *    next round's join on the same key plans no exchange on its side.
   *  - Its statistics are the rows and bytes the pass measured, never the
@@ -36,15 +36,18 @@ import org.apache.spark.storage.StorageLevel
   * micro-batch thread can leave unable to resolve graft classes (the
   * ClosureCleaner NPE that flaked two suites in a full test run). */
 private[graft] final class Cut private (
-    val df: DataFrame, val rows: Long, val sum: Long,
+    val df: DataFrame, val rows: Long, val sums: IndexedSeq[Long],
     rdd: RDD[InternalRow]) {
+
+  /** The first measure's sum (0 without a measure). */
+  def sum: Long = sums.headOption.getOrElse(0L)
 
   /** Free the cut's blocks. */
   def release(): Unit = rdd.unpersist(blocking = false)
 
   /** Cut `df`, this frame's next round, then release this cut. */
-  def next(df: DataFrame): Cut = {
-    val n = Cut(df)
+  def next(df: DataFrame, measures: Cut.Measure*): Cut = {
+    val n = Cut(df, measures: _*)
     release()
     n
   }
@@ -52,22 +55,23 @@ private[graft] final class Cut private (
 
 private[graft] object Cut {
 
-  /** A per-row contribution to [[Cut#sum]] (wrapping Long addition). */
+  /** A per-row contribution to one of [[Cut#sums]] (wrapping Long
+    * addition). */
   type Measure = (InternalRow => Long) with Serializable
 
   /** Every cut's RDD carries this name: how [[release]] tells a cut leaf
     * from any other RDD-backed relation. */
   private val Name = "graft.Cut"
 
-  def apply(df: DataFrame, measure: Measure = NoMeasure): Cut = {
+  def apply(df: DataFrame, measures: Measure*): Cut = {
     val rdd = df.queryExecution.toRdd.map(CopyRow)
       .setName(Name)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val parts = df.sparkSession.sparkContext
-      .runJob(rdd, new Pass(measure, df.schema.defaultSize))
+      .runJob(rdd, new Pass(measures.toArray, df.schema.defaultSize))
     def total(i: Int): Long = parts.iterator.map(_(i)).sum
     new Cut(GraftShim.ofInternalRows(df, rdd, total(0), total(1)),
-      total(0), total(2), rdd)
+      total(0), measures.indices.map(m => total(2 + m)), rdd)
   }
 
   /** Cut `df`; `sum` counts the rows whose boolean column `flag` is
@@ -94,32 +98,33 @@ private[graft] object Cut {
     override def apply(r: InternalRow): InternalRow = r.copy()
   }
 
-  private object NoMeasure extends (InternalRow => Long) with Serializable {
-    override def apply(r: InternalRow): Long = 0L
-  }
-
   private final case class TrueAt(ordinal: Int)
       extends (InternalRow => Long) with Serializable {
     override def apply(r: InternalRow): Long =
       if (!r.isNullAt(ordinal) && r.getBoolean(ordinal)) 1L else 0L
   }
 
-  /** The forcing pass over one partition: (rows, bytes, sum). A row that
-    * is not unsafe counts as the schema's default row size. */
-  private final class Pass(measure: Measure, rowSize: Long)
+  /** The forcing pass over one partition: (rows, bytes, one sum per
+    * measure). A row that is not unsafe counts as the schema's default
+    * row size. */
+  private final class Pass(measures: Array[Measure], rowSize: Long)
       extends (Iterator[InternalRow] => Array[Long]) with Serializable {
     override def apply(it: Iterator[InternalRow]): Array[Long] = {
-      var rows = 0L; var bytes = 0L; var sum = 0L
+      val acc = new Array[Long](2 + measures.length)
       while (it.hasNext) {
         val r = it.next()
-        rows += 1
-        bytes += (r match {
+        acc(0) += 1
+        acc(1) += (r match {
           case u: UnsafeRow => u.getSizeInBytes.toLong
           case _ => rowSize
         })
-        sum += measure(r)
+        var m = 0
+        while (m < measures.length) {
+          acc(2 + m) += measures(m)(r)
+          m += 1
+        }
       }
-      Array(rows, bytes, sum)
+      acc
     }
   }
 }

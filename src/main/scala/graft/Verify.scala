@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -16,16 +15,7 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only.toSet).toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table queries saveAsTable into the warehouse; keep it
-      // out of the repo working tree (default is ./spark-warehouse)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_verify_wh").toString)
+    val spark = LocalSession(
       // q_mutual_knn_lsh's DuckDB oracle is the EXACT brute-force miner,
       // while the door's default 1024-member bucket quota is only exact
       // while every LSH bucket fits it (true at the graded SFs, false at
@@ -33,9 +23,7 @@ object Verify {
       // larger-SF sweep would silently misreport an oracle failure. The
       // correctness dump therefore always runs the documented unbounded
       // switch; the quota stays the BENCH/serving default.
-      .config("spark.graft.lsh.bucketQuota", "2147483647")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.graft.lsh.bucketQuota" -> "2147483647")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       // a PREVIOUS run's output must not survive a failing query — the

@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -212,15 +213,13 @@ object GraphOps {
     * Scale shape: edges degree-annotated, partitioned once, persisted;
     * each round is one contribution shuffle + one node-sized left join,
     * cut per round by a [[graft.Cut]] (deep iteration — a lazy 40-round
-    * chain is unanalyzable). Driver-side scalars are ONE fused
-    * single-row aggregate per round (r16; was three actions): the rank
-    * frame carries a static `dang` flag (no out-degree) and each
-    * cut round carries its predecessor rank `rp`, so the
-    * residual max|r−rp| of round i and the dangling mass Σr·[dang] that
-    * round i+1's share needs come out of one head() over the
-    * just-materialized node-sized frame — the per-round anti-join
-    * (dangling mass) and self-join (residual) are gone, and the loop
-    * runs 2 actions/round instead of 3.
+    * chain is unanalyzable). The driver-side scalars come from the cut's
+    * own forcing pass, so a round is one job: the rank frame carries a
+    * static `dang` flag (no out-degree) and each cut round carries its
+    * predecessor rank `rp`, and the pass sums the dangling mass Σr·[dang]
+    * that round i+1's share needs and the count of nodes with
+    * |r−rp| ≥ eps. max|r−rp| < eps holds exactly when that count is 0,
+    * so the stop rule is the one above.
     *
     * Returns (ranks, realizedRounds). */
   def pageRankDangling(
@@ -238,14 +237,13 @@ object GraphOps {
       // dang = the node has no out-degree; identical to the former
       // per-round `ranks LEFT ANTI JOIN degN` membership, hoisted out
       // of the loop because the node universe never changes
-      var cut = graft.Cut(nodes.join(degN, Seq("node"), "left")
+      val init = nodes.join(degN, Seq("node"), "left")
         .select(col("node"), lit(Scale).as("r"),
-          col("outdeg").isNull.as("dang")))
+          col("outdeg").isNull.as("dang"))
+      var cut = graft.Cut(init, DanglingMass(init))
       var ranks = cut.df
       val n = cut.rows
-      var dm = ranks.agg(
-        coalesce(sum(when(col("dang"), col("r"))), lit(0L)).as("dm"))
-        .head().getLong(0)
+      var dm = cut.sum
       var i = 0
       var converged = false
       while (i < maxIters && !converged) {
@@ -256,27 +254,46 @@ object GraphOps {
           .select(col("dst"), expr("r div outdeg").as("c"))
           .groupBy(col("dst").as("node"))
           .agg(sum("c").as("sc"))
-        cut = cut.next(ranks
+        val round = ranks
           .select(col("node"), col("r").as("rp"), col("dang"))
           .join(contribs, Seq("node"), "left")
           .select(col("node"),
             expr(s"$Teleport + (85 * (coalesce(sc, 0L) + ${share}L)) div 100")
               .as("r"),
-            col("dang"), col("rp")))
-        // one action: round i's residual + round i+1's dangling mass
-        val probe = cut.df.agg(
-          coalesce(max(abs(col("r") - col("rp"))), lit(0L)).as("resid"),
-          coalesce(sum(when(col("dang"), col("r"))), lit(0L)).as("dm"))
-          .head()
-        dm = probe.getLong(1)
+            col("dang"), col("rp"))
+        // one pass: round i+1's dangling mass and round i's moved nodes
+        cut = cut.next(round, DanglingMass(round), Moved(round, eps))
+        dm = cut.sums(0)
         ranks = cut.df.select("node", "r", "dang")
-        converged = probe.getLong(0) < eps
+        converged = cut.sums(1) == 0
       }
       (ranks.select("node", "r"), i)
     } finally {
       edgesDeg.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
     }
+  }
+
+  /** [[pageRankDangling]]'s dangling mass: Σ r over the `dang` rows. */
+  private final case class DanglingMass(r: Int, dang: Int)
+      extends (InternalRow => Long) with Serializable {
+    override def apply(row: InternalRow): Long =
+      if (!row.isNullAt(dang) && row.getBoolean(dang)) row.getLong(r) else 0L
+  }
+  private object DanglingMass {
+    def apply(df: DataFrame): DanglingMass =
+      DanglingMass(df.schema.fieldIndex("r"), df.schema.fieldIndex("dang"))
+  }
+
+  /** [[pageRankDangling]]'s residual: 1 for a node with |r − rp| ≥ eps. */
+  private final case class Moved(r: Int, rp: Int, eps: Long)
+      extends (InternalRow => Long) with Serializable {
+    override def apply(row: InternalRow): Long =
+      if (math.abs(row.getLong(r) - row.getLong(rp)) >= eps) 1L else 0L
+  }
+  private object Moved {
+    def apply(df: DataFrame, eps: Long): Moved =
+      Moved(df.schema.fieldIndex("r"), df.schema.fieldIndex("rp"), eps)
   }
 
   /** PageRank over the supplier↔part trade graph: distinct
@@ -596,9 +613,7 @@ object GraphOps {
       withTradePairs(spark, dir) { pairs =>
         val directed = pairs.select(
           (col("s") * 2).as("src"), (col("p") * 2 + 1).as("dst"))
-        val (r, _) =
-          pageRankDangling(spark, directed, DanglingEps, DanglingMaxIters)
-        r.persist(StorageLevel.MEMORY_AND_DISK)
+        pageRankDangling(spark, directed, DanglingEps, DanglingMaxIters)._1
       })
     ranks
       .select(

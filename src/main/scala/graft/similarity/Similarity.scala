@@ -289,7 +289,7 @@ object Similarity {
     * makes near-dedup at strict thresholds linear-ish in practice, and
     * the measured contrast to the priced q_embedding_neardup physics
     * case (sf1 sentinel rides both). Two decades measured (r14): 4.3×
-    * at sf0.1→sf1, 16.2× at sf1→sf10 (128 shuffle partitions; at the
+    * at sf0.1→sf1, 16.2× at 10×→100× data (128 shuffle partitions; at the
     * sweep's fixed 32 the same data read 2.8× worse from sort-spill —
     * partition count is the deployment dial, not the plan). The
     * residual super-linearity is the banding identity: the random-
@@ -1128,7 +1128,7 @@ object Similarity {
     // (VectorExpressionsSpec pins the equivalence on random vectors),
     // ~40× cheaper per pair. This is THE hot loop of every trained-
     // index consumer: the N × cells assignment crossJoin spelled as 64
-    // element_at trees timed q_mutual_knn_ivf out at sf10 (r14 decade
+    // element_at trees timed q_mutual_knn_ivf out at 100× data (r14 decade
     // probe) on pure expression overhead.
     org.apache.spark.sql.GraftShim.column(Q12SqDist(
       org.apache.spark.sql.GraftShim.expression(col("xs")),
@@ -1139,7 +1139,7 @@ object Similarity {
     * pins the equality). r15 (guide §2.4/§3): the flat N × cells
     * crossJoin + argmin evaluated the q12 metric against EVERY centroid
     * and shuffled an aggregation per vector; with the scale-adaptive
-    * cell count (cells ≈ N/100) that is O(N²/100) — the r14 sf10 probe
+    * cell count (cells ≈ N/100) that is O(N²/100) — the r14 100×-data probe
     * measured q_mutual_knn_ivf at 33× for 10× data on this exact term.
     * The [[IvfAssign]] kernel probes a driver-built two-level index
     * (√k meta-centroids + exact triangle-inequality pruning) instead:

@@ -70,7 +70,7 @@ object VecOps {
     * left-to-right ((long)Math.floor == Spark Floor-on-double; long
     * addition is exact so order is immaterial). This is the IVF
     * assignment metric: spelled as 64 separate element_at trees it
-    * dominated the N × cells crossJoin at scale (the r14 sf10 decade
+    * dominated the N × cells crossJoin at scale (the r14 100×-data decade
     * probe timed q_mutual_knn_ivf out at 900 s on exactly this), as a
     * primitive loop it is ~40× cheaper and the crossJoin is compute-
     * bound no more. */

@@ -145,6 +145,18 @@ class BenchKillSpec extends AnyFunSuite {
     // the tiny subset must complete fully inside a 150 s budget —
     // nothing unmeasured, every query carries a median
     assert(node.get("n_unmeasured").asInt == 0, s"unmeasured queries: $last")
+    // the audit file's per-query job record: one count per sample in
+    // "runs", and every successful sample ran at least one job
+    val audit = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(tmp, "BENCH_LOCAL.json"))
+    Seq("q1_pricing_summary", "q6_forecast_revenue", "q_dedup_exact").foreach { q =>
+      val samples = audit.get("runs").get(q)
+      val jobs = Option(audit.get("jobs")).map(_.get(q)).orNull
+      assert(jobs != null && jobs.size == samples.size,
+        s"$q: jobs $jobs, runs $samples")
+      (0 until samples.size).filter(k => samples.get(k).asDouble >= 0)
+        .foreach(k => assert(jobs.get(k).asInt >= 1, s"$q: jobs $jobs, runs $samples"))
+    }
   }
 
   private def tailOf(f: java.io.File): String =

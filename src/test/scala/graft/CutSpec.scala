@@ -13,6 +13,12 @@ private object FirstLong extends (InternalRow => Long) with Serializable {
   override def apply(r: InternalRow): Long = r.getLong(0)
 }
 
+/** Counts the rows whose second (boolean) column is true: a second
+  * caller-defined [[Cut.Measure]]. */
+private object SecondTrue extends (InternalRow => Long) with Serializable {
+  override def apply(r: InternalRow): Long = if (r.getBoolean(1)) 1L else 0L
+}
+
 /** The lineage cut's contract: statistics that cannot compound,
   * partitioning that survives, deterministic release, and a forcing
   * pass that is the probe. */
@@ -97,5 +103,18 @@ class CutSpec extends SparkSpec {
     val summed = Cut(df, FirstLong)
     assert(summed.sum === df.agg(sum("x")).head().getLong(0))
     Seq(plain, flagged, summed).foreach(_.release())
+  }
+
+  test("two measures from one pass equal two separate aggregates") {
+    val df = (1L to 1000L).toDF("x")
+      .select(col("x"), (col("x") % 3 === 0).as("chg"))
+      .filter(col("x") % 5 =!= 0)
+    val both = Cut(df, FirstLong, SecondTrue)
+    assert(both.rows === df.count())
+    assert(both.sums === IndexedSeq(
+      df.agg(sum("x")).head().getLong(0),
+      df.filter(col("chg")).count()))
+    assert(both.sum === both.sums(0))
+    both.release()
   }
 }
