@@ -696,10 +696,10 @@ object Bench {
     // shingle arrays, trained models) — r11 and r12 each spent a
     // round adjudicating leg readings that turned out to be
     // leftover-resident pressure from earlier entries' 10×-sized
-    // artifacts. The stray-RDD sweep catches cut-leaf
-    // storage that a Dataset.unpersist (a CacheManager op) cannot
-    // release; it is safe precisely because every cache was just
-    // dropped, so nothing alive still expects those blocks.
+    // artifacts. The stray-RDD sweep catches a cut that a query left
+    // unreleased outside every cache; it is safe precisely because
+    // every cache was just dropped, so nothing alive still expects
+    // those blocks.
     def dropAll(): Unit = {
       graft.SessionCache.invalidateAll()
       spark.sparkContext.getPersistentRDDs.valuesIterator

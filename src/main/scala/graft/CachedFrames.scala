@@ -24,8 +24,8 @@ import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
   * projection of it), it is a Result; otherwise it is an Artifact.
   *
   * Why not bare `TrieMap.getOrElseUpdate`: it may evaluate the builder
-  * CONCURRENTLY on first access, and the loser's corpus-sized persisted
-  * value (count() already forced) would be discarded without unpersist —
+  * CONCURRENTLY on first access, and the loser's corpus-sized cut
+  * (its blocks already filled) would be discarded without release —
   * leaking executor cache blocks for the JVM lifetime. Here the race is
   * resolved with `putIfAbsent` and the loser is explicitly `release`d: a
   * racing build costs duplicate compute once, never leaked storage.
@@ -68,13 +68,11 @@ object SessionCache {
   case object Result extends Kind
   case object Artifact extends Kind
 
-  /** The common case: cached DataFrames, each either persisted or a
-    * [[Cut]] leaf (or a projection of one); dropping one releases both. */
+  /** The common case: cached DataFrames, each a [[Cut]] leaf or a
+    * projection of one (or a frame that holds no storage); dropping one
+    * releases its cut. */
   def frames[K](kind: Kind): SessionCache[K, DataFrame] =
-    new SessionCache[K, DataFrame](kind, { df =>
-      df.unpersist(blocking = false)
-      Cut.release(df)
-    })
+    new SessionCache[K, DataFrame](kind, Cut.release)
 
   // Every instance self-registers (object-field instances: a few dozen
   // for the JVM's life), so one call can reach every cache.

@@ -1,17 +1,20 @@
 package graft
 
+import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, ExprId, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** The lineage cut: the one way an iterative loop carries a frame into
-  * its next round. Un-cut, round r's plan nests every earlier round,
-  * often several times over (BFS reads the visited set three times per
-  * round), and analysis time grows geometrically.
+/** The lineage cut: the one way graft materialises a frame. An
+  * iterative loop carries each round into the next through one, and
+  * every frame an operator reads more than once, or a
+  * [[SessionCache]] holds, is one. Un-cut, round r's plan nests every
+  * earlier round, often several times over (BFS reads the visited set
+  * three times per round), and analysis time grows geometrically.
   *
   * `Cut(df)` copies the rows of `df`'s executed plan into a persisted
   * RDD and returns a leaf over it (fresh output attributes):
@@ -19,8 +22,11 @@ import org.apache.spark.storage.StorageLevel
   *    counts the rows (`rows`) and sums each per-row [[Cut.Measure]]
   *    (`sums`: a changed-row count, a set fingerprint, a mass), so no
   *    loop runs a separate action over a frame it just cut.
-  *  - The leaf records `df`'s output partitioning and ordering, so the
-  *    next round's join on the same key plans no exchange on its side.
+  *  - The leaf records `df`'s output partitioning and ordering (under
+  *    AQE, the final plan's plain hash or single-partition layout), so
+  *    the next round's join on the same key plans no exchange on its
+  *    side: a `repartition(n, key)` edge table stays where it is every
+  *    round.
   *  - Its statistics are the rows and bytes the pass measured, never the
   *    origin plan's estimate. A `localCheckpoint` leaf keeps that
   *    estimate, and a join's estimate is the product of its sides', so a
@@ -30,7 +36,7 @@ import org.apache.spark.storage.StorageLevel
   *    linger until GC. The RDD keeps its lineage, so a read after
   *    release, or after a lost block, recomputes instead of failing.
   *
-  * Row copies and the pass are named function objects, not lambdas:
+  * The pass is a named function object, not a lambda:
   * `SparkContext.clean` introspects a lambda's capturing class through
   * the thread context classloader, which a previously-run streaming
   * micro-batch thread can leave unable to resolve graft classes (the
@@ -59,13 +65,9 @@ private[graft] object Cut {
     * addition). */
   type Measure = (InternalRow => Long) with Serializable
 
-  /** Every cut's RDD carries this name: how [[release]] tells a cut leaf
-    * from any other RDD-backed relation. */
-  private val Name = "graft.Cut"
-
   def apply(df: DataFrame, measures: Measure*): Cut = {
-    val rdd = df.queryExecution.toRdd.map(CopyRow)
-      .setName(Name)
+    val rdd = new Rows(df.queryExecution.toRdd, df.queryExecution.analyzed)
+      .setName("graft.Cut")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val parts = df.sparkSession.sparkContext
       .runJob(rdd, new Pass(measures.toArray, df.schema.defaultSize))
@@ -85,17 +87,46 @@ private[graft] object Cut {
   def release(df: DataFrame): Unit = {
     @annotation.tailrec
     def leaf(p: LogicalPlan): Option[RDD[_]] = p match {
-      case l: LogicalRDD if l.rdd.name == Name => Some(l.rdd)
+      case l: LogicalRDD if l.rdd.isInstanceOf[Rows] => Some(l.rdd)
       case p: Project => leaf(p.child)
       case _ => None
     }
     leaf(GraftShim.logicalPlan(df)).foreach(_.unpersist(blocking = false))
   }
 
-  /** Unsafe rows are reused per partition: persisting needs copies. */
-  private object CopyRow
-      extends (InternalRow => InternalRow) with Serializable {
-    override def apply(r: InternalRow): InternalRow = r.copy()
+  /** `plan`, and for each cut leaf it reaches, directly or through
+    * other cuts, the plan the leaf was cut from under a projection that
+    * gives the origin's output the leaf's attributes: what a plan audit
+    * reads to see through lineage cuts. Each leaf instance is expanded
+    * once, so a loop's rounds cost one plan each. */
+  private[graft] def lineage(plan: LogicalPlan): Seq[LogicalPlan] = {
+    val seen = collection.mutable.Set.empty[(Int, Seq[ExprId])]
+    def expand(p: LogicalPlan): Seq[LogicalPlan] =
+      p +: p.collectWithSubqueries {
+        case l: LogicalRDD if l.rdd.isInstanceOf[Rows] &&
+            seen.add((l.rdd.id, l.output.map(_.exprId))) =>
+          val o = l.rdd.asInstanceOf[Rows].origin
+          expand(Project(o.output.zip(l.output).map { case (a, b) =>
+            Alias(a, b.name)(b.exprId) }, o))
+      }.flatten
+    expand(plan)
+  }
+
+  /** A cut's RDD: copies of `parent`'s rows (unsafe rows are reused per
+    * partition, so persisting needs copies). Its class is how
+    * [[release]] and [[lineage]] tell a cut leaf from any other
+    * RDD-backed relation. `origin`, the analyzed plan it was cut from,
+    * stays on the driver for [[lineage]] and lives as long as the RDD,
+    * whose own dependencies already hold the physical plan of the same
+    * round. */
+  private final class Rows(
+      parent: RDD[InternalRow], @transient val origin: LogicalPlan)
+      extends RDD[InternalRow](parent) {
+    override protected def getPartitions: Array[Partition] =
+      firstParent[InternalRow].partitions
+    override def compute(
+        split: Partition, ctx: TaskContext): Iterator[InternalRow] =
+      firstParent[InternalRow].iterator(split, ctx).map(_.copy())
   }
 
   private final case class TrueAt(ordinal: Int)

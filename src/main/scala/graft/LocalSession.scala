@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *  - UI off, and a temp warehouse dir: bucketed-table queries
   *    saveAsTable into it, and the default ./spark-warehouse would land
   *    in the working tree;
-  *  - ERROR logging. Spark's context start-up still prints its INFO
-  *    lines: it loads its default log4j profile as the context starts.
+  *  - ERROR logging from the context's start on (`spark.log.level`,
+  *    which Spark applies before its start-up INFO lines).
   * Callers add only their own keys (`conf`). */
 private[graft] object LocalSession {
 
@@ -21,19 +21,15 @@ private[graft] object LocalSession {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   def apply(conf: (String, String)*): SparkSession = {
-    try org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "ERROR")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
     conf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
+    builder.getOrCreate()
   }
 }

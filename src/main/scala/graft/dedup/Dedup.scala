@@ -63,13 +63,13 @@ object Dedup {
 
   /** Per-doc distinct shingle ARRAYS, computed once and cached: every
     * consumer (signature generation, candidate explode, exact-Jaccard
-    * verification) branches from this frame, and without the persist each
+    * verification) branches from this frame, and without the cut each
     * branch would re-run the shingling kernel over the corpus. The cache
     * holds one string array per document — at 100 TB this is the
     * materialized intermediate you would write to a staging table between
     * pipeline stages, not an unbounded driver-side structure.
     *
-    * ONE persisted frame per (session, dir): repeated query invocations
+    * ONE cut frame per (session, dir): repeated query invocations
     * (a benchmark loop, a notebook) must reuse the cache entry, not stack
     * a new one per call. */
   private val shingleCache =
@@ -77,16 +77,15 @@ object Dedup {
 
   private[graft] def shingleArrays(spark: SparkSession, dir: String): DataFrame =
     shingleCache.get(spark, dir)(
-      docs(spark, dir)
-        .select(col("doc_id"), shingles(col("text")).as("sh_arr"))
-        .persist())
+      graft.Cut(docs(spark, dir)
+        .select(col("doc_id"), shingles(col("text")).as("sh_arr"))).df)
 
   /** Hot shingle TYPE list (document frequency > maxDf) per (session,
     * dir, maxDf) — a corpus artifact under the same intermediate-cache
     * contract as [[shingleArrays]]: the df aggregation over the shingle
     * stream is one full map-side-combinable shuffle, and every capped
     * consumer (Jaccard, containment, repeated bench runs) must probe the
-    * SAME tiny persisted list instead of re-aggregating the corpus. */
+    * SAME tiny cut list instead of re-aggregating the corpus. */
   private val hotShingleCache =
     graft.SessionCache.frames[(String, Int)](graft.SessionCache.Artifact)
 
@@ -95,11 +94,9 @@ object Dedup {
     hotShingleCache.get(spark, (dir, maxDf)) {
       val sh = shingleArrays(spark, dir)
         .select(col("doc_id"), explode(col("sh_arr")).as("sh"))
-      val hot = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDf).select("sh")
-        .persist()
-      hot.count() // materialize: the list is tiny, the aggregation isn't
-      hot
+      // the list is tiny, the aggregation isn't
+      graft.Cut(sh.groupBy("sh").agg(count(lit(1)).as("df"))
+        .filter(col("df") > maxDf).select("sh")).df
     }
 
   /** Per-doc shingle ARRAYS over the df ≤ maxDf universe — the capped
@@ -122,11 +119,10 @@ object Dedup {
     val hot = hotShingles(spark, dir, maxDf)
     if (hot.isEmpty) shingleArrays(spark, dir)
     else cappedArrCache.get(spark, (dir, maxDf))(
-      shingleArrays(spark, dir)
+      graft.Cut(shingleArrays(spark, dir)
         .crossJoin(broadcast(hot.agg(collect_list("sh").as("hot_arr"))))
         .select(col("doc_id"),
-          array_except(col("sh_arr"), col("hot_arr")).as("sh_arr"))
-        .persist())
+          array_except(col("sh_arr"), col("hot_arr")).as("sh_arr"))).df)
   }
 
   /** Distributed global rarity rank of the shingle TYPE table: total
@@ -674,7 +670,7 @@ object Dedup {
     * integer division. */
   def qWeightedJaccard(
       spark: SparkSession, dir: String, maxDf: Int = 1000): DataFrame = {
-    // capped tf table persisted per (session, dir, maxDf) — THREE plan
+    // capped tf table cut per (session, dir, maxDf) — THREE plan
     // references (both self-join sides + totals) and repeated bench
     // runs reuse one materialization, the shingleCache contract
     val ctf = tfCache.get(spark, (dir, maxDf)) {
@@ -684,7 +680,7 @@ object Dedup {
         .groupBy("doc_id", "sh").agg(count(lit(1)).as("tf"))
       val hot = tf.groupBy("sh").agg(count(lit(1)).as("df"))
         .filter(col("df") > maxDf).select("sh")
-      tf.join(hot, Seq("sh"), "left_anti").persist()
+      graft.Cut(tf.join(hot, Seq("sh"), "left_anti")).df
     }
     val tot = ctf.groupBy("doc_id").agg(sum("tf").as("tot"))
     val inter = ctf.select(col("doc_id").as("d1"), col("sh"),

@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import graft.relational.Tables.load
 
@@ -18,8 +17,8 @@ import graft.relational.Tables.load
   * Scale design: each power-iteration round is ONE shuffle of the rank
   * table (join on `src`) plus ONE aggregation shuffle (groupBy `dst`).
   * The edge table — the 100 TB object — is degree-annotated, hash
-  * partitioned on `src` ONCE and persisted, so every round reuses its
-  * layout and only the (nodes-sized) rank table moves. Rank mass is
+  * partitioned on `src` ONCE and cut ([[graft.Cut]]), so every round
+  * reuses its layout and only the (nodes-sized) rank table moves. Rank mass is
   * integer fixed-point (1e12 scale) with truncating division, so the
   * result is bit-reproducible under any partitioning or summation order
   * — which is what makes an exact cross-engine oracle possible, and at
@@ -51,16 +50,23 @@ object GraphOps {
     * in every engine, under every execution order.
     */
   def pageRank(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
+    val edgesDeg = degreeEdges(spark, edges)
+    try pageRankRounds(edgesDeg.df, iters)
+    finally edgesDeg.release()
+  }
+
+  /** The one recipe for the edge table every PageRank-family loop reads:
+    * `edges` with each source's out-degree (`outdeg`), hash-partitioned
+    * on `src` and cut, so every round's join on `src` reuses the layout
+    * and only the node-sized rank table moves. */
+  private def degreeEdges(spark: SparkSession, edges: DataFrame): graft.Cut = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(deg, "src")
-      .repartition(spark.sparkContext.defaultParallelism, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try pageRankRounds(edgesDeg, iters)
-    finally edgesDeg.unpersist(blocking = false)
+    graft.Cut(edges.join(deg, "src")
+      .repartition(spark.sparkContext.defaultParallelism, col("src")))
   }
 
   /** The power-iteration loop over an ALREADY degree-annotated,
-    * partitioned, persisted edge table — the shape both [[pageRank]]
+    * partitioned, cut edge table — the shape both [[pageRank]]
     * (builds its own) and the registry queries (serving the shared
     * [[tradeEdgesDeg]] artifact) run. */
   private def pageRankRounds(edgesDeg: DataFrame, iters: Int): DataFrame =
@@ -82,13 +88,12 @@ object GraphOps {
         .groupBy(col("dst").as("node"))
         .agg(expr(s"$Teleport + (85 * sum(c)) div 100").as("r"))
     }
-    // materialize while the edge cache is alive: the lazy plan reads
+    // cut while the edge table's cut is alive: the lazy plan reads
     // edgesDeg once per round, and recomputing the degree join per
-    // round after unpersist would square the work. The returned frame
-    // stays persisted (it is nodes-sized, the small artifact of the
-    // computation); a long-lived caller owns its unpersist.
-    ranks.persist(StorageLevel.MEMORY_AND_DISK).count()
-    ranks
+    // round after its release would square the work. The returned frame
+    // is the cut leaf (nodes-sized, the small artifact of the
+    // computation); a cache that holds it releases it with Cut.release.
+    graft.Cut(ranks).df
   }
 
   /** Weighted PageRank over the trade graph's lineitem MULTIPLICITIES —
@@ -102,7 +107,7 @@ object GraphOps {
     * the mass scale (or this product) moves to decimal(38,0), the same
     * dial the unweighted Scale doc calls out. Plan shape is identical
     * to [[pageRank]]: weight-annotated edges partitioned once and
-    * persisted, one rank shuffle + one aggregation per round. */
+    * cut, one rank shuffle + one aggregation per round. */
   def qPageRankWeighted(
       spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     val ranks = rankCache.get(spark, (dir + "#weighted", iters)) {
@@ -115,23 +120,20 @@ object GraphOps {
         .unionAll(pairs.select((col("p") * 2 + 1).as("src"),
           (col("s") * 2).as("dst"), col("w")))
       val wdeg = edges.groupBy("src").agg(sum("w").as("wtot"))
-      val edgesW = edges.join(wdeg, "src")
-        .repartition(spark.sparkContext.defaultParallelism, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      edgesW.count()
+      val edgesW = graft.Cut(edges.join(wdeg, "src")
+        .repartition(spark.sparkContext.defaultParallelism, col("src")))
       try {
-        var ranks = edgesW.select(col("src").as("node")).distinct()
+        var ranks = edgesW.df.select(col("src").as("node")).distinct()
           .select(col("node"), lit(Scale).as("r"))
         for (_ <- 1 to iters) {
-          ranks = edgesW
+          ranks = edgesW.df
             .join(ranks.withColumnRenamed("node", "src"), "src")
             .select(col("dst"), expr("(r * w) div wtot").as("c"))
             .groupBy(col("dst").as("node"))
             .agg(expr(s"$Teleport + (85 * sum(c)) div 100").as("r"))
         }
-        ranks.persist(StorageLevel.MEMORY_AND_DISK).count()
-        ranks
-      } finally edgesW.unpersist(blocking = false)
+        graft.Cut(ranks).df
+      } finally edgesW.release()
     }
     ranks.select(
       when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
@@ -140,9 +142,9 @@ object GraphOps {
       col("r").as("rank_fp"))
   }
 
-  /** One persisted rank frame per (session, dir): bench loops re-invoke
+  /** One cut rank frame per (session, dir): bench loops re-invoke
     * the query; without the cache each call would stack another
-    * persisted copy. */
+    * materialized copy. */
   private val rankCache =
     graft.SessionCache.frames[(String, Int)](graft.SessionCache.Result)
 
@@ -161,12 +163,9 @@ object GraphOps {
   def personalizedPageRank(
       spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       iters: Int): DataFrame = {
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(deg, "src")
-      .repartition(spark.sparkContext.defaultParallelism, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try pprRounds(edgesDeg, seeds, iters)
-    finally edgesDeg.unpersist(blocking = false)
+    val edgesDeg = degreeEdges(spark, edges)
+    try pprRounds(edgesDeg.df, seeds, iters)
+    finally edgesDeg.release()
   }
 
   /** The PPR loop over a pre-built degree-annotated edge table. */
@@ -188,8 +187,7 @@ object GraphOps {
         .unionAll(seeds.select(col("node"), lit(Teleport).as("v")))
         .groupBy("node").agg(sum("v").as("r"))
     }
-    ranks.persist(StorageLevel.MEMORY_AND_DISK).count()
-    ranks
+    graft.Cut(ranks).df
   }
 
   /** Dangling-aware PageRank with a residual-based stop — the
@@ -210,7 +208,7 @@ object GraphOps {
     * arithmetic is fixed-point integer, so the realized round count is
     * itself deterministic and engine-independent.
     *
-    * Scale shape: edges degree-annotated, partitioned once, persisted;
+    * Scale shape: edges degree-annotated, partitioned once, cut;
     * each round is one contribution shuffle + one node-sized left join,
     * cut per round by a [[graft.Cut]] (deep iteration — a lazy 40-round
     * chain is unanalyzable). The driver-side scalars come from the cut's
@@ -225,14 +223,12 @@ object GraphOps {
   def pageRankDangling(
       spark: SparkSession, edges: DataFrame, eps: Long,
       maxIters: Int): (DataFrame, Int) = {
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(deg, "src")
-      .repartition(spark.sparkContext.defaultParallelism, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesDeg = degreeEdges(spark, edges)
     val nodes = edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val degN = deg.withColumnRenamed("src", "node")
+    // one row per source: the cut's src partitioning already clusters it
+    val degN = edgesDeg.df.select(col("src").as("node"), col("outdeg"))
+      .distinct()
     try {
       // dang = the node has no out-degree; identical to the former
       // per-round `ranks LEFT ANTI JOIN degN` membership, hoisted out
@@ -249,7 +245,7 @@ object GraphOps {
       while (i < maxIters && !converged) {
         i += 1
         val share = dm / n // both non-negative: truncating == floor == //
-        val contribs = edgesDeg
+        val contribs = edgesDeg.df
           .join(ranks.select(col("node").as("src"), col("r")), "src")
           .select(col("dst"), expr("r div outdeg").as("c"))
           .groupBy(col("dst").as("node"))
@@ -268,10 +264,7 @@ object GraphOps {
         converged = cut.sums(1) == 0
       }
       (ranks.select("node", "r"), i)
-    } finally {
-      edgesDeg.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-    }
+    } finally edgesDeg.release()
   }
 
   /** [[pageRankDangling]]'s dangling mass: Σ r over the `dang` rows. */
@@ -301,26 +294,24 @@ object GraphOps {
     * as even node ids (2k) and parts as odd (2k+1). 5 rounds at damping
     * 0.85 — rank spread is already stable, and a fixed round count keeps
     * the oracle a finite SQL unrolling. */
-  /** Distinct trade pairs, PERSISTED for the duration of `body`: the
+  /** Distinct trade pairs, CUT for the duration of `body`: the
     * edge build reads the pair relation from both union branches and
     * again for degrees — left lazy, the distinct shuffle replays per
     * branch inside one action. */
   private def withTradePairs[A](spark: SparkSession, dir: String)(
       body: DataFrame => A): A = {
-    val pairs = load(spark, dir, "lineitem")
-      .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // MATERIALIZE before body plans anything: a lazily-persisted pairs
-    // frame planned against parquet-size estimates makes the planner
-    // shuffle the node-sized degree/rank tables every round; with the
-    // InMemoryRelation's exact stats visible it broadcasts them instead
-    // (measured 5.3 -> 1.4 s warm for qPageRank at sf0.1). At 100 TB the
-    // same stats make the planner fall back to the co-partitioned
-    // shuffle join exactly when the node table outgrows the broadcast
+    // cut before body plans anything: pairs planned against
+    // parquet-size estimates make the planner shuffle the node-sized
+    // degree/rank tables every round; with the cut's measured rows and
+    // bytes as its statistics it broadcasts them instead (measured
+    // 5.3 -> 1.4 s warm for qPageRank at sf0.1). At 100 TB the same
+    // stats make the planner fall back to the co-partitioned shuffle
+    // join exactly when the node table outgrows the broadcast
     // threshold — the size-adaptive behavior hand-hinting can't give.
-    pairs.count()
-    try body(pairs) finally pairs.unpersist(blocking = false)
+    val pairs = graft.Cut(load(spark, dir, "lineitem")
+      .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
+      .distinct())
+    try body(pairs.df) finally pairs.release()
   }
 
   private def tradeEdges(pairs: DataFrame): DataFrame =
@@ -329,7 +320,7 @@ object GraphOps {
       .unionAll(
         pairs.select((col("p") * 2 + 1).as("src"), (col("s") * 2).as("dst")))
 
-  /** The degree-annotated, src-hash-partitioned, PERSISTED undirected
+  /** The degree-annotated, src-hash-partitioned, CUT undirected
     * trade-graph edge table — the compute-once-per-corpus graph
     * artifact every algorithm on this graph shares (full and
     * personalized PageRank, label propagation): at 100 TB the graph
@@ -340,15 +331,8 @@ object GraphOps {
 
   private[graph] def tradeEdgesDeg(spark: SparkSession, dir: String): DataFrame =
     edgeDegCache.get(spark, dir) {
-      withTradePairs(spark, dir) { pairs =>
-        val edges = tradeEdges(pairs)
-        val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        val ed = edges.join(deg, "src")
-          .repartition(spark.sparkContext.defaultParallelism, col("src"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        ed.count() // materialize before pairs unpersists
-        ed
-      }
+      withTradePairs(spark, dir)(pairs =>
+        degreeEdges(spark, tradeEdges(pairs)).df)
     }
 
   def qPageRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
@@ -375,7 +359,7 @@ object GraphOps {
     * Scale shape: the neighbor index is ranked per-source (window
     * bounded by a node's degree, never global), carries the source
     * degree as a column (one window shuffle produces both), and is
-    * PERSISTED for the loop's lifetime — left lazy, every step would
+    * CUT for the loop's lifetime — left lazy, every step would
     * replay the full edge sort, making a DeepWalk-depth walk O(steps)
     * full edge sorts. Each step is then ONE join: the walk frontier is
     * broadcast (the PPR-frontier argument — the frontier is
@@ -388,7 +372,7 @@ object GraphOps {
     * Walk count × steps rows total; per-step cost is flat in `steps`
     * (the GraphScaleGateSpec pins this). Walk-heavy configs
     * (walks ≈ edges) would co-partition on src instead — with degn
-    * resident on nbr the join key is src alone, so the persisted
+    * resident on nbr the join key is src alone, so the cut's
     * hash(src) window layout is reusable as-is.
     *
     * Small-graph fast path: when the edge set fits a broadcast
@@ -400,8 +384,8 @@ object GraphOps {
     * — the same neighbor the flat index's rk ranking picks, since
     * sort_array order IS the rank-by-dst order — so both paths honor
     * one hash contract and one oracle. The step loop is then pure plan
-    * construction: no per-step broadcast build, no window; only the
-    * cadence cuts and the final cut submit jobs. The grouped
+    * construction: no per-step broadcast build, no window; the one
+    * cut of the walk corpus submits the job. The grouped
     * shape is not the scale default because a hub node's whole
     * neighbor list becomes one row (degree-unbounded array), while the
     * flat index stays row-per-edge under any skew. */
@@ -462,7 +446,7 @@ object GraphOps {
           // folds into the window stage — no extra shuffle).
           .coalesce(math.max(4, spark.sparkContext.defaultParallelism / 4))
       }
-    ix.persist(StorageLevel.MEMORY_AND_DISK)
+    graft.Cut(ix).df
   }
 
   def randomWalks(
@@ -497,34 +481,23 @@ object GraphOps {
             kernel))).as(Seq("step", "node")))
         .select(col("walk_id"), col("step").cast("long").as("step"),
           col("node"))
-      out.persist(StorageLevel.MEMORY_AND_DISK).count()
-      if (index.isEmpty) nbr.unpersist(blocking = false)
-      return out
+      val walks = graft.Cut(out).df
+      if (index.isEmpty) graft.Cut.release(nbr)
+      return walks
     }
+    val start = starts
+      .crossJoin(broadcast(
+        spark.range(walksPerNode.toLong).toDF("w")))
+      .select((col("node") * walksPerNode + col("w")).as("walk_id"),
+        lit(0L).as("step"), col("node"))
+    val cuts = collection.mutable.Buffer.empty[graft.Cut]
     try {
-      var cur = starts
-        .crossJoin(broadcast(
-          spark.range(walksPerNode.toLong).toDF("w")))
-        .select((col("node") * walksPerNode + col("w")).as("walk_id"),
-          lit(0L).as("step"), col("node"))
-      var frames = List(cur)
-      val cuts = collection.mutable.Buffer.empty[graft.Cut]
-      // CUT LINEAGE every ckptEvery steps and persist the steps
-      // between: step i feeds both the union and step i+1, and with no
-      // cut at all the accumulated plan tree grows O(steps²) and
-      // analysis/explain alone OOMs the driver (measured at 20 steps).
-      // A cut per step is one extra JOB per step though, and at toy SF
-      // stage-count overhead dominates — a bounded cadence keeps every
-      // frame ≤ ckptEvery joins above a shallow LogicalRDD while
-      // halving the job count (on the frontier-broadcast path,
-      // intermediate frames
-      // materialize as a side effect of the next step's broadcast
-      // build, which populates their persisted blocks). The cadence is
-      // load-bearing on BOTH paths: nested InMemoryRelation plans
-      // render super-linearly, and a 20-deep chain already overflows
-      // the 2 GB plan-string cap inside AQE's explain hook — even a
-      // 10-deep cadence measurably bends the scale-gate curve.
-      val ckptEvery = 5
+      // CUT LINEAGE every step: step i feeds both the union and step
+      // i+1, and with no cut the accumulated plan tree grows O(steps²)
+      // and analysis/explain alone OOMs the driver (measured at 20
+      // steps). Only this flat-index path (graphs past the in-memory
+      // index cap) runs the loop.
+      var cur = start
       for (i <- 1 to steps) {
         val hash =
           conv(substring(md5(concat_ws(":", col("walk_id"), lit(i))),
@@ -540,26 +513,20 @@ object GraphOps {
           // tasks, and the final union pays steps × that fan. Narrow
           // coalesce keeps the per-frame task count flat.
           .coalesce(4)
-        cur =
-          if (i % ckptEvery == 0) { cuts += graft.Cut(next); cuts.last.df }
-          else next.persist(StorageLevel.MEMORY_AND_DISK)
-        frames ::= cur
+        cuts += graft.Cut(next)
+        cur = cuts.last.df
       }
-      val union = frames.reverse.reduce(_ unionAll _)
-      // Publish the corpus as a cut leaf, not the persisted union:
-      // every downstream ACTION (each SGNS epoch, the eval aggregate)
-      // renders the full plan string for the SQL-listener event, and the
-      // union of `steps` persisted join chains — each InMemoryRelation
-      // re-rendering the 10M-row index lineage — made PLAN RENDERING the
-      // dominant cost of q_embed_eval at sf1 (r12's "92× cliff" was the
-      // driver regex-quoting tree strings, measured by stack sampling,
-      // not executor compute). The leaf renders as one line.
-      val out = graft.Cut(union).df
-      frames.foreach(_.unpersist(blocking = false))
-      cuts.foreach(_.release())
-      out
+      // Publish the corpus as a cut leaf, not the union: every
+      // downstream ACTION (each SGNS epoch, the eval aggregate) renders
+      // the full plan string for the SQL-listener event, and a union of
+      // `steps` join chains made PLAN RENDERING the dominant cost of
+      // q_embed_eval at sf1 (r12's "92× cliff" was the driver
+      // regex-quoting tree strings, measured by stack sampling, not
+      // executor compute). The leaf renders as one line.
+      graft.Cut((start +: cuts.map(_.df)).reduce(_ unionAll _)).df
     } finally {
-      if (index.isEmpty) nbr.unpersist(blocking = false)
+      cuts.foreach(_.release())
+      if (index.isEmpty) graft.Cut.release(nbr)
     }
   }
 
@@ -587,11 +554,8 @@ object GraphOps {
     graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private def tradeWalkIndex(spark: SparkSession, dir: String): DataFrame =
-    walkIndexCache.get(spark, dir) {
-      val ix = walkIndex(spark, tradeEdgesDeg(spark, dir).select("src", "dst"))
-      ix.count() // materialize under the cache's ownership
-      ix
-    }
+    walkIndexCache.get(spark, dir)(
+      walkIndex(spark, tradeEdgesDeg(spark, dir).select("src", "dst")))
 
   /** Residual stop threshold for [[qPageRankDangling]]: 1e10 fixed-point
     * units = 0.01 rank. Geometric decay at damping 0.85 puts the
@@ -675,21 +639,14 @@ object GraphOps {
     val ranks = rankCache.get(spark, key) {
       // base subgraph: its OWN degree annotation (degrees differ from
       // the full graph's), built and dropped inside this block
-      val basePairs = load(spark, dir, "lineitem")
+      val basePairs = graft.Cut(load(spark, dir, "lineitem")
         .filter(col("l_shipdate") < lit(cutoff))
         .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      basePairs.count()
-      val baseEdges = tradeEdges(basePairs)
-      val baseDeg = baseEdges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val baseED = baseEdges.join(baseDeg, "src")
-        .repartition(spark.sparkContext.defaultParallelism, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      baseED.count()
-      basePairs.unpersist(blocking = false)
-      val baseRanks = pageRankRounds(baseED, baseIters)
-      baseED.unpersist(blocking = false)
+        .distinct())
+      val baseED = degreeEdges(spark, tradeEdges(basePairs.df))
+      basePairs.release()
+      val baseRanks = pageRankRounds(baseED.df, baseIters)
+      baseED.release()
       // warm start on the full graph: published rank where known,
       // cold-start mass for delta-born nodes
       val full = tradeEdgesDeg(spark, dir)
@@ -697,7 +654,7 @@ object GraphOps {
         .join(baseRanks, Seq("node"), "left_outer")
         .select(col("node"), coalesce(col("r"), lit(Scale)).as("r"))
       val out = pageRankFrom(full, warm, deltaIters)
-      baseRanks.unpersist(blocking = false)
+      graft.Cut.release(baseRanks)
       out
     }
     ranks
@@ -778,7 +735,7 @@ object GraphOps {
     * classic async/random-order LPA cannot).
     *
     * Scale shape: the edge list is hash-partitioned on `src` once and
-    * persisted; each round is ONE co-partitioned join (node-sized label
+    * cut; each round is ONE co-partitioned join (node-sized label
     * table moves, edges never do) + two map-side-combinable
     * aggregations — count per (dst, lbl), then argmax-by-(count, -lbl)
     * per dst via a single `min(struct(-c, lbl))` (no window sort over
@@ -788,14 +745,13 @@ object GraphOps {
     * grouping the sampling caps consume. */
   def labelPropagation(
       spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
-    val edgesP = edges
-      .repartition(spark.sparkContext.defaultParallelism, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try lpaRounds(edgesP, iters)
-    finally edgesP.unpersist(blocking = false)
+    val edgesP = graft.Cut(edges
+      .repartition(spark.sparkContext.defaultParallelism, col("src")))
+    try lpaRounds(edgesP.df, iters)
+    finally edgesP.release()
   }
 
-  /** The synchronous-LPA loop over a pre-partitioned persisted edge
+  /** The synchronous-LPA loop over a pre-partitioned cut edge
     * table (an extra `outdeg` column, as [[tradeEdgesDeg]] carries, is
     * simply ignored). */
   private def lpaRounds(edgesP: DataFrame, iters: Int): DataFrame = {
@@ -810,8 +766,7 @@ object GraphOps {
         .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
         .select(col("node"), col("m.lbl").as("lbl"))
     }
-    labels.persist(StorageLevel.MEMORY_AND_DISK).count()
-    labels
+    graft.Cut(labels).df
   }
 
   /** Round count for [[qLabelProp]]: even (labels return to the
@@ -835,7 +790,7 @@ object GraphOps {
   }
 
   /** The co-purchase graph as directed arcs (both directions),
-    * src-partitioned and persisted — the unipartite edge artifact the
+    * src-partitioned and cut — the unipartite edge artifact the
     * community census runs on. */
   private val cpArcCache =
     graft.SessionCache.frames[String](graft.SessionCache.Artifact)
@@ -844,12 +799,9 @@ object GraphOps {
       spark: SparkSession, dir: String): DataFrame =
     cpArcCache.get(spark, dir) {
       val und = copurchaseEdges(spark, dir)
-      val arcs = und.select(col("u").as("src"), col("v").as("dst"))
+      graft.Cut(und.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
-        .repartition(spark.sparkContext.defaultParallelism, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      arcs.count()
-      arcs
+        .repartition(spark.sparkContext.defaultParallelism, col("src"))).df
     }
 
   /** Modularity census of LPA communities over the CO-PURCHASE graph —
@@ -1088,7 +1040,7 @@ object GraphOps {
           .stripMargin).as("q_num"))
   }
 
-  /** Support-weighted co-purchase arcs (both directions), persisted per
+  /** Support-weighted co-purchase arcs (both directions), cut per
     * (session, dir) — the weighted sibling of [[copurchaseArcs]]. */
   private val cpWArcCache =
     graft.SessionCache.frames[String](graft.SessionCache.Artifact)
@@ -1097,14 +1049,11 @@ object GraphOps {
       spark: SparkSession, dir: String): DataFrame =
     cpWArcCache.get(spark, dir) {
       val und = copurchaseEdges(spark, dir)
-      val arcs = und.select(col("u").as("src"), col("v").as("dst"),
+      graft.Cut(und.select(col("u").as("src"), col("v").as("dst"),
           col("support").as("w"))
         .unionAll(und.select(col("v").as("src"), col("u").as("dst"),
           col("support").as("w")))
-        .repartition(spark.sparkContext.defaultParallelism, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      arcs.count()
-      arcs
+        .repartition(spark.sparkContext.defaultParallelism, col("src"))).df
     }
 
   /** Item-item collaborative filtering over the co-purchase baskets —
@@ -1304,10 +1253,8 @@ object GraphOps {
     require(iters >= 1, s"HITS needs at least one round, got $iters")
     val scored = rankCache.get(spark, (s"$dir#hits", iters)) {
       withTradePairs(spark, dir) { pairs =>
-        val arcs = pairs.repartition(
-          spark.sparkContext.defaultParallelism, col("s"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        arcs.count()
+        val arcs = graft.Cut(pairs.repartition(
+          spark.sparkContext.defaultParallelism, col("s"))).df
         var hub = graft.Cut(arcs.select(col("s")).distinct()
           .select(col("s"), lit(1000000L).as("h")))
         var auth: graft.Cut = null
@@ -1342,7 +1289,7 @@ object GraphOps {
             col("p").as("node_id"), col("a").as("score_ppm"))))
         hub.release()
         auth.release()
-        arcs.unpersist(blocking = false)
+        graft.Cut.release(arcs)
         out.df
       }
     }
@@ -1390,7 +1337,7 @@ object GraphOps {
 
   /** Level-synchronous multi-source BFS core: `edges(src, dst)` ×
     * `sources(node)` → `(node, dist)` for every node within `maxDepth`
-    * hops of any source. Returns a PERSISTED frame (the caller's cache
+    * hops of any source. Returns a cut leaf (the caller's cache
     * owns its lifetime). See [[qBfsDistances]] for the scale contract. */
   private[graph] def bfsFrom(
       edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame = {
@@ -1444,10 +1391,8 @@ object GraphOps {
           col("w"))
         .unionAll(pairs.select((col("p") * 2 + 1).as("src"),
           (col("s") * 2).as("dst"), col("w")))
-        .repartition(spark.sparkContext.defaultParallelism, col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      edges.count()
-      edges
+      graft.Cut(edges
+        .repartition(spark.sparkContext.defaultParallelism, col("src"))).df
     }
 
   /** Weighted single/multi-source shortest paths — the min-cost
@@ -1842,7 +1787,7 @@ object GraphOps {
     * order-dependent); output is the neighborhood function
     * N(r) = Σ_v |ball(v, r)| for r = 0..2 over the trade graph. */
   /** The HyperBall register rounds: ball sketches for r = 0..radius,
-    * each PERSISTED (callers must unpersist after consuming). Registers
+    * each a cut leaf, released with the cache entry. Registers
     * travel PACKED (one 256-byte blob per node, merged by the native
     * hll_merge aggregate) — the sparse (node, bucket, mj) relation paid
     * one shuffle row per register per arc and ran ~6x slower at sf0.1
@@ -1857,7 +1802,7 @@ object GraphOps {
     * times over (~3×3 s at sf0.1). */
   private val hyperBallCache =
     new graft.SessionCache[String, Seq[DataFrame]](
-      graft.SessionCache.Artifact, _.foreach(_.unpersist(blocking = false)))
+      graft.SessionCache.Artifact, _.foreach(graft.Cut.release))
 
   /** Deepest radius any consumer asks for — the cached rounds are built
     * once at this depth and prefixes serve shallower queries. */
@@ -1871,19 +1816,15 @@ object GraphOps {
       import graft.relational.Sketches
       val (bucket, rho) = Sketches.hllRegister(col("node"), "hb")
       val edges = tradeEdgesDeg(spark, dir).select("src", "dst")
-      val seed = edges.select(col("src").as("node")).distinct()
+      val seed = graft.Cut(edges.select(col("src").as("node")).distinct()
         .select(col("node"),
-          graft.functions.hll_seed_blob(bucket, rho).as("blob"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+          graft.functions.hll_seed_blob(bucket, rho).as("blob"))).df
       Iterator.iterate(seed) { prev =>
-        val next = prev
+        graft.Cut(prev
           .unionAll(edges.join(prev, col("src") === col("node"))
             .select(col("dst").as("node"), col("blob")))
           .groupBy("node")
-          .agg(graft.functions.hll_merge(col("blob")).as("blob"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        next.count() // cut lineage growth round-over-round
-        next
+          .agg(graft.functions.hll_merge(col("blob")).as("blob"))).df
       }.take(HyperBallMaxRadius + 1).toSeq
     }.take(radius + 1)
   }
@@ -1982,7 +1923,7 @@ object GraphOps {
       spark: SparkSession, dir: String, nSources: Int = 8, k: Int = 20,
       maxDepth: Int = 64,
       localSolveMax: Long = MstLocalSolveMaxEdges): DataFrame =
-    // session-cached (the qMst posture): one persisted result per
+    // session-cached (the qMst posture): one cut result per
     // (session, dir, params), owned by the cache
     betwCache.get(spark, (dir, nSources, k)) {
       val edges = graft.Cut(copurchaseEdges(spark, dir).select("u", "v"))
@@ -2221,7 +2162,7 @@ object GraphOps {
     * non-negative floor divisions only. The argmin windows run over the
     * radius+1 aggregate rows (bounded by the radius constant, not the
     * graph — the defended global-window posture). Costs the same
-    * persisted [[hyperBallRounds]] artifacts as [[qHyperBall]], two
+    * cut [[hyperBallRounds]] artifacts as [[qHyperBall]], two
     * extra radii deep. */
   def qEffectiveDiameter(
       spark: SparkSession, dir: String, radius: Int = 3): DataFrame = {

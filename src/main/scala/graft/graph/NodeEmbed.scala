@@ -28,7 +28,7 @@ import graft.relational.Tables.load
   * Scale shape — the part that differs from the classifier: the model
   * here is node-count-sized, so it NEVER collects to the driver.
   * Embeddings live as a distributed (node, v0..v3) table; each epoch
-  * is two equi-joins of the persisted training rows against it (center
+  * is two equi-joins of the cut training rows against it (center
   * and context side), one node-keyed gradient aggregation (map-side
   * combinable, decimal(38,0) sums), and one left join applying the
   * update — all shuffles on the node key, lineage cut per epoch.
@@ -131,7 +131,7 @@ object NodeEmbed {
   def train(
       spark: SparkSession, pairCounts: DataFrame, nodes: DataFrame,
       ns: Long, np: Long, epochs: Int = Epochs): DataFrame = {
-    // hash-partition the persisted training rows by the center node
+    // hash-partition the cut training rows by the center node
     // (r16, guide §2.4): every epoch joins on `a` and aggregates the
     // gradient BY `a`, so with rows resident in hash(a) layout the
     // per-epoch gradient aggregation needs no rows-sized exchange (the
@@ -140,10 +140,8 @@ object NodeEmbed {
     // only the b-side moves). One build-time exchange, partitioning
     // only — every gradient sum is exact decimal arithmetic, so the
     // trained table is bit-identical under any layout.
-    val rows = trainingRows(pairCounts, ns, np)
-      .repartition(col("a"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rows.count()
+    val rows = graft.Cut(trainingRows(pairCounts, ns, np)
+      .repartition(col("a")))
     try {
       // the INITIAL table is cut too (r13): epoch 1 evaluates emb
       // THREE times (center side, context side, update join), and when
@@ -155,9 +153,9 @@ object NodeEmbed {
       // the final plan re-runs every prior epoch twice
       var emb = graft.Cut(nodes
         .select(col("node") +: (0 until Dims).map(i => init(i).as(s"v$i")): _*))
-      for (_ <- 1 to epochs) emb = emb.next(epoch(emb.df, rows))
+      for (_ <- 1 to epochs) emb = emb.next(epoch(emb.df, rows.df))
       emb.df
-    } finally rows.unpersist(blocking = false)
+    } finally rows.release()
   }
 
   /** One trained embedding table per (session, dir), shared by the

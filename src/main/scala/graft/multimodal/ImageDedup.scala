@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import Multimodal.{mediaTable, withDecoder, MediaDecoderProvider, StubProvider}
 
@@ -73,11 +72,10 @@ object ImageDedup {
   private[multimodal] def cachedHashes(
       spark: SparkSession, dir: String): DataFrame =
     hashCache.get(spark, dir)(
-      imageHashes(mediaTable(spark, dir))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+      graft.Cut(imageHashes(mediaTable(spark, dir))).df)
 
   /** Near-dup pairs (d1 < d2, hamming ≤ maxHamming) from a band-signature
-    * table. The signature frame should already be persisted (it is read
+    * table. The signature frame should already be cut (it is read
     * six times: four candidate branches + the two verify joins).
     * `maxHamming` ≤ 3 keeps the 4-band pigeonhole LOSSLESS — above that
     * the bands are a recall heuristic, so the cap is enforced rather

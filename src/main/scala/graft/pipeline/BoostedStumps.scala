@@ -122,17 +122,15 @@ object BoostedStumps {
 
   def qBoostedStumps(
       spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
-    val feats = featFrame(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val feats = graft.Cut(featFrame(spark, dir))
     try {
-      feats.count()
-      val model = train(spark, feats, rounds)
+      val model = train(spark, feats.df, rounds)
       spark.createDataFrame(model.zipWithIndex.map { case (m, i) =>
         (i + 1L, m.fe, m.th, m.nl, m.dl, m.dr, m.absResid)
       }).toDF(
         "step", "feature", "threshold", "n_left", "left_fp", "right_fp",
         "abs_resid")
-    } finally feats.unpersist(blocking = false)
+    } finally feats.release()
   }
 
   /** k-fold cross-validation of the stump model — the "does the quality
@@ -145,7 +143,7 @@ object BoostedStumps {
     * of kilobyte-collect aggregations), plus one held-out census pass
     * per fold — all map-side combinable; the per-fold model ships back
     * as a broadcast literal. Folds are INDEPENDENT read-only consumers
-    * of the persisted feature table, so they are submitted
+    * of the cut feature table, so they are submitted
     * CONCURRENTLY (guide §2.6: overlap independent jobs so the next
     * fold's tasks back-fill executors idled by the current fold's
     * kilobyte-collect barriers) — r15 measured the sequential loop at
@@ -157,12 +155,11 @@ object BoostedStumps {
       spark: SparkSession, dir: String,
       folds: Int = 5, rounds: Int = 2): DataFrame = {
     import spark.implicits._
-    val feats = featFrame(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cut = graft.Cut(featFrame(spark, dir))
+    val feats = cut.df
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(folds, 4))
     try {
-      feats.count()
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val out = scala.concurrent.Await.result(
@@ -186,7 +183,7 @@ object BoostedStumps {
         .toDF("fold", "n_train", "n_test", "sum_abs_err", "mae_fp")
     } finally {
       pool.shutdown()
-      feats.unpersist(blocking = false)
+      cut.release()
     }
   }
 }

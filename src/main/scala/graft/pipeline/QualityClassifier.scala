@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import graft.relational.Tables.load
 
@@ -30,7 +29,7 @@ import graft.relational.Tables.load
   *     gradient and step divisions truncating-toward-zero (the sign-safe
   *     CASE form in the oracle, native `div`/BigInt division here).
   *
-  * Scale shape: the feature table is built once and persisted (one
+  * Scale shape: the feature table is built once and cut (one
   * stateless explode + one map-side-combinable aggregation); each epoch
   * is two shuffles over it — a doc-keyed score aggregation and a
   * dim-keyed gradient aggregation whose output is `dims`+1 rows. The
@@ -75,7 +74,7 @@ object QualityClassifier {
   def classify(
       spark: SparkSession, docs: DataFrame, dims: Int = 64,
       epochs: Int = 4): DataFrame = {
-    // hash-partition the persisted feature table by doc_id (r16, guide
+    // hash-partition the cut feature table by doc_id (r16, guide
     // §2.4: two operations keyed the same way share one exchange): every
     // epoch aggregates scores BY doc_id and joins the err table BACK on
     // doc_id, and `err` itself descends from that same aggregation — so
@@ -85,10 +84,12 @@ object QualityClassifier {
     // (the 65-row dim-keyed gradient, map-side combined). The layout
     // costs one corpus-sized exchange at build time and is partitioning
     // only: every sum is exact integer/decimal arithmetic, so the
-    // trained weights are bit-identical under any layout.
-    val xy = features(docs, dims)
-      .repartition(col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // trained weights are bit-identical under any layout. The partition
+    // count is explicit because a cut keeps a plain hash layout, not an
+    // AQE-coalesced one.
+    val xyCut = graft.Cut(features(docs, dims)
+      .repartition(spark.sparkContext.defaultParallelism, col("doc_id")))
+    val xy = xyCut.df
     try {
       val n = BigInt(docs.count())
       var w: Map[Long, BigInt] =
@@ -127,12 +128,9 @@ object QualityClassifier {
       // frame is the published model-scores artifact (doc-count rows),
       // and a lazy return would replay feature hashing + the final
       // score join on every consumer (v3 corpus build, calibration)
-      val out = scores.select(col("doc_id"), col("y").as("label"),
-        col("z").as("score_fp"), (col("z") >= 0).as("keep"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      out
-    } finally xy.unpersist(blocking = false)
+      graft.Cut(scores.select(col("doc_id"), col("y").as("label"),
+        col("z").as("score_fp"), (col("z") >= 0).as("keep"))).df
+    } finally xyCut.release()
   }
 
   /** The registered query: reference slice = sources src0..src4 (the

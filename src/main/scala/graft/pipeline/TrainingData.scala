@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import graft.relational.Tables
 
@@ -61,7 +60,7 @@ object TrainingData {
     * id per node — an independent formulation of the same fixpoint.
     *
     * The result is cached per (session, dir) — the same cut
-    * frame is returned to every caller, so do NOT unpersist it; use
+    * frame is returned to every caller, so do NOT release it; use
     * [[graft.SessionCache.invalidate]] when the underlying data
     * changes. */
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame =
@@ -220,7 +219,7 @@ object TrainingData {
   /** Small-input strategy: the canonicalized edge set already sits in
     * cached blocks; pull it to the driver, union-find it (path-halving,
     * union-by-min so labels are component minima exactly like the
-    * distributed loop), and hand back a persisted leaf frame with the
+    * distributed loop), and hand back a cut leaf frame with the
     * identical (doc_id, cluster_id, is_keeper) contract. Rounds = 0 —
     * no contraction ran. */
   private def localSolve(
@@ -506,7 +505,7 @@ object TrainingData {
     * THE split policy, so the operator decontaminates exactly the splits
     * [[qSplitAssign]] ships. */
   def qDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    // the dedup module's persisted shingle frame: both branches below
+    // the dedup module's cut shingle frame: both branches below
     // (eval set + train probe) read it without re-running the kernel
     val docs = graft.dedup.Dedup.shingleArrays(spark, dir)
       .withColumn("bucket", bucketOf(col("doc_id")))

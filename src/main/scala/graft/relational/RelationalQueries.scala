@@ -863,7 +863,7 @@ object RelationalQueries {
     * what makes the DuckDB replay exact. Recency scores INVERT
     * (most-recent = 4). */
   def qRfm(spark: SparkSession, dir: String): DataFrame = {
-    val per = load(spark, dir, "orders")
+    val cut = graft.Cut(load(spark, dir, "orders")
       .select(col("o_custkey"), col("o_orderdate"),
         expr("cast(floor(o_totalprice * 100 + 0.5) as long)").as("cents"))
       .groupBy("o_custkey")
@@ -874,9 +874,9 @@ object RelationalQueries {
       .select(col("o_custkey"),
         datediff(col("d1"), col("last_order")).cast("long")
           .as("recency_days"),
-        col("frequency"), col("monetary_cents"))
-      .persist()
-    val n = per.count()
+        col("frequency"), col("monetary_cents")))
+    val per = cut.df
+    val n = cut.rows
     val ranks = Set((n + 3) / 4, (n + 1) / 2, (3 * n + 3) / 4)
     val parts = math.max(spark.sparkContext.defaultParallelism, 1)
     def thresholds(metric: String): Array[Long] =
@@ -892,9 +892,9 @@ object RelationalQueries {
     val (rt, ft, mt) = (thresholds("recency_days"), thresholds("frequency"),
       thresholds("monetary_cents"))
     // thresholds are now driver literals; the final projection may lazily
-    // recompute `per` once after the unpersist — one cheap aggregate —
+    // recompute `per` once after the release — one cheap aggregate —
     // rather than pinning cache across the caller's lifetime
-    per.unpersist(blocking = false)
+    cut.release()
     per.select(col("o_custkey"), col("recency_days"),
         col("frequency"), col("monetary_cents"),
         (lit(5L) - score("recency_days", rt)).as("r_score"),

@@ -374,9 +374,9 @@ object Sketches {
     // the result is identical; a sketch-only deployment on a domain too
     // distinct-heavy for a value histogram would hash per raw row with
     // map-side combine straight into the same fixed counter table.
-    val hist = ev.groupBy("event_type", "cents")
-      .agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val histCut = graft.Cut(ev.groupBy("event_type", "cents")
+      .agg(count(lit(1)).as("cnt")))
+    val hist = histCut.df
     try {
       // one dyadic node per (distinct value, level): (j, cents >> j);
       // ONE md5 per node, its d 5-hex-char slices the CM row buckets
@@ -404,7 +404,7 @@ object Sketches {
       val ns = hist.groupBy("event_type").agg(sum("cnt").as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       dyadicResult(spark, hist, cmap, ns, levels, d, width)
-    } finally hist.unpersist(blocking = false)
+    } finally histCut.release()
   }
 
   private def dyadicResult(

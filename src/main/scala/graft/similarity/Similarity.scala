@@ -3,7 +3,6 @@ package graft.similarity
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.vec_dot
 import graft.relational.Tables
@@ -1238,12 +1237,11 @@ object Similarity {
   def qKmeansParSeed(
       spark: SparkSession, dir: String,
       rounds: Int = 3, ell: Int = 8): DataFrame = {
-    val emb = load(spark, dir, "embeddings")
+    val embCut = graft.Cut(load(spark, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("xs"))
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    emb.count()
+      .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
+    val emb = embCut.df
     try {
       import spark.implicits._
       val seed0 = emb.orderBy("vec_id").limit(1)
@@ -1284,7 +1282,7 @@ object Similarity {
         .join(weights, Seq("seed_id"), "left_outer")
         .select(col("seed_id"), col("pick_round"),
           coalesce(col("weight"), lit(0L)).as("weight"))
-    } finally emb.unpersist(blocking = false)
+    } finally embCut.release()
   }
 
   /** Embedding outlier mining — the data-quality sweep that catches
@@ -1346,10 +1344,9 @@ object Similarity {
     // per-NODE window: partition size = cell-mate count, bounded by the
     // index cell population — never corpus-sized
     val w = Window.partitionBy("a").orderBy(col("d2"), col("b"))
-    val knn = pairs.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    knn.count()
+    val knnCut = graft.Cut(pairs.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k))
+    val knn = knnCut.df
     try {
       val kd = knn.groupBy("a")
         .agg(max("d2").as("kdist"), count(lit(1)).as("cnt"),
@@ -1379,7 +1376,7 @@ object Similarity {
       val rows = out.collect()
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
-    } finally knn.unpersist(blocking = false)
+    } finally knnCut.release()
   }
 
   /** Embedding-space decontamination — the SEMANTIC twin of the shingle
@@ -1465,11 +1462,10 @@ object Similarity {
           round(vec_dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
             .as("sim"))
       val w = Window.partitionBy("a").orderBy(col("sim").desc, col("b"))
-      scored.withColumn("rn", row_number().over(w))
+      graft.Cut(scored.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= k)
         .select(col("a"), col("b"),
-          expr("cast(round(sim * 1000000, 0) as bigint)").as("s6"))
-        .persist()
+          expr("cast(round(sim * 1000000, 0) as bigint)").as("s6"))).df
     }
     mutualKnnFromLists(knn, k)
   }
@@ -1518,7 +1514,11 @@ object Similarity {
         round(vec_dot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6)
           .as("sim"))
     val w = Window.partitionBy("a").orderBy(col("sim").desc, col("b"))
-    scored.withColumn("rn", row_number().over(w))
+    // an explicit partition count: the window keeps hash(a), and the cut
+    // of these lists keeps it too (a cut drops an AQE-coalesced layout),
+    // so the mutual algebra's aggregate and joins on `a` need no shuffle
+    scored.repartition(spark.sparkContext.defaultParallelism, col("a"))
+      .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("a"), col("b"),
         expr("cast(round(sim * 1000000, 0) as bigint)").as("s6"))
@@ -1632,7 +1632,7 @@ object Similarity {
     }
   }
 
-  /** Per-(session, dir, k) persisted kNN lists for [[qMutualKnn]] —
+  /** Per-(session, dir, k) cut kNN lists for [[qMutualKnn]] —
     * three plan references (both mutual sides + neighborhood sums) and
     * repeat bench runs share one N² scan. */
   private val mutualKnnCache =
@@ -1653,7 +1653,7 @@ object Similarity {
     * test corpora the output EQUALS [[qMutualKnn]] row-for-row
     * (SimilaritySpec pins the equality; the DuckDB oracle is the exact
     * miner's SQL, the [[qAnnLshVerified]] pattern). The kNN lists
-    * persist per (session, dir, k, bandBits) like the exact miner's —
+    * are cut per (session, dir, k, bandBits) like the exact miner's —
     * the documented compute-once-per-corpus artifact shape.
     *
     * Cost honesty (the [[qEmbeddingNearDup]] physics, measured r12
@@ -1680,15 +1680,13 @@ object Similarity {
       k: Int = 10, bandBits: Int = 2): DataFrame = {
     val quota = spark.conf.getOption("spark.graft.lsh.bucketQuota")
       .map(_.toInt).getOrElse(1024)
-    val knn = lshKnnCache.get(spark, (dir, k, bandBits, quota)) {
-      val lists = lshKnnLists(spark, dir, k, bandBits, quota).persist()
-      lists.count() // populate before the algebra's three readers race
-      lists
-    }
+    val knn = lshKnnCache.get(spark, (dir, k, bandBits, quota))(
+      // populated before the algebra's three readers race
+      graft.Cut(lshKnnLists(spark, dir, k, bandBits, quota)).df)
     mutualKnnFromLists(knn, k)
   }
 
-  /** Per-(session, dir, k, bandBits, quota) persisted banded-LSH kNN
+  /** Per-(session, dir, k, bandBits, quota) cut banded-LSH kNN
     * lists for [[qMutualKnnLsh]] — same sharing contract as
     * [[mutualKnnCache]]. */
   private val lshKnnCache = graft.SessionCache
@@ -1715,7 +1713,7 @@ object Similarity {
     * its embedding and norm — what a pipeline persists NEXT TO the
     * index so every index consumer (dedup, outliers, drift) reads one
     * materialization instead of re-running the crossJoin + argmin scan.
-    * One persisted frame per (session, dir, cells). */
+    * One cut frame per (session, dir, cells). */
   private val assignCache =
     graft.SessionCache.frames[(String, Int)](graft.SessionCache.Artifact)
 
@@ -1726,12 +1724,10 @@ object Similarity {
         val emb = embN.select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("xs"))
         val centroids = lloydCentroids(spark, emb, emb, cells, dir, "full")
-        val a = assignCells(emb, centroids)
+        // populated before any self-join's two readers race
+        graft.Cut(assignCells(emb, centroids)
           .join(embN.select(col("vec_id"), col("embedding"), col("norm")),
-            "vec_id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        a.count() // populate before any self-join's two readers race
-        a
+            "vec_id")).df
       }
 
   def qSemDedup(
@@ -1863,18 +1859,17 @@ object Similarity {
         .select("qid", "nid")
     }
 
-    val truth = topkAt(64).persist()
-    truth.count()
+    val truth = graft.Cut(topkAt(64))
     val out = widths.map { d =>
-      topkAt(d).join(truth, Seq("qid", "nid"), "left_semi")
+      topkAt(d).join(truth.df, Seq("qid", "nid"), "left_semi")
         .agg(count(lit(1)).as("hits"))
         .select(lit(d.toLong).as("trunc_dim"), col("hits"),
           expr(s"(1000000 * hits) div ${nQueries.toLong * k}")
             .as("recall_ppm"))
     }.reduce(_.unionAll(_))
-    // materialize before truth unpersists (the census is `widths` rows)
+    // materialize before truth is released (the census is `widths` rows)
     val rows = out.collect()
-    truth.unpersist(blocking = false)
+    truth.release()
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1), out.schema)
   }
@@ -1902,23 +1897,23 @@ object Similarity {
     val emb = corpus(spark, dir)
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding").as("qv"), col("norm").as("qn"))
-    val short = emb.filter(col("vec_id") =!= 0)
+    val shortCut = graft.Cut(emb.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
         q12(vec_dot(col("embedding"), col("qv"))
           / (col("norm") * col("qn"))).as("rel_fp"),
         col("embedding"), col("norm"))
-      .orderBy(col("rel_fp").desc, col("vec_id")).limit(shortlistK)
-      .persist()
-    val sims = short.select(col("vec_id").as("a"),
+      .orderBy(col("rel_fp").desc, col("vec_id")).limit(shortlistK))
+    val short = shortCut.df
+    val simsCut = graft.Cut(short.select(col("vec_id").as("a"),
         col("embedding").as("va"), col("norm").as("na"))
       .join(short.select(col("vec_id").as("b"),
         col("embedding").as("vb"), col("norm").as("nb")),
         col("a") =!= col("b"))
       .select(col("a"), col("b"),
         q12(vec_dot(col("va"), col("vb"))
-          / (col("na") * col("nb"))).as("s_fp"))
-      .persist()
+          / (col("na") * col("nb"))).as("s_fp")))
+    val sims = simsCut.df
     try {
       var chosen = graft.Cut(short
         .select(col("vec_id"), col("rel_fp"))
@@ -1940,8 +1935,8 @@ object Similarity {
       }
       chosen.df.select(col("mmr_rank"), col("vec_id"), col("rel_fp"))
     } finally {
-      short.unpersist(blocking = false)
-      sims.unpersist(blocking = false)
+      shortCut.release()
+      simsCut.release()
     }
   }
 
@@ -1963,11 +1958,10 @@ object Similarity {
     * radius sequence the spec pins. */
   def qKcenterCoreset(
       spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val emb = corpus(spark, dir, norm = false)
+    val embCut = graft.Cut(corpus(spark, dir, norm = false)
       .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("xs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    emb.count()
+        transform(col("embedding"), x => x.cast("double")).as("xs")))
+    val emb = embCut.df
     try {
       import spark.implicits._
       val seed0 = emb.orderBy("vec_id").limit(1)
@@ -1988,7 +1982,7 @@ object Similarity {
       spark.createDataFrame(picks)
         .toDF("vec_id", "pick_order", "radius_fp")
         .select(col("pick_order"), col("vec_id"), col("radius_fp"))
-    } finally emb.unpersist(blocking = false)
+    } finally embCut.release()
   }
 
   /** Per-dimension whitening of the embedding corpus — the

@@ -1,7 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A word type mid-training: its current symbol sequence and corpus
   * frequency. Top-level (not nested) so the generated encoder code can
@@ -59,7 +59,7 @@ object BpeTrain {
     import spark.implicits._
     // THE corpus pass: word-type frequencies, one map-side-combinable
     // aggregation; everything after runs on the (small) types relation
-    val types = docs
+    val types = graft.Cut(docs
       .select(explode(split(col(textCol), " ", -1)).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
@@ -67,12 +67,12 @@ object BpeTrain {
       .map { case (w, f) =>
         BpeType(w.codePoints().toArray.toSeq.map(Character.toString), f)
       }
-      .persist()
+      .toDF())
     try {
-      val nTypes = types.count() // one action; also materializes the cache
-      if (nTypes <= localSolveMax) localSolve(types.collect(), numMerges)
+      if (types.rows <= localSolveMax)
+        localSolve(types.df.as[BpeType].collect(), numMerges)
       else distributedSolve(types, numMerges)
-    } finally types.unpersist(blocking = false)
+    } finally types.release()
   }
 
   /** Lexicographic order on UTF-8 bytes (unsigned) — identical to BOTH
@@ -135,18 +135,18 @@ object BpeTrain {
 
   /** One Spark job per round: pair-count aggregation (map-side
     * combinable), driver argmax on its tiny result, symbol rewrite map.
-    * Each round's types are re-persisted and the previous round freed —
+    * Each round's types are cut and the previous round's cut released —
     * the lineage-truncation discipline of the cluster fixpoint loop. */
   private def distributedSolve(
-      types0: Dataset[BpeType], numMerges: Int): Seq[BpeMerge] = {
-    val spark = types0.sparkSession
+      types0: graft.Cut, numMerges: Int): Seq[BpeMerge] = {
+    val spark = types0.df.sparkSession
     import spark.implicits._
     var types = types0
     val merges = Seq.newBuilder[BpeMerge]
     var rank = 0
     var done = false
-    while (rank < numMerges && !done) {
-      val best = types
+    try while (rank < numMerges && !done) {
+      val best = types.df.as[BpeType]
         .flatMap(t => t.syms.sliding(2).collect {
           case Seq(a, b) => (a, b, t.freq)
         })
@@ -159,17 +159,12 @@ object BpeTrain {
       best match {
         case Some((a, b, f)) if f >= 2 =>
           merges += BpeMerge(rank, a, b, f)
-          val next = types
-            .map(t => t.copy(syms = mergePair(t.syms, a, b)))
-            .persist()
-          next.count()
-          if (!(types eq types0)) types.unpersist(blocking = false)
-          types = next
+          types = types.next(types.df.as[BpeType]
+            .map(t => t.copy(syms = mergePair(t.syms, a, b))).toDF())
           rank += 1
         case _ => done = true
       }
-    }
-    if (!(types eq types0)) types.unpersist(blocking = false)
+    } finally types.release()
     merges.result()
   }
 

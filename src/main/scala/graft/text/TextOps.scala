@@ -294,7 +294,7 @@ object TextOps {
       .map { case (r, i) => (r.getLong(0), i + 1L) }
       .toDF("doc_id", "pos")
     // three cheap deterministic re-scans of the ranked view (the plan's
-    // three subtrees) beat a leaked corpus-sized persist; the RDD
+    // three subtrees) beat a leaked corpus-sized cut; the RDD
     // zipWithIndex replays identically per scan
     val ranked = docs.join(pos, "doc_id")
       .select(col("pos"), size(col("toks")).cast("long").as("nt"),
@@ -522,11 +522,17 @@ object TextOps {
       greatest(col("prev"), col("tok")).as("b")).distinct()
     val edges = und.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-    graft.graph.GraphOps.pageRank(spark, edges, iters)
+    textRankCache.get(spark, (dir, iters))(
+      graft.graph.GraphOps.pageRank(spark, edges, iters))
       .orderBy(col("r").desc, col("node"))
       .limit(k)
       .select(col("node").as("word"), col("r").as("rank_fp"))
   }
+
+  /** Per-(session, dir, iters) word ranks of [[qTextRank]]: the rank
+    * frame is a cut, and the cache is what releases it. */
+  private val textRankCache =
+    graft.SessionCache.frames[(String, Int)](graft.SessionCache.Result)
 
   /** Data-driven stopword pruning — the vocabulary-filter step of a
     * training pipeline: tokens whose document frequency exceeds
@@ -871,7 +877,7 @@ object TextOps {
   def bm25TopK(docs: DataFrame, nQueries: Int, k: Int,
       tfOpt: Option[DataFrame] = None): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    // tfOpt: the PERSISTED inverted index (see [[qBm25TopK]]). Left
+    // tfOpt: the CUT inverted index (see [[qBm25TopK]]). Left
     // lazy, the tf subtree would replay its tokenize + count once per
     // consumer (dl, stats, dfreq, qterms, postings = 4-5 full corpus
     // scans — this query's whole bench cost).
@@ -920,16 +926,12 @@ object TextOps {
     graft.SessionCache.frames[String](graft.SessionCache.Artifact)
 
   private def cachedTf(spark: SparkSession, dir: String): DataFrame =
-    tfCache.get(spark, dir) {
-      val tf = load(spark, dir, "documents")
+    tfCache.get(spark, dir)(
+      graft.Cut(load(spark, dir, "documents")
         .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
         .groupBy("doc_id", "tok")
         .agg(count(lit(1)).as("tf"))
-        .repartition(spark.sparkContext.defaultParallelism, col("tok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      tf.count()
-      tf
-    }
+        .repartition(spark.sparkContext.defaultParallelism, col("tok"))).df)
 
   def qBm25TopK(
       spark: SparkSession, dir: String,

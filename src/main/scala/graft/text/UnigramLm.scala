@@ -121,17 +121,17 @@ object UnigramLm {
     val spark = docs.sparkSession
     import spark.implicits._
     // THE corpus pass (see scaladoc): word-type frequencies
-    val types = docs
+    val cut = graft.Cut(docs
       .select(explode(split(col(textCol), " ", -1)).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .as[(String, Long)].map { case (w, f) => UniType(w, f) }
-      .persist()
+      .toDF())
     try {
-      val nTypes = types.count()
-      if (nTypes <= localSolveMax) solve(types.collect().toSeq, collectLocal)
+      val types = cut.df.as[UniType]
+      if (cut.rows <= localSolveMax) solve(types.collect().toSeq, collectLocal)
       else solve(types, collectDistributed)
-    } finally types.unpersist(blocking = false)
+    } finally cut.release()
   }
 
   /** Seed + EM over either representation of the types table; `agg`

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.physical.{
+  HashPartitioningLike, SinglePartition}
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -71,6 +73,56 @@ class CutSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("under AQE a coalesced cut drops its layout and joins exactly on its key") {
+    // 16 hash buckets coalesced into about 4 read partitions: partition
+    // i holds a contiguous range of buckets, not pmod(hash, 4) = i, so
+    // a leaf that claimed HashPartitioning(k, 4) would be joined
+    // against a side shuffled to 4 buckets, or to a cut coalesced into
+    // other ranges, without an exchange, and most keys would miss
+    val conf = Map(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.shuffle.partitions" -> "16")
+    val prev = conf.keys.map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      def byKey(n: Long, keys: Long) = spark.range(n)
+        .groupBy((col("id") % keys).as("k")).agg(count(lit(1)).as("n"))
+      val a = Cut(byKey(20000L, 1000L))
+      val b = Cut(byKey(5000L, 1000L))
+      val c = Cut(byKey(7000L, 300L))
+      val leaf = a.df.queryExecution.logical.asInstanceOf[LogicalRDD]
+      val parts = leaf.rdd.getNumPartitions
+      assert(parts > 1 && parts < 16, s"coalesced to $parts partitions")
+      assert(!leaf.outputPartitioning.isInstanceOf[HashPartitioningLike],
+        leaf.outputPartitioning)
+      val other = spark.range(1000L).select(col("id").as("k"))
+      assert(a.df.join(other, "k").count() === 1000L)
+      def total(x: DataFrame, y: DataFrame) = x.as("x").join(y.as("y"), "k")
+        .agg(count(lit(1)), sum(col("x.n") * 10000 + col("y.n"))).head()
+      assert(total(a.df, b.df) ===
+        total(byKey(20000L, 1000L), byKey(5000L, 1000L)))
+      assert(total(a.df, c.df) ===
+        total(byKey(20000L, 1000L), byKey(7000L, 300L)))
+      Seq(a, b, c).foreach(_.release())
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("a one-partition cut stays SinglePartition: an aggregate over it plans no exchange") {
+    val c = Cut(spark.range(100L).toDF().orderBy(col("id").desc).limit(10))
+    val leaf = c.df.queryExecution.logical.asInstanceOf[LogicalRDD]
+    assert(leaf.outputPartitioning === SinglePartition)
+    val agg = c.df.groupBy(col("id") % 2).count()
+    assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"),
+      agg.queryExecution.executedPlan.treeString)
+    assert(agg.collect().map(_.getLong(1)).sorted.toSeq === Seq(5L, 5L))
+    c.release()
   }
 
   test("release() drops the cut's RDD from the persistent RDDs") {

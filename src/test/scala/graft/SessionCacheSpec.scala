@@ -125,4 +125,32 @@ class SessionCacheSpec extends SparkSpec {
       FileUtils.deleteDirectory(root)
     }
   }
+
+  test("invalidateAll leaves no cached storage behind") {
+    // every frame a cache holds is a cut leaf or a projection of one,
+    // so invalidateAll releases every block the queries left resident;
+    // a frame cached in a form Cut.release cannot see would stay in
+    // getPersistentRDDs. The 10 perfbench iterative queries plus queries
+    // over each family that caches or materialises frames.
+    val dir = new File(sf("lineitem")).getParent
+    val queries = Seq(
+      "q_pagerank", "q_pagerank_dangling", "q_hits", "q_sssp",
+      "q_label_prop", "q_kcore", "q_bfs_dist", "q_louvain",
+      "q_dedup_clusters", "q_corpus_build",
+      "q_pagerank_seeded", "q_pagerank_delta", "q_pagerank_weighted",
+      "q_random_walks", "q_node_embed", "q_hyperball", "q_modularity",
+      "q_image_neardup", "q_boosted_stumps", "q_stump_crossval",
+      "q_quality_classifier", "q_rfm", "q_dyadic_quantiles",
+      "q_kmeanspp_seed", "q_lof", "q_mutual_knn", "q_mutual_knn_lsh",
+      "q_semdedup", "q_mmr_rerank", "q_kcenter_coreset", "q_bpe_learn",
+      "q_mrl_eval", "q_unigram_lm", "q_bm25_topk", "q_weighted_jaccard")
+    SessionCache.invalidateAll()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    queries.foreach(q => SparkEntry.queries(q)(spark, dir).collect())
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
+    SessionCache.invalidateAll()
+    val left = spark.sparkContext.getPersistentRDDs -- before
+    assert(left.isEmpty, left.values.map(r => s"${r.id}:${r.name}")
+      .mkString("resident after invalidateAll: ", ", ", ""))
+  }
 }

@@ -39,12 +39,14 @@ class ScaleSentinelSpec extends SparkSpec {
     * statistics, not schema). One-sided explodes against a stored
     * relation are deliberately NOT flagged: their fan-in is bounded by
     * the stored side's key multiplicity, a schema property the other
-    * suites already pin. */
+    * suites already pin. The plan is read through its lineage cuts
+    * ([[graft.Cut.lineage]]): a join inside a cut artifact's build, or
+    * a key an explode derived before the cut, counts as the query's. */
   private def candidateJoinTags(df: DataFrame): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{
       Alias, And, EqualNullSafe, Expression}
-    val root = df.queryExecution.analyzed
-    val nodes = root.collectWithSubqueries { case n => n }
+    val nodes = graft.Cut.lineage(df.queryExecution.analyzed)
+      .flatMap(_.collectWithSubqueries { case n => n })
     // taint: attribute ids produced by a Generate (explode/posexplode)
     // plus everything aliased from them, to a fixed point — "derived
     // candidate key" means the join key traces back to a generator
@@ -168,6 +170,7 @@ class ScaleSentinelSpec extends SparkSpec {
       // left this list entirely — the IvfAssign two-level index turned
       // their corpus×cells assignment joins into a stateless projection
       "q_kmeanspp_seed" -> "bounded: corpus x k seeds (k constant)",
+      "q_mmr_rerank" -> "bounded: corpus x the one query vector (vec_id = 0)",
       "q_mutual_knn" -> "q_mutual_knn_ivf (exact-by-contract N^2 twin, scaladoc-priced)",
       "q_mutual_knn_lsh" ->
         ("q_mutual_knn_ivf (the default LINEAR mutual-kNN scale door). " +
@@ -180,6 +183,14 @@ class ScaleSentinelSpec extends SparkSpec {
       // -- embedding stats: join keys range over the dim/subspace
       // domain (<= 64), fan-in is dim-bounded per row --
       "q_embed_whiten" -> "bounded: d in [0, 64)",
+      // -- node-embedding epochs: pair rows join the embedding table,
+      // one row per node (fan-in 1 on the table side) --
+      "q_node_embed" -> "bounded: node key, one embedding row per node",
+      "q_embed_eval" -> "bounded: node key, one embedding row per node",
+      // -- walk corpus: the start set crossed with the walksPerNode
+      // constant (a broadcast range) --
+      "q_random_walks" -> "bounded: starts x walksPerNode (w constant)",
+      "q_walk_pairs" -> "bounded: starts x walksPerNode (w constant)",
       "q_ood_score" -> "bounded: d in [0, 64)",
       "q_pca_power" -> "bounded: i in [0, 64)",
       "q_auc" -> "bounded: dim key (score-vector index)",

@@ -163,11 +163,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("round-6 operators keep their scale shapes") {
-    // pagerank: the degree-annotated edge table is persisted and every
-    // round reads the CACHE (one InMemoryTableScan per round), never
-    // re-deriving the distinct+degree chain; no nested loops anywhere
+    // pagerank: the degree-annotated edge table and the ranks are cuts,
+    // so the result reads a cut leaf and never re-derives the
+    // distinct+degree chain from the lake (no FileScan); no nested
+    // loops anywhere
     val pr = planOf(graft.graph.GraphOps.qPageRank(spark, dir))
-    assert(pr.contains("InMemoryTableScan"), pr)
+    assert(pr.contains("Scan ExistingRDD"), pr)
+    assert(!pr.contains("FileScan"), pr)
     assert(!pr.contains("CartesianProduct") &&
       !pr.contains("BroadcastNestedLoopJoin"), pr)
     // dsir: the 64-row weight table broadcasts onto the token stream —
