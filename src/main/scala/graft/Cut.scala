@@ -10,7 +10,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** The lineage cut: the one way graft materialises a frame. An
-  * iterative loop carries each round into the next through one, and
+  * iterative loop carries each round into the next through one, driven
+  * by [[Cut.iterate]], and
   * every frame an operator reads more than once, or a
   * [[SessionCache]] holds, is one. Un-cut, round r's plan nests every
   * earlier round, often several times over (BFS reads the visited set
@@ -50,13 +51,6 @@ private[graft] final class Cut private (
 
   /** Free the cut's blocks. */
   def release(): Unit = rdd.unpersist(blocking = false)
-
-  /** Cut `df`, this frame's next round, then release this cut. */
-  def next(df: DataFrame, measures: Cut.Measure*): Cut = {
-    val n = Cut(df, measures: _*)
-    release()
-    n
-  }
 }
 
 private[graft] object Cut {
@@ -74,6 +68,33 @@ private[graft] object Cut {
     def total(i: Int): Long = parts.iterator.map(_(i)).sum
     new Cut(GraftShim.ofInternalRows(df, rdd, total(0), total(1)),
       total(0), measures.indices.map(m => total(2 + m)), rdd)
+  }
+
+  /** The round driver: every loop that carries a frame from round to
+    * round through a cut runs here. From `init` (round 0), round r =
+    * 1, 2, … is `step(round r-1, r)`, until `done(round r-1, round r)`
+    * holds or `maxRounds` rounds ran. `done` reads what the rounds'
+    * forcing passes measured (`rows`, `sums`), so the stop rule costs no
+    * job of its own. A step that returns its input has nothing left to
+    * do; `eq` as the rule stops there.
+    *
+    * Release rule: once round r is cut and `done` has read both rounds,
+    * round r-1 is released, `init` included, unless the step returned
+    * it. So when the driver returns, the last round is the only cut of
+    * the loop still persisted, and the caller owns it. Returns that cut
+    * and the number of rounds run. */
+  def iterate(init: Cut, maxRounds: Int)(step: (Cut, Int) => Cut)(
+      done: (Cut, Cut) => Boolean): (Cut, Int) = {
+    @annotation.tailrec
+    def go(prev: Cut, round: Int): (Cut, Int) =
+      if (round >= maxRounds) (prev, round)
+      else {
+        val next = step(prev, round + 1)
+        val stop = done(prev, next)
+        if (next ne prev) prev.release()
+        if (stop) (next, round + 1) else go(next, round + 1)
+      }
+    go(init, 0)
   }
 
   /** Cut `df`; `sum` counts the rows whose boolean column `flag` is

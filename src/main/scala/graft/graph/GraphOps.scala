@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.relational.Tables.load
 
@@ -69,22 +69,26 @@ object GraphOps {
     * partitioned, cut edge table — the shape both [[pageRank]]
     * (builds its own) and the registry queries (serving the shared
     * [[tradeEdgesDeg]] artifact) run. */
-  private def pageRankRounds(edgesDeg: DataFrame, iters: Int): DataFrame =
+  private def pageRankRounds(edgesDeg: DataFrame, iters: Int,
+      contribution: String = "r div outdeg"): DataFrame =
     pageRankFrom(edgesDeg,
       edgesDeg.select(col("src").as("node")).distinct()
         .select(col("node"), lit(Scale).as("r")),
-      iters)
+      iters, contribution)
 
   /** The iteration loop from an ARBITRARY starting rank vector — shared
-    * by the cold start above and the warm-started delta maintenance
-    * ([[qPageRankDelta]]). */
+    * by the cold start above, the warm-started delta maintenance
+    * ([[qPageRankDelta]]) and the weighted ranks
+    * ([[qPageRankWeighted]]). `contribution` is the rank mass a source
+    * passes along each arc. */
   private def pageRankFrom(
-      edgesDeg: DataFrame, init: DataFrame, iters: Int): DataFrame = {
+      edgesDeg: DataFrame, init: DataFrame, iters: Int,
+      contribution: String = "r div outdeg"): DataFrame = {
     var ranks = init
     for (_ <- 1 to iters) {
       ranks = edgesDeg
         .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("r div outdeg").as("c"))
+        .select(col("dst"), expr(contribution).as("c"))
         .groupBy(col("dst").as("node"))
         .agg(expr(s"$Teleport + (85 * sum(c)) div 100").as("r"))
     }
@@ -122,24 +126,10 @@ object GraphOps {
       val wdeg = edges.groupBy("src").agg(sum("w").as("wtot"))
       val edgesW = graft.Cut(edges.join(wdeg, "src")
         .repartition(spark.sparkContext.defaultParallelism, col("src")))
-      try {
-        var ranks = edgesW.df.select(col("src").as("node")).distinct()
-          .select(col("node"), lit(Scale).as("r"))
-        for (_ <- 1 to iters) {
-          ranks = edgesW.df
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(col("dst"), expr("(r * w) div wtot").as("c"))
-            .groupBy(col("dst").as("node"))
-            .agg(expr(s"$Teleport + (85 * sum(c)) div 100").as("r"))
-        }
-        graft.Cut(ranks).df
-      } finally edgesW.release()
+      try pageRankRounds(edgesW.df, iters, "(r * w) div wtot")
+      finally edgesW.release()
     }
-    ranks.select(
-      when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-        .otherwise(lit("part")).as("node_type"),
-      expr("node div 2").as("node_id"),
-      col("r").as("rank_fp"))
+    ranks.select(tradeNode("node") :+ col("r").as("rank_fp"): _*)
   }
 
   /** One cut rank frame per (session, dir): bench loops re-invoke
@@ -236,15 +226,12 @@ object GraphOps {
       val init = nodes.join(degN, Seq("node"), "left")
         .select(col("node"), lit(Scale).as("r"),
           col("outdeg").isNull.as("dang"))
-      var cut = graft.Cut(init, DanglingMass(init))
-      var ranks = cut.df
-      val n = cut.rows
-      var dm = cut.sum
-      var i = 0
-      var converged = false
-      while (i < maxIters && !converged) {
-        i += 1
-        val share = dm / n // both non-negative: truncating == floor == //
+      val start = graft.Cut(init, DanglingMass(init))
+      val n = start.rows
+      val (last, rounds) = graft.Cut.iterate(start, maxIters) { (prev, _) =>
+        // prev's pass summed its dangling mass
+        val share = prev.sum / n // both non-negative: truncating == floor == //
+        val ranks = prev.df.select("node", "r", "dang")
         val contribs = edgesDeg.df
           .join(ranks.select(col("node").as("src"), col("r")), "src")
           .select(col("dst"), expr("r div outdeg").as("c"))
@@ -257,13 +244,11 @@ object GraphOps {
             expr(s"$Teleport + (85 * (coalesce(sc, 0L) + ${share}L)) div 100")
               .as("r"),
             col("dang"), col("rp"))
-        // one pass: round i+1's dangling mass and round i's moved nodes
-        cut = cut.next(round, DanglingMass(round), Moved(round, eps))
-        dm = cut.sums(0)
-        ranks = cut.df.select("node", "r", "dang")
-        converged = cut.sums(1) == 0
-      }
-      (ranks.select("node", "r"), i)
+        // one pass: the next round's dangling mass and this round's
+        // moved nodes
+        graft.Cut(round, DanglingMass(round), Moved(round, eps))
+      }((_, next) => next.sums(1) == 0)
+      (last.df.select("node", "r"), rounds)
     } finally edgesDeg.release()
   }
 
@@ -288,6 +273,15 @@ object GraphOps {
     def apply(df: DataFrame, eps: Long): Moved =
       Moved(df.schema.fieldIndex("r"), df.schema.fieldIndex("rp"), eps)
   }
+
+  /** The trade graph's node decode, `<prefix>_type` and `<prefix>_id`
+    * of the node id column `node`: suppliers are the even ids (2k),
+    * parts the odd ones (2k+1). */
+  private[graph] def tradeNode(
+      node: String, prefix: String = "node"): Seq[Column] = Seq(
+    when(pmod(col(node), lit(2)) === 0, lit("supplier"))
+      .otherwise(lit("part")).as(s"${prefix}_type"),
+    expr(s"$node div 2").as(s"${prefix}_id"))
 
   /** PageRank over the supplier↔part trade graph: distinct
     * (l_suppkey, l_partkey) pairs as undirected edges, suppliers encoded
@@ -338,12 +332,7 @@ object GraphOps {
   def qPageRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     val ranks = rankCache.get(spark, (dir, iters))(
       pageRankRounds(tradeEdgesDeg(spark, dir), iters))
-    ranks
-      .select(
-        when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("node_type"),
-        expr("node div 2").as("node_id"),
-        col("r").as("rank_fp"))
+    ranks.select(tradeNode("node") :+ col("r").as("rank_fp"): _*)
   }
 
   /** Deterministic random walks — the DeepWalk/node2vec sampling stage
@@ -579,12 +568,7 @@ object GraphOps {
           (col("s") * 2).as("src"), (col("p") * 2 + 1).as("dst"))
         pageRankDangling(spark, directed, DanglingEps, DanglingMaxIters)._1
       })
-    ranks
-      .select(
-        when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("node_type"),
-        expr("node div 2").as("node_id"),
-        col("r").as("rank_fp"))
+    ranks.select(tradeNode("node") :+ col("r").as("rank_fp"): _*)
   }
 
   /** Seeded trade-graph PPR: proximity of every node to the suppliers of
@@ -599,12 +583,7 @@ object GraphOps {
         .select((col("s_suppkey") * 2).as("node"))
       pprRounds(tradeEdgesDeg(spark, dir), seeds, iters)
     }
-    ranks
-      .select(
-        when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("node_type"),
-        expr("node div 2").as("node_id"),
-        col("r").as("rank_fp"))
+    ranks.select(tradeNode("node") :+ col("r").as("rank_fp"): _*)
   }
 
   /** Delta cutoff for [[qPageRankDelta]]: the lake's shipdates span
@@ -657,12 +636,7 @@ object GraphOps {
       graft.Cut.release(baseRanks)
       out
     }
-    ranks
-      .select(
-        when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("node_type"),
-        expr("node div 2").as("node_id"),
-        col("r").as("rank_fp"))
+    ranks.select(tradeNode("node") :+ col("r").as("rank_fp"): _*)
   }
 
   /** Skip-gram (center, context) pair counts from the deterministic
@@ -681,14 +655,8 @@ object GraphOps {
     * bounded, never degree-dependent. */
   def walkPairs(walks: DataFrame, window: Int): DataFrame =
     walkPairCounts(walks, window)
-      .select(
-        when(pmod(col("ctr"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("center_type"),
-        expr("ctr div 2").as("center_id"),
-        when(pmod(col("ctx"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("ctx_type"),
-        expr("ctx div 2").as("ctx_id"),
-        col("pairs"))
+      .select(tradeNode("ctr", "center") ++ tradeNode("ctx", "ctx") :+
+        col("pairs"): _*)
 
   /** The pair counts in the COMPACT numeric node encoding
     * (`ctr`, `ctx`, `pairs`) — the form the embedding trainer
@@ -781,12 +749,7 @@ object GraphOps {
   def qLabelProp(spark: SparkSession, dir: String): DataFrame = {
     val labels = rankCache.get(spark, (s"$dir#lpa", LabelPropIters))(
       lpaRounds(tradeEdgesDeg(spark, dir), LabelPropIters))
-    labels
-      .select(
-        when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("node_type"),
-        expr("node div 2").as("node_id"),
-        col("lbl").as("community"))
+    labels.select(tradeNode("node") :+ col("lbl").as("community"): _*)
   }
 
   /** The co-purchase graph as directed arcs (both directions),
@@ -980,10 +943,11 @@ object GraphOps {
       .agg(sum("w").as("kw"))
     val m2 = arcs.agg(sum("w").as("w2"))
     val finalLabels = rankCache.get(spark, (s"$dir#louvain", LouvainRounds)) {
-      var labels = arcs.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl"))
-      var cut: Option[graft.Cut] = None
-      for (_ <- 1 to LouvainRounds) {
+      // labels_{t-1} feeds THREE subtrees per round (kiin, sigtot,
+      // own-community join) — without a per-round cut the round-0 work
+      // replays 3^rounds times (the qBfsDist lesson). Round 1 reads the
+      // lazy identity labeling; its cut starts the driver.
+      def round(labels: DataFrame): graft.Cut = {
         val kiin = arcs
           .join(labels.select(col("node").as("dst"), col("lbl").as("comm")),
             "dst")
@@ -994,7 +958,7 @@ object GraphOps {
         val sigtot = labels
           .join(k, "node")
           .groupBy(col("lbl").as("comm")).agg(sum("kw").as("sig"))
-        val next = graft.Cut(kiin
+        graft.Cut(kiin
           .join(labels.select(col("node").as("src"), col("lbl").as("own")),
             "src")
           .join(k.select(col("node").as("src"), col("kw")), "src")
@@ -1011,14 +975,11 @@ object GraphOps {
           .groupBy(col("src").as("node"))
           .agg(min(struct((-col("score")).as("ns"), col("comm"))).as("m"))
           .select(col("node"), col("m.comm").as("lbl")))
-        // labels_{t-1} feeds THREE subtrees per round (kiin, sigtot,
-        // own-community join) — without a per-round cut the round-0
-        // work replays 3^rounds times (the qBfsDist lesson)
-        cut.foreach(_.release())
-        cut = Some(next)
-        labels = next.df
       }
-      labels
+      val first = round(arcs.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl")))
+      graft.Cut.iterate(first, LouvainRounds - 1)((prev, _) =>
+        round(prev.df))((_, _) => false)._1.df
     }
     val in2 = arcs
       .join(finalLabels.select(col("node").as("src"), col("lbl").as("la")),
@@ -1202,24 +1163,19 @@ object GraphOps {
   def kCore(
       spark: SparkSession, edges: DataFrame, k: Int,
       rounds: Int = KCoreRounds): DataFrame = {
-    var cut = graft.Cut(edges.select(col("u").as("src"), col("v").as("dst"))
+    val arcs = graft.Cut(edges.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(edges.select(col("v").as("src"), col("u").as("dst"))))
-    var round = 0
-    var shrinking = true
-    while (shrinking && round < rounds) {
-      val e = cut.df
+    val (core, _) = graft.Cut.iterate(arcs, rounds) { (prev, _) =>
+      val e = prev.df
       val keep = e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select("node")
-      val before = cut.rows
-      cut = cut.next(e
+      graft.Cut(e
         .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"))
-      shrinking = cut.rows < before
-      round += 1
-    }
-    cut.df.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg_in_core"))
+    }((prev, next) => next.rows == prev.rows)
+    core.df.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg_in_core"))
   }
 
   /** 3-core of the co-purchase graph. */
@@ -1255,39 +1211,35 @@ object GraphOps {
       withTradePairs(spark, dir) { pairs =>
         val arcs = graft.Cut(pairs.repartition(
           spark.sparkContext.defaultParallelism, col("s"))).df
-        var hub = graft.Cut(arcs.select(col("s")).distinct()
-          .select(col("s"), lit(1000000L).as("h")))
-        var auth: graft.Cut = null
-        // per-HALF-ROUND cut, deliberately: an r16 experiment made
-        // auth lazy inside hub's round plan (hoping the duplicate aRaw
+        // one half-round: scores `v` keyed by `from` flow along the arcs
+        // to `to` and renormalize by their max
+        def half(scores: DataFrame, from: String, to: String): DataFrame = {
+          val raw = arcs.join(scores, from)
+            .groupBy(to).agg(sum("v").as("raw"))
+          raw.crossJoin(broadcast(raw.agg(max("raw").as("mx"))))
+            .select(col(to),
+              expr("cast(cast(raw as decimal(38,0)) * 1000000" +
+                " div mx as bigint)").as("v"))
+        }
+        val hub0 = graft.Cut(arcs.select(col("s")).distinct()
+          .select(col("s"), lit(1000000L).as("v")))
+        // a cut per HALF-round, deliberately: an r16 experiment made
+        // auth lazy inside hub's round plan (hoping the duplicate raw
         // aggregation exchanges would dedupe via exchange reuse) and
         // MEASURED WORSE — 4.31 → 6.05 s isolated warm median, 56 → 75
-        // jobs — because the aMax/hMax scalar subqueries re-run the raw
+        // jobs — because the max scalar subqueries re-run the raw
         // aggregation subtree per reference under AQE instead of
-        // reusing it. Reverted; the two cuts per round are the cheap end
-        // of that trade.
-        for (_ <- 1 to iters) {
-          val aRaw = arcs.join(hub.df, "s")
-            .groupBy("p").agg(sum("h").as("raw"))
-          val aMax = aRaw.agg(max("raw").as("mx"))
-          if (auth != null) auth.release()
-          auth = graft.Cut(aRaw.crossJoin(broadcast(aMax))
-            .select(col("p"),
-              expr("cast(cast(raw as decimal(38,0)) * 1000000" +
-                " div mx as bigint)").as("a")))
-          val hRaw = arcs.join(auth.df, "p")
-            .groupBy("s").agg(sum("a").as("raw"))
-          val hMax = hRaw.agg(max("raw").as("mx"))
-          hub = hub.next(hRaw.crossJoin(broadcast(hMax))
-            .select(col("s"),
-              expr("cast(cast(raw as decimal(38,0)) * 1000000" +
-                " div mx as bigint)").as("h")))
-        }
-        val out = graft.Cut(hub.df.select(lit("hub").as("role"),
-            col("s").as("node_id"), col("h").as("score_ppm"))
+        // reusing it. Odd half-rounds score authorities, even ones hubs;
+        // the last hub half-round is read once, by the output cut.
+        val (auth, _) = graft.Cut.iterate(hub0, 2 * iters - 1) { (prev, r) =>
+          graft.Cut(if (r % 2 == 1) half(prev.df, "s", "p")
+            else half(prev.df, "p", "s"))
+        }((_, _) => false)
+        val out = graft.Cut(half(auth.df, "p", "s")
+          .select(lit("hub").as("role"),
+            col("s").as("node_id"), col("v").as("score_ppm"))
           .unionAll(auth.df.select(lit("authority").as("role"),
-            col("p").as("node_id"), col("a").as("score_ppm"))))
-        hub.release()
+            col("p").as("node_id"), col("v").as("score_ppm"))))
         auth.release()
         graft.Cut.release(arcs)
         out.df
@@ -1328,11 +1280,7 @@ object GraphOps {
       bfsFrom(tradeEdgesDeg(spark, dir).select("src", "dst"),
         sources, maxDepth)
     }
-    dist.select(
-      when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-        .otherwise(lit("part")).as("node_type"),
-      expr("node div 2").as("node_id"),
-      col("dist"))
+    dist.select(tradeNode("node") :+ col("dist"): _*)
   }
 
   /** Level-synchronous multi-source BFS core: `edges(src, dst)` ×
@@ -1346,22 +1294,16 @@ object GraphOps {
     // lineage grows 3^r nodes and ANALYSIS time — not execution —
     // triples every round (measured 1.0 → 5.5 s/round by round 4 at
     // sf0.1)
-    var visited = graft.Cut(sources.select(col("node"), lit(0L).as("dist")))
-    var frontierNonEmpty = visited.rows > 0
-    var round = 1
-    while (frontierNonEmpty && round <= maxDepth) {
+    val start = graft.Cut(sources.select(col("node"), lit(0L).as("dist")))
+    graft.Cut.iterate(start, maxDepth) { (visited, round) =>
       val frontier = visited.df.filter(col("dist") === (round - 1))
         .select(col("node").as("src"))
-      val next = edges.join(frontier, "src")
+      val level = edges.join(frontier, "src")
         .select(col("dst").as("node")).distinct()
         .join(visited.df, Seq("node"), "left_anti")
         .select(col("node"), lit(round.toLong).as("dist"))
-      val before = visited.rows
-      visited = visited.next(visited.df.unionAll(next))
-      frontierNonEmpty = visited.rows > before
-      round += 1
-    }
-    visited.df
+      graft.Cut(visited.df.unionAll(level))
+    }((prev, next) => next.rows == prev.rows)._1.df
   }
 
   /** Max relaxation rounds for [[qSsspWeighted]] — Bellman-Ford round r
@@ -1425,11 +1367,7 @@ object GraphOps {
         .select((col("s_suppkey") * 2).as("node"))
       ssspFrom(tradeEdgesWeighted(spark, dir), sources, maxRounds)
     }
-    dist.select(
-      when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-        .otherwise(lit("part")).as("node_type"),
-      expr("node div 2").as("node_id"),
-      col("dist"))
+    dist.select(tradeNode("node") :+ col("dist"): _*)
   }
 
   /** Frontier Bellman-Ford core: `edges(src, dst, w)` × `sources(node)`
@@ -1438,13 +1376,13 @@ object GraphOps {
     * whose lifetime the caller's cache owns. */
   private[graph] def ssspFrom(
       edges: DataFrame, sources: DataFrame, maxRounds: Int): DataFrame = {
-    var cut = graft.Cut(sources.select(col("node"), lit(0L).as("dist"))
-      .groupBy("node").agg(min("dist").as("dist")))
-    var dist = cut.df
-    var improved = dist
-    var frontierNonEmpty = cut.rows > 0
-    var round = 1
-    while (frontierNonEmpty && round <= maxRounds) {
+    // every source is round 0's frontier: `chg` marks it improved
+    val start = graft.Cut(sources.select(col("node"), lit(0L).as("dist"))
+      .groupBy("node").agg(min("dist").as("dist"))
+      .withColumn("chg", lit(true)))
+    graft.Cut.iterate(start, maxRounds) { (prev, _) =>
+      val dist = prev.df.select("node", "dist")
+      val improved = prev.df.filter(col("chg"))
       val relax = edges
         .join(improved.select(col("node").as("src"), col("dist").as("sd")),
           "src")
@@ -1453,7 +1391,7 @@ object GraphOps {
       // full-outer min-merge: a node unseen by either side keeps the
       // other's value; `chg` marks strict improvements (the next
       // frontier), and the cut counts them as the fixpoint test
-      val merged = graft.Cut.flagged(dist.join(relax, Seq("node"), "full_outer")
+      graft.Cut.flagged(dist.join(relax, Seq("node"), "full_outer")
         .select(col("node"),
           when(col("dist").isNull ||
               (col("cand").isNotNull && col("cand") < col("dist")),
@@ -1461,14 +1399,7 @@ object GraphOps {
           (col("dist").isNull ||
             (col("cand").isNotNull && col("cand") < col("dist"))).as("chg")),
         "chg")
-      cut.release()
-      cut = merged
-      improved = merged.df.filter(col("chg")).select("node", "dist")
-      frontierNonEmpty = merged.sum > 0
-      dist = merged.df.select("node", "dist")
-      round += 1
-    }
-    dist
+    }((_, next) => next.sum == 0)._1.df.select("node", "dist")
   }
 
   /** Below this edge count the forest is solved with a driver-side
@@ -1541,13 +1472,14 @@ object GraphOps {
     // chosen-edge frames read them, and are unioned ONCE at the end (no
     // round re-copies the accumulated forest)
     val cands = collection.mutable.Buffer.empty[graft.Cut]
-    var comp = graft.Cut(edges.df.select(col("u").as("node"))
+    val comp0 = graft.Cut(edges.df.select(col("u").as("node"))
       .unionAll(edges.df.select(col("v").as("node")))
       .distinct()
       .select(col("node"), col("node").as("comp")))
-    var round = 0
-    var live = true
-    while (live && round < maxRounds) {
+    // a round with no candidate edge returns its input: the forest is
+    // complete. The cap is one round past maxRounds, so a loop that ran
+    // more than maxRounds rounds is one that maxRounds did not finish.
+    val (last, rounds) = graft.Cut.iterate(comp0, maxRounds + 1) { (comp, _) =>
       val eC = edges.df
         .join(comp.df.select(col("node").as("u"), col("comp").as("cu")), "u")
         .join(comp.df.select(col("node").as("v"), col("comp").as("cv")), "v")
@@ -1561,41 +1493,37 @@ object GraphOps {
           struct(col("w"), col("u"), col("v"), col("cu").as("o")).as("e")))
         .groupBy("c").agg(min("e").as("e")))
       cands += cand
-      if (cand.rows == 0) live = false
+      if (cand.rows == 0) comp
       else {
         // pointer graph parent(c) = other side; 2-cycles root at the
         // smaller id, then jump p <- p(p) until flat. The convergence
         // flag rides IN the jump join (y.p != x.p), and the jump's cut
         // counts it: one job per jump.
         val par0 = cand.df.select(col("c"), col("e.o").as("p"))
-        var ptr = graft.Cut(par0.alias("a")
+        val ptr0 = graft.Cut(par0.alias("a")
           .join(par0.alias("b"), col("a.p") === col("b.c"))
           .select(col("a.c").as("c"),
             when(col("b.p") === col("a.c") && col("a.c") < col("a.p"),
               col("a.c")).otherwise(col("a.p")).as("p")))
-        var jumping = true
-        while (jumping) {
-          val step = graft.Cut.flagged(ptr.df.alias("x")
+        val (ptr, _) = graft.Cut.iterate(ptr0, Int.MaxValue)((ptr, _) =>
+          graft.Cut.flagged(ptr.df.alias("x")
             .join(ptr.df.alias("y"), col("x.p") === col("y.c"))
             .select(col("x.c").as("c"), col("y.p").as("p"),
-              (col("y.p") =!= col("x.p")).as("chg")), "chg")
-          jumping = step.sum > 0
-          ptr.release()
-          ptr = step
-        }
-        comp = comp.next(comp.df.alias("m")
+              (col("y.p") =!= col("x.p")).as("chg")), "chg"))(
+          (_, jump) => jump.sum == 0)
+        val next = graft.Cut(comp.df.alias("m")
           .join(ptr.df.alias("r"), col("m.comp") === col("r.c"), "left")
           .select(col("m.node").as("node"),
             coalesce(col("r.p"), col("m.comp")).as("comp")))
         ptr.release()
+        next
       }
-      round += 1
-    }
+    }(_ eq _)
     // loud failure beats a silently partial forest: exhausting the round
     // budget with live inter-component edges means a component larger
     // than 2^maxRounds nodes (or a contraction bug) — the
     // connectedComponentsImpl convergence discipline
-    if (live) throw new IllegalStateException(
+    if (rounds > maxRounds) throw new IllegalStateException(
       s"Borůvka did not converge in $maxRounds rounds — " +
         "raise maxRounds (component count halves per round)")
     val empty = edges.df.select("u", "v", "w").limit(0)
@@ -1603,7 +1531,7 @@ object GraphOps {
         col("e.v").as("v"), col("e.w").as("w")))
       .foldLeft(empty)(_ unionAll _).distinct())
     cands.foreach(_.release())
-    comp.release()
+    last.release()
     edges.release()
     forest.df
   }
@@ -1643,12 +1571,13 @@ object GraphOps {
   private[graph] def lubyMis(edgesIn: DataFrame, maxRounds: Int): DataFrame = {
     val eCut = graft.Cut(edgesIn)
     val edges = eCut.df
-    var und = graft.Cut(
+    val und0 = graft.Cut(
       edges.select(col("u").as("n"))
         .unionAll(edges.select(col("v").as("n"))).distinct())
-    val rounds = collection.mutable.ArrayBuffer.empty[graft.Cut]
-    var r = 0
-    while (und.rows > 0 && r < maxRounds) {
+    // each round's decided nodes stay cut until the output is cut
+    val decided = collection.mutable.ArrayBuffer.empty[graft.Cut]
+    val (rest, _) = graft.Cut.iterate(und0, maxRounds) { (und, round) =>
+      val r = round - 1
       val pri = und.df.withColumn("k", expr(
         s"""cast(conv(substring(md5(concat('mis:$r:',
            |  cast(n as string))), 1, 8), 16, 10) as long)
@@ -1672,16 +1601,15 @@ object GraphOps {
             lit(r.toLong).as("mis_round"))
           .unionAll(losers.select(col("n"), lit(0L).as("in_mis"),
             lit(r.toLong).as("mis_round"))))
-      rounds += dec
-      und = und.next(und.df.join(dec.df.select("n"), Seq("n"), "left_anti"))
-      r += 1
-    }
-    require(und.rows == 0, s"Luby MIS did not converge in $maxRounds rounds")
-    val out = graft.Cut(rounds.map(_.df).reduce(_ unionAll _)
+      decided += dec
+      graft.Cut(und.df.join(dec.df.select("n"), Seq("n"), "left_anti"))
+    }((_, next) => next.rows == 0)
+    require(rest.rows == 0, s"Luby MIS did not converge in $maxRounds rounds")
+    val out = graft.Cut(decided.map(_.df).reduce(_ unionAll _)
       .select(col("n").as("node"), col("in_mis"), col("mis_round")))
     eCut.release()
-    und.release()
-    rounds.foreach(_.release())
+    rest.release()
+    decided.foreach(_.release())
     out.df
   }
 
@@ -1721,11 +1649,9 @@ object GraphOps {
   def qDegreeHist(spark: SparkSession, dir: String): DataFrame =
     tradeEdgesDeg(spark, dir)
       .select(col("src").as("node"), col("outdeg")).distinct()
-      .select(
-        when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("node_type"),
+      .select(tradeNode("node") ++ Seq(
         (length(bin(col("outdeg"))) - 1).cast("long").as("bucket"),
-        col("outdeg"))
+        col("outdeg")): _*)
       .groupBy("node_type", "bucket")
       .agg(count(lit(1)).as("n_nodes"),
         min("outdeg").as("min_deg"), max("outdeg").as("max_deg"),
@@ -1878,12 +1804,8 @@ object GraphOps {
       .map(r => expr(s"greatest(est$r - est${r - 1}, 0L) div $r"))
       .reduce(_ + _)
     val out = joined
-      .select(
-        when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("node_type"),
-        expr("node div 2").as("node_id"),
-        col("node"),
-        harmonic.as("harmonic_e4"))
+      .select(tradeNode("node") ++ Seq(col("node"),
+        harmonic.as("harmonic_e4")): _*)
       .orderBy(col("harmonic_e4").desc, col("node"))
       .limit(k)
       .select("node_type", "node_id", "harmonic_e4")

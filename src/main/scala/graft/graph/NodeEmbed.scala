@@ -139,9 +139,11 @@ object NodeEmbed {
     // a-side join and the aggregation still reuse this layout while
     // only the b-side moves). One build-time exchange, partitioning
     // only — every gradient sum is exact decimal arithmetic, so the
-    // trained table is bit-identical under any layout.
+    // trained table is bit-identical under any layout. The explicit
+    // partition count keeps AQE from coalescing the exchange: a cut
+    // leaf drops a coalesced read's layout.
     val rows = graft.Cut(trainingRows(pairCounts, ns, np)
-      .repartition(col("a")))
+      .repartition(spark.sparkContext.defaultParallelism, col("a")))
     try {
       // the INITIAL table is cut too (r13): epoch 1 evaluates emb
       // THREE times (center side, context side, update join), and when
@@ -151,10 +153,10 @@ object NodeEmbed {
       // are cut for the same reason: each feeds both sides of the next
       // epoch's join, and without the cut lineage doubles per epoch and
       // the final plan re-runs every prior epoch twice
-      var emb = graft.Cut(nodes
+      val start = graft.Cut(nodes
         .select(col("node") +: (0 until Dims).map(i => init(i).as(s"v$i")): _*))
-      for (_ <- 1 to epochs) emb = emb.next(epoch(emb.df, rows.df))
-      emb.df
+      graft.Cut.iterate(start, epochs)((emb, _) =>
+        graft.Cut(epoch(emb.df, rows.df)))((_, _) => false)._1.df
     } finally rows.release()
   }
 
@@ -183,10 +185,7 @@ object NodeEmbed {
     * is the decoded embedding table (node_type, node_id, v0..v3). */
   def qNodeEmbed(spark: SparkSession, dir: String): DataFrame =
     trainedEmbeddings(spark, dir)
-      .select(
-        when(pmod(col("node"), lit(2)) === 0, lit("supplier"))
-          .otherwise(lit("part")).as("node_type") +:
-        expr("node div 2").as("node_id") +:
+      .select(GraphOps.tradeNode("node") ++
         (0 until Dims).map(i => col(s"v$i")): _*)
 
   /** "Measure, don't guess" for the trained embeddings — the

@@ -143,14 +143,14 @@ object TrainingData {
       .distinct(), EdgeFingerprint)
     if (initial.rows <= localSolveMax)
       return localSolve(initial, spark)
-    var edges = initial
     // O(log² n) worst case for star-contraction; 64 rounds is orders of
     // magnitude above any reachable graph and exists only to turn an
-    // implementation bug into a loud failure instead of an infinite loop
+    // implementation bug into a loud failure instead of an infinite loop.
+    // The driver's cap is one round more, so a loop that ran more than
+    // maxRounds rounds is one that maxRounds did not converge.
     val maxRounds = 64
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
+    val (stars, rounds) = graft.Cut.iterate(initial, maxRounds + 1) {
+        (edges, _) =>
       // LARGE-STAR: from the symmetric neighborhood view, connect every
       // strictly-larger neighbor v of u to m = min(Γ(u) ∪ {u}). m ≤ u < v
       // keeps the (lo, hi) orientation canonical by construction.
@@ -170,49 +170,43 @@ object TrainingData {
       // itself) to their minimum. v ∈ smaller(hi) ⇒ v ≥ m, so orientation
       // stays canonical here too.
       val smins = large.groupBy("hi").agg(min("lo").as("m"))
-      val next = graft.Cut(large.join(smins, "hi")
+      graft.Cut(large.join(smins, "hi")
         .filter(col("lo") =!= col("m"))
         .select(col("m").as("lo"), col("lo").as("hi"))
         .unionAll(smins.select(col("m").as("lo"), col("hi")))
         .distinct(), EdgeFingerprint)
-      rounds += 1
+    } { (prev, next) =>
       // fingerprint probe; exact confirm only on a hit (≈ once per loop)
-      if (next.rows == edges.rows && next.sum == edges.sum) {
-        val changed = edges.df.withColumn("a", lit(1))
+      next.rows == prev.rows && next.sum == prev.sum &&
+        prev.df.withColumn("a", lit(1))
           .join(next.df.withColumn("b", lit(1)), Seq("lo", "hi"),
             "full_outer")
           .filter(col("a").isNull || col("b").isNull)
-          .count()
-        converged = changed == 0
-      }
-      // the INITIAL edge set stays cached through the loop: the node
-      // universe is derived from it inside the final labeling job
-      if (!(edges eq initial)) edges.release()
-      edges = next
+          .count() == 0
     }
-    if (!converged)
+    if (rounds > maxRounds)
       throw new IllegalStateException(
         s"star contraction did not converge in $maxRounds rounds")
     // converged stars: each non-root node has exactly one edge, to its
-    // component minimum; roots (and any isolated canonical node) label
-    // themselves. The node universe — every ORIGINAL endpoint, which
-    // contraction drops from the star edges — is derived from the still-
-    // cached initial edge set inside this same job (no separate
-    // materialization action for it). Result materialized to a leaf so
-    // the loop's intermediates can be freed without the caller's action
-    // replaying the whole loop.
-    val nodes = initial.df.select(col("lo").as("id"))
-      .unionAll(initial.df.select(col("hi").as("id")))
+    // component minimum, and roots label themselves. No round drops a
+    // node: large-star keeps every node, as the larger end of an edge
+    // from a smaller neighbor or as the minimum of its own neighborhood,
+    // and small-star keeps every node of large-star's edges. So the
+    // node universe, every ORIGINAL endpoint, is the converged edge
+    // set's endpoints, read inside this same job. Result materialized
+    // to a leaf so the loop's cut can be freed without the caller's
+    // action replaying the whole loop.
+    val nodes = stars.df.select(col("lo").as("id"))
+      .unionAll(stars.df.select(col("hi").as("id")))
       .distinct()
     val result = graft.Cut(nodes
-      .join(edges.df.select(col("hi").as("id"), col("lo").as("root")),
+      .join(stars.df.select(col("hi").as("id"), col("lo").as("root")),
         Seq("id"), "left")
       .select(col("id").as("doc_id"),
         coalesce(col("root"), col("id")).as("cluster_id")))
     val labeled = result.df
       .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
-    if (!(edges eq initial)) edges.release()
-    initial.release()
+    stars.release()
     (labeled, rounds)
   }
 

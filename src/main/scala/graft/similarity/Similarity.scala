@@ -1915,11 +1915,12 @@ object Similarity {
           / (col("na") * col("nb"))).as("s_fp")))
     val sims = simsCut.df
     try {
-      var chosen = graft.Cut(short
+      val first = graft.Cut(short
         .select(col("vec_id"), col("rel_fp"))
         .orderBy(col("rel_fp").desc, col("vec_id")).limit(1)
         .select(col("vec_id"), col("rel_fp"), lit(1L).as("mmr_rank")))
-      for (r <- 2 to k) {
+      // round r picks the (r+1)-th item
+      graft.Cut.iterate(first, k - 1) { (chosen, r) =>
         val sel = chosen.df.select(col("vec_id"))
         val maxSim = sims
           .join(sel.withColumnRenamed("vec_id", "b"), "b")
@@ -1930,10 +1931,11 @@ object Similarity {
           .select(col("vec_id"), col("rel_fp"),
             (col("rel_fp") * 7 - col("max_s") * 3).as("score"))
           .orderBy(col("score").desc, col("vec_id")).limit(1)
-          .select(col("vec_id"), col("rel_fp"), lit(r.toLong).as("mmr_rank"))
-        chosen = chosen.next(chosen.df.unionByName(pick))
-      }
-      chosen.df.select(col("mmr_rank"), col("vec_id"), col("rel_fp"))
+          .select(col("vec_id"), col("rel_fp"),
+            lit(r + 1L).as("mmr_rank"))
+        graft.Cut(chosen.df.unionByName(pick))
+      }((_, _) => false)._1.df
+        .select(col("mmr_rank"), col("vec_id"), col("rel_fp"))
     } finally {
       shortCut.release()
       simsCut.release()

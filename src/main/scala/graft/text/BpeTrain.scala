@@ -136,16 +136,15 @@ object BpeTrain {
   /** One Spark job per round: pair-count aggregation (map-side
     * combinable), driver argmax on its tiny result, symbol rewrite map.
     * Each round's types are cut and the previous round's cut released —
-    * the lineage-truncation discipline of the cluster fixpoint loop. */
+    * the lineage-truncation discipline of the cluster fixpoint loop. A
+    * round with no repeated pair learns nothing and returns its input,
+    * which stops the loop. */
   private def distributedSolve(
       types0: graft.Cut, numMerges: Int): Seq[BpeMerge] = {
     val spark = types0.df.sparkSession
     import spark.implicits._
-    var types = types0
     val merges = Seq.newBuilder[BpeMerge]
-    var rank = 0
-    var done = false
-    try while (rank < numMerges && !done) {
+    graft.Cut.iterate(types0, numMerges) { (types, round) =>
       val best = types.df.as[BpeType]
         .flatMap(t => t.syms.sliding(2).collect {
           case Seq(a, b) => (a, b, t.freq)
@@ -158,13 +157,12 @@ object BpeTrain {
         .collect().headOption
       best match {
         case Some((a, b, f)) if f >= 2 =>
-          merges += BpeMerge(rank, a, b, f)
-          types = types.next(types.df.as[BpeType]
+          merges += BpeMerge(round - 1, a, b, f)
+          graft.Cut(types.df.as[BpeType]
             .map(t => t.copy(syms = mergePair(t.syms, a, b))).toDF())
-          rank += 1
-        case _ => done = true
+        case _ => types
       }
-    } finally types.release()
+    }(_ eq _)._1.release()
     merges.result()
   }
 

@@ -142,6 +142,57 @@ class CutSpec extends SparkSpec {
     assert(!spark.sparkContext.getPersistentRDDs.contains(dId))
   }
 
+  private def leafId(c: Cut): Int =
+    c.df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+
+  /** Round r of the driver tests keeps the rows n < 10 - r: 10 - r rows. */
+  private def shrink(prev: Cut, r: Int): Cut =
+    Cut(prev.df.filter(col("n") < 10 - r))
+
+  test("iterate stops on the first round its rule holds and releases every superseded round") {
+    val before = persistedCuts
+    val init = Cut((0L until 10L).toDF("n"))
+    val made = collection.mutable.Buffer(init)
+    val (last, rounds) = Cut.iterate(init, 8) { (prev, r) =>
+      val next = shrink(prev, r)
+      made += next
+      next
+    }((_, next) => next.rows <= 6)
+    assert(rounds === 4)
+    assert(made.size === 5, "no step ran after the rule held")
+    assert(last.rows === 6L)
+    assert(last eq made.last)
+    assert(persistedCuts -- before === Set(leafId(last)))
+    assert(last.df.count() === 6L)
+    last.release()
+  }
+
+  test("iterate honours its cap, and a step that returns its input stops the loop unreleased") {
+    val before = persistedCuts
+    val (capped, rounds) = Cut.iterate(Cut((0L until 10L).toDF("n")), 3)(
+      shrink)((_, _) => false)
+    assert(rounds === 3)
+    assert(capped.rows === 7L)
+    assert(persistedCuts -- before === Set(leafId(capped)))
+    capped.release()
+    // rounds 1-4 shrink; round 5 finds nothing to do and returns its input
+    val (fixed, n) = Cut.iterate(Cut((0L until 10L).toDF("n")), 8) {
+      (prev, r) => if (r <= 4) shrink(prev, r) else prev
+    }(_ eq _)
+    assert(n === 5)
+    assert(fixed.rows === 6L)
+    assert(persistedCuts -- before === Set(leafId(fixed)))
+    assert(fixed.df.count() === 6L)
+    fixed.release()
+    // no round to run: init comes back as it went in
+    val init = Cut((0L until 10L).toDF("n"))
+    val (same, zero) = Cut.iterate(init, 0)(shrink)((_, _) => true)
+    assert((same eq init) && zero === 0)
+    assert(persistedCuts -- before === Set(leafId(init)))
+    init.release()
+    assert(persistedCuts -- before === Set.empty)
+  }
+
   test("the forcing pass's count and sum equal a separate count and aggregate") {
     val df = (1L to 1000L).toDF("x")
       .select(col("x"), (col("x") % 3 === 0).as("chg"))

@@ -8,6 +8,10 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/sf0.001/$name.parquet"
 
+  /** The RDD ids of every [[graft.Cut]] persisted now. */
+  def persistedCuts: Set[Int] = spark.sparkContext.getPersistentRDDs
+    .collect { case (id, rdd) if rdd.name == "graft.Cut" => id }.toSet
+
   /** Run `body` with the RocksDB state store provider, restoring the
     * previous provider after — the fixture for the suites that replay a
     * `flatMapGroupsWithState` operator on RocksDB state to pin that its

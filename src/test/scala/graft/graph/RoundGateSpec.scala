@@ -3,6 +3,7 @@ package graft.graph
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Structural round gates: what each loop's lineage cut is for, asserted
@@ -78,6 +79,72 @@ class RoundGateSpec extends SparkSpec {
     assert(planNodes(two) === planNodes(six))
   }
 
+  /** The RDD ids of the cut leaves `df` reads. */
+  private def leaves(df: DataFrame): Set[Int] = df.queryExecution.logical
+    .collect { case l: LogicalRDD => l.rdd.id }.toSet
+
+  /** Release the cuts `df` reads. */
+  private def free(df: DataFrame): Unit = leaves(df).foreach(id =>
+    spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist()))
+
+  /** The Spark jobs `body` starts, once the listener bus has settled. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      body
+      // listener bus is async — wait for the count to settle
+      val deadline = System.nanoTime() + 5_000_000_000L
+      var last = -1
+      while (System.nanoTime() < deadline && jobs.get() != last) {
+        last = jobs.get()
+        Thread.sleep(100)
+      }
+    } finally spark.sparkContext.removeSparkListener(counter)
+    jobs.get()
+  }
+
+  /** The four round-driven loops at a given round count, each on a
+    * fixture that still changes at round 6 (so no early stop), with the
+    * Spark jobs a round of it costs. */
+  private val loops: Seq[(String, Int, Int => DataFrame)] = Seq(
+    ("bfsFrom", 4, (n: Int) =>
+      GraphOps.bfsFrom(pathArcs(12), Seq(1L).toDF("node"), n)),
+    ("ssspFrom", 4, (n: Int) => GraphOps.ssspFrom(
+      pathArcs(12).withColumn("w", lit(1L)), Seq(1L).toDF("node"), n)),
+    ("kCore", 3, (n: Int) => GraphOps.kCore(spark,
+      (1L until 30L).map(i => (i, i + 1)).toDF("u", "v"), 2, rounds = n)),
+    ("pageRankDangling", 4, (n: Int) => GraphOps.pageRankDangling(spark,
+      Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L).toDF("src", "dst"),
+      0L, n)._1))
+
+  test("the round-driven loops leave only the cut they return persisted") {
+    loops.foreach { case (name, _, run) =>
+      val before = persistedCuts
+      val out = run(6)
+      assert((persistedCuts -- before) === leaves(out), name)
+      assert(leaves(out).size === 1, name)
+      free(out)
+    }
+  }
+
+  test("the round-driven loops run a constant number of jobs per round") {
+    val measured = loops.map { case (name, _, run) =>
+      val at2 = jobsOf(free(run(2)))
+      val at6 = jobsOf(free(run(6)))
+      (name, at6 - at2)
+    }
+    info(measured.map { case (l, d) => s"$l: 4 rounds = $d jobs" }
+      .mkString(", "))
+    loops.zip(measured).foreach { case ((name, perRound, _), (_, d)) =>
+      assert(d === 4 * perRound, s"$name: 4 more rounds ran $d jobs")
+    }
+  }
+
   /** Jobs each query ran at sf0.001 with its corpus artifacts warm and
     * its session-cached result dropped (the perfbench iterative request
     * shape), measured once every materialised frame was a lineage cut.
@@ -94,23 +161,7 @@ class RoundGateSpec extends SparkSpec {
     qs.foreach(q => graft.SparkEntry.queries(q)(spark, dir).collect())
     val counts = qs.map { q =>
       graft.SessionCache.invalidate(spark, graft.SessionCache.Result)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val counter = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(counter)
-      try {
-        graft.SparkEntry.queries(q)(spark, dir).collect()
-        // listener bus is async — wait for the count to settle
-        val deadline = System.nanoTime() + 5_000_000_000L
-        var last = -1
-        while (System.nanoTime() < deadline && jobs.get() != last) {
-          last = jobs.get()
-          Thread.sleep(100)
-        }
-      } finally spark.sparkContext.removeSparkListener(counter)
-      q -> jobs.get()
+      q -> jobsOf(graft.SparkEntry.queries(q)(spark, dir).collect())
     }
     info(counts.map { case (q, n) => s"$q=$n" }.mkString(" "))
     counts.foreach { case (q, n) =>

@@ -2,6 +2,10 @@
 """Local stand-in for the driver's t2 correctness gate: run graft.Verify
 output against DuckDB oracles and diff. Usage:
   python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+  python3 tools/check_oracle.py --against=<otherVerifyOutDir> <verifyOutDir>
+The second form compares two graft.Verify dumps row for row, every query
+including the rows-only ones: same columns, and the same rows once both
+sides are sorted. It exits 1 when any query differs.
 """
 import sys, os, json, glob
 import duckdb
@@ -9,8 +13,58 @@ import duckdb
 args = [a for a in sys.argv[1:] if not a.startswith("--")]
 json_out = next((a.split("=", 1)[1] for a in sys.argv[1:]
                  if a.startswith("--json=")), None)
-sfdir, outdir = args[0], args[1]
+against = next((a.split("=", 1)[1] for a in sys.argv[1:]
+                if a.startswith("--against=")), None)
 con = duckdb.connect()
+
+
+def compare_dumps(this, other):
+    """Per query directory in either dump: IDENTICAL, or why not."""
+    def queries(d):
+        return {n for n in os.listdir(d) if os.path.isdir(f"{d}/{n}")}
+    def scan(d, name):
+        return f"read_parquet('{d}/{name}/*.parquet')"
+    results = {}
+    for name in sorted(queries(this) | queries(other)):
+        try:
+            cols = [sorted(c[:2] for c in con.execute(
+                f"DESCRIBE SELECT * FROM {scan(d, name)}").fetchall())
+                for d in (this, other)]
+        except Exception as e:
+            results[name] = f"UNREADABLE: {e}"
+            continue
+        if cols[0] != cols[1]:
+            results[name] = f"SCHEMA-MISMATCH: {cols[0]} vs {cols[1]}"
+            continue
+        sel = ", ".join(f'"{c[0]}"' for c in cols[0])
+        a, b = (f"SELECT {sel} FROM {scan(d, name)}" for d in (this, other))
+        # multiset difference both ways: equal row counts and no row of
+        # one side missing from the other is "same rows once sorted"
+        n, only_a, only_b = con.execute(
+            f"SELECT (SELECT count(*) FROM ({a})) - (SELECT count(*) FROM ({b})),"
+            f" (SELECT count(*) FROM ({a} EXCEPT ALL {b})),"
+            f" (SELECT count(*) FROM ({b} EXCEPT ALL {a}))").fetchone()
+        results[name] = ("IDENTICAL" if (n, only_a, only_b) == (0, 0, 0) else
+                         f"ROWS-DIFFER: {only_a} rows only here, "
+                         f"{only_b} only in {other}")
+    return results
+
+
+if against:
+    results = compare_dumps(args[-1], against)
+    same = sum(1 for v in results.values() if v == "IDENTICAL")
+    for name, v in results.items():
+        if v != "IDENTICAL":
+            print(f"✗ {name}: {v}")
+    print(f"\n{same}/{len(results)} queries identical to {against}")
+    if json_out:
+        with open(json_out, "w") as f:
+            json.dump({"against": against, "n_same": same,
+                       "n_checked": len(results), "results": results},
+                      f, indent=1, sort_keys=True)
+    sys.exit(0 if same == len(results) else 1)
+
+sfdir, outdir = args[0], args[1]
 for p in glob.glob(f"{sfdir}/*.parquet"):
     name = os.path.basename(p)[:-8]
     # tables written by Spark are DIRECTORIES of part files (the
